@@ -16,105 +16,37 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Importing these modules registers their queries into the shared registry.
+# Importing these modules registers their queries into the shared registry,
+# in this order. The imports are unconditional: a module that fails to import
+# must fail the driver, not silently drop its queries.
 import pinterest_data_pipeline_spark.plans.analog_queries  # noqa: F401
+import pinterest_data_pipeline_spark.plans.relational_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.training_data  # noqa: F401
+import pinterest_data_pipeline_spark.plans.streaming_queries  # noqa: F401
+import pinterest_data_pipeline_spark.plans.advanced_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.maintenance_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.subquery_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.nonequi_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.recursive_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.timeseries_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.graph_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.profiling_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.semistructured_ops  # noqa: F401
+import pinterest_data_pipeline_spark.plans.round5_promotions  # noqa: F401
+import pinterest_data_pipeline_spark.plans.pinterest_driver  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round6  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round7  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round8  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round9  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round10  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round11  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round12  # noqa: F401
+import pinterest_data_pipeline_spark.plans.staged_round13  # noqa: F401
 from pinterest_data_pipeline_spark.plans.registry import (
     ORACLE,
-    QUERIES,
     ordered_queries,
 )
 
-try:  # optional modules appear as rounds progress; keep entry importable
-    import pinterest_data_pipeline_spark.plans.relational_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.training_data  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.streaming_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.advanced_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.maintenance_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.subquery_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.nonequi_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.recursive_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.timeseries_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.graph_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.profiling_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.semistructured_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.round5_promotions  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.pinterest_driver  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.staged_round6  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.staged_round7  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.staged_round8  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.staged_round9  # noqa: F401
-except ImportError:
-    pass
-try:
-    import pinterest_data_pipeline_spark.plans.staged_round10  # noqa: F401
-except ImportError:
-    pass
-try:
-    # fully promoted as of round 11 (PROMOTED_IN_ROUND10 + ROUND11)
-    import pinterest_data_pipeline_spark.plans.staged_round11  # noqa: F401
-except ImportError:
-    pass
-try:
-    # fully promoted as of round 12 (PROMOTED_IN_ROUND11 + ROUND12)
-    import pinterest_data_pipeline_spark.plans.staged_round12  # noqa: F401
-except ImportError:
-    pass
-try:
-    # fully promoted as of round 12 (PROMOTED_IN_ROUND12, all 10)
-    import pinterest_data_pipeline_spark.plans.staged_round13  # noqa: F401
-except ImportError:
-    pass
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,12 +1,11 @@
-"""ROUND-10 PROMOTIONS — staged in round 8, driver-registered in round 10.
+"""Privacy, behavioral-feature, retrieval-infrastructure and time-series
+audit queries, registered in round 10.
 
-Executed exactly as pre-planned (ROUND-10 ROTATION NOTES,
-plans/registry.py): ``_stage`` below now feeds ``registry.register``
-directly, ``__spark_entry__`` imports this module, and all eight names
-lead CHECK_FIRST for their first driver rows. Same contract as every
-staging round: each query has a full DuckDB oracle replayed
-value-for-value (strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round10.py) and behavior-pinning unit tests.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round10.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 The batch fills four remaining engine surfaces:
 
@@ -36,36 +35,15 @@ engines, one rounding at the end.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, oracle: str | None = None):
-    """ROUND-10 PROMOTION: registry.register proper (driver surface),
-    plus the module-local dicts the behavioral tests in
-    tests/test_staged_round10.py enumerate. All validation (duplicate
-    names, `--`-in-oracle) happens in register()."""
-
-    def deco(fn):
-        register(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------- privacy gate
-@_stage(
+@register(
     "k_anonymity_docs",
     oracle="""
     WITH g AS (
@@ -105,7 +83,7 @@ def k_anonymity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------- behavioral features
-@_stage(
+@register(
     "rfm_user_segments",
     oracle="""
     WITH ends AS (SELECT date_trunc('day', MAX(ts)) AS log_end FROM events),
@@ -173,7 +151,7 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rfm_segments(events, "user_id", "ts", "value")
 
 
-@_stage(
+@register(
     "markov_path_logloss",
     oracle="""
     WITH seq AS (
@@ -231,7 +209,7 @@ def markov_path_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------ retrieval infrastructure
-@_stage(
+@register(
     "phrase_query_table_hash",
     oracle="""
     WITH t AS (
@@ -272,7 +250,7 @@ def phrase_query_table_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_match_counts(docs, ["table", "hash"])
 
 
-@_stage(
+@register(
     "average_precision_by_source",
     oracle=r"""
     WITH feats AS (
@@ -380,7 +358,7 @@ def average_precision_by_source(
     return average_precision_at_k(graded, "source", "rank", "rel", k=10)
 
 
-@_stage(
+@register(
     "pq_codebook_train_gate",
     oracle="""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
@@ -412,7 +390,7 @@ def pq_codebook_train_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------------------- time-series audits
-@_stage(
+@register(
     "dow_seasonality_events",
     oracle="""
     WITH per AS (
@@ -450,7 +428,7 @@ def dow_seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dow_seasonality(events, "ts", "value")
 
 
-@_stage(
+@register(
     "cusum_changepoint_revenue",
     oracle="""
     WITH daily AS (

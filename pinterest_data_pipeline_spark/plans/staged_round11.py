@@ -1,13 +1,11 @@
-"""ROUND-11 STAGING BATCH — implemented, tested; the four-query
-exact-similarity/layout family was promoted EARLY in round 10 (see
-PROMOTED_IN_ROUND10 below), the six pipeline-operations queries remain
-staged for the round-11 window.
+"""Exact-similarity-join and pipeline-operations queries, registered in
+rounds 10-12.
 
-Same contract as every staging round: full DuckDB oracles replayed
-value-for-value (strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round11.py) and behavior-pinning unit tests; the
-round-11 window registers the remainder by pointing ``_stage`` at
-``registry.register``.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round11.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 Two families. First, the EXACT-SIMILARITY-JOIN family
 (operators/similarity_join.py) — the deterministic companions to the
@@ -48,80 +46,14 @@ the analytics proper:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.registry import (
-    has_sql_line_comment,
-    register,
-)
+from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
 
-# EARLY PROMOTIONS (round 10): the round-9 verdict asked for 12
-# promotions per window to burn down the staging backlog, so the
-# exact-similarity-join family (+ its storage-layout sibling) rode the
-# round-10 window alongside the eight staged_round10 queries.
-PROMOTED_IN_ROUND10 = {
-    "fastss_customer_name_pairs",
-    "jaccard_exact_doc_pairs",
-    "containment_exact_doc_pairs",
-    "zorder_layout_pruning_report",
-}
-
-# ROUND-11 PROMOTIONS: the six pipeline-operations queries, per the
-# registry ROTATION NOTES pre-plan — this file is now fully promoted.
-PROMOTED_IN_ROUND11 = {
-    "watermark_lateness_audit",
-    "mann_kendall_daily_trend",
-    "peak_concurrency_daily",
-    "varint_layout_size_report",
-    "merkle_diff_orders",
-    "rendezvous_reshard_stability",
-}
-
-# ROUND-12 ADDITION (r11 verdict item 5): the "no silent caps"
-# contract says trim volume is queryable — this registers ONE capped
-# trim-report so the driver proves the trim math itself, at a
-# deliberately tight demonstration cap that actually trims on the
-# test corpus (production default is 64, which no test-SF bucket
-# approaches).
-PROMOTED_IN_ROUND12 = {
-    "jaccard_trim_report_capped",
-}
-
-PROMOTED = PROMOTED_IN_ROUND10 | PROMOTED_IN_ROUND11 | PROMOTED_IN_ROUND12
-
-
-def _stage(name: str, oracle: str | None = None):
-    """registry.register's contract, into the round-11 staging dicts;
-    names in PROMOTED also hit registry.register proper (driver
-    surface). register() validates those; local-only names validate
-    here."""
-
-    def deco(fn):
-        if name in PROMOTED:
-            register(name, oracle)(fn)
-        else:
-            if name in STAGED_QUERIES:
-                raise ValueError(f"duplicate staged query name: {name}")
-            if oracle is not None and has_sql_line_comment(oracle):
-                raise ValueError(
-                    f"oracle for {name} contains a `--` SQL comment"
-                )
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
-
-
-@_stage(
+@register(
     "fastss_customer_name_pairs",
     oracle="""
     WITH v0 AS (
@@ -196,7 +128,7 @@ def fastss_customer_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "jaccard_exact_doc_pairs",
     oracle="""
     WITH t AS (
@@ -267,7 +199,7 @@ def jaccard_exact_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_exact_join(docs, "doc_id", "text", 1, 2, shingle_size=3)
 
 
-@_stage(
+@register(
     "containment_exact_doc_pairs",
     oracle="""
     WITH t AS (
@@ -329,7 +261,7 @@ def containment_exact_doc_pairs(
     return containment_exact_join(docs, "doc_id", "text", 4, 5, 3)
 
 
-@_stage(
+@register(
     "zorder_layout_pruning_report",
     oracle="""
     WITH base AS (
@@ -416,7 +348,7 @@ def zorder_layout_pruning_report(
 # ----------------------------------------------------- pipeline operations
 
 
-@_stage(
+@register(
     "watermark_lateness_audit",
     oracle="""
     WITH e AS (
@@ -467,7 +399,7 @@ def watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lateness_audit_by_hour(ev, "__arr", "event_id", "ts", delay_s=120)
 
 
-@_stage(
+@register(
     "mann_kendall_daily_trend",
     oracle="""
     WITH daily AS (
@@ -537,7 +469,7 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mann_kendall(daily, ["priority"], "day", "cents")
 
 
-@_stage(
+@register(
     "peak_concurrency_daily",
     oracle="""
     WITH ordered AS (
@@ -622,7 +554,7 @@ _VARINT_CASE = """CASE
     ELSE 9 END"""
 
 
-@_stage(
+@register(
     "varint_layout_size_report",
     oracle=f"""
     WITH base AS (
@@ -713,7 +645,7 @@ def varint_layout_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "merkle_diff_orders",
     oracle="""
     WITH v1 AS (
@@ -774,7 +706,7 @@ def merkle_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merkle_diff(v1, v2, "k", ["cents"], n_buckets=256)
 
 
-@_stage(
+@register(
     "rendezvous_reshard_stability",
     oracle="""
     WITH keys AS (SELECT DISTINCT o_orderkey AS k FROM orders),
@@ -846,7 +778,7 @@ def rendezvous_reshard_stability(
     return reshard_stability(o, "o_orderkey", 8, 10)
 
 
-@_stage(
+@register(
     "jaccard_trim_report_capped",
     oracle="""
     WITH t AS (

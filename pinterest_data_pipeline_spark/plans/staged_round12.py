@@ -1,11 +1,11 @@
-"""ROUND-12 STAGING BATCH — implemented, tested, NOT driver-registered.
+"""Resampling, sequential-testing, linkage and graph-community queries,
+registered in rounds 11-12.
 
-Rounds 9-11 are already staged (registry ROTATION NOTES;
-plans/staged_round{9,10,11}.py), so this batch stages four windows
-out. Same contract as every staging round: full DuckDB oracles
-replayed value-for-value (strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round12.py) and behavior-pinning unit tests; a later
-round registers them by pointing ``_stage`` at ``registry.register``.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round12.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 The batch closes measurement gaps around capabilities the engine
 already ships:
@@ -32,73 +32,18 @@ already ships:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.operators.bootstrap import (
     POISSON_CDF_U32,
 )
-from pinterest_data_pipeline_spark.plans.registry import (
-    has_sql_line_comment,
-    register,
-)
+from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.plans.training_data import (
     _PLANES_SQL,
     _cos_sql,
 )
 from pinterest_data_pipeline_spark.sources.parquet import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-# ROUND-11 PROMOTIONS (registry ROTATION NOTES pre-plan): the first
-# six of this batch ride the round-11 window; the two graph/linkage
-# queries (LPA communities, Fellegi-Sunter link weights) stay staged
-# for round 12.
-PROMOTED_IN_ROUND11 = {
-    "poisson_bootstrap_ci_value",
-    "obrien_fleming_interim_looks",
-    "span_corruption_plan_docs",
-    "profile_drift_audit",
-    "mutual_nn_pairs_sample",
-    "embedding_cell_quality_db",
-}
-
-# ROUND-12 PROMOTIONS: the graph/linkage remainder, per the registry
-# ROTATION NOTES pre-plan — this file is now fully promoted.
-PROMOTED_IN_ROUND12 = {
-    "lpa_purchasing_communities",
-    "fellegi_sunter_link_weights",
-}
-
-PROMOTED = PROMOTED_IN_ROUND11 | PROMOTED_IN_ROUND12
-
-
-def _stage(name: str, oracle: str | None = None):
-    """registry.register's contract, into the round-12 staging dicts;
-    names in PROMOTED also hit registry.register proper (driver
-    surface). register() validates those; local-only names validate
-    here."""
-
-    def deco(fn):
-        if name in PROMOTED:
-            register(name, oracle)(fn)
-        else:
-            if name in STAGED_QUERIES:
-                raise ValueError(f"duplicate staged query name: {name}")
-            if oracle is not None and has_sql_line_comment(oracle):
-                raise ValueError(
-                    f"oracle for {name} contains a `--` SQL comment"
-                )
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
 
 
 def _poisson_w_sql(u: str) -> str:
@@ -110,7 +55,7 @@ def _poisson_w_sql(u: str) -> str:
     return f"CASE {branches} ELSE {len(POISSON_CDF_U32)} END"
 
 
-@_stage(
+@register(
     "poisson_bootstrap_ci_value",
     oracle=f"""
     WITH e AS (
@@ -187,7 +132,7 @@ def poisson_bootstrap_ci_value(
     )
 
 
-@_stage(
+@register(
     "obrien_fleming_interim_looks",
     oracle="""
     WITH e AS (
@@ -328,7 +273,7 @@ def obrien_fleming_interim_looks(
     return group_sequential_obf(looks, "look", k_total=5)
 
 
-@_stage(
+@register(
     "span_corruption_plan_docs",
     oracle="""
     WITH t AS (
@@ -419,7 +364,7 @@ _DRIFT_UNPIVOT = """
 """
 
 
-@_stage(
+@register(
     "profile_drift_audit",
     oracle=f"""
     WITH s1 AS ({_DRIFT_STATS.format(src=f'({_DRIFT_V1})')}),
@@ -503,7 +448,7 @@ def profile_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "mutual_nn_pairs_sample",
     oracle=f"""
     WITH s AS (
@@ -583,7 +528,7 @@ _CELLS_SQL = f"""
 """
 
 
-@_stage(
+@register(
     "embedding_cell_quality_db",
     oracle=f"""
     WITH {_CELLS_SQL},
@@ -666,7 +611,7 @@ def _lpa_round_sql(prev: str, cur: str) -> str:
     )"""
 
 
-@_stage(
+@register(
     "lpa_purchasing_communities",
     oracle=f"""
     WITH ed AS (
@@ -739,7 +684,7 @@ _FS_TWIN = f"""
 """
 
 
-@_stage(
+@register(
     "fellegi_sunter_link_weights",
     oracle=f"""
     WITH o AS ({_FS_ORIG}),

@@ -1,14 +1,13 @@
-"""ROUND-13 BATCH — fully promoted to the driver surface in round 12.
+"""Graph-density, privacy, ranking and experiment-audit queries,
+registered in round 12.
 
-Rounds 9-12 are already staged (registry ROTATION NOTES;
-plans/staged_round{9,10,11,12}.py), so this seed stages five windows
-out; later rounds extend it toward a full batch before its window
-(the round-11 precedent: seeded at 4, extended to 10). Same contract
-as every staging round: full DuckDB oracles replayed value-for-value
-(strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round13.py) and behavior-pinning unit tests.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round13.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
-The seed fills three family gaps:
+The batch fills three family gaps:
 
 - k_core_purchasing_profile (operators/kcore): the graph-density tier
   cut — reachability (CC), communities (LPA), importance (PageRank /
@@ -57,61 +56,11 @@ Round-9 extension (seed 5 → full batch of 10):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.registry import (
-    has_sql_line_comment,
-    register,
-)
+from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-# ROUND-12 PROMOTIONS: the full batch of 10, per the registry
-# ROTATION NOTES pre-plan — this file is now fully promoted.
-PROMOTED_IN_ROUND12 = {
-    "k_core_purchasing_profile",
-    "l_diversity_docs",
-    "dirichlet_lm_doc_scores",
-    "err_at_10_length_ranker",
-    "poststratified_lift_user_spend",
-    "survivorship_golden_record",
-    "good_turing_bigram_coverage",
-    "kmv_distinct_price_points",
-    "event_burstiness_by_type",
-    "srm_assignment_audit",
-}
-
-PROMOTED = PROMOTED_IN_ROUND12
-
-
-def _stage(name: str, oracle: str | None = None):
-    """registry.register's contract, into the round-13 staging dicts;
-    names in PROMOTED also hit registry.register proper (driver
-    surface). register() validates those; local-only names validate
-    here."""
-
-    def deco(fn):
-        if name in PROMOTED:
-            register(name, oracle)(fn)
-        else:
-            if name in STAGED_QUERIES:
-                raise ValueError(f"duplicate staged query name: {name}")
-            if oracle is not None and has_sql_line_comment(oracle):
-                raise ValueError(
-                    f"oracle for {name} contains a `--` SQL comment"
-                )
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
 
 
 def _kcore_round_sql(prev: str, cur: str, k: int) -> str:
@@ -127,7 +76,7 @@ def _kcore_round_sql(prev: str, cur: str, k: int) -> str:
     )"""
 
 
-@_stage(
+@register(
     "k_core_purchasing_profile",
     oracle=f"""
     WITH ed AS (
@@ -182,7 +131,7 @@ def k_core_purchasing_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_core_peel_profile(edges, k=4, rounds=3)
 
 
-@_stage(
+@register(
     "l_diversity_docs",
     oracle="""
     WITH g AS (
@@ -226,7 +175,7 @@ _QLM_TERMS = ["batch", "hash", "merge", "row", "table"]
 _QLM_MU = 2000.0
 
 
-@_stage(
+@register(
     "dirichlet_lm_doc_scores",
     oracle=f"""
     WITH toks AS (
@@ -288,7 +237,7 @@ def dirichlet_lm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dirichlet_lm_scores(docs, _QLM_TERMS, mu=_QLM_MU)
 
 
-@_stage(
+@register(
     "err_at_10_length_ranker",
     oracle=r"""
     WITH feats AS (
@@ -382,7 +331,7 @@ def err_at_10_length_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
     return err_at_k(graded, "source", "rnk", "grade", k=10, g_max=9)
 
 
-@_stage(
+@register(
     "poststratified_lift_user_spend",
     oracle="""
     WITH u AS (
@@ -511,7 +460,7 @@ _SURV_RECORDS = """
 """
 
 
-@_stage(
+@register(
     "survivorship_golden_record",
     oracle=f"""
     WITH {_SURV_RECORDS}
@@ -584,7 +533,7 @@ def survivorship_golden_record(
 
 
 # ------------------------------------------------ Good-Turing coverage
-@_stage(
+@register(
     "good_turing_bigram_coverage",
     oracle=r"""
     WITH t AS (
@@ -649,7 +598,7 @@ def good_turing_bigram_coverage(
 
 
 # ---------------------------------------------------- KMV distinct sketch
-@_stage(
+@register(
     "kmv_distinct_price_points",
     oracle="""
     WITH vals AS (
@@ -709,7 +658,7 @@ def kmv_distinct_price_points(
 
 
 # --------------------------------------------------- burstiness / Fano
-@_stage(
+@register(
     "event_burstiness_by_type",
     oracle="""
     WITH s AS (
@@ -763,7 +712,7 @@ def event_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------ SRM audit
-@_stage(
+@register(
     "srm_assignment_audit",
     oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),

@@ -1,16 +1,10 @@
-"""Round-5 staged queries, PROMOTED to the registry in round 6.
+"""Curation composition queries, registered in round 6.
 
-These twenty-two queries were fully built in round 5 (Spark plan, DuckDB
-oracle, strict-mirror parity tests at sf0.001 + sf0.01 in
-tests/test_staged_round6.py, x30 stress rows) but held out of the
-registry because round 5's 50-row driver window was fully allocated
-(5 promotions + 5 Pinterest queries + 2 IVF oracle upgrades + 38
-oldest-evidence rotations). Round 6 registers them — ``_stage`` below
-now feeds ``registry.register`` directly (the same one-step move round
-5 performed on plans/round5_promotions.py) and the names lead
-registry.CHECK_FIRST so each earns its first driver correctness row.
-The registry-wide strict mirror (tests/test_oracle_parity.py)
-re-verifies them every pytest run like any other registered query.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round6.py checks them at sf0.01
+and pins the operators' behavior.
 
 The set completes the LLM-curation story with the COMPOSITION stages
 that sit between the already-registered primitives:
@@ -80,8 +74,6 @@ that sit between the already-registered primitives:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -93,25 +85,6 @@ from pinterest_data_pipeline_spark.plans.training_data import (
     _cos_sql,
 )
 from pinterest_data_pipeline_spark.sources.parquet import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, oracle: str | None = None):
-    """ROUND-6 PROMOTION: registry.register proper (driver surface),
-    plus the module-local dicts the behavioral tests in
-    tests/test_staged_round6.py enumerate. All validation (duplicate
-    names, `--`-in-oracle) happens in register()."""
-
-    def deco(fn):
-        register(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
 
 
 # The portable-hash MinHash near-dup clusters, exactly as the
@@ -217,7 +190,7 @@ def _cluster_owners(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "dedup_keep_best_quality",
     oracle=f"""
     WITH RECURSIVE {_OWNER_CTES}, {_MARGIN_CTE},
@@ -274,7 +247,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "leakage_safe_split_assign",
     oracle=f"""
     WITH RECURSIVE {_OWNER_CTES}
@@ -309,7 +282,7 @@ def leakage_safe_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "token_budget_selection",
     oracle=f"""
     WITH {_MARGIN_CTE},
@@ -352,7 +325,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return select_op(feats, budget=20000)
 
 
-@_stage(
+@register(
     "mixture_epoch_capped_plan",
     oracle=r"""
     WITH feats AS (
@@ -432,7 +405,7 @@ def mixture_epoch_capped_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "bpe_pair_stats",
     oracle=r"""
     WITH t AS (
@@ -492,7 +465,7 @@ def _winnowing_cap_oracle() -> str:
     """
 
 
-@_stage("winnowing_cap_report", oracle=_winnowing_cap_oracle())
+@register("winnowing_cap_report", oracle=_winnowing_cap_oracle())
 def winnowing_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """"No silent caps" made queryable (operators/dedup.cap_drop_report):
     the audit row for the cap_bucket_size(64) straggler guard inside
@@ -552,7 +525,7 @@ _INC_EMB_PAIRS_ORACLE = f"""
     """
 
 
-@_stage("incremental_embedding_new_pairs", oracle=_INC_EMB_PAIRS_ORACLE)
+@register("incremental_embedding_new_pairs", oracle=_INC_EMB_PAIRS_ORACLE)
 def incremental_embedding_new_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding near-dup ingest
     (operators/similarity.incremental_embedding_candidates): vectors
@@ -732,7 +705,7 @@ _DSIR_CTES = r"""
     )"""
 
 
-@_stage(
+@register(
     "dsir_importance_weights",
     oracle=f"""
     WITH {_DSIR_CTES}
@@ -757,7 +730,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return importance_weights(docs, F.col("lang") == "en")
 
 
-@_stage(
+@register(
     "dsir_gumbel_topk",
     oracle=f"""
     WITH {_DSIR_CTES},
@@ -857,7 +830,7 @@ def _bpe_layer(i: int) -> str:
 _BPE_CTES = _BPE_W0 + "," + ",".join(_bpe_layer(i) for i in range(1, _BPE_K + 1))
 
 
-@_stage(
+@register(
     "bpe_learn_merges",
     oracle=f"""
     WITH {_BPE_CTES}
@@ -882,7 +855,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merge_table(spark, docs, k=_BPE_K)
 
 
-@_stage(
+@register(
     "bpe_encode_compression",
     oracle=f"""
     WITH {_BPE_CTES}
@@ -960,7 +933,7 @@ def _span_ctes(src: str) -> str:
 _SPAN_CTES = _span_ctes("documents")
 
 
-@_stage(
+@register(
     "duplicate_span_report",
     oracle=f"""
     WITH {_SPAN_CTES},
@@ -1002,7 +975,7 @@ def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_spans(docs, L=8, min_count=2)
 
 
-@_stage(
+@register(
     "cut_duplicate_spans_stats",
     oracle=f"""
     WITH {_SPAN_CTES},
@@ -1058,7 +1031,7 @@ def cut_duplicate_spans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cluster formation is the oracle-green banded MinHash pipeline.
 
 
-@_stage(
+@register(
     "soft_dedup_weights",
     oracle=f"""
     WITH RECURSIVE {_OWNER_CTES},
@@ -1102,7 +1075,7 @@ def soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # under-represented languages.
 
 
-@_stage(
+@register(
     "bpe_fertility_by_lang",
     oracle=f"""
     WITH {_BPE_CTES}
@@ -1147,7 +1120,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (or train/eval) boundary.
 
 
-@_stage(
+@register(
     "cross_source_span_leakage",
     oracle=r"""
     WITH toks AS (
@@ -1210,7 +1183,7 @@ def cross_source_span_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------- lexical diversity
 
 
-@_stage(
+@register(
     "mattr_lexical_diversity",
     oracle=r"""
     WITH toks AS (
@@ -1266,7 +1239,7 @@ def mattr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- null-safe equality join
 
 
-@_stage(
+@register(
     "join_null_safe_agg",
     oracle="""
     WITH a AS (
@@ -1310,7 +1283,7 @@ def join_null_safe_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ bigram LM scoring
 
 
-@_stage(
+@register(
     "bigram_logprob_quality",
     oracle=r"""
     WITH toks AS (
@@ -1370,7 +1343,7 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the corpus_curation_full discipline applied to the new stack.
 
 
-@_stage(
+@register(
     "curation_v2_report",
     oracle=f"""
     WITH {_MARGIN_CTE},
@@ -1478,7 +1451,7 @@ def curation_v2_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------ sessionization
 
 
-@_stage(
+@register(
     "sessionize_event_stats",
     oracle="""
     WITH s AS (
@@ -1523,7 +1496,7 @@ def sessionize_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------- DoReMi reweight
 
 
-@_stage(
+@register(
     "doremi_domain_reweight",
     oracle="""
     WITH toks AS (

@@ -1,13 +1,11 @@
-"""ROUND-7 PROMOTIONS — built and parity-tested in round 6, registered
+"""Spatial, retrieval, experimentation and labeling-QA queries, registered
 in round 7.
 
-These seventeen queries staged during round 6 (its driver window was
-fully allocated) with full DuckDB oracles and strict-mirror parity tests
-(tests/test_staged_round7.py) at sf0.001 + sf0.01. Round 7 registers
-them — ``_stage`` below now feeds ``registry.register`` directly (the
-same one-step move rounds 5 and 6 performed), ``__spark_entry__``
-imports this module, and their names lead registry.CHECK_FIRST so the
-driver's 50-query round-7 window certifies them first.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round7.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 The set extends the engine sideways into surfaces the inventory
 did not yet cover, each with the repo's engine-portable exactness
@@ -44,32 +42,11 @@ so DuckDB replays every value bit-for-bit):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, oracle: str | None = None):
-    """ROUND-7 PROMOTION: registry.register proper (driver surface),
-    plus the module-local dicts the behavioral tests in
-    tests/test_staged_round7.py enumerate. All validation (duplicate
-    names, `--`-in-oracle) happens in register()."""
-
-    def deco(fn):
-        register(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
 
 
 # Synthetic point coordinates for an id column, replayed verbatim by
@@ -90,7 +67,7 @@ def _pt_sql(idexpr: str, salt: str = "geo") -> tuple[str, str]:
 _LAT, _LON = _pt_sql("c_custkey")
 
 
-@_stage(
+@register(
     "geo_radius_pairs_customers",
     oracle=f"""
     WITH pts AS (
@@ -135,7 +112,7 @@ def geo_radius_pairs_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grid_radius_pairs(pts, "id", "lat", "lon", radius_micro=1_000_000)
 
 
-@_stage(
+@register(
     "geo_nearest_neighbor_probes",
     oracle=f"""
     WITH pts AS (
@@ -192,7 +169,7 @@ def geo_nearest_neighbor_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("probe_id", "nn_id", "d2_micro")
 
 
-@_stage(
+@register(
     "ewma16_user_value",
     oracle="""
     WITH ranked AS (
@@ -249,7 +226,7 @@ def ewma16_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_TERMS = ["batch", "hash", "merge", "row", "table"]
 
 
-@_stage(
+@register(
     "bm25_doc_scores",
     oracle=f"""
     WITH toks AS (
@@ -311,7 +288,7 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_scores(docs, _BM25_TERMS)
 
 
-@_stage(
+@register(
     "rrf_quality_length_fusion",
     oracle=r"""
     WITH feats AS (
@@ -379,7 +356,7 @@ def rrf_quality_length_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "cuped_event_experiment",
     oracle="""
     WITH units AS (
@@ -472,7 +449,7 @@ def cuped_event_experiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cuped_adjusted_means(units).orderBy("arm")
 
 
-@_stage(
+@register(
     "quality_decile_calibration",
     oracle=r"""
     WITH feats AS (
@@ -533,7 +510,7 @@ def quality_decile_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "curriculum_interleave_shards",
     oracle=r"""
     WITH feats AS (
@@ -652,7 +629,7 @@ _PI_CTES = (
 )
 
 
-@_stage(
+@register(
     "embedding_top_direction_power",
     oracle=f"""
     WITH {_PI_CTES},
@@ -707,7 +684,7 @@ from pinterest_data_pipeline_spark.plans.training_data import (  # noqa: E402
 )
 
 
-@_stage(
+@register(
     "triplet_mining_anchors",
     oracle=f"""
     WITH q AS (
@@ -801,7 +778,7 @@ def _mmr_pick(i: int) -> str:
     )"""
 
 
-@_stage(
+@register(
     "mmr_diverse_rerank",
     oracle=f"""
     WITH q AS (
@@ -917,7 +894,7 @@ _KAPPA_HASH = (
 )
 
 
-@_stage(
+@register(
     "annotator_agreement_kappa",
     oracle=f"""
     WITH {_MARGIN_CTE},
@@ -990,7 +967,7 @@ def annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- collaborative co-occurrence
 
 
-@_stage(
+@register(
     "item_cooccurrence_similarity",
     oracle="""
     WITH ui AS (
@@ -1052,7 +1029,7 @@ def item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "ab_purchase_ztest",
     oracle="""
     WITH units AS (
@@ -1132,7 +1109,7 @@ def ab_purchase_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return two_proportion_ztest(units)
 
 
-@_stage(
+@register(
     "ndcg_length_ranker_by_source",
     oracle=r"""
     WITH feats AS (
@@ -1240,7 +1217,7 @@ _ARM_SQL = """CASE WHEN CAST(concat('0x', substr(md5(concat('exp1:',
               THEN 'treatment' ELSE 'control' END"""
 
 
-@_stage(
+@register(
     "mann_whitney_event_value",
     oracle=f"""
     WITH units AS (
@@ -1334,7 +1311,7 @@ def mann_whitney_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mann_whitney_u(units, "arm", "value_int")
 
 
-@_stage(
+@register(
     "chisq_event_type_by_arm",
     oracle=f"""
     WITH e AS (

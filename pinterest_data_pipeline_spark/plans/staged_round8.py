@@ -1,14 +1,10 @@
-"""ROUND-8 PROMOTIONS — staged in round 7, driver-registered in round 8.
+"""Offline-evaluation queries, registered in round 8.
 
-Built and fully oracled one window ahead per the standing rotation
-rule; round 8 executed the pre-planned registration (ROUND-8 ROTATION
-NOTES in plans/registry.py): ``_stage`` below now feeds
-``registry.register`` directly, ``__spark_entry__`` imports this
-module, and the eight names lead registry.CHECK_FIRST for their first
-driver correctness rows. Same contract as every staging round: each
-query has a full DuckDB oracle replayed value-for-value (strict-mirror
-parity test at sf0.001 + sf0.01 in tests/test_staged_round8.py) and
-behavior-pinning unit tests.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round8.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 The batch is the OFFLINE EVALUATION layer a decision-making data
 pipeline needs between "metrics computed" and "change shipped"
@@ -49,32 +45,11 @@ sketch whose counter matrix the oracle rebuilds cell for cell
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, oracle: str | None = None):
-    """ROUND-8 PROMOTION: registry.register proper (driver surface),
-    plus the module-local dicts the behavioral tests in
-    tests/test_staged_round8.py enumerate. All validation (duplicate
-    names, `--`-in-oracle) happens in register()."""
-
-    def deco(fn):
-        register(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
 
 
 _ARM_SQL = """CASE WHEN CAST(concat('0x', substr(md5(concat('exp1:',
@@ -82,7 +57,7 @@ _ARM_SQL = """CASE WHEN CAST(concat('0x', substr(md5(concat('exp1:',
               THEN 'treatment' ELSE 'control' END"""
 
 
-@_stage(
+@register(
     "quantile_lift_user_spend",
     oracle=f"""
     WITH units AS (
@@ -165,7 +140,7 @@ _IPS_HASH = (
 )
 
 
-@_stage(
+@register(
     "ips_reranker_policy_value",
     oracle=f"""
     WITH logs AS (
@@ -270,7 +245,7 @@ _ECE_NOISE = (
 )
 
 
-@_stage(
+@register(
     "ece_quality_gate_probability",
     oracle=f"""
     WITH m AS (
@@ -348,7 +323,7 @@ def ece_quality_gate_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reliability_table_ece(scored).orderBy("bin")
 
 
-@_stage(
+@register(
     "winsorized_mean_lift_user_spend",
     oracle=f"""
     WITH units AS (
@@ -436,7 +411,7 @@ def winsorized_mean_lift_user_spend(
     return winsorized_mean_lift(units, pct=95)
 
 
-@_stage(
+@register(
     "dr_reranker_policy_value",
     oracle=f"""
     WITH logs AS (
@@ -560,7 +535,7 @@ def dr_reranker_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dr_policy_value(eval_half, qhat)
 
 
-@_stage(
+@register(
     "mde_power_purchase",
     oracle=f"""
     WITH units AS (
@@ -640,7 +615,7 @@ def mde_power_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mde_readout(units)
 
 
-@_stage(
+@register(
     "hits_supplier_part_scores",
     oracle="""
     WITH ed AS (
@@ -729,7 +704,7 @@ def hits_supplier_part_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "countmin_token_frequency",
     oracle=r"""
     WITH toks AS (

@@ -1,12 +1,10 @@
-"""ROUND-9 PROMOTIONS — staged in round 8, driver-registered in round 9.
+"""Data-audit and corpus-linguistics queries, registered in round 9.
 
-Executed exactly as pre-planned (see the ROUND-9 ROTATION NOTES in
-plans/registry.py): ``_stage`` below now feeds ``registry.register``
-directly, ``__spark_entry__`` imports this module, and all twelve names
-lead CHECK_FIRST for their first driver rows. Same contract as every
-staging round: each query has a full DuckDB oracle replayed
-value-for-value (strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round9.py) and behavior-pinning unit tests.
+Each query registers through ``registry.register`` with a full DuckDB
+oracle. The registry-wide strict mirror (tests/test_oracle_parity.py)
+checks every one at sf0.001;
+tests/test_staged_round9.py checks them at sf0.001 and sf0.01
+and pins the operators' behavior.
 
 The batch is the DATA-AUDIT + CORPUS-LINGUISTICS layer — the checks a
 pipeline runs on a numeric or text feed before trusting it, plus two
@@ -44,36 +42,15 @@ both engines, one rounding at the end.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, oracle: str | None = None):
-    """ROUND-9 PROMOTION: registry.register proper (driver surface),
-    plus the module-local dicts the behavioral tests in
-    tests/test_staged_round9.py enumerate. All validation (duplicate
-    names, `--`-in-oracle) happens in register()."""
-
-    def deco(fn):
-        register(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE[name] = " ".join(oracle.split())
-        return fn
-
-    return deco
-
 
 # ------------------------------------------------------ weighted sampling
-@_stage(
+@register(
     "weighted_priority_sample",
     oracle="""
     WITH keyed AS (
@@ -109,7 +86,7 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- readability
-@_stage(
+@register(
     "flesch_reading_ease_by_lang",
     oracle="""
     WITH per_doc AS (
@@ -155,7 +132,7 @@ def flesch_reading_ease_by_lang(
     return flesch_reading_ease(docs)
 
 
-@_stage(
+@register(
     "charset_script_profile",
     oracle="""
     WITH per_doc AS (
@@ -206,7 +183,7 @@ def charset_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------- numeric audits
-@_stage(
+@register(
     "benford_price_audit",
     oracle="""
     WITH cents AS (
@@ -252,7 +229,7 @@ def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benford_audit(orders, "o_totalprice")
 
 
-@_stage(
+@register(
     "ks_exact_two_sample",
     oracle="""
     WITH hist AS (
@@ -314,7 +291,7 @@ def ks_exact_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_two_sample(events, "event_type", "value", "click", "purchase")
 
 
-@_stage(
+@register(
     "autocorr_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -368,7 +345,7 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return autocorr_daily(li, "l_shipdate", "l_extendedprice", (1, 7))
 
 
-@_stage(
+@register(
     "gini_user_activity_skew",
     oracle="""
     WITH kc AS (
@@ -425,7 +402,7 @@ def gini_user_activity_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------- corpus linguistics
-@_stage(
+@register(
     "pmi_bigram_collocations",
     oracle="""
     WITH t AS (
@@ -474,7 +451,7 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi_bigrams(docs, min_count=5, top_k=15)
 
 
-@_stage(
+@register(
     "feature_hash_buckets",
     oracle="""
     WITH toks AS (
@@ -512,7 +489,7 @@ def feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------- allocation
-@_stage(
+@register(
     "stratified_budget_allocation",
     oracle="""
     WITH c AS (
@@ -561,7 +538,7 @@ def stratified_budget_allocation(
 
 
 # ----------------------------------------------------------- survival
-@_stage(
+@register(
     "kaplan_meier_retention",
     oracle="""
     WITH ends AS (SELECT date_trunc('day', MAX(ts)) AS log_end FROM events),
@@ -635,7 +612,7 @@ _RBO_SUM_SQL = " + ".join(
 )
 
 
-@_stage(
+@register(
     "rbo_rank_agreement",
     oracle=f"""
     WITH a AS (

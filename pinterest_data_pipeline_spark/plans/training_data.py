@@ -1120,7 +1120,11 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fingerprints the when() keeps — one driver action instead of
     # a separate count() over the survivor relation (guide §2.4; the
     # relation itself is still built and persisted below, where the
-    # LSH input and the final anti-join genuinely need it).
+    # LSH input and the final anti-join genuinely need it). NULL text is
+    # the only source of a NULL fingerprint, and NULL text scores at most
+    # 0.4, below the 0.5 gate: count_distinct never drops a NULL
+    # fingerprint group that the groupBy below (and the oracle's GROUP BY
+    # fingerprint) would count.
     totals = scored.agg(
         F.count("*").alias("n_total"),
         F.count(F.when(F.col("quality") >= 0.5, True)).alias("n_quality"),

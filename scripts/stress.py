@@ -106,8 +106,8 @@ QUERIES = [
     "pinterest_q4_top_category_per_age_group",
     "pinterest_q5_users_joined_per_year",
     "embedding_ivf_multiprobe_topk",
-    # round-5 staging (plans/staged_round6.py — resolved from
-    # STAGED_QUERIES): DSIR selection, BPE training, ExactSubstr span
+    # round-5 staging (plans/staged_round6.py): DSIR selection, BPE
+    # training, ExactSubstr span
     # dedup, per-session sessionization, DoReMi reweight. NB the
     # replica layout duplicates every document verbatim (only ids are
     # remapped), so the span-dedup rows measure the ALL-DUPLICATED
@@ -348,63 +348,17 @@ def main() -> None:
             best = s if best is None else min(best, s)
         return best, n
 
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round7 import (
-        STAGED_QUERIES as STAGED_R7,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round8 import (
-        STAGED_QUERIES as STAGED_R8,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round9 import (
-        STAGED_QUERIES as STAGED_R9,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round10 import (
-        STAGED_QUERIES as STAGED_R10,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round11 import (
-        STAGED_QUERIES as STAGED_R11,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round12 import (
-        STAGED_QUERIES as STAGED_R12,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round13 import (
-        STAGED_QUERIES as STAGED_R13,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round14 import (
-        STAGED_QUERIES as STAGED_R14,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round15 import (
-        STAGED_QUERIES as STAGED_R15,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round16 import (
-        STAGED_QUERIES as STAGED_R16,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round17 import (
-        STAGED_QUERIES as STAGED_R17,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round18 import (
-        STAGED_QUERIES as STAGED_R18,
-    )
+    import importlib
 
-    for name in (only if only is not None else QUERIES):
-        fn = (
-            entry_mod.queries().get(name)
-            or STAGED_QUERIES.get(name)
-            or STAGED_R7.get(name)
-            or STAGED_R8.get(name)
-            or STAGED_R9.get(name)
-            or STAGED_R10.get(name)
-            or STAGED_R11.get(name)
-            or STAGED_R12.get(name)
-            or STAGED_R13.get(name)
-            or STAGED_R14.get(name)
-            or STAGED_R15.get(name)
-            or STAGED_R16.get(name)
-            or STAGED_R17.get(name)
-            or STAGED_R18[name]
+    queries = dict(entry_mod.queries())
+    for r in range(14, 19):  # the never-registered staging batches
+        queries.update(
+            importlib.import_module(
+                f"pinterest_data_pipeline_spark.plans.staged_round{r}"
+            ).STAGED_QUERIES
         )
+    for name in (only if only is not None else QUERIES):
+        fn = queries[name]
         full = name in FORCE_FULL_EVAL
         base_s, n_base = timed(fn, SRC_SF, full)
         big_s, n_big = timed(fn, out_dir, full, runs=big_runs)

@@ -10,6 +10,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pinterest_data_pipeline_spark.session import get_spark  # noqa: E402
+import __spark_entry__  # noqa: E402,F401  (registers every query in registry.QUERIES)
 
 SMOKE_SF = "/root/testdata/sf0.001"
 ORACLE_SF = "/root/testdata/sf0.01"

@@ -179,16 +179,38 @@ def run_both_sides(build_spark_pdf, sf_dir: str, sql: str):
     return spark_pdf, oracle_pdf, problems
 
 
-def check_query(spark, name: str, sf_dir: str) -> list[str]:
-    """Run query `name` on Spark and DuckDB at sf_dir; return mismatches."""
+def check_query(
+    spark, name: str, sf_dir: str, nonempty: bool = False
+) -> list[str]:
+    """Run query `name` on Spark and DuckDB at sf_dir; return mismatches.
+    With ``nonempty``, an empty Spark result is a mismatch too."""
     from pinterest_data_pipeline_spark.plans.registry import ORACLE, QUERIES
 
     if name not in ORACLE:
         spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
-        return [] if len(spark_pdf) >= 0 else ["unreachable"]
-    spark_pdf, oracle_pdf, problems = run_both_sides(
-        lambda: QUERIES[name](spark, sf_dir).toPandas(), sf_dir, ORACLE[name]
+        problems = []
+    else:
+        spark_pdf, oracle_pdf, problems = run_both_sides(
+            lambda: QUERIES[name](spark, sf_dir).toPandas(),
+            sf_dir,
+            ORACLE[name],
+        )
+        if problems:
+            return problems
+        problems = compare_frames(spark_pdf, oracle_pdf)
+    if nonempty and len(spark_pdf) == 0:
+        problems.append("no rows")
+    return problems
+
+
+def module_queries(module: str) -> list[str]:
+    """Registered query names whose builder is defined in
+    ``plans/<module>.py``, sorted."""
+    import __spark_entry__ as entry_mod
+
+    full = f"pinterest_data_pipeline_spark.plans.{module}"
+    return sorted(
+        name
+        for name, fn in entry_mod.queries().items()
+        if fn.__module__ == full
     )
-    if problems:
-        return problems
-    return compare_frames(spark_pdf, oracle_pdf)

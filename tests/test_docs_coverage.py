@@ -4,10 +4,12 @@ rows-only query must explain why it has no oracle."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import re
 
 import __spark_entry__ as entry_mod
+from tests.oracle_utils import module_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -67,117 +69,49 @@ def test_oracle_sql_mentions_only_known_tables():
             )
 
 
-def test_every_staged_query_mentioned_in_coverage():
-    """The staging areas are part of the judged surface: each staged
-    query must appear in COVERAGE.md's staged-surface table."""
-    from pinterest_data_pipeline_spark.plans.staged_round7 import (
-        STAGED_QUERIES as R7,
+def _staged_batch(r: int) -> list[str]:
+    """Query names of the never-registered staging batch
+    plans/staged_round<r>.py (rounds 14-18)."""
+    mod = importlib.import_module(
+        f"pinterest_data_pipeline_spark.plans.staged_round{r}"
     )
-    from pinterest_data_pipeline_spark.plans.staged_round8 import (
-        STAGED_QUERIES as R8,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round9 import (
-        STAGED_QUERIES as R9,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round10 import (
-        STAGED_QUERIES as R10,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round11 import (
-        STAGED_QUERIES as R11,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round12 import (
-        STAGED_QUERIES as R12,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round13 import (
-        STAGED_QUERIES as R13,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round14 import (
-        STAGED_QUERIES as R14,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round15 import (
-        STAGED_QUERIES as R15,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round16 import (
-        STAGED_QUERIES as R16,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round17 import (
-        STAGED_QUERIES as R17,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round18 import (
-        STAGED_QUERIES as R18,
-    )
+    return list(mod.STAGED_QUERIES)
 
+
+def test_every_staged_query_mentioned_in_coverage():
+    """The round modules are part of the judged surface: each of their
+    queries, registered (rounds 6-13) or staged (14-18), must appear in
+    COVERAGE.md."""
     coverage = open(os.path.join(REPO, "COVERAGE.md")).read()
-    missing = [
-        q
-        for q in (
-            list(R7) + list(R8) + list(R9) + list(R10) + list(R11)
-            + list(R12) + list(R13) + list(R14) + list(R15) + list(R16)
-            + list(R17) + list(R18)
-        )
-        if q not in coverage
-    ]
+    names = [n for r in range(6, 14) for n in module_queries(f"staged_round{r}")]
+    names += [n for r in range(14, 19) for n in _staged_batch(r)]
+    missing = [q for q in names if q not in coverage]
     assert not missing, f"COVERAGE.md missing staged queries: {missing}"
 
 
 def test_staged_names_do_not_collide_across_rounds():
-    import __spark_entry__ as em
+    """The staging batches keep names of their own, disjoint from each
+    other and from the registry, so registering any of them later
+    cannot hit register()'s duplicate-name error."""
+    registered = set(entry_mod.queries())
+    seen: set[str] = set()
+    for r in range(14, 19):
+        batch = set(_staged_batch(r))
+        assert batch, r
+        assert not (batch & seen), r
+        assert not (batch & registered), r
+        seen |= batch
 
-    from pinterest_data_pipeline_spark.plans.staged_round7 import (
-        STAGED_QUERIES as R7,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round8 import (
-        STAGED_QUERIES as R8,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round9 import (
-        STAGED_QUERIES as R9,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round10 import (
-        STAGED_QUERIES as R10,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round11 import (
-        STAGED_QUERIES as R11,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round12 import (
-        STAGED_QUERIES as R12,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round13 import (
-        STAGED_QUERIES as R13,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round14 import (
-        STAGED_QUERIES as R14,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round15 import (
-        STAGED_QUERIES as R15,
-    )
 
-    from pinterest_data_pipeline_spark.plans.staged_round16 import (
-        STAGED_QUERIES as R16,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round17 import (
-        STAGED_QUERIES as R17,
-    )
-    from pinterest_data_pipeline_spark.plans.staged_round18 import (
-        STAGED_QUERIES as R18,
-    )
-
-    staged = {
-        "R14": set(R14), "R15": set(R15), "R16": set(R16),
-        "R17": set(R17), "R18": set(R18),
+def test_registry_holds_every_plan_module():
+    """A plan module that stops being imported silently drops its
+    queries, so pin the registry: its size, its one rows-only query, and
+    a direct __spark_entry__ import for every module that registers."""
+    qs = entry_mod.queries()
+    assert len(qs) == 288
+    assert set(qs) - set(entry_mod.oracle_sql()) == {
+        "multimodal_decode_features"
     }
-    names = [set(R7), set(R8), set(R9), set(R10), set(R11), set(R12),
-             set(R13), set(R14), set(R15), set(R16), set(R17),
-             set(R18)]
-    for i, a in enumerate(names):
-        for b in names[i + 1:]:
-            assert not (a & b)
-    # R7-R13 promoted in their rounds (the round-12 window completed
-    # R12 and took all of R13): every promoted name must now BE
-    # registered (advisor r6: a collision would otherwise only surface
-    # at promotion time — post-promotion the subset assert catches it
-    # in CI, and the not-yet-promoted rounds keep the disjointness
-    # form).
-    for batch in (R7, R8, R9, R10, R11, R12, R13):
-        assert set(batch) <= set(em.queries())
-    for tag, batch in staged.items():
-        assert not (batch & set(em.queries())), tag
+    entry_src = open(os.path.join(REPO, "__spark_entry__.py")).read()
+    for module in {fn.__module__ for fn in qs.values()}:
+        assert re.search(rf"^import {module}\b", entry_src, re.M), module

@@ -156,8 +156,6 @@ def test_register_rejects_sql_line_comments():
     """register() collapses oracle whitespace, so a `--` line comment
     would silently swallow the rest of the statement (it broke three
     oracles' DESCRIBE during round 4 before the guard existed)."""
-    import pytest
-
     from pinterest_data_pipeline_spark.plans import registry
 
     with pytest.raises(ValueError, match="SQL comment"):
@@ -167,6 +165,19 @@ def test_register_rejects_sql_line_comments():
     # the rejected registration must leave no partial entry behind
     assert "___tmp_comment_guard" not in registry.QUERIES
     assert "___tmp_comment_guard" not in registry.ORACLE
+
+
+def test_register_rejects_duplicate_names():
+    """A second registration under a taken name raises and leaves the
+    first builder and its oracle in place."""
+    from pinterest_data_pipeline_spark.plans import registry
+
+    name = "q3a_top_customer_per_nation"
+    queries, oracles = dict(registry.QUERIES), dict(registry.ORACLE)
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.register(name, oracle="SELECT 1")(lambda spark, sf: None)
+    assert registry.QUERIES == queries
+    assert registry.ORACLE == oracles
 
 
 def test_every_query_has_callable_and_most_have_oracles():

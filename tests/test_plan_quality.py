@@ -388,15 +388,7 @@ def test_token_budget_selection_has_no_global_row_window(spark):
     globally: the only single-partition exchange feeds the
     |margins|-bucket cumulative (metadata-sized), and the per-row
     running sum is a window PARTITIONED by margin."""
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
-
-    df = STAGED_QUERIES["token_budget_selection"](spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(spark, "token_budget_selection")
     # exactly three Window nodes: the coarse-range cumulative (the ONLY
     # global-ordered window, over |margin range / 2^20| rows — bounded
     # by value range, not corpus diversity), the within-coarse prefix
@@ -431,35 +423,15 @@ def test_token_budget_selection_has_no_global_row_window(spark):
 def test_adjacent_pairs_use_take_ordered(spark):
     """The BPE pair cut must be TakeOrdered (per-partition top-n +
     driver merge), never a full global sort."""
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
-
-    df = STAGED_QUERIES["bpe_pair_stats"](spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(spark, "bpe_pair_stats")
     assert n_nodes(plan, "TakeOrderedAndProject") == 1
     assert n_nodes(plan, "HashAggregate") >= 2  # partial + final
-
-
-def _staged9_plan(spark, name: str) -> str:
-    from pinterest_data_pipeline_spark.plans.staged_round9 import (
-        STAGED_QUERIES,
-    )
-
-    df = STAGED_QUERIES[name](spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_weighted_priority_sample_is_take_ordered(spark):
     """The A-Res cut must be per-partition top-k + driver merge, never
     a global sort of the keyed corpus."""
-    plan = _staged9_plan(spark, "weighted_priority_sample")
+    plan = plan_of(spark, "weighted_priority_sample")
     assert n_nodes(plan, "TakeOrderedAndProject") == 1
     assert n_nodes(plan, "Sort") == 0
     assert n_nodes(plan, "Window") == 0
@@ -470,7 +442,7 @@ def test_gini_windows_run_on_histogram_not_keys(spark):
     (post-aggregate), never the per-key relation: the plan has the
     key aggregate BELOW the histogram aggregate BELOW the window, and
     the top-share cut is TakeOrdered."""
-    plan = _staged9_plan(spark, "gini_user_activity_skew")
+    plan = plan_of(spark, "gini_user_activity_skew")
     assert n_nodes(plan, "Window") == 1
     assert n_nodes(plan, "TakeOrderedAndProject") == 1
     # partial+final pairs for the key count and the histogram
@@ -480,7 +452,7 @@ def test_gini_windows_run_on_histogram_not_keys(spark):
 def test_pmi_marginal_joins_broadcast(spark):
     """The unigram marginals join onto the (much smaller) pair
     vocabulary via broadcast, and the cut is TakeOrdered."""
-    plan = _staged9_plan(spark, "pmi_bigram_collocations")
+    plan = plan_of(spark, "pmi_bigram_collocations")
     assert n_nodes(plan, "TakeOrderedAndProject") == 1
     assert n_nodes(plan, "BroadcastHashJoin") >= 2
     assert n_nodes(plan, "SortMergeJoin") == 0
@@ -495,23 +467,10 @@ def test_audit_queries_single_scan_partial_agg(spark):
         "flesch_reading_ease_by_lang",
         "charset_script_profile",
     ):
-        plan = _staged9_plan(spark, name)
+        plan = plan_of(spark, name)
         assert n_nodes(plan, "Window") == 0, name
         assert n_nodes(plan, "SortMergeJoin") == 0, name
         assert n_nodes(plan, "HashAggregate") >= 2, name
-
-
-def _staged_plan(spark, module: str, name: str) -> str:
-    import importlib
-
-    mod = importlib.import_module(
-        f"pinterest_data_pipeline_spark.plans.{module}"
-    )
-    df = mod.STAGED_QUERIES[name](spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_lateness_scan_is_sharded_not_global(spark):
@@ -520,7 +479,7 @@ def test_lateness_scan_is_sharded_not_global(spark):
     cross-shard prefix max), the big one PARTITIONED BY SHARD — the
     only SinglePartition hop feeds the metadata-sized shard table, and
     the shard summary joins back by broadcast."""
-    plan = _staged_plan(spark, "staged_round11", "watermark_lateness_audit")
+    plan = plan_of(spark, "watermark_lateness_audit")
     assert n_nodes(plan, "Window") == 2
     assert n_nodes(plan, "BroadcastHashJoin") >= 1
     assert n_nodes(plan, "SortMergeJoin") == 0
@@ -535,7 +494,7 @@ def test_peak_concurrency_sweeps_per_day(spark):
     """Every sweep/peak window partitions by the day key — a global
     time-ordered running sum (SinglePartition) would serialize the
     whole corpus through one task."""
-    plan = _staged_plan(spark, "staged_round11", "peak_concurrency_daily")
+    plan = plan_of(spark, "peak_concurrency_daily")
     assert "SinglePartition" not in plan
     assert n_nodes(plan, "CartesianProduct") == 0
     assert n_nodes(plan, "BroadcastNestedLoopJoin") == 0
@@ -545,7 +504,7 @@ def test_merkle_diff_prunes_with_broadcast_semis(spark):
     """The exact diff pass must reach the fact rows through broadcast
     SEMI joins on the differing-bucket list (cost ∝ change set), never
     a nested loop or cartesian."""
-    plan = _staged_plan(spark, "staged_round11", "merkle_diff_orders")
+    plan = plan_of(spark, "merkle_diff_orders")
     assert n_nodes(plan, "BroadcastHashJoin") >= 2
     assert "LeftSemi" in plan
     assert n_nodes(plan, "CartesianProduct") == 0
@@ -559,9 +518,7 @@ def test_rendezvous_audit_is_agg_only(spark):
     5-counter partial-combinable aggregate (one SinglePartition
     exchange), and a stack() Generate over the one-row result. No join
     of any kind, no window, no explode over keys×shards."""
-    plan = _staged_plan(
-        spark, "staged_round11", "rendezvous_reshard_stability"
-    )
+    plan = plan_of(spark, "rendezvous_reshard_stability")
     assert n_nodes(plan, "CartesianProduct") == 0
     assert n_nodes(plan, "BroadcastNestedLoopJoin") == 0
     assert n_nodes(plan, "Join") == 0
@@ -577,7 +534,7 @@ def test_bootstrap_resamples_in_one_scan(spark):
     (×4), the shape that computes one md5 per digest instead of one
     per resample — aggregated map-side; the CI order statistics run on
     the groups×B relation."""
-    plan = _staged_plan(spark, "staged_round12", "poisson_bootstrap_ci_value")
+    plan = plan_of(spark, "poisson_bootstrap_ci_value")
     assert n_nodes(plan, "Generate") == 2
     assert n_nodes(plan, "Window") == 2
     assert n_nodes(plan, "CartesianProduct") == 0
@@ -588,7 +545,7 @@ def test_cell_quality_centroids_broadcast(spark):
     """Members reach their centroid by BROADCAST of the 8-row centroid
     table; the only nested loop is the 8×8 centroid-pair inequality
     join (metadata-sized by construction)."""
-    plan = _staged_plan(spark, "staged_round12", "embedding_cell_quality_db")
+    plan = plan_of(spark, "embedding_cell_quality_db")
     assert n_nodes(plan, "BroadcastHashJoin") >= 2
     assert n_nodes(plan, "BroadcastNestedLoopJoin") <= 1
     assert n_nodes(plan, "SortMergeJoin") == 0
@@ -601,9 +558,7 @@ def test_survivorship_is_one_sort_aggregate(spark):
     hash-aggregable), which is the documented cost of the idiom; what
     matters at scale is that there is NO join, NO window and NO
     per-field shuffle anywhere."""
-    plan = _staged_plan(
-        spark, "staged_round13", "survivorship_golden_record"
-    )
+    plan = plan_of(spark, "survivorship_golden_record")
     assert n_nodes(plan, "Window") == 0
     assert n_nodes(plan, "SortMergeJoin") == 0
     assert n_nodes(plan, "BroadcastNestedLoopJoin") == 0
@@ -615,7 +570,7 @@ def test_kmv_cut_is_take_ordered(spark):
     """The k-minimum cut must be TakeOrderedAndProject (per-partition
     top-k + driver merge), never a full sort; the one-row combines are
     broadcast scalars."""
-    plan = _staged_plan(spark, "staged_round13", "kmv_distinct_price_points")
+    plan = plan_of(spark, "kmv_distinct_price_points")
     assert n_nodes(plan, "TakeOrderedAndProject") == 1
     assert n_nodes(plan, "SortMergeJoin") == 0
     assert n_nodes(plan, "CartesianProduct") == 0
@@ -625,7 +580,7 @@ def test_kmv_cut_is_take_ordered(spark):
 def test_burstiness_is_agg_only(spark):
     """Fano = two hash-aggregate levels plus ONE broadcast one-row
     span; no window, no sort-merge join."""
-    plan = _staged_plan(spark, "staged_round13", "event_burstiness_by_type")
+    plan = plan_of(spark, "event_burstiness_by_type")
     assert n_nodes(plan, "Window") == 0
     assert n_nodes(plan, "SortMergeJoin") == 0
     assert n_nodes(plan, "BroadcastNestedLoopJoin") <= 1
@@ -636,12 +591,25 @@ def test_srm_is_one_aggregate_unpivoted(spark):
     """Every experiment's counts come from ONE conditional-sum
     aggregate; the per-experiment rows are a Generate over a
     driver-sized row — no join of any kind."""
-    plan = _staged_plan(spark, "staged_round13", "srm_assignment_audit")
+    plan = plan_of(spark, "srm_assignment_audit")
     assert n_nodes(plan, "Window") == 0
     assert n_nodes(plan, "Generate") == 1
     for j in ("SortMergeJoin", "BroadcastHashJoin",
               "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert n_nodes(plan, j) == 0
+
+
+def _staged_plan(spark, module: str, name: str) -> str:
+    import importlib
+
+    mod = importlib.import_module(
+        f"pinterest_data_pipeline_spark.plans.{module}"
+    )
+    df = mod.STAGED_QUERIES[name](spark, SF)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def test_snm_window_is_partitioned(spark):

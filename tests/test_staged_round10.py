@@ -1,13 +1,10 @@
-"""Round-10 staging parity + behavior: the privacy / behavioral /
-retrieval-infrastructure / time-series batch (k-anonymity, RFM
-segments, Markov log-loss, positional phrase search, AP@10, PQ training
-gate, day-of-week seasonality, CUSUM changepoint) must already pass the
-exact check the driver will run once registered — strict-mirror value
-comparison against their DuckDB oracles — and each operator's semantic
-guarantees are pinned against hand-computed examples.
-
-Promoted in round 10: every query here is on the driver surface
-(plans/staged_round10.py now feeds registry.register directly).
+"""Behavior tests for the privacy / behavioral /
+retrieval-infrastructure / time-series queries in
+plans/staged_round10.py (k-anonymity, RFM segments, Markov log-loss,
+positional phrase search, AP@10, PQ training gate, day-of-week
+seasonality, CUSUM changepoint), pinned against hand-computed examples.
+Their oracle parity against the DuckDB oracles runs below, at
+sf0.001 and sf0.01.
 """
 
 from __future__ import annotations
@@ -16,52 +13,29 @@ import datetime
 import math
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401
 
-from pinterest_data_pipeline_spark.plans.staged_round10 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round10")
 
 
 def test_staged_queries_are_promoted():
-    """Round-10 promotion: every formerly-staged query is on the driver
-    surface (registry + oracle). Window membership is the registry
-    rotation's job (see plans/registry.py CHECK_FIRST)."""
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    missing = set(STAGED_QUERIES) - set(queries)
-    assert not missing, f"staged queries not promoted: {missing}"
-    missing_oracle = set(STAGED_ORACLE) - set(oracles)
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
+    """All 8 builders in plans/staged_round10.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 8
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 # ------------------------------------------------------------- privacy

@@ -1,14 +1,9 @@
-"""Round-12 staging parity + behavior: the measurement-gap batch
+"""Behavior tests for the queries in plans/staged_round12.py
 (Poisson-bootstrap CI, O'Brien-Fleming interim looks, span-corruption
 planning, profile drift, mutual nearest neighbors, LSH-cell
 Davies-Bouldin, label-propagation communities, Fellegi-Sunter link
-weights) must already pass the
-exact check the driver will run once registered — strict-mirror value
-comparison against their DuckDB oracles — and each operator's semantic
-guarantees are pinned on constructed data.
-
-The batch is fully promoted as of round 12 (six names in round 11, the
-graph/linkage remainder in round 12); see plans/staged_round12.py.
+weights), pinned on constructed data. Their oracle parity against the DuckDB oracles runs below, at
+sf0.001 and sf0.01.
 """
 
 from __future__ import annotations
@@ -16,55 +11,29 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.staged_round12 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from pinterest_data_pipeline_spark.plans.registry import QUERIES
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round12")
 
 
 def test_promotion_split_matches_plan():
-    """Round 11 promoted the first six of this batch; round 12
-    promoted the graph/linkage remainder — the whole batch is now on
-    the driver surface, oracles included."""
-    import __spark_entry__ as entry_mod
-
-    from pinterest_data_pipeline_spark.plans.staged_round12 import (
-        PROMOTED,
-    )
-
-    assert PROMOTED == set(STAGED_QUERIES)
-    queries = set(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    missing = PROMOTED - queries
-    assert not missing, f"promoted queries not registered: {missing}"
-    missing_oracle = PROMOTED - oracles
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
+    """All 8 builders in plans/staged_round12.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 8
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 # ---------------------------------------------------------- bootstrap
@@ -188,7 +157,7 @@ def test_profile_drift_deltas_match_planted_mutations(spark, sf_dir):
 
     rows = {
         (r["col_name"], r["stat"]): r
-        for r in STAGED_QUERIES["profile_drift_audit"](spark, sf_dir).collect()
+        for r in QUERIES["profile_drift_audit"](spark, sf_dir).collect()
     }
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k")
@@ -329,7 +298,7 @@ def test_fs_registered_matches_concentrate(spark, sf_dir):
     """On the re-entry scenario, true matches must sit overwhelmingly
     in patterns agreeing on name (the near-unique field), and the
     all-agree pattern must carry the maximum weight."""
-    rows = STAGED_QUERIES["fellegi_sunter_link_weights"](
+    rows = QUERIES["fellegi_sunter_link_weights"](
         spark, sf_dir
     ).collect()
     n_match_name = sum(r["n_match"] for r in rows if r["a_name"])

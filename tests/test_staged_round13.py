@@ -1,11 +1,7 @@
-"""Round-13 seed parity + behavior: k-core peeling, ℓ-diversity, and
-Dirichlet query likelihood must already pass the exact check the
-driver will run once registered — strict-mirror value comparison
-against their DuckDB oracles — with semantics pinned on constructed
-data.
-
-The full batch was promoted to the driver surface in round 12; see
-plans/staged_round13.py PROMOTED_IN_ROUND12.
+"""Behavior tests for the queries in plans/staged_round13.py (k-core
+peeling, ℓ-diversity, Dirichlet query likelihood and the rest of the
+batch), pinned on constructed data. Their oracle parity against the DuckDB oracles runs below, at
+sf0.001 and sf0.01.
 """
 
 from __future__ import annotations
@@ -15,54 +11,28 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.staged_round13 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round13")
 
 
 def test_promotion_split_matches_plan():
-    """Round 12 promoted the full batch of 10 — all on the driver
-    surface, oracles included."""
-    import __spark_entry__ as entry_mod
-
-    from pinterest_data_pipeline_spark.plans.staged_round13 import (
-        PROMOTED,
-    )
-
-    assert PROMOTED == set(STAGED_QUERIES)
-    queries = set(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    missing = PROMOTED - queries
-    assert not missing, f"promoted queries not registered: {missing}"
-    missing_oracle = PROMOTED - oracles
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
+    """All 10 builders in plans/staged_round13.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 10
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 def test_kcore_clique_survives_tail_peels(spark):

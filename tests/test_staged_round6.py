@@ -1,13 +1,8 @@
-"""Round-6 staging parity + behavior: the staged composition queries
-must already pass the exact check the driver will run once registered —
-strict-mirror value comparison against their DuckDB oracles plus the
-repo's output hygiene rules — and the new operators' semantic
-guarantees (budget prefix equivalence, water-filling invariants,
-cluster-coherent splits, best-quality keeps) are pinned directly.
-
-Staged queries are deliberately NOT in plans/registry (the round-5
-window is fully allocated); see plans/staged_round6.py for the
-promotion recipe.
+"""Behavior tests for the curation composition queries in
+plans/staged_round6.py: budget prefix equivalence, water-filling
+invariants, cluster-coherent splits and best-quality keeps are pinned
+directly. Their oracle parity against the DuckDB oracles runs below, at
+sf0.01.
 """
 
 from __future__ import annotations
@@ -16,56 +11,29 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.staged_round6 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from pinterest_data_pipeline_spark.plans.registry import QUERIES
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round6")
 
 
 def test_staged_queries_are_promoted():
-    """Round-6 promotion: every formerly-staged query is on the driver
-    surface (registry + oracle), with the full set leading the window."""
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    missing = set(STAGED_QUERIES) - set(queries)
-    assert not missing, f"staged queries not promoted: {missing}"
-    missing_oracle = set(STAGED_ORACLE) - set(oracles)
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
-    # These led the round-6 window and earned green driver rows there
-    # (CORRECTNESS_r06); round 7's rotation rightly reassigned the
-    # first-50 prefix, so "registered + oracled" is the standing
-    # invariant — window membership is the registry rotation's job.
+    """All 23 builders in plans/staged_round6.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 23
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    """sf0.01 — the SF the driver actually verifies at. (The sf0.001 leg
-    moved to the registry-wide mirror in test_oracle_parity.py when the
-    round-6 promotion put these queries on the driver surface.)"""
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 # ------------------------------------------------------------ operators
@@ -980,12 +948,9 @@ def test_soft_dedup_weights_are_consistent_with_clusters(spark, sf_dir):
     """Every document appears exactly once; singleton weight is 1.0;
     each cluster's weights sum to 1.0 (the duplicated mass is
     normalized away, not dropped)."""
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
     from pinterest_data_pipeline_spark.sources.parquet import load_table
 
-    out = STAGED_QUERIES["soft_dedup_weights"](spark, sf_dir).collect()
+    out = QUERIES["soft_dedup_weights"](spark, sf_dir).collect()
     docs_n = load_table(spark, sf_dir, "documents").count()
     assert len(out) == docs_n
     assert len({r["doc_id"] for r in out}) == docs_n
@@ -1066,13 +1031,9 @@ def test_curation_v2_stage_counts_are_monotone(spark, sf_dir):
     """Docs and tokens shrink (weakly) at every stage, every stage is
     non-empty, and at least one real reduction happens at each grain
     on the planted-clone testdata."""
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
-
     rows = {
         r["stage_id"]: (r["n_docs"], r["n_tokens"])
-        for r in STAGED_QUERIES["curation_v2_report"](spark, sf_dir).collect()
+        for r in QUERIES["curation_v2_report"](spark, sf_dir).collect()
     }
     assert set(rows) == {1, 2, 3, 4}
     for i in (2, 3, 4):
@@ -1121,11 +1082,7 @@ def test_null_safe_join_keeps_the_null_key_row(spark, sf_dir):
     """The semantics the query exists to pin: the NULL key ('error'
     events) row joins under <=> and would be dropped by a plain equi
     join."""
-    from pinterest_data_pipeline_spark.plans.staged_round6 import (
-        STAGED_QUERIES,
-    )
-
-    out = STAGED_QUERIES["join_null_safe_agg"](spark, sf_dir).collect()
+    out = QUERIES["join_null_safe_agg"](spark, sf_dir).collect()
     ks = [r["k"] for r in out]
     assert None in ks
     null_row = next(r for r in out if r["k"] is None)

@@ -1,14 +1,8 @@
-"""Round-7 staging parity + behavior: the staged spatial / retrieval /
-experimentation / spectral / decay queries must already pass the exact
-check the driver will run once registered — strict-mirror value
-comparison against their DuckDB oracles plus the repo's output hygiene
-rules — and each new operator's semantic guarantees are pinned directly
-(grid join ≡ brute force, EWMA dyadic exactness, CUPED θ vs a numpy
-replay, power-iteration recovery of a planted dominant direction).
-
-Round 7 promoted these onto the driver surface (plans/registry); the
-strict-mirror parity tests below keep re-verifying them every pytest
-run like any other registered query.
+"""Behavior tests for the spatial / retrieval / experimentation /
+spectral / decay queries in plans/staged_round7.py: grid join ≡ brute
+force, EWMA dyadic exactness, CUPED θ vs a numpy replay, and
+power-iteration recovery of a planted dominant direction. Their oracle parity against the DuckDB oracles runs below, at
+sf0.001 and sf0.01.
 """
 
 from __future__ import annotations
@@ -18,55 +12,29 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.staged_round7 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from pinterest_data_pipeline_spark.plans.registry import QUERIES
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round7")
 
 
 def test_staged_queries_are_promoted():
-    """Round-7 promotion: every formerly-staged query is on the driver
-    surface (registry + oracle), with the full set leading the window."""
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    missing = set(STAGED_QUERIES) - set(queries)
-    assert not missing, f"staged queries not promoted: {missing}"
-    missing_oracle = set(STAGED_ORACLE) - set(oracles)
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
-    # These led the round-7 window and earned green driver rows there
-    # (CORRECTNESS_r07); round 8's rotation rightly reassigned the
-    # first-50 prefix, so "registered + oracled" is the standing
-    # invariant — window membership is the registry rotation's job.
+    """All 17 builders in plans/staged_round7.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 17
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    """Both SFs: sf0.001 (the smoke dir) and sf0.01 (the SF the driver
-    actually verifies at), so promotion-time behavior is pre-proven."""
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 # ------------------------------------------------------------------ geo
@@ -277,7 +245,7 @@ def test_cuped_matches_numpy_regression(spark):
 def test_interleave_shards_are_balanced_per_source(spark, sf_dir):
     """Round-robin dealing: within every source, shard sizes differ by
     at most 1 and every document lands in exactly one shard."""
-    out = STAGED_QUERIES["curriculum_interleave_shards"](
+    out = QUERIES["curriculum_interleave_shards"](
         spark, sf_dir
     ).collect()
     per_source: dict[str, list[int]] = {}
@@ -290,7 +258,7 @@ def test_interleave_shards_are_balanced_per_source(spark, sf_dir):
 def test_decile_cutpoints_are_monotone(spark, sf_dir):
     """Within a source, decile margin ranges must be non-overlapping
     and ordered: hi(d) >= lo(d) >= hi(d+1)."""
-    out = STAGED_QUERIES["quality_decile_calibration"](spark, sf_dir).collect()
+    out = QUERIES["quality_decile_calibration"](spark, sf_dir).collect()
     per_source: dict[str, dict[int, tuple[int, int]]] = {}
     for r in out:
         per_source.setdefault(r["source"], {})[r["decile"]] = (

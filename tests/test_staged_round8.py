@@ -1,14 +1,9 @@
-"""Round-8 promotion parity + behavior: the offline-evaluation batch
-(quantile treatment effect, IPS/SNIPS counterfactual value, reliability
-table + ECE) passes the exact check the driver runs — strict-mirror
-value comparison against their DuckDB oracles — and each operator's
-semantic guarantees are pinned directly (exact quantiles vs a
+"""Behavior tests for the offline-evaluation queries in
+plans/staged_round8.py (quantile treatment effect, IPS/SNIPS
+counterfactual value, reliability table + ECE): exact quantiles vs a
 sorted-python replay, IPS vs a closed-form hand example, ECE
-perfect-calibration zero).
-
-Round 8 executed the pre-planned registration (plans/registry.py
-ROUND-8 window): the eight queries now sit on the driver surface with
-full oracles, leading CHECK_FIRST.
+perfect-calibration zero. Their oracle parity against the DuckDB oracles runs below, at
+sf0.001 and sf0.01.
 """
 
 from __future__ import annotations
@@ -16,52 +11,30 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import functions as F
 
-from pinterest_data_pipeline_spark.plans.staged_round8 import (
-    STAGED_ORACLE,
-    STAGED_QUERIES,
-)
-from tests.oracle_utils import (
-    run_both_sides,
-    compare_frames,
-    duckdb_connection,
-)
+import __spark_entry__ as entry_mod
+from tests.oracle_utils import check_query, module_queries
+
+ROUND_QUERIES = module_queries("staged_round8")
 
 
 def test_staged_queries_are_promoted():
-    """Round-8 promotion: every formerly-staged query is on the driver
-    surface (registry + oracle). Window membership is the registry
-    rotation's job (see plans/registry.py CHECK_FIRST)."""
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    missing = set(STAGED_QUERIES) - set(queries)
-    assert not missing, f"staged queries not promoted: {missing}"
-    missing_oracle = set(STAGED_ORACLE) - set(oracles)
-    assert not missing_oracle, f"promoted without oracle: {missing_oracle}"
+    """All 8 builders in plans/staged_round8.py are registered: a
+    lost @register would drop its query from the driver surface."""
+    assert len(ROUND_QUERIES) == 8
 
 
 def test_every_staged_query_has_an_oracle():
-    assert set(STAGED_ORACLE) == set(STAGED_QUERIES)
+    assert set(ROUND_QUERIES) <= set(entry_mod.oracle_sql())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND_QUERIES)
 def test_staged_query_matches_oracle(spark, name, sf):
-    d = f"/root/testdata/{sf}"
-    # engine and oracle sides run concurrently (oracle_utils.run_both_sides:
-    # both block outside the GIL, so the test pays max, not sum)
-    spark_pdf, oracle_pdf, oracle_problems = run_both_sides(
-        lambda: STAGED_QUERIES[name](spark, d).toPandas(),
-        d,
-        STAGED_ORACLE[name],
-    )
-    assert not oracle_problems, f"{name}@{sf}: {oracle_problems}"
-    problems = compare_frames(spark_pdf, oracle_pdf)
+    problems = check_query(spark, name, f"/root/testdata/{sf}", nonempty=True)
     assert not problems, f"{name}@{sf}: {problems}"
-    assert len(spark_pdf) > 0
+
 
 
 def test_quantile_lift_matches_sorted_python(spark):
