@@ -38,8 +38,6 @@ def _doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 
 def corpus_frequent_ngrams(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 2,
     min_doc_frac: float = 0.08,
 ) -> DataFrame:
@@ -51,7 +49,7 @@ def corpus_frequent_ngrams(
     row), keeping the whole computation one lazy plan."""
     n_docs = df.select(F.count("*").alias("__n_docs"))
     return (
-        _doc_grams(df, id_col, text_col, n)
+        _doc_grams(df, "doc_id", "text", n)
         .groupBy("ng")
         .agg(F.count("*").alias("doc_freq"))
         .crossJoin(F.broadcast(n_docs))
@@ -62,8 +60,6 @@ def corpus_frequent_ngrams(
 
 def boilerplate_fraction(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 2,
     min_doc_frac: float = 0.08,
 ) -> DataFrame:
@@ -71,20 +67,20 @@ def boilerplate_fraction(
     ``n``-grams that are corpus-frequent (doc frequency at or above
     ``min_doc_frac`` of the corpus).
 
-    Output: (id_col, n_grams, n_frequent, boilerplate_frac) for every
+    Output: (doc_id, n_grams, n_frequent, boilerplate_frac) for every
     document with at least one gram. ``boilerplate_frac`` is an exact
     integer quotient rounded to 6dp, so the number is engine-portable.
     A curation funnel drops or truncates documents above a threshold."""
-    grams = _doc_grams(df, id_col, text_col, n)
-    frequent = corpus_frequent_ngrams(df, id_col, text_col, n, min_doc_frac)
+    grams = _doc_grams(df, "doc_id", "text", n)
+    frequent = corpus_frequent_ngrams(df, n=n, min_doc_frac=min_doc_frac)
     hits = (
         grams.join(F.broadcast(frequent.select("ng")), "ng")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_frequent"))
     )
-    totals = grams.groupBy(id_col).agg(F.count("*").alias("n_grams"))
-    return totals.join(hits, id_col, "left").select(
-        F.col(id_col),
+    totals = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
+    return totals.join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
         F.col("n_grams"),
         F.coalesce(F.col("n_frequent"), F.lit(0)).cast("long").alias("n_frequent"),
         F.round(

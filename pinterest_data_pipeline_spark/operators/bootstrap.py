@@ -51,19 +51,12 @@ def poisson_bootstrap_mean_ci(
     group_cols: list[str],
     id_col: str,
     cents_col: str,
-    n_resamples: int = 64,
-    salt: str = "boot",
 ) -> DataFrame:
     """95% bootstrap CI for the per-group mean of an integer-cents
     column. Output per group: ``n_rows``, ``mean_r6`` (full-sample),
     ``ci_lo_r6`` / ``ci_hi_r6`` (type-1 order statistics — the
     ⌈B·0.025⌉-th and ⌈B·0.975⌉-th smallest resample means, tie-broken
-    by resample index), ``n_resamples`` (must be a multiple of 4)."""
-    if n_resamples % 4 != 0:
-        raise ValueError(
-            f"n_resamples must be a multiple of 4 (got {n_resamples}): "
-            "each md5 digest supplies four 32-bit uniforms"
-        )
+    by resample index), ``n_resamples`` (B = 64)."""
     cents = F.col(cents_col).cast("long")
     from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
@@ -81,14 +74,14 @@ def poisson_bootstrap_mean_ci(
         F.col(id_col).alias("__id"),
         cents.alias("__c"),
         F.explode(
-            F.sequence(F.lit(0), F.lit(int(n_resamples) // 4 - 1))
+            F.sequence(F.lit(0), F.lit(64 // 4 - 1))
         ).alias("__j"),
     ).withColumn(
         "__hx",
         F.md5(
             F.concat_ws(
                 ":",
-                F.lit(salt),
+                F.lit("boot"),
                 F.col("__id").cast("string"),
                 F.col("__j").cast("string"),
             )

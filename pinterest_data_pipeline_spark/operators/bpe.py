@@ -54,14 +54,12 @@ MERGES_SCHEMA = (
 )
 
 
-def word_frequencies(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def word_frequencies(df: DataFrame) -> DataFrame:
     """(word, cnt) over whitespace tokens — the one corpus-sized
     shuffle in the whole trainer. Tokens containing the ``\\x1f``
     piece separator are dropped (oracle mirrors the guard)."""
     return (
-        df.select(F.explode(ws_tokens(text_col)).alias("word"))
+        df.select(F.explode(ws_tokens("text")).alias("word"))
         .filter(~F.col("word").contains(SEP))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -121,7 +119,6 @@ def merge_expr(repr_col: F.Column, left: str, right: str) -> F.Column:
 def learn_bpe(
     df: DataFrame,
     k: int = 6,
-    text_col: str = "text",
     checkpoint: bool = True,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn ``k`` BPE merges; returns (merge list, final vocab).
@@ -133,7 +130,7 @@ def learn_bpe(
     vocab carries (word, cnt, repr) with ``repr`` the word's piece
     sequence under the learned tokenizer — applying BPE to the corpus
     is then just a join, no per-token merge replay."""
-    vocab = word_frequencies(df, text_col).withColumn(
+    vocab = word_frequencies(df).withColumn(
         "repr", wrap_chars("word")
     )
     if checkpoint:
@@ -167,42 +164,35 @@ def learn_bpe(
     return merges, vocab
 
 
-def bpe_merge_table(
-    spark: SparkSession, df: DataFrame, k: int = 6, text_col: str = "text"
-) -> DataFrame:
+def bpe_merge_table(spark: SparkSession, df: DataFrame, k: int = 6) -> DataFrame:
     """The learned merge table as a DataFrame:
     (merge_rank, left_piece, right_piece, pair_count)."""
-    merges, _ = learn_bpe(df, k, text_col)
+    merges, _ = learn_bpe(df, k)
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
 def bpe_encode_stats(
     df: DataFrame,
     k: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-document tokenization stats under the learned tokenizer:
     (id, n_tokens, n_pieces, n_chars, chars_per_piece). The corpus is
     re-tokenized by JOINING to the trained vocab (word → piece count)
-    rather than replaying merges per token — broadcast by default; set
-    ``broadcast_vocab=False`` for the shuffle-join scale fallback when
-    the vocab outgrows the broadcast range."""
-    _, vocab = learn_bpe(df, k, text_col)
+    rather than replaying merges per token — a broadcast join, so the
+    vocab must fit the broadcast range."""
+    _, vocab = learn_bpe(df, k)
     per_word = vocab.select(
         "word",
         F.size(split_pieces("repr")).alias("__np"),
         F.length("word").alias("__nc"),
     )
-    if broadcast_vocab:
-        per_word = F.broadcast(per_word)
+    per_word = F.broadcast(per_word)
     toks = df.select(
-        id_col, F.explode(ws_tokens(text_col)).alias("word")
+        "doc_id", F.explode(ws_tokens("text")).alias("word")
     ).filter(~F.col("word").contains(SEP))
     return (
         toks.join(per_word, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("__np").cast("bigint").alias("n_pieces"),
@@ -219,9 +209,6 @@ def bpe_encode_stats(
 def bpe_fertility(
     df: DataFrame,
     k: int = 6,
-    group_col: str = "lang",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Tokenizer-equity audit: per-group (typically per-language)
     fertility of the learned tokenizer — pieces per word and chars per
@@ -230,20 +217,19 @@ def bpe_fertility(
     standard way to see it. Same join-the-vocab shape as
     :func:`bpe_encode_stats`, aggregated by group instead of
     document."""
-    _, vocab = learn_bpe(df, k, text_col)
+    _, vocab = learn_bpe(df, k)
     per_word = vocab.select(
         "word",
         F.size(split_pieces("repr")).alias("__np"),
         F.length("word").alias("__nc"),
     )
-    if broadcast_vocab:
-        per_word = F.broadcast(per_word)
+    per_word = F.broadcast(per_word)
     toks = df.select(
-        group_col, F.explode(ws_tokens(text_col)).alias("word")
+        "lang", F.explode(ws_tokens("text")).alias("word")
     ).filter(~F.col("word").contains(SEP))
     return (
         toks.join(per_word, "word")
-        .groupBy(group_col)
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("__np").cast("bigint").alias("n_pieces"),

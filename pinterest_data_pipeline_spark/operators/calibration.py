@@ -23,8 +23,6 @@ def conformal_coverage(
     group_col: str,
     key_col: str,
     value_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
 ) -> DataFrame:
     """Split-conformal coverage audit per group, integer-exact.
 
@@ -32,7 +30,7 @@ def conformal_coverage(
     keys test. The per-group predictor is the calibration mean; the
     nonconformity score is the absolute residual; the interval
     half-width is the k-th smallest calibration residual with
-    k = ⌈(1 − α)(n_calib + 1)⌉ — the classic split-conformal rank
+    k = ⌈(1 − α)(n_calib + 1)⌉ at α = 1/10 — the classic split-conformal rank
     whose finite-sample guarantee is coverage ≥ 1 − α.
 
     NO DIVISION HAPPENS IN THE DECISION PATH: with S = Σ calib values
@@ -63,10 +61,6 @@ def conformal_coverage(
     Magnitude guard: |x|·n_calib must stay under 2^63 (holds to
     ~9e12 calibration rows per group at 1e6-unit values; rescale the
     value units beyond)."""
-    if not (0 < alpha_num < alpha_den):
-        raise ValueError(
-            f"alpha must be in (0,1): got {alpha_num}/{alpha_den}"
-        )
     base = df.select(
         F.col(group_col).alias("__g"),
         F.col(key_col).cast("bigint").alias("__k"),
@@ -94,11 +88,8 @@ def conformal_coverage(
             ),
         )
     )
-    # k = ceil((den - num)·(n + 1) / den) in exact integers
-    k = F.expr(
-        f"(({alpha_den - alpha_num}) * (__n + 1) + {alpha_den} - 1) "
-        f"div {alpha_den}"
-    )
+    # k = ceil(9·(n + 1) / 10) in exact integers
+    k = F.expr("(9 * (__n + 1) + 10 - 1) div 10")
     q = (
         ranked.filter(F.col("__rn") == k)
         .select("__g", F.col("__r").alias("__q"))

@@ -24,8 +24,6 @@ def ws_tokens(text: Column | str) -> Column:
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_size: int = 64,
     overlap: int = 16,
 ) -> DataFrame:
@@ -38,7 +36,7 @@ def chunk_documents(
     if overlap >= chunk_size:
         raise ValueError("overlap must be smaller than chunk_size")
     step = chunk_size - overlap
-    toks = ws_tokens(text_col)
+    toks = ws_tokens("text")
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(step)
     )
@@ -51,7 +49,7 @@ def chunk_documents(
     )
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id").alias("doc_id"),
             F.explode(chunks).alias("c"),
         )
         .select(
@@ -111,15 +109,12 @@ def pack_sequences(
 
 def cdc_chunks(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 4,
-    mask: int = 16,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Content-defined chunking (the rsync/CDC primitive): split each
     document at positions where a polynomial rolling hash of the last
-    ``window`` tokens lands in a ``1/mask`` target band, instead of at
+    ``window`` tokens lands in a 1/16 target band, instead of at
     fixed offsets. Fixed-width passages (see chunk_documents) break on
     INSERTION — one added token shifts every later boundary, so a
     near-identical document shares no passage hashes; CDC boundaries are
@@ -134,9 +129,9 @@ def cdc_chunks(
     The token hash is the portable md5 prefix so a SQL oracle reproduces
     the identical chunking (DuckDB twin: cdc_chunk_dedup_report).
 
-    Expected chunk length is ``mask`` tokens (geometric); ``window``
+    Expected chunk length is 16 tokens (geometric); ``window``
     controls boundary context. At 100 TB this is a pure map stage —
-    cost linear in tokens, output Σ n_tokens/mask rows."""
+    cost linear in tokens, output Σ n_tokens/16 rows."""
     from pinterest_data_pipeline_spark.operators.dedup import portable_hash32
 
     if window < 1:
@@ -146,7 +141,7 @@ def cdc_chunks(
     # sum can't overflow LONG under ANSI mode at any window size, and
     # (a*b) % m == ((a%m)*b) % m keeps the boundary decision identical
     coeffs = [pow(31, j, 1048576) for j in range(window)]
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
 
     t, th = F.col("__t"), F.col("__th")
     n = F.size(t)
@@ -158,7 +153,7 @@ def cdc_chunks(
         total = terms[0]
         for term in terms[1:]:
             total = total + term
-        return ((total % F.lit(1048576)) % F.lit(mask)) == 0
+        return ((total % F.lit(1048576)) % F.lit(16)) == 0
 
     # boundary END positions (1-based, inclusive); docs shorter than the
     # window yield no boundaries (guard: Spark's sequence(a, b) runs
@@ -193,7 +188,7 @@ def cdc_chunks(
     # single task (same hazard as every other heavy text projection)
     return (
         fan_out(df).select(
-            id_col,
+            "doc_id",
             *extra_cols,
             toks.alias("__t"),
             F.transform(toks, lambda x: portable_hash32(x)).alias("__th"),
@@ -202,10 +197,10 @@ def cdc_chunks(
         .withColumn("__ends", ends)
         .withColumn("__starts", starts)
         .select(
-            id_col, *extra_cols, F.posexplode(chunks).alias("chunk_idx", "__c")
+            "doc_id", *extra_cols, F.posexplode(chunks).alias("chunk_idx", "__c")
         )
         .select(
-            id_col,
+            "doc_id",
             *extra_cols,
             "chunk_idx",
             F.col("__c.chunk_hash").alias("chunk_hash"),

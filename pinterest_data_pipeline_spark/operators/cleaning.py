@@ -42,18 +42,20 @@ def null_out_sentinels(df: DataFrame) -> DataFrame:
     return df.na.replace({s: None for s in SENTINELS})
 
 
-def expand_follower_count(df: DataFrame, col: str = "follower_count") -> DataFrame:
+def expand_follower_count(df: DataFrame) -> DataFrame:
     """``"25k" → 25000``, ``"1M" → 1000000`` then int cast
     (reference README.md:379-383).
 
     Literal ``regexp_replace`` composition: ``"1.5M"`` becomes
     ``"1.5000000"`` which try_casts to NULL — preserved, not "fixed".
     """
-    expanded = F.regexp_replace(F.regexp_replace(F.col(col), "k", "000"), "M", "000000")
-    return df.withColumn(col, expanded.try_cast("int"))
+    expanded = F.regexp_replace(
+        F.regexp_replace(F.col("follower_count"), "k", "000"), "M", "000000"
+    )
+    return df.withColumn("follower_count", expanded.try_cast("int"))
 
 
-def quarantine_nonfinite(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def quarantine_nonfinite(df: DataFrame) -> DataFrame:
     """NULL out NaN and ±Infinity in double/float columns — the numeric
     twin of ``null_out_sentinels``.
 
@@ -71,8 +73,7 @@ def quarantine_nonfinite(df: DataFrame, cols: list[str] | None = None) -> DataFr
     both infinities all fail it — no ``isnan`` branch needed. Pure
     codegen, zero shuffle, batch/streaming-identical like every
     transform in this module."""
-    if cols is None:
-        cols = [c for c, t in df.dtypes if t in ("double", "float")]
+    cols = [c for c, t in df.dtypes if t in ("double", "float")]
     for c in cols:
         v = F.col(c)
         df = df.withColumn(

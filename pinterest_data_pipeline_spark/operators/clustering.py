@@ -180,12 +180,7 @@ def codebook_argmin(vec_col: str, centroids: list[list[float]]) -> Column:
     return F.expr(f"array_min({_affinity_structs_sql(vec_col, centroids)})")
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iterations: int | None = None,
-) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-duplicate pairs via min-label
     propagation TO FIXPOINT: every document ends up labeled with the
     smallest id reachable in its component — the cluster's canonical
@@ -199,11 +194,8 @@ def duplicate_clusters(
     termination is guaranteed in ≤ diameter(G) propagation steps
     without any tuning knob, so a chain-shaped component of ANY
     diameter converges exactly like a recursive-CTE oracle does.
-    ``iterations`` is an optional hard ceiling for callers that want a
-    bounded-cost approximate answer (labels then equal min-reachable
-    within that many hops); ``None`` (the default) means
-    iterate-to-fixpoint. Near-dup clusters are almost always ≤2 hops,
-    so the typical run does 2-3 iterations regardless."""
+    Near-dup clusters are almost always ≤2 hops, so the typical run
+    does 2-3 iterations."""
     from pyspark.sql import Observation
 
     # Materialize the pair relation FIRST: the symmetrizing union below
@@ -216,7 +208,7 @@ def duplicate_clusters(
     # union branches racing) but folds the materialization job into the
     # seed round's job below — one driver round-trip instead of three.
     base = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).localCheckpoint(eager=False)
     edges = (
         base.unionByName(
@@ -232,27 +224,13 @@ def duplicate_clusters(
         .repartition(F.col("dst"))
         .localCheckpoint(eager=False)
     )
-    if iterations is not None and iterations <= 0:
-        # zero (or degenerate negative) propagation steps: every node
-        # labels itself — the bounded-cost contract's base case, matching
-        # the original loop formulation (whose range() never ran for
-        # iterations <= 0)
-        labels = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-        )
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
     # Round 1 is a pure aggregate, not a propagation join: starting from
     # identity labels, one min-propagation step computes exactly
     # min(self, min over neighbors), i.e. groupBy(src).min(dst) floored
     # by src — the same relation the old identity-init loop produced
     # after its first (join + union + groupBy) round, at one shuffle
     # instead of three plan nodes reading an unmaterialized distinct
-    # twice. Later rounds are unchanged, so the fixpoint (and any
-    # iterations=N hop bound, seed = hop 1) is identical.
+    # twice. Later rounds are unchanged, so the fixpoint is identical.
     # The fixpoint statistic rides on the SAME job that materializes each
     # round's labels (DataFrame.observe fires its aggregate during the
     # eager checkpoint's count action): one driver round-trip per
@@ -272,54 +250,43 @@ def duplicate_clusters(
         .localCheckpoint(eager=True)
     )
     prev_sum = seed_obs.get["s"]
-    step = 1
-    while iterations is None or step < iterations:
-        step += 1
-        if iterations is None:
-            # Fixpoint mode: PATH DOUBLING. Every label value is itself a
-            # node id of the same component (it is some reachable node's
-            # id), so label(label(v)) is both reachable from v and ≤
-            # label(v) — the label-of-label branch strictly dominates the
-            # plain keep-own-label branch and REPLACES it: reach per
-            # round goes from +1 hop to 2·h+1 hops, so a diameter-d chain
-            # converges in O(log d) rounds instead of d (measured: the
-            # simhash near-dup graph at sf0.1 has diameter ~13 → 14
-            # propagation rounds ≈ 0.6 s each; doubling needs 5). The
-            # fixpoint is unchanged: labels still only decrease, sum
-            # detection still certifies a neighbor-min fixpoint, and at
-            # that fixpoint labels are constant per component and equal
-            # to the component minimum.
-            # Both branches probe the SAME build relation (labels keyed
-            # by node) — nbr is (src ← label of dst), hop2 is
-            # (node ← label of label(node)) — and join distributes over
-            # union, so ONE join over the unioned probe side replaces
-            # the two joins the round previously ran: one probe exchange
-            # of |E|+|V| narrow rows instead of two, one join stage
-            # instead of two, same output multiset into the min.
-            probe = edges.select(
-                F.col("dst").alias("__k"), F.col("src").alias("node")
-            ).unionByName(
-                labels.select(
-                    F.col("label").alias("__k"), F.col("node").alias("node")
-                )
+    while True:
+        # Each round is PATH DOUBLING. Every label value is itself a
+        # node id of the same component (it is some reachable node's
+        # id), so label(label(v)) is both reachable from v and ≤
+        # label(v) — the label-of-label branch strictly dominates the
+        # plain keep-own-label branch and REPLACES it: reach per
+        # round goes from +1 hop to 2·h+1 hops, so a diameter-d chain
+        # converges in O(log d) rounds instead of d (measured: the
+        # simhash near-dup graph at sf0.1 has diameter ~13 → 14
+        # propagation rounds ≈ 0.6 s each; doubling needs 5). The
+        # fixpoint is unchanged: labels still only decrease, sum
+        # detection still certifies a neighbor-min fixpoint, and at
+        # that fixpoint labels are constant per component and equal
+        # to the component minimum.
+        # Both branches probe the SAME build relation (labels keyed
+        # by node) — nbr is (src ← label of dst), hop2 is
+        # (node ← label of label(node)) — and join distributes over
+        # union, so ONE join over the unioned probe side replaces
+        # the two joins the round previously ran: one probe exchange
+        # of |E|+|V| narrow rows instead of two, one join stage
+        # instead of two, same output multiset into the min.
+        probe = edges.select(
+            F.col("dst").alias("__k"), F.col("src").alias("node")
+        ).unionByName(
+            labels.select(
+                F.col("label").alias("__k"), F.col("node").alias("node")
             )
-            build = labels.select(
-                F.col("node").alias("__bk"), F.col("label").alias("label")
-            )
-            propagated = probe.join(
-                build, probe["__k"] == build["__bk"]
-            ).select("node", "label")
-        else:
-            # Bounded mode keeps the plain ±1-hop round so the
-            # documented contract holds exactly: after N rounds, label =
-            # min id reachable within N hops.
-            nbr = edges.join(labels, edges["dst"] == labels["node"]).select(
-                F.col("src").alias("node"), "label"
-            )
-            propagated = nbr.unionByName(labels.select("node", "label"))
+        )
+        build = labels.select(
+            F.col("node").alias("__bk"), F.col("label").alias("label")
+        )
+        propagated = probe.join(
+            build, probe["__k"] == build["__bk"]
+        ).select("node", "label")
         # truncate lineage each step — without this the plan doubles per
         # iteration (labels appears twice per step) and optimization time
-        # explodes exponentially with `iterations`
+        # explodes exponentially with the round count
         round_obs = Observation()
         labels = (
             propagated.groupBy("node")
@@ -339,9 +306,7 @@ def duplicate_clusters(
 def assign_probes(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     nprobe: int = 2,
-    out_col: str = "probe",
 ) -> DataFrame:
     """Attach the ``nprobe`` nearest codebook entries per row, exploded to
     one row per (row, probe partition) — the IVF multiprobe side.
@@ -352,22 +317,16 @@ def assign_probes(
     partition assignment. Candidates come from the same compact
     `_affinity_structs_sql` expression `codebook_argmin` uses (one
     F.expr parse, bit-identical affinities to the Column-fold form)."""
-    candidates = F.expr(_affinity_structs_sql(vec_col, centroids))
+    candidates = F.expr(_affinity_structs_sql("embedding", centroids))
     probes = F.transform(
         F.slice(F.array_sort(candidates), 1, nprobe), lambda s: s.getField("c")
     )
-    return df.withColumn(out_col, F.explode(probes))
+    return df.withColumn("probe", F.explode(probes))
 
 
-def lsh_cell_quality_db(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 3,
-) -> DataFrame:
+def lsh_cell_quality_db(df: DataFrame) -> DataFrame:
     """Davies-Bouldin cluster-quality report over hyperplane-LSH cells
-    (Davies & Bouldin 1979): for each of the 2^n_planes sign-bit cells,
+    (Davies & Bouldin 1979): for each of the 2^3 sign-bit cells,
     the within-cell scatter S_i (mean member→centroid distance) and the
     DB score max_{j≠i}(S_i+S_j)/M_ij, M the centroid distance. The QA
     readout for every LSH-bucketed operator in this engine: a cell
@@ -388,21 +347,21 @@ def lsh_cell_quality_db(
 
     Scale: one scan for cell keys, one posexplode bounded by dim for
     centroids (map-side combinable), one broadcast join of the
-    2^n_planes-row centroid table back onto members; the pairwise M
-    matrix is (2^n_planes)² rows of driver-free column math."""
+    8-row centroid table back onto members; the pairwise M
+    matrix is 8² rows of driver-free column math."""
     from pinterest_data_pipeline_spark.operators.similarity import (
         _hyperplanes,
         dot,
     )
 
-    planes = _hyperplanes(dim, 32, 7)[:n_planes]
-    vec = F.col(vec_col)
+    planes = _hyperplanes(64, 32, 7)[:3]
+    vec = F.col("embedding")
     cell = F.lit(0)
     for i, plane in enumerate(planes):
         proj = dot(vec, F.array(*[F.lit(p) for p in plane]))
         cell = cell + F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     members = df.select(
-        F.col(id_col).alias("__id"),
+        F.col("vec_id").alias("__id"),
         vec.alias("__v"),
         cell.cast("long").alias("cell"),
     )

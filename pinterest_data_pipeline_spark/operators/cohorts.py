@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def weekly_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def weekly_retention(events: DataFrame) -> DataFrame:
     """Cohort-week × week-offset retention matrix.
 
     Output: (cohort_week 'yyyy-MM-dd' string, week_offset int, n_active
@@ -36,15 +32,15 @@ def weekly_retention(
     anchor). The week is emitted as a string because engines disagree on
     DATE canonicalization at comparison boundaries (datetime.date vs
     datetime64); the internal arithmetic stays on DATE."""
-    first = events.groupBy(user_col).agg(
-        F.date_trunc("week", F.min(ts_col)).cast("date").alias("cohort_week")
+    first = events.groupBy("user_id").agg(
+        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
     activity = events.select(
-        user_col,
-        F.date_trunc("week", F.col(ts_col)).cast("date").alias("week"),
+        "user_id",
+        F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
     ).distinct()
     active = (
-        activity.join(first, user_col)
+        activity.join(first, "user_id")
         .groupBy(
             "cohort_week",
             (F.datediff("week", "cohort_week") / 7)

@@ -22,7 +22,6 @@ TOKEN_RE = "[a-z0-9]+"
 
 def pmi_bigrams(
     df: DataFrame,
-    text_col: str = "text",
     min_count: int = 5,
     top_k: int = 15,
 ) -> DataFrame:
@@ -45,7 +44,7 @@ def pmi_bigrams(
     the final cut is a TakeOrderedAndProject, never a global sort."""
     toks = df.select(
         F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0
+            F.lower(F.col("text")), F.lit(TOKEN_RE), 0
         ).alias("__toks")
     )
     toks = toks.filter(F.size("__toks") >= 2)
@@ -61,7 +60,7 @@ def pmi_bigrams(
     ).select("__b.w1", "__b.w2")
     unigrams = df.select(
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
         ).alias("__w")
     )
     uni = unigrams.groupBy("__w").agg(

@@ -24,8 +24,6 @@ from pyspark.sql import functions as F
 
 def item_cooccurrence(
     interactions: DataFrame,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
     max_items_per_user: int | None = None,
     min_pair_count: int = 1,
 ) -> DataFrame:
@@ -44,7 +42,7 @@ def item_cooccurrence(
     the cosine stays internally consistent.
     """
     ui = interactions.select(
-        F.col(user_col).alias("__u"), F.col(item_col).alias("__i")
+        F.col("user_id").alias("__u"), F.col("item_id").alias("__i")
     ).distinct()
     if max_items_per_user is not None:
         w = Window.partitionBy("__u").orderBy(F.col("__i").asc())

@@ -34,7 +34,6 @@ def span_corruption_plan(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    salt: str = "t5span",
 ) -> DataFrame:
     """One row per document: the corruption plan summary
     (n_tokens, n_spans, corrupted_tokens, corruption_ppm,
@@ -76,7 +75,7 @@ def span_corruption_plan(
     offset = portable_hash32(
         F.concat_ws(
             ":",
-            F.lit(salt),
+            F.lit("t5span"),
             F.col("__id").cast("string"),
             F.col("__j").cast("string"),
         )

@@ -126,7 +126,6 @@ def zorder_layout(
     cols: list[str],
     bits: int = 8,
     n_partitions: int = 16,
-    z_col: str = "_z",
 ) -> DataFrame:
     """Cluster ``df`` on the Z-curve of ``cols`` (BIGINT-castable): one
     stats scan collects per-column min/max (2*k scalars of driver-side
@@ -160,9 +159,9 @@ def zorder_layout(
     block_bits = max(0, len(cols) * bits - (n_partitions - 1).bit_length())
     block = F.shiftright(z, block_bits).alias("_zblock")
     return (
-        df.withColumn(z_col, z)
+        df.withColumn("_z", z)
         .withColumn("_zblock", block)
         .repartitionByRange(n_partitions, "_zblock")
-        .sortWithinPartitions(z_col)
-        .drop(z_col, "_zblock")
+        .sortWithinPartitions("_z")
+        .drop("_z", "_zblock")
     )

@@ -56,21 +56,19 @@ def word_ngrams(text: Column | str, n: int) -> Column:
 def ngram_contamination(
     df: DataFrame,
     eval_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 4,
 ) -> DataFrame:
     """Per-training-document count of distinct word ``n``-grams shared
     with the evaluation slice (``eval_pred`` selects eval rows).
 
-    Returns (id_col, n_shared) for contaminated documents only — a
+    Returns (doc_id, n_shared) for contaminated documents only — a
     downstream anti-join against this frame is the "drop leaked docs"
     step. Deterministic: distinct-gram counting has no ordering
     dependence."""
     grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         eval_pred.alias("is_eval"),
-        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("ng"),
+        F.explode(F.array_distinct(word_ngrams("text", n))).alias("ng"),
     )
     eval_grams = (
         grams.filter(F.col("is_eval")).select("ng").distinct()
@@ -78,7 +76,7 @@ def ngram_contamination(
     train_grams = grams.filter(~F.col("is_eval"))
     return (
         train_grams.join(F.broadcast(eval_grams), "ng")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
 
@@ -86,10 +84,7 @@ def ngram_contamination(
 def jaccard_contamination(
     df: DataFrame,
     eval_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
-    min_jaccard: float = 0.0,
 ) -> DataFrame:
     """Fuzzy decontamination: per training document, the maximum n-gram
     Jaccard similarity against ANY evaluation document (``eval_pred``
@@ -105,54 +100,52 @@ def jaccard_contamination(
     |train|x|eval|. Jaccard = inter/(a+b-inter) is an exact integer
     quotient (engine-portable), rounded to 6dp."""
     grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         eval_pred.alias("is_eval"),
-        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("ng"),
+        F.explode(F.array_distinct(word_ngrams("text", n))).alias("ng"),
     )
-    sizes = grams.groupBy(id_col, "is_eval").agg(
+    sizes = grams.groupBy("doc_id", "is_eval").agg(
         F.count("*").alias("n_grams")
     )
     eval_side = (
         grams.filter(F.col("is_eval"))
         .join(
-            sizes.filter(F.col("is_eval")).select(id_col, "n_grams"),
-            id_col,
+            sizes.filter(F.col("is_eval")).select("doc_id", "n_grams"),
+            "doc_id",
         )
         .select(
-            F.col(id_col).alias("eval_id"),
+            F.col("doc_id").alias("eval_id"),
             "ng",
             F.col("n_grams").alias("eval_grams"),
         )
     )
-    train_side = grams.filter(~F.col("is_eval")).select(id_col, "ng")
+    train_side = grams.filter(~F.col("is_eval")).select("doc_id", "ng")
     inter = (
         train_side.join(F.broadcast(eval_side), "ng")
-        .groupBy(id_col, "eval_id", "eval_grams")
+        .groupBy("doc_id", "eval_id", "eval_grams")
         .agg(F.count("*").alias("inter"))
     )
-    train_sizes = sizes.filter(~F.col("is_eval")).select(id_col, "n_grams")
-    jacc = inter.join(train_sizes, id_col).select(
-        F.col(id_col),
+    train_sizes = sizes.filter(~F.col("is_eval")).select("doc_id", "n_grams")
+    jacc = inter.join(train_sizes, "doc_id").select(
+        F.col("doc_id"),
         (
             F.col("inter")
             / (F.col("n_grams") + F.col("eval_grams") - F.col("inter"))
         ).alias("j"),
     )
     return (
-        jacc.groupBy(id_col)
+        jacc.groupBy("doc_id")
         .agg(
             F.round(F.max("j"), 6).alias("max_jaccard"),
             F.count("*").alias("n_eval_overlaps"),
         )
-        .filter(F.col("max_jaccard") >= min_jaccard)
+        .filter(F.col("max_jaccard") >= 0.0)
     )
 
 
 def embedding_contamination(
     df: DataFrame,
     eval_pred: Column,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.8,
 ) -> DataFrame:
     """Semantic decontamination: flag training vectors whose cosine
@@ -161,7 +154,7 @@ def embedding_contamination(
     n-gram matchers above, catching translated or heavily reworded eval
     leaks that share no surface n-grams.
 
-    Returns (id_col, n_eval_hits, top_score) for contaminated vectors
+    Returns (vec_id, n_eval_hits, top_score) for contaminated vectors
     only, same contract as :func:`ngram_contamination` (anti-join the
     result to drop leaked rows). ``top_score`` is cosine rounded to 6dp
     (the repo's engine-portable rounding, operators/similarity.cosine).
@@ -186,23 +179,23 @@ def embedding_contamination(
     evals = (
         df.filter(eval_pred)
         .select(
-            F.col(id_col).alias("__eval_id"),
-            F.col(vec_col).alias("__e_vec"),
-            l2_norm(F.col(vec_col)).alias("__e_norm"),
+            F.col("vec_id").alias("__eval_id"),
+            F.col("embedding").alias("__e_vec"),
+            l2_norm(F.col("embedding")).alias("__e_norm"),
         )
         .filter(F.col("__e_norm") > 0)
     )
     train = (
         fan_out(df.filter(~eval_pred))
         .select(
-            F.col(id_col),
-            F.col(vec_col).alias("__t_vec"),
-            l2_norm(F.col(vec_col)).alias("__t_norm"),
+            F.col("vec_id"),
+            F.col("embedding").alias("__t_vec"),
+            l2_norm(F.col("embedding")).alias("__t_norm"),
         )
         .filter(F.col("__t_norm") > 0)
     )
     scored = train.crossJoin(F.broadcast(evals)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(
             dot(F.col("__t_vec"), F.col("__e_vec"))
             / (F.col("__t_norm") * F.col("__e_norm")),
@@ -211,7 +204,7 @@ def embedding_contamination(
     )
     return (
         scored.filter(F.col("__score") >= threshold)
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.count("*").alias("n_eval_hits"),
             F.max("__score").alias("top_score"),

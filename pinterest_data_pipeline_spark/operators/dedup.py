@@ -36,6 +36,11 @@ from pinterest_data_pipeline_spark.operators.text import (
 
 _MASK32 = (1 << 32) - 1
 _MINHASH_PRIME = 4294967311  # smallest prime > 2^32
+_SHINGLE_K = 3
+_N_HASHES = 32  # MinHash signature length
+_BANDS = 8  # LSH bands over the signature
+_MINHASH_SEED = 42
+_CHUNK_BITS = 16  # SimHash band width
 
 
 # ------------------------------------------------------------ portable hashes
@@ -102,17 +107,17 @@ def dedup_keep_first(
 # ---------------------------------------------------------------- shingles
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-grams as an array column (whole-document fallback
-    for texts shorter than k tokens)."""
+def word_shingles(text: Column | str) -> Column:
+    """Distinct word ``_SHINGLE_K``-grams as an array column
+    (whole-document fallback for texts shorter than that)."""
     toks = tokens(text)
     n = F.size(toks)
     grams = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+        F.sequence(F.lit(0), n - _SHINGLE_K),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, _SHINGLE_K)),
     )
     return F.array_distinct(
-        F.when(n >= k, grams).otherwise(F.array(F.concat_ws(" ", toks)))
+        F.when(n >= _SHINGLE_K, grams).otherwise(F.array(F.concat_ws(" ", toks)))
     )
 
 
@@ -214,29 +219,23 @@ def _signature_fold(
     )
 
 
-def minhash_signature(
-    text: Column | str, n_hashes: int = 32, shingle_k: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature as an array<long> of length ``n_hashes``.
+def minhash_signature(text: Column | str) -> Column:
+    """MinHash signature as an array<long> of length 32.
 
     Shingles are hashed once with xxhash64, masked to 32 bits (so the
     ``a*h + b`` mix stays under 2^63 — ANSI-safe), then one fold across
     shingles keeps the running ``(a_i*h + b_i) mod p`` minimum for
     every permutation at once (:func:`_signature_fold`). All built-in
     expressions: one scan, no UDF, no shuffle."""
-    sh = word_shingles(text, shingle_k)
+    sh = word_shingles(text)
     hashes = F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MASK32)))
-    return _signature_fold(hashes, _minhash_params(n_hashes, seed))
+    return _signature_fold(hashes, _minhash_params(_N_HASHES, _MINHASH_SEED))
 
 
 def minhash_banded(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    seed: int = 42,
     portable: bool = False,
 ) -> DataFrame:
     """The banded MinHash signature table (__id, band, key) — the
@@ -255,16 +254,14 @@ def minhash_banded(
     The output is exchanged on (band, key): band keys materialize once
     and the exchange IS the candidate join's (and the bucket-cap
     window's) required partitioning."""
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
-    rows = n_hashes // bands
+    rows = _N_HASHES // _BANDS
     shingle_hash = (
         portable_hash32
         if portable
         else (lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MASK32)))
     )
-    params = _minhash_params(n_hashes, seed)
-    # All n_hashes permutation minima in ONE traversal of the shingle
+    params = _minhash_params(_N_HASHES, _MINHASH_SEED)
+    # All _N_HASHES permutation minima in ONE traversal of the shingle
     # hashes (:func:`_signature_fold` — bit-identical values, ~n× fewer
     # array passes/allocations per row). The fold is the SINGLE
     # reference to the shingle-hash array, so it runs scan-side at
@@ -275,7 +272,7 @@ def minhash_banded(
     # original barrier existed for.
     sig = _signature_fold(
         F.transform(
-            word_shingles(text_col, shingle_k),
+            word_shingles(text_col),
             lambda s: shingle_hash(s),
         ),
         params,
@@ -285,7 +282,7 @@ def minhash_banded(
         .select(F.col(id_col).alias("__id"), sig.alias("__sig"))
         .repartition(F.col("__id"))
     )
-    mins = [F.get(F.col("__sig"), i) for i in range(n_hashes)]
+    mins = [F.get(F.col("__sig"), i) for i in range(_N_HASHES)]
 
     def band_key(b: int) -> Column:
         band_mins = mins[b * rows : (b + 1) * rows]
@@ -300,7 +297,7 @@ def minhash_banded(
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band"), band_key(b).alias("key"))
-                    for b in range(bands)
+                    for b in range(_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -312,25 +309,19 @@ def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
-    Signature is split into ``bands`` bands of ``n_hashes/bands`` rows;
+    Signature is split into ``_BANDS`` bands of ``_N_HASHES/_BANDS`` rows;
     documents sharing any band hash become a candidate pair. Returns
     distinct (id_a, id_b) with id_a < id_b. The self-join keys on
     (band, band_key): only same-bucket rows meet, so the shuffle volume is
     the bucket histogram, not |df|². ``max_bucket_size`` (recommended at
     corpus scale) excludes degenerate oversized buckets — see
     :func:`cap_bucket_size`."""
-    banded = minhash_banded(
-        df, id_col, text_col, n_hashes, bands, shingle_k, seed, portable
-    )
+    banded = minhash_banded(df, id_col, text_col, portable=portable)
     if max_bucket_size is not None:
         banded = cap_bucket_size(banded, ["band", "key"], max_bucket_size)
     left = banded.alias("l")
@@ -352,10 +343,6 @@ def near_duplicates_minhash(
     id_col: str,
     text_col: str,
     threshold: float = 0.7,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
@@ -375,18 +362,10 @@ def near_duplicates_minhash(
     high-cardinality id, and costs nothing measurable at small SF."""
     sh = fan_out(df).select(
         F.col(id_col).alias("__id"),
-        word_shingles(text_col, shingle_k).alias("__sh"),
+        word_shingles(text_col).alias("__sh"),
     )
     cands = minhash_lsh_candidates(
-        df,
-        id_col,
-        text_col,
-        n_hashes,
-        bands,
-        shingle_k,
-        seed,
-        max_bucket_size,
-        portable,
+        df, id_col, text_col, max_bucket_size=max_bucket_size, portable=portable
     )
     a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a")).hint(
         "merge"
@@ -408,7 +387,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """All-pairs exact n-gram Jaccard above threshold.
 
@@ -417,7 +395,7 @@ def ngram_jaccard_pairs(
     audits), never the full corpus. Returns (id_a, id_b, jaccard_sim)."""
     sh = fan_out(df).select(
         F.col(id_col).alias("__id"),
-        word_shingles(text_col, shingle_k).alias("__sh"),
+        word_shingles(text_col).alias("__sh"),
     )
     a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -444,7 +422,7 @@ def token_hashes(text: Column | str, portable: bool = False) -> Column:
     return F.transform(tokens(normalize_text(text)), lambda t: hash_fn(t))
 
 
-def simhash_chunks_from_hashes(hs: Column, chunk_bits: int = 16) -> Column:
+def simhash_chunks_from_hashes(hs: Column) -> Column:
     """64-bit SimHash from a PRE-MATERIALIZED token-hash array column.
 
     Per bit position b: count tokens with bit b set; the simhash bit is
@@ -460,7 +438,7 @@ def simhash_chunks_from_hashes(hs: Column, chunk_bits: int = 16) -> Column:
     compact loop JIT-compiles fast. Pass a materialized column (see
     :func:`simhash_near_pairs`), not a raw expression, or projection
     collapse re-runs the tokenize+hash work per reference."""
-    return _chunks_from_ones(_simhash_ones(hs), F.size(hs), chunk_bits)
+    return _chunks_from_ones(_simhash_ones(hs), F.size(hs))
 
 
 def _simhash_ones(hs: Column) -> Column:
@@ -489,28 +467,20 @@ def _simhash_ones(hs: Column) -> Column:
     )
 
 
-def _chunks_from_ones(
-    ones: Column, n: Column, chunk_bits: int = 16
-) -> Column:
+def _chunks_from_ones(ones: Column, n: Column) -> Column:
     """Assemble the 16-bit SimHash chunks from the one-count array and
     the token count (majority per bit: ones·2 > n)."""
-    n_chunks = 64 // chunk_bits
+    n_chunks = 64 // _CHUNK_BITS
     chunks = []
     for j in range(n_chunks):
         chunk = F.lit(0)
-        for b in range(chunk_bits):
+        for b in range(_CHUNK_BITS):
             chunk = chunk + F.when(
-                F.element_at(ones, j * chunk_bits + b + 1) * 2 > n,
+                F.element_at(ones, j * _CHUNK_BITS + b + 1) * 2 > n,
                 F.lit(1 << b),
             ).otherwise(0)
         chunks.append(chunk)
     return F.array(*chunks)
-
-
-def simhash_chunks(text: Column | str, chunk_bits: int = 16) -> Column:
-    """Convenience composition for single-expression use (tests, small
-    data); hot paths should materialize :func:`token_hashes` first."""
-    return simhash_chunks_from_hashes(token_hashes(text), chunk_bits)
 
 
 def simhash_near_pairs(
@@ -518,7 +488,6 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    max_bucket_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
@@ -526,8 +495,7 @@ def simhash_near_pairs(
     With 4 chunks, distance ≤ 3 implies ≥ 1 identical chunk, so candidates
     come from 4 chunk-equality joins (unioned), then exact Hamming via
     bit_count(xor) filters. Returns (id_a, id_b, hamming).
-    ``max_bucket_size`` excludes degenerate oversized chunk buckets — see
-    :func:`cap_bucket_size`. ``portable=True`` hashes tokens with the
+    ``portable=True`` hashes tokens with the
     md5-prefix hash so the pair set is DuckDB-reproducible (banding is
     pigeonhole-COMPLETE for Hamming ≤ 3, so the output is exactly the
     set of all pairs at distance ≤ 3 — oracle-checkable from first
@@ -577,11 +545,9 @@ def simhash_near_pairs(
             )
         ).alias("bk"),
     ).select("__id", "__sh", "bk.band", "bk.key")
-    # pre-partition on the join keys (also the bucket-cap window keys):
-    # the self-join then needs no exchange of its own
+    # pre-partition on the join keys: the self-join then needs no
+    # exchange of its own
     banded = banded.repartition(F.col("band"), F.col("key"))
-    if max_bucket_size is not None:
-        banded = cap_bucket_size(banded, ["band", "key"], max_bucket_size)
     left, right = banded.alias("l"), banded.alias("r")
     hamming = sum(
         F.bit_count(
@@ -657,11 +623,6 @@ def incremental_minhash_candidates(
     existing_banded: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
     """Near-dup CANDIDATES for an increment against a stored corpus —
@@ -670,24 +631,15 @@ def incremental_minhash_candidates(
     ingest the LSH work is O(|increment|) plus one bucket-keyed join
     against state. Emits every candidate pair with ≥1 new member
     (new-new AND new-old; old-old pairs were emitted by earlier runs —
-    with ``max_bucket_size=None`` the union over ingests converges to
-    the one-shot candidate set, which the convergence test pins). Pairs
-    are normalized to id_a < id_b.
-
-    ``max_bucket_size`` caps the COMBINED bucket (state + increment) as
-    a straggler guard — but the convergence guarantee holds ONLY
-    uncapped: an earlier ingest sees smaller (not-yet-capped) buckets
-    than the final corpus, so it may emit pairs a capped one-shot run
-    would drop; the union can strictly EXCEED the capped one-shot set.
-    Capped incremental runs over-emit (never under-emit) vs one-shot."""
+    buckets are uncapped, so the union over ingests converges to the
+    one-shot candidate set, which the convergence test pins). Pairs are
+    normalized to id_a < id_b."""
     new_banded = minhash_banded(
-        increment, id_col, text_col, n_hashes, bands, shingle_k, seed, portable
+        increment, id_col, text_col, portable=portable
     ).withColumn("__new", F.lit(True))
     all_banded = existing_banded.withColumn(
         "__new", F.lit(False)
     ).unionByName(new_banded)
-    if max_bucket_size is not None:
-        all_banded = cap_bucket_size(all_banded, ["band", "key"], max_bucket_size)
     left, right = all_banded.alias("l"), all_banded.alias("r")
     return (
         left.join(

@@ -4,7 +4,7 @@ Implements the Data Selection via Importance Resampling recipe
 (Xie et al. 2023, "Data Selection for Language Models via Importance
 Resampling" — arXiv:2302.03169) Spark-first:
 
-1. featurize every document as counts over ``buckets`` hashed word
+1. featurize every document as counts over ``_BUCKETS`` hashed word
    uni+bigram features (the paper's hashed n-gram bag),
 2. fit two add-one-smoothed categorical models over the buckets — one
    on the TARGET domain (the curated seed corpus), one on the RAW pool,
@@ -18,9 +18,9 @@ Resampling" — arXiv:2302.03169) Spark-first:
 Scale shape (the 100 TB question):
 - featurization is one explode + one (doc, bucket) count shuffle —
   O(tokens), the same cost class as every n-gram operator here;
-- both bucket models are ONE further groupBy over ≤ ``buckets`` keys
+- both bucket models are ONE further groupBy over ≤ ``_BUCKETS`` keys
   with conditional partial aggregates — the model is a constant-size
-  (``buckets``-row) relation regardless of corpus size, broadcast back;
+  (``_BUCKETS``-row) relation regardless of corpus size, broadcast back;
 - per-doc scoring is a broadcast hash join + one doc-keyed sum shuffle;
 - the Gumbel top-k is a ``TakeOrderedAndProject`` (no global sort
   materialization) — only k rows ever reach the driver.
@@ -42,29 +42,27 @@ from pinterest_data_pipeline_spark.operators.dedup import portable_hash32
 _TWO32 = float(1 << 32)
 
 
-def hashed_ngram_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 4096,
-) -> DataFrame:
+_BUCKETS = 4096
+
+
+def hashed_ngram_features(df: DataFrame) -> DataFrame:
     """(id, bucket, cnt) counts of hashed word uni+bigrams per document.
 
-    The feature space is the fixed ``[0, buckets)`` integer range — the
+    The feature space is the fixed ``[0, _BUCKETS)`` integer range — the
     model built on top of it is corpus-size-independent. One explode +
     one (id, bucket) count aggregation (map-side partials). ``fan_out``
     first: the uni+bigram explode and the partial aggregation otherwise
     run inside a single-split scan task (operators/parallel)."""
     from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
-    grams = F.concat(ws_tokens(text_col), word_ngrams(text_col, 2))
+    grams = F.concat(ws_tokens("text"), word_ngrams("text", 2))
     return (
-        fan_out(df).select(F.col(id_col), F.explode(grams).alias("__g"))
+        fan_out(df).select(F.col("doc_id"), F.explode(grams).alias("__g"))
         .select(
-            id_col,
-            (portable_hash32(F.col("__g")) % F.lit(buckets)).alias("bucket"),
+            "doc_id",
+            (portable_hash32(F.col("__g")) % F.lit(_BUCKETS)).alias("bucket"),
         )
-        .groupBy(id_col, "bucket")
+        .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -72,14 +70,12 @@ def hashed_ngram_features(
 def importance_log_ratios(
     feats: DataFrame,
     target_ids: DataFrame,
-    id_col: str = "doc_id",
-    buckets: int = 4096,
 ) -> DataFrame:
     """Per-bucket ``ln p_target - ln p_raw`` under add-one smoothing.
 
     ``target_ids`` is a one-column DataFrame of the TARGET document ids
     (the curated seed); every other document in ``feats`` is the RAW
-    pool. Output is ≤ ``buckets`` rows — broadcastable by construction.
+    pool. Output is ≤ ``_BUCKETS`` rows — broadcastable by construction.
 
     The smoothed log-ratio is
     ``ln(ct+1) - ln(T+B) - ln(cr+1) + ln(R+B)`` with ``ct``/``cr`` the
@@ -88,11 +84,11 @@ def importance_log_ratios(
     floating-point expression tree."""
     flagged = feats.join(
         F.broadcast(
-            target_ids.select(F.col(id_col)).withColumn(
+            target_ids.select(F.col("doc_id")).withColumn(
                 "__tgt", F.lit(True)
             )
         ),
-        id_col,
+        "doc_id",
         "left",
     ).withColumn("__tgt", F.coalesce(F.col("__tgt"), F.lit(False)))
     lm = flagged.groupBy("bucket").agg(
@@ -107,7 +103,7 @@ def importance_log_ratios(
         F.sum("ct").cast("double").alias("__t_total"),
         F.sum("cr").cast("double").alias("__r_total"),
     )
-    b = F.lit(float(buckets))
+    b = F.lit(float(_BUCKETS))
     return (
         lm.crossJoin(F.broadcast(totals))
         .select(
@@ -125,9 +121,6 @@ def importance_log_ratios(
 def importance_weights(
     df: DataFrame,
     target_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 4096,
 ) -> DataFrame:
     """Per-RAW-document DSIR importance log-weight.
 
@@ -136,15 +129,13 @@ def importance_weights(
     (id, n_feats, logweight) with the weight rounded to 6dp — sums of
     at most a-few-hundred ln terms per document, so cross-engine float
     noise (~1e-13 relative) sits far below the rounding grain."""
-    feats = hashed_ngram_features(df, id_col, text_col, buckets)
-    ratios = importance_log_ratios(
-        feats, df.filter(target_pred).select(id_col), id_col, buckets
-    )
-    raw_ids = df.filter(~target_pred).select(id_col)
+    feats = hashed_ngram_features(df)
+    ratios = importance_log_ratios(feats, df.filter(target_pred).select("doc_id"))
+    raw_ids = df.filter(~target_pred).select("doc_id")
     return (
-        feats.join(raw_ids, id_col)
+        feats.join(raw_ids, "doc_id")
         .join(F.broadcast(ratios), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("cnt").cast("bigint").alias("n_feats"),
             F.round(
@@ -154,15 +145,15 @@ def importance_weights(
     )
 
 
-def gumbel_noise(id_col: Column, salt: str = "dsir-gumbel") -> Column:
+def gumbel_noise(id_col: Column) -> Column:
     """Deterministic standard Gumbel draw per id: the uniform is the
-    portable 32-bit hash of ``salt:id`` mapped to the open unit interval
+    portable 32-bit hash of ``dsir-gumbel:id`` mapped to the open unit interval
     (the +0.5 offset keeps it off both endpoints), then
     ``-ln(-ln(u))``. Hash-derived, so identical across retries, engine
     restarts and the DuckDB oracle."""
     u = (
         portable_hash32(
-            F.concat(F.lit(salt + ":"), id_col.cast("string"))
+            F.concat(F.lit("dsir-gumbel:"), id_col.cast("string"))
         ).cast("double")
         + F.lit(0.5)
     ) / F.lit(_TWO32)
@@ -173,9 +164,6 @@ def gumbel_topk_selection(
     df: DataFrame,
     target_pred: Column,
     k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 4096,
 ) -> DataFrame:
     """DSIR selection proper: sample ``k`` raw documents without
     replacement with probability ∝ exp(logweight), via the Gumbel
@@ -183,23 +171,23 @@ def gumbel_topk_selection(
     exactly such a sample). Output (rank, id, logweight, gumbel_key),
     keys rounded to 6dp BEFORE ranking (id tiebreak) so the order is
     engine-stable; planned as TakeOrderedAndProject — no global sort."""
-    weights = importance_weights(df, target_pred, id_col, text_col, buckets)
+    weights = importance_weights(df, target_pred)
     keyed = weights.withColumn(
         "gumbel_key",
-        F.round(F.col("logweight") + gumbel_noise(F.col(id_col)), 6),
+        F.round(F.col("logweight") + gumbel_noise(F.col("doc_id")), 6),
     )
     # limit(k) FIRST (TakeOrderedAndProject — only k rows survive the
     # scan), then the rank window runs over those k rows alone; the
     # single-partition window is k-sized by construction, never
     # corpus-sized.
     return (
-        keyed.orderBy(F.desc("gumbel_key"), F.asc(id_col))
+        keyed.orderBy(F.desc("gumbel_key"), F.asc("doc_id"))
         .limit(k)
         .withColumn(
             "rank",
             F.row_number()
-            .over(Window.orderBy(F.desc("gumbel_key"), F.asc(id_col)))
+            .over(Window.orderBy(F.desc("gumbel_key"), F.asc("doc_id")))
             .cast("int"),
         )
-        .select("rank", id_col, "logweight", "gumbel_key")
+        .select("rank", "doc_id", "logweight", "gumbel_key")
     )

@@ -38,12 +38,7 @@ def hash_assign_arm(unit_col: Column | str, salt: str = "exp1") -> Column:
     return F.when(h % 2 == 0, F.lit("treatment")).otherwise(F.lit("control"))
 
 
-def cuped_adjusted_means(
-    units: DataFrame,
-    arm_col: str = "arm",
-    pre_col: str = "pre_cents",
-    post_col: str = "post_cents",
-) -> DataFrame:
+def cuped_adjusted_means(units: DataFrame) -> DataFrame:
     """Per-arm raw and CUPED-adjusted means from per-unit integer-cents
     (pre, post) sums. Returns one row per arm: n_units, mean_post_r6,
     mean_pre_r6, theta_r6 (same value on every row — the pooled
@@ -55,9 +50,9 @@ def cuped_adjusted_means(
     expression tree — no per-unit double is ever summed, so the result
     is independent of partitioning and row order."""
     u = units.select(
-        F.col(arm_col).alias("__arm"),
-        F.col(pre_col).cast("bigint").alias("__x"),
-        F.col(post_col).cast("bigint").alias("__y"),
+        F.col("arm").alias("__arm"),
+        F.col("pre_cents").cast("bigint").alias("__x"),
+        F.col("post_cents").cast("bigint").alias("__y"),
     )
     moments = u.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
@@ -102,11 +97,7 @@ def cuped_adjusted_means(
     )
 
 
-def agreement_kappa(
-    df: DataFrame,
-    a_col: str = "label_a",
-    b_col: str = "label_b",
-) -> DataFrame:
+def agreement_kappa(df: DataFrame) -> DataFrame:
     """Cohen's kappa inter-annotator agreement over two boolean label
     columns — the labeling-QA gate a supervised/RLHF data pipeline runs
     before trusting an annotation batch (kappa ≈ 0 means the annotators
@@ -128,8 +119,8 @@ def agreement_kappa(
 
     Scale: a single partial-combinable aggregate (five conditional
     counts) over one scan; output is one row."""
-    a = F.col(a_col).cast("boolean")
-    b = F.col(b_col).cast("boolean")
+    a = F.col("label_a").cast("boolean")
+    b = F.col("label_b").cast("boolean")
     counts = df.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.when(a & b, 1).otherwise(0)).cast("bigint").alias("both_pos"),
@@ -165,13 +156,7 @@ def agreement_kappa(
     )
 
 
-def two_proportion_ztest(
-    units: DataFrame,
-    arm_col: str = "arm",
-    conv_col: str = "converted",
-    treat: str = "treatment",
-    control: str = "control",
-) -> DataFrame:
+def two_proportion_ztest(units: DataFrame) -> DataFrame:
     """Pooled two-proportion z statistic for a conversion A/B readout —
     the significance gate on top of ``hash_assign_arm``:
 
@@ -188,9 +173,9 @@ def two_proportion_ztest(
     per-unit conversion relation is the caller's (typically a user-keyed
     groupBy of raw events — that shuffle dominates; this op adds none).
     """
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
-    conv = F.col(conv_col).cast("boolean")
+    is_t = F.col("arm") == "treatment"
+    is_c = F.col("arm") == "control"
+    conv = F.col("converted").cast("boolean")
     counts = units.agg(
         F.sum(F.when(is_t, 1).otherwise(0)).cast("bigint").alias("n_treat"),
         F.sum(F.when(is_t & conv, 1).otherwise(0))
@@ -233,13 +218,7 @@ def _z_denom(pool, nt, nc):
     )
 
 
-def mann_whitney_u(
-    units: DataFrame,
-    arm_col: str = "arm",
-    value_col: str = "value_int",
-    treat: str = "treatment",
-    control: str = "control",
-) -> DataFrame:
+def mann_whitney_u(units: DataFrame) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test between two arms over an
     INTEGER unit metric — the nonparametric companion to the CUPED/z
     readouts: compares distributions by rank, so a handful of whale
@@ -267,11 +246,11 @@ def mann_whitney_u(
     of unit count), not by |units|. Magnitude guard: 2·R_t ≈ 2n² must
     stay under 2^63 ⇒ n ≤ ~2·10⁹ units; beyond that, coarsen the value
     grid."""
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
+    is_t = F.col("arm") == "treatment"
+    is_c = F.col("arm") == "control"
     lv = (
         units.filter(is_t | is_c)
-        .groupBy(F.col(value_col).alias("__v"))
+        .groupBy(F.col("value_int").alias("__v"))
         .agg(
             F.sum(F.when(is_t, 1).otherwise(0)).cast("bigint").alias("__nt"),
             F.sum(F.when(is_c, 1).otherwise(0)).cast("bigint").alias("__nc"),
@@ -409,10 +388,6 @@ def chi_square_independence(
 def quantile_lift(
     units: DataFrame,
     quantiles: list[int] | None = None,
-    arm_col: str = "arm",
-    value_col: str = "value_int",
-    treat: str = "treatment",
-    control: str = "control",
 ) -> DataFrame:
     """Quantile treatment effect: per requested percentile q, the exact
     type-1 (lower) quantile of the integer unit metric in each arm and
@@ -431,15 +406,15 @@ def quantile_lift(
     Scale: one value-keyed aggregate, one per-arm ordered window over
     distinct values, a ≤|quantiles|-row broadcast of arm totals."""
     qs = sorted(set(quantiles or [25, 50, 75]))
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
+    is_t = F.col("arm") == "treatment"
+    is_c = F.col("arm") == "control"
     lv = (
         units.filter(is_t | is_c)
         .groupBy(
-            F.when(is_t, F.lit(treat)).otherwise(F.lit(control)).alias(
+            F.when(is_t, F.lit("treatment")).otherwise(F.lit("control")).alias(
                 "__arm"
             ),
-            F.col(value_col).alias("__v"),
+            F.col("value_int").alias("__v"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
         # four consumers (cumulative window, totals, and both quantile
@@ -477,10 +452,10 @@ def quantile_lift(
         .groupBy("__arm", "q")
         .agg(F.min("__v").alias("__qv"))
     )
-    t = hit.filter(F.col("__arm") == treat).select(
+    t = hit.filter(F.col("__arm") == "treatment").select(
         "q", F.col("__qv").alias("v_treat")
     )
-    c = hit.filter(F.col("__arm") == control).select(
+    c = hit.filter(F.col("__arm") == "control").select(
         "q", F.col("__qv").alias("v_ctrl")
     )
     return t.join(c, "q").select(
@@ -491,13 +466,7 @@ def quantile_lift(
     )
 
 
-def ips_policy_value(
-    logs: DataFrame,
-    action_col: str = "logged_action",
-    target_col: str = "target_action",
-    reward_col: str = "reward_int",
-    pq_col: str = "p_quarters",
-) -> DataFrame:
+def ips_policy_value(logs: DataFrame) -> DataFrame:
     """Off-policy evaluation by inverse propensity scoring: estimate the
     value a TARGET decision rule would have earned from logs collected
     under a different (known-propensity) logging policy — the standard
@@ -507,7 +476,7 @@ def ips_policy_value(
         V̂_IPS   = (1/n) Σ 1[a_i = π(x_i)] · r_i / p_i
         V̂_SNIPS = Σ 1[·] r_i/p_i / Σ 1[·] 1/p_i   (self-normalized)
 
-    Propensities arrive as QUARTERS (``pq_col`` ∈ {1,2,3} meaning
+    Propensities arrive as QUARTERS (``p_quarters`` ∈ {1,2,3} meaning
     p = k/4): then 1/p ∈ {4, 2, 4/3} and scaling every weight by 3
     makes it integer (12/k ∈ {12, 6, 4}) — both estimator numerators
     and the SNIPS denominator are exact integer sums, with one double
@@ -518,11 +487,11 @@ def ips_policy_value(
     Scale: one scan, one partial-combinable four-counter aggregate.
     Magnitude guard: 12·Σr must stay under 2^63 (rewards in cents ⇒
     ~7·10^17 total cents of matched reward — rescale beyond that)."""
-    matched = F.col(action_col) == F.col(target_col)
+    matched = F.col("logged_action") == F.col("target_action")
     # 3·(1/p) = 12/k, an exact integer for k ∈ {1,2,3}; the mod form
     # keeps the expression integer-typed under ANSI (no double division)
     w3i = (
-        (F.lit(12) - F.lit(12) % F.col(pq_col)) / F.col(pq_col)
+        (F.lit(12) - F.lit(12) % F.col("p_quarters")) / F.col("p_quarters")
     ).cast("bigint")
     agg = logs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -530,7 +499,7 @@ def ips_policy_value(
         .cast("bigint")
         .alias("n_matched"),
         F.sum(
-            F.when(matched, w3i * F.col(reward_col).cast("bigint")).otherwise(
+            F.when(matched, w3i * F.col("reward_int").cast("bigint")).otherwise(
                 F.lit(0)
             )
         )
@@ -561,17 +530,15 @@ def ips_policy_value(
     )
 
 
-def reliability_table_ece(
-    scored: DataFrame,
-    prob_col: str = "prob",
-    label_col: str = "label",
-    n_bins: int = 10,
-) -> DataFrame:
+_ECE_BINS = 10
+
+
+def reliability_table_ece(scored: DataFrame) -> DataFrame:
     """Reliability table + expected calibration error for a probability
     scorer against binary outcomes — the calibration audit a quality/
     ranking model gets before its scores are trusted as probabilities.
 
-    Rows bin by predicted probability (bin = min(⌊p·n_bins⌋, n_bins−1));
+    Rows bin by predicted probability (bin = min(⌊p·10⌋, 9));
     each bin reports its count, positive count, empirical accuracy and
     the bin-midpoint confidence; ECE is the count-weighted mean absolute
     gap Σ (n_b/n)·|acc_b − mid_b| (the histogram-binning variant: the
@@ -581,17 +548,17 @@ def reliability_table_ece(
     row per non-empty bin: (bin, n_b, n_pos, acc_r6, conf_mid, ece_r6)
     with ece_r6 identical on every row.
 
-    Scale: one scan, one ≤n_bins-row aggregate; the ECE fold runs on
+    Scale: one scan, one ≤10-row aggregate; the ECE fold runs on
     the bin table."""
-    p = F.col(prob_col).cast("double")
+    p = F.col("prob").cast("double")
     b = F.least(
-        F.floor(p * F.lit(float(n_bins))).cast("int"),
-        F.lit(n_bins - 1),
+        F.floor(p * F.lit(float(_ECE_BINS))).cast("int"),
+        F.lit(_ECE_BINS - 1),
     )
     bins = (
         scored.select(
             b.alias("bin"),
-            F.col(label_col).cast("boolean").alias("__y"),
+            F.col("label").cast("boolean").alias("__y"),
         )
         .groupBy("bin")
         .agg(
@@ -602,7 +569,7 @@ def reliability_table_ece(
         )
         .localCheckpoint(eager=False)  # read by the rows AND the ECE fold
     )
-    mid = (F.col("bin").cast("double") + F.lit(0.5)) / F.lit(float(n_bins))
+    mid = (F.col("bin").cast("double") + F.lit(0.5)) / F.lit(float(_ECE_BINS))
     gap = F.abs(
         F.col("n_pos").cast("double") / F.col("n_b").cast("double") - mid
     )
@@ -644,10 +611,6 @@ def reliability_table_ece(
 def winsorized_mean_lift(
     units: DataFrame,
     pct: int = 95,
-    arm_col: str = "arm",
-    value_col: str = "value_int",
-    treat: str = "treatment",
-    control: str = "control",
 ) -> DataFrame:
     """Winsorized (capped-metric) mean lift: each arm's unit metric is
     capped at that arm's exact ``pct``-th percentile before averaging —
@@ -665,15 +628,15 @@ def winsorized_mean_lift(
 
     Scale: one value-keyed aggregate, one per-arm distinct-value
     window, a 2-row cap broadcast back onto the value-level relation."""
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
+    is_t = F.col("arm") == "treatment"
+    is_c = F.col("arm") == "control"
     lv = (
         units.filter(is_t | is_c)
         .groupBy(
-            F.when(is_t, F.lit(treat)).otherwise(F.lit(control)).alias(
+            F.when(is_t, F.lit("treatment")).otherwise(F.lit("control")).alias(
                 "__arm"
             ),
-            F.col(value_col).alias("__v"),
+            F.col("value_int").alias("__v"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
         .localCheckpoint(eager=False)  # cap search + capped sum both read it
@@ -707,12 +670,12 @@ def winsorized_mean_lift(
             .alias("__s")
         )
     )
-    t = agg.filter(F.col("__arm") == treat).select(
+    t = agg.filter(F.col("__arm") == "treatment").select(
         F.col("__tot").alias("n_treat"),
         F.col("__cap").alias("cap_treat"),
         F.col("__s").alias("__st"),
     )
-    c = agg.filter(F.col("__arm") == control).select(
+    c = agg.filter(F.col("__arm") == "control").select(
         F.col("__tot").alias("n_ctrl"),
         F.col("__cap").alias("cap_ctrl"),
         F.col("__s").alias("__sc"),
@@ -733,11 +696,6 @@ def winsorized_mean_lift(
 def dr_policy_value(
     logs: DataFrame,
     qhat: DataFrame,
-    context_col: str = "context",
-    action_col: str = "logged_action",
-    target_col: str = "target_action",
-    reward_col: str = "reward_int",
-    pq_col: str = "p_quarters",
 ) -> DataFrame:
     """Doubly-robust off-policy value (Dudík, Langford & Li, ICML'11):
     combines a direct outcome model with the IPS correction —
@@ -763,8 +721,8 @@ def dr_policy_value(
     Scale: ``qhat`` is |contexts|×|actions| rows and broadcasts twice
     (target leg, logged leg); one scan, one integer aggregate."""
     qt = qhat.select(
-        F.col(context_col).alias("__ctx"),
-        F.col(action_col).alias("__act"),
+        F.col("context").alias("__ctx"),
+        F.col("logged_action").alias("__act"),
         F.col("q").cast("bigint").alias("__qt"),
     )
     base = (
@@ -776,8 +734,8 @@ def dr_policy_value(
                     F.col("__qt").alias("__q_target"),
                 )
             ),
-            (F.col(context_col) == F.col("__ctx"))
-            & (F.col(target_col) == F.col("__ta")),
+            (F.col("context") == F.col("__ctx"))
+            & (F.col("target_action") == F.col("__ta")),
             "left",
         )
         .drop("__ctx", "__ta")
@@ -789,17 +747,17 @@ def dr_policy_value(
                     F.col("__qt").alias("__q_logged"),
                 )
             ),
-            (F.col(context_col) == F.col("__ctx"))
-            & (F.col(action_col) == F.col("__la")),
+            (F.col("context") == F.col("__ctx"))
+            & (F.col("logged_action") == F.col("__la")),
             "left",
         )
         .drop("__ctx", "__la")
         .withColumn("__q_target", F.coalesce("__q_target", F.lit(0)))
         .withColumn("__q_logged", F.coalesce("__q_logged", F.lit(0)))
     )
-    matched = F.col(action_col) == F.col(target_col)
+    matched = F.col("logged_action") == F.col("target_action")
     w3i = (
-        (F.lit(12) - F.lit(12) % F.col(pq_col)) / F.col(pq_col)
+        (F.lit(12) - F.lit(12) % F.col("p_quarters")) / F.col("p_quarters")
     ).cast("bigint")
     agg = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -814,7 +772,7 @@ def dr_policy_value(
                 matched,
                 w3i
                 * (
-                    F.col(reward_col).cast("bigint")
+                    F.col("reward_int").cast("bigint")
                     - F.col("__q_logged")
                 ),
             ).otherwise(F.lit(0))
@@ -835,15 +793,7 @@ def dr_policy_value(
     )
 
 
-def mde_readout(
-    units: DataFrame,
-    arm_col: str = "arm",
-    conv_col: str = "converted",
-    treat: str = "treatment",
-    control: str = "control",
-    z_alpha: float = 1.959964,
-    z_beta: float = 0.841621,
-) -> DataFrame:
+def mde_readout(units: DataFrame) -> DataFrame:
     """Minimum detectable effect of a running conversion experiment at
     its CURRENT sample sizes — the design-side sanity number every
     readout should ship with (a "no significant lift" verdict means
@@ -859,9 +809,9 @@ def mde_readout(
     never converts.
 
     Scale: one scan, one four-counter aggregate, one row."""
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
-    conv = F.col(conv_col).cast("boolean")
+    is_t = F.col("arm") == "treatment"
+    is_c = F.col("arm") == "control"
+    conv = F.col("converted").cast("boolean")
     counts = units.agg(
         F.sum(F.when(is_t, 1).otherwise(0)).cast("bigint").alias("n_treat"),
         F.sum(F.when(is_c, 1).otherwise(0)).cast("bigint").alias("n_ctrl"),
@@ -881,7 +831,7 @@ def mde_readout(
     # sum the two z literals as COLUMNS (not in Python) so the oracle's
     # `CAST(.. AS DOUBLE) + CAST(.. AS DOUBLE)` reproduces the exact
     # double from the same two correctly-rounded parses
-    mde = (F.lit(z_alpha) + F.lit(z_beta)) * F.sqrt(
+    mde = (F.lit(1.959964) + F.lit(0.841621)) * F.sqrt(
         pool * (F.lit(1.0) - pool) * (F.lit(1.0) / nt + F.lit(1.0) / nc)
     )
     return counts.select(
@@ -898,7 +848,6 @@ def mde_readout(
 def group_sequential_obf(
     looks: DataFrame,
     look_col: str,
-    c_final: float = 2.04,
     k_total: int | None = None,
 ) -> DataFrame:
     """O'Brien-Fleming group-sequential boundary check (O'Brien &
@@ -934,7 +883,7 @@ def group_sequential_obf(
         pool * (F.lit(1.0) - pool) * (F.lit(1.0) / nt + F.lit(1.0) / nc)
     )
     z = F.when(denom > 0, (pt - pc) / denom)
-    boundary = F.lit(float(c_final)) * F.sqrt(
+    boundary = F.lit(2.04) * F.sqrt(
         k_col.cast("double") / F.col(look_col).cast("double")
     )
     return looks.select(
@@ -1204,8 +1153,6 @@ def cmh_test(
     stratum_col: str,
     arm_col: str,
     success_col: str,
-    treat: str = "treatment",
-    control: str = "control",
 ) -> DataFrame:
     """Cochran-Mantel-Haenszel test + Mantel-Haenszel pooled odds
     ratio over K stratified 2×2 tables — the stratified-PROPORTIONS
@@ -1234,7 +1181,7 @@ def cmh_test(
     chisq is NULL when ΣV = 0 (every used stratum degenerate);
     OR_MH is NULL when Σ(b·c/n) = 0. Rows with a NULL stratum form
     their own stratum (sentinel coalesce); rows with a success outside
-    {0, 1} (including NULL) or an arm outside {treat, control} are
+    {0, 1} (including NULL) or an arm outside {treatment, control} are
     EXCLUDED — a success of 2 would otherwise mint a negative failure
     cell silently.
 
@@ -1244,8 +1191,8 @@ def cmh_test(
     is computed in decimal(38,0) — bigint would overflow past ~55k
     units per stratum."""
     su = F.col(success_col).cast("bigint")
-    is_t = F.col(arm_col) == treat
-    is_c = F.col(arm_col) == control
+    is_t = F.col(arm_col) == "treatment"
+    is_c = F.col(arm_col) == "control"
     base = units.filter((is_t | is_c) & su.isin(0, 1)).select(
         F.coalesce(F.col(stratum_col).cast("string"), F.lit("__NULL__"))
         .alias("__s"),

@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 def funnel_anchor_times(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Per-user anchor timestamp of each completed funnel step.
 
@@ -41,21 +38,21 @@ def funnel_anchor_times(
     if len(steps) < 2:
         raise ValueError("a funnel needs at least two steps")
     anchors = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
 
     def extend(acc: DataFrame, idx_step: tuple[int, str]) -> DataFrame:
         i, step = idx_step
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .join(acc.select(user_col, f"t{i - 1}"), user_col)
-            .filter(F.col(ts_col) > F.col(f"t{i - 1}"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias(f"t{i}"))
+            events.filter(F.col("event_type") == step)
+            .join(acc.select("user_id", f"t{i - 1}"), "user_id")
+            .filter(F.col("ts") > F.col(f"t{i - 1}"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(f"t{i}"))
         )
-        return acc.join(nxt, user_col, "left")
+        return acc.join(nxt, "user_id", "left")
 
     return reduce(extend, enumerate(steps[1:], start=2), anchors)
 
@@ -63,9 +60,6 @@ def funnel_anchor_times(
 def funnel_summary(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """One-row funnel report: users reaching each step plus the mean
     seconds between consecutive anchors.
@@ -73,7 +67,7 @@ def funnel_summary(
     Timing is exact microsecond arithmetic (``unix_micros``, matching
     DuckDB's ``epoch_us``): the summed deltas stay < 2^53 so the mean is
     bit-exact cross-engine before the final /1e6 and 6dp round."""
-    anchors = funnel_anchor_times(events, steps, user_col, type_col, ts_col)
+    anchors = funnel_anchor_times(events, steps)
     aggs = [F.count("t1").alias("n_step1")]
     for i in range(2, len(steps) + 1):
         aggs.append(F.count(f"t{i}").alias(f"n_step{i}"))

@@ -39,17 +39,17 @@ LAT_RANGE = 180_000_000  # offset microdegrees: [0, 180e6]
 LON_RANGE = 360_000_000  # offset microdegrees: [0, 360e6]
 
 
-def synth_point(id_col: Column | str, salt: str = "geo") -> tuple[Column, Column]:
+def synth_point(id_col: Column | str) -> tuple[Column, Column]:
     """Deterministic synthetic coordinates for an id — the portable
     md5-prefix hash mapped into offset microdegrees, so an oracle
     regenerates the identical points (the pinterest_driver fixture
     discipline). Returns (lat_micro, lon_micro) bigint columns."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     lat = portable_hash32(
-        F.concat(F.lit(f"{salt}-lat:"), c.cast("string"))
+        F.concat(F.lit("geo-lat:"), c.cast("string"))
     ) % F.lit(LAT_RANGE + 1)
     lon = portable_hash32(
-        F.concat(F.lit(f"{salt}-lon:"), c.cast("string"))
+        F.concat(F.lit("geo-lon:"), c.cast("string"))
     ) % F.lit(LON_RANGE + 1)
     return lat.cast("bigint"), lon.cast("bigint")
 

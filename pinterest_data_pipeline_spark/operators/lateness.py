@@ -127,7 +127,6 @@ def lateness_audit_by_hour(
     tiebreak_col: str,
     ts_col: str,
     delay_s: int,
-    shard_us: int = 3600 * MICROS,
 ) -> DataFrame:
     """Hourly lateness report: for each EVENT-TIME hour, how many
     events arrived, how many the ``delay_s`` watermark would have
@@ -137,7 +136,7 @@ def lateness_audit_by_hour(
     Scale: watermark_lateness's two-level scan, then one map-side
     combinable aggregate keyed by hour."""
     lat = watermark_lateness(
-        df, arrival_us_col, tiebreak_col, ts_col, delay_s, shard_us
+        df, arrival_us_col, tiebreak_col, ts_col, delay_s
     )
     hour = ((F.col("__us") / F.lit(3600 * MICROS)).cast("long")).alias(
         "__hour"

@@ -38,20 +38,19 @@ from pyspark.sql import functions as F
 def fellegi_sunter_pattern_weights(
     candidates: DataFrame,
     agree_cols: list[str],
-    match_col: str = "is_match",
 ) -> DataFrame:
     """Per-pattern Fellegi-Sunter evidence weights.
 
     ``candidates``: one row per candidate pair with boolean agreement
-    columns ``agree_cols`` (field j agreed?) and boolean ``match_col``
+    columns ``agree_cols`` (field j agreed?) and boolean ``is_match``
     (ground-truth label). Output: one row per observed
     (pattern, counts) with ``n_match``, ``n_nonmatch`` and
     ``weight_r6`` = Σ_j w_j under smoothed m/u."""
     pat = candidates.groupBy(
         *[F.col(c).cast("boolean").alias(c) for c in agree_cols]
     ).agg(
-        F.sum(F.col(match_col).cast("long")).alias("n_match"),
-        F.sum((~F.col(match_col)).cast("long")).alias("n_nonmatch"),
+        F.sum(F.col("is_match").cast("long")).alias("n_match"),
+        F.sum((~F.col("is_match")).cast("long")).alias("n_nonmatch"),
     )
     totals = pat.agg(
         F.sum("n_match").alias("__tm"), F.sum("n_nonmatch").alias("__tu")

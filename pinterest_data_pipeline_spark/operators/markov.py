@@ -21,20 +21,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def markov_logloss(
-    df: DataFrame,
-    subject_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def markov_logloss(df: DataFrame) -> DataFrame:
     """ONE row: (n_transitions, n_states, n_cells, avg_logloss_r6,
     perplexity_r6) for the first-order model fitted to and evaluated on
     the same sequences (the in-sample model-capacity readout; held-out
     evaluation is the same formula over a hash-split — `hash_split`).
 
     Sequence order is (ts, tiebreak) — deterministic under concurrent
-    events, matching `event_transition_matrix`. NULL-``ts_col`` rows
+    events, matching `event_transition_matrix`. NULL-``ts`` rows
     are dropped before windowing, the family-wide contract (see
     `top_path_trigrams`): an event with no timestamp has no sequence
     position.
@@ -42,10 +36,10 @@ def markov_logloss(
     Scale: one per-subject lag window (single shuffle on subject), one
     aggregate down to the ≤|states|² cell table; the fold runs over
     those cells."""
-    seq_w = Window.partitionBy(subject_col).orderBy(ts_col, tiebreak_col)
-    seq = df.where(F.col(ts_col).isNotNull()).select(
-        F.col(state_col).alias("__next"),
-        F.lag(state_col).over(seq_w).alias("__prev"),
+    seq_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = df.where(F.col("ts").isNotNull()).select(
+        F.col("event_type").alias("__next"),
+        F.lag("event_type").over(seq_w).alias("__prev"),
     ).where(F.col("__prev").isNotNull())
     cells = seq.groupBy("__prev", "__next").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_pn")
@@ -99,10 +93,6 @@ def markov_logloss(
 
 def top_path_trigrams(
     df: DataFrame,
-    subject_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    tiebreak_col: str = "event_id",
     top_k: int = 20,
 ) -> DataFrame:
     """Sequential-pattern mining, PrefixSpan's length-3 workhorse tier:
@@ -120,7 +110,7 @@ def top_path_trigrams(
 
     Ordering is (ts, tiebreak) per subject — deterministic under
     concurrent events, matching `markov_logloss`. Rows with a NULL
-    ``ts_col`` are DROPPED before windowing: an event with no
+    ``ts`` are DROPPED before windowing: an event with no
     timestamp has no position in a sequence, and keeping it would
     make the result engine-dependent (Spark ASC windows order NULL
     first, ANSI engines commonly last). The top-k order is
@@ -131,14 +121,14 @@ def top_path_trigrams(
     grouped (count, count_distinct) on the trigram, then
     TakeOrderedAndProject for the LIMIT — no global sort materializes
     the full trigram relation."""
-    seq_w = Window.partitionBy(subject_col).orderBy(ts_col, tiebreak_col)
+    seq_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = (
-        df.where(F.col(ts_col).isNotNull())
+        df.where(F.col("ts").isNotNull())
         .select(
-            F.col(subject_col).alias("__subj"),
-            F.col(state_col).alias("__s1"),
-            F.lead(state_col, 1).over(seq_w).alias("__s2"),
-            F.lead(state_col, 2).over(seq_w).alias("__s3"),
+            F.col("user_id").alias("__subj"),
+            F.col("event_type").alias("__s1"),
+            F.lead("event_type", 1).over(seq_w).alias("__s2"),
+            F.lead("event_type", 2).over(seq_w).alias("__s3"),
         )
         .where(
             # s3 NULL marks the sequence tail; s1/s2/s3 must ALL be

@@ -40,8 +40,6 @@ def scd2_apply(
     changes: DataFrame,
     key_cols: Sequence[str],
     change_ts: Column,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Apply one batch of attribute changes to an SCD2 dimension.
 
@@ -49,18 +47,18 @@ def scd2_apply(
     ``changes`` carries (key, attrs). Matched CURRENT rows close at
     ``change_ts``; each change inserts a new current row opening at
     ``change_ts``. History (closed) rows pass through untouched."""
-    attr_cols = [c for c in dim.columns if c not in (valid_from, valid_to)]
+    attr_cols = [c for c in dim.columns if c not in ("valid_from", "valid_to")]
     change_keys = changes.select(*key_cols)
-    is_current = F.col(valid_to).isNull()
+    is_current = F.col("valid_to").isNull()
 
     history = dim.filter(~is_current)
     current = dim.filter(is_current)
     closed = (
         current.join(change_keys, list(key_cols), "semi")
-        .withColumn(valid_to, change_ts)
+        .withColumn("valid_to", change_ts)
     )
     untouched = current.join(change_keys, list(key_cols), "anti")
     opened = changes.select(*attr_cols).withColumn(
-        valid_from, change_ts
-    ).withColumn(valid_to, F.lit(None).cast(dim.schema[valid_to].dataType))
+        "valid_from", change_ts
+    ).withColumn("valid_to", F.lit(None).cast(dim.schema["valid_to"].dataType))
     return history.unionByName(closed).unionByName(untouched).unionByName(opened)

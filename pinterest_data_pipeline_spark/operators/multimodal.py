@@ -39,23 +39,21 @@ FEATURE_SCHEMA = T.StructType(
 N_FEATURES = 8
 
 
-def attach_binary_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Build a multimodal asset table from a text corpus: the UTF-8 bytes
     stand in for an opaque media payload (same column type and access
     pattern a real image/audio payload would have)."""
     return df.select(
-        F.col(id_col).alias("asset_id"),
-        F.col(text_col).cast("binary").alias("content"),
-        F.when(F.col(id_col) % 3 == 0, "image")
-        .when(F.col(id_col) % 3 == 1, "audio")
+        F.col("doc_id").alias("asset_id"),
+        F.col("text").cast("binary").alias("content"),
+        F.when(F.col("doc_id") % 3 == 0, "image")
+        .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")
         .alias("media_type"),
         F.struct(
-            (F.pmod(F.col(id_col) * 37, F.lit(1920)) + 1).cast("int").alias("width"),
-            (F.pmod(F.col(id_col) * 53, F.lit(1080)) + 1).cast("int").alias("height"),
-            (F.pmod(F.col(id_col) * 7, F.lit(600))).cast("double").alias("duration_s"),
+            (F.pmod(F.col("doc_id") * 37, F.lit(1920)) + 1).cast("int").alias("width"),
+            (F.pmod(F.col("doc_id") * 53, F.lit(1080)) + 1).cast("int").alias("height"),
+            (F.pmod(F.col("doc_id") * 7, F.lit(600))).cast("double").alias("duration_s"),
         ).alias("meta"),
     )
 
@@ -83,15 +81,12 @@ def _fake_features_from_md5(digest_hex: str) -> list[float]:
     ]
 
 
-def decode_image_features(
-    assets: DataFrame, use_real_decoder: bool = False
-) -> DataFrame:
+def decode_image_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched decode / feature-extract over ``mapInPandas``.
 
-    ``use_real_decoder=True`` is the production path (Pillow etc.) — it
-    raises ``NotImplementedError`` in this container (no codec libs). The
-    stub path derives features from the payload md5: deterministic, and it
-    exercises the identical batch shape, schema, and partitioning.
+    Features are derived from the payload md5, a stand-in for a codec
+    decode (Pillow etc.): deterministic, and it exercises the identical
+    batch shape, schema, and partitioning.
 
     NULL payloads are dropped BEFORE the Python crossing, same contract
     as decode_raw_bitmap_features: nothing to decode, and bytes(None)
@@ -100,12 +95,6 @@ def decode_image_features(
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_real_decoder:
-                # STUB: real decode needs PIL/libsndfile/ffmpeg, absent here.
-                raise NotImplementedError(
-                    "real media decode not available in this environment; "
-                    "use use_real_decoder=False for the deterministic stub"
-                )
             digests = [
                 hashlib.md5(bytes(content)).hexdigest()
                 for content in pdf["content"]
@@ -123,9 +112,10 @@ def decode_image_features(
     return assets.mapInPandas(extract, FEATURE_SCHEMA)
 
 
-def frame_sample_offsets(
-    assets: DataFrame, n_frames: int = 4
-) -> DataFrame:
+_N_FRAMES = 4
+
+
+def frame_sample_offsets(assets: DataFrame) -> DataFrame:
     """Frame-sampling plan for video payloads: evenly-spaced offsets from
     the metadata duration — pure expression work (the decode of sampled
     frames would then go through :func:`decode_image_features`)."""
@@ -134,9 +124,9 @@ def frame_sample_offsets(
         "asset_id",
         F.col("meta.duration_s").alias("duration_s"),
         F.transform(
-            F.sequence(F.lit(0), F.lit(n_frames - 1)),
+            F.sequence(F.lit(0), F.lit(_N_FRAMES - 1)),
             lambda i: F.round(
-                i.cast("double") * F.col("meta.duration_s") / F.lit(float(n_frames)), 3
+                i.cast("double") * F.col("meta.duration_s") / F.lit(float(_N_FRAMES)), 3
             ),
         ).alias("frame_offsets_s"),
     )
@@ -164,9 +154,9 @@ RAW_FEATURE_SCHEMA = T.StructType(
 RAW_TILE = 16  # raw payloads are interpreted as TILE×TILE grayscale
 
 
-def decode_raw_bitmap_features(assets: DataFrame, tile: int = RAW_TILE) -> DataFrame:
+def decode_raw_bitmap_features(assets: DataFrame) -> DataFrame:
     """REAL decode path, no codec required: RAW (uncompressed) grayscale
-    bitmaps. The payload's first ``tile²`` bytes ARE the pixels
+    bitmaps. The payload's first ``RAW_TILE²`` bytes ARE the pixels
     (zero-padded when shorter) — the layout of uncompressed camera/
     sensor dumps, which need byte-geometry interpretation, not a codec.
     Per asset: pixel mean/std and a 4×4 block-mean thumbnail, computed
@@ -179,7 +169,7 @@ def decode_raw_bitmap_features(assets: DataFrame, tile: int = RAW_TILE) -> DataF
 
     Scale: one Python crossing, whole batches at a time; upstream
     metadata-plane filters (binary_metadata) cut the decoded slice
-    first. Per-row work is O(tile²) regardless of original media size.
+    first. Per-row work is O(RAW_TILE²) regardless of original media size.
 
     NULL payloads are dropped BEFORE the Python crossing: a missing
     asset has nothing to decode, and fabricating all-zero features for
@@ -191,7 +181,7 @@ def decode_raw_bitmap_features(assets: DataFrame, tile: int = RAW_TILE) -> DataF
     assets = assets.filter(F.col("content").isNotNull())
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        npx = tile * tile
+        npx = RAW_TILE * RAW_TILE
         for pdf in batches:
             mats = []
             for content in pdf["content"]:
@@ -200,8 +190,8 @@ def decode_raw_bitmap_features(assets: DataFrame, tile: int = RAW_TILE) -> DataF
                 mats.append(np.frombuffer(buf, dtype=np.uint8))
             raw = np.stack(mats)  # (n, tile²) uint8
             px = raw.astype(np.float64) / 255.0
-            imgs = px.reshape(-1, tile, tile)
-            block = tile // 4
+            imgs = px.reshape(-1, RAW_TILE, RAW_TILE)
+            block = RAW_TILE // 4
             thumbs = imgs.reshape(-1, 4, block, 4, block).mean(axis=(2, 4))
             ints = raw.astype(np.int64)
             tsums = (
@@ -212,8 +202,8 @@ def decode_raw_bitmap_features(assets: DataFrame, tile: int = RAW_TILE) -> DataF
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
-                    "width": tile,
-                    "height": tile,
+                    "width": RAW_TILE,
+                    "height": RAW_TILE,
                     "mean_px": px.mean(axis=1),
                     "std_px": px.std(axis=1),
                     "thumb_4x4": list(thumbs.reshape(-1, 16)),

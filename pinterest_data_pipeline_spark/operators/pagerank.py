@@ -97,17 +97,14 @@ def pagerank_fixed_point(edges: DataFrame, iterations: int = 3) -> DataFrame:
 
 def hits_bipartite(
     edges: DataFrame,
-    hub_col: str = "hub",
-    auth_col: str = "auth",
     iterations: int = 2,
-    norm: int = 1000,
 ) -> DataFrame:
     """HITS (Kleinberg'99) hub/authority scores on a bipartite edge
     relation, in the integer fixed-point discipline of
     ``pagerank_fixed_point`` and the spectral power iteration: hubs
-    start at ``norm``; each iteration sums hub scores into authority
+    start at 1000; each iteration sums hub scores into authority
     scores and back, renormalizing each side by its max with
-    truncating integer division (``(raw·norm) // max``) — every value
+    truncating integer division (``(raw·1000) // max``) — every value
     every round is an exact integer, so an unrolled SQL oracle replays
     the whole trajectory. Mutual reinforcement in one pass: the best
     parts are those sourced by the best suppliers, and vice versa —
@@ -125,18 +122,18 @@ def hits_bipartite(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     ed = edges.select(
-        F.col(hub_col).alias("__h"), F.col(auth_col).alias("__a")
+        F.col("hub").alias("__h"), F.col("auth").alias("__a")
     ).distinct()
     ed = ed.localCheckpoint(eager=False)
     h = ed.select("__h").distinct().withColumn(
-        "__score", F.lit(norm).cast("bigint")
+        "__score", F.lit(1000).cast("bigint")
     )
 
     def renorm(df: DataFrame, key: str) -> DataFrame:
         m = df.agg(F.max("__raw").alias("__m"))
         return df.crossJoin(F.broadcast(m)).select(
             key,
-            F.expr(f"cast((__raw * {norm}) div __m as bigint)").alias(
+            F.expr("cast((__raw * 1000) div __m as bigint)").alias(
                 "__score"
             ),
         )

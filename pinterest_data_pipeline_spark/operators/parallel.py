@@ -43,14 +43,12 @@ def _physical_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the session's shuffle
     parallelism iff it is a narrow (exchange-free) plan over too few file
     splits; otherwise return it untouched."""
     spark = df.sparkSession
-    target = min_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # Any exchange (shuffle or AQE stage boundary) already widens
     # parallelism to the shuffle-partition count downstream of it.
     # A checkpointed relation (Scan ExistingRDD) inherited its partition

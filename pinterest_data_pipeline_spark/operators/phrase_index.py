@@ -22,13 +22,10 @@ TOKEN_RE = "[a-z0-9]+"
 def phrase_match_counts(
     df: DataFrame,
     phrase: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_k: int = 15,
 ) -> DataFrame:
     """Documents containing the exact token phrase, with occurrence
     counts: (id, n_matches), ordered by (n_matches DESC, id ASC), cut
-    to ``top_k``. A match is |phrase| consecutive tokens equal to the
+    to 15. A match is |phrase| consecutive tokens equal to the
     phrase, counted at every distinct start position (overlaps count).
 
     Scale: the postings build is one scan + explode PRUNED to the
@@ -41,9 +38,9 @@ def phrase_match_counts(
     if len(terms) < 2:
         raise ValueError("phrase needs >= 2 terms (use a filter for 1)")
     term_arr = F.array(*[F.lit(t) for t in sorted(set(terms))])
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0)
+    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
     postings = (
-        df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+        df.select(F.col("doc_id").alias("__id"), toks.alias("__toks"))
         .filter(F.exists("__toks", lambda t: F.array_contains(term_arr, t)))
         .select("__id", F.posexplode("__toks").alias("__pos", "__term"))
         .filter(F.array_contains(term_arr, F.col("__term")))
@@ -58,8 +55,8 @@ def phrase_match_counts(
         )
         starts = starts.join(nxt, ["__id", "__start"])
     return (
-        starts.groupBy(F.col("__id").alias(id_col))
+        starts.groupBy(F.col("__id").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_matches"))
-        .orderBy(F.col("n_matches").desc(), F.col(id_col).asc())
-        .limit(top_k)
+        .orderBy(F.col("n_matches").desc(), F.col("doc_id").asc())
+        .limit(15)
     )

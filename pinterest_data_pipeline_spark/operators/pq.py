@@ -62,8 +62,6 @@ def _argmin_sql(vec: str, centroids: list[list[float]]) -> str:
 
 def pq_train_gate(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     m: int = 8,
     k: int = 16,
@@ -92,9 +90,9 @@ def pq_train_gate(
     subdim = dim // m
     work = fan_out(
         df.select(
-            F.col(id_col).alias("__id"),
+            F.col("vec_id").alias("__id"),
             *[
-                F.slice(F.col(vec_col), i * subdim + 1, subdim).alias(
+                F.slice(F.col("embedding"), i * subdim + 1, subdim).alias(
                     f"__sub{i}"
                 )
                 for i in range(m)

@@ -30,24 +30,14 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stopwords: int = 2,
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Per-document quality signals and the combined pass flag.
 
-    Output: (id_col, n_words, mean_word_len, alpha_frac,
+    Output: (doc_id, n_words, mean_word_len, alpha_frac,
     n_stop_present, passes_rules) — one row per document with at least
     one token. ``passes_rules`` is an int (1/0) so external comparators
     hash it identically across engines."""
-    toks = ws_tokens(text_col)
+    toks = ws_tokens("text")
     n_words = F.size(toks).cast("long")
     char_sum = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
@@ -61,14 +51,14 @@ def gopher_quality_flags(
         F.lit(0),
     )
     passes = (
-        n_words.between(min_words, max_words)
-        & mean_len.between(min_mean_word_len, max_mean_word_len)
-        & (alpha_frac >= min_alpha_frac)
-        & (n_stop >= min_stopwords)
+        n_words.between(50, 100_000)
+        & mean_len.between(3.0, 10.0)
+        & (alpha_frac >= 0.8)
+        & (n_stop >= 2)
     )
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             n_words.alias("n_words"),
             mean_len.alias("mean_word_len"),
             alpha_frac.alias("alpha_frac"),

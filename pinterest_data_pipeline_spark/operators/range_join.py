@@ -45,10 +45,7 @@ def range_join_bands(
     facts: DataFrame,
     value_col: str,
     bands: DataFrame,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     bin_width: float = 1000.0,
-    how: str = "inner",
 ) -> DataFrame:
     """Join each fact row to the band(s) whose ``[lo, hi)`` interval
     contains ``value_col``, as a bin-keyed equi-join + residual filter.
@@ -56,13 +53,13 @@ def range_join_bands(
     ``bands`` is expected to be small (it is exploded ×overlap and
     broadcast); ``facts`` can be arbitrarily large. With non-overlapping
     bands each fact row matches at most one band."""
-    binned_bands = explode_bands_to_bins(bands, lo_col, hi_col, bin_width)
+    binned_bands = explode_bands_to_bins(bands, "lo", "hi", bin_width)
     keyed = facts.withColumn(BIN_COL, bin_value(F.col(value_col), bin_width))
-    residual = (F.col(value_col) >= F.col(lo_col)) & (
-        F.col(value_col) < F.col(hi_col)
+    residual = (F.col(value_col) >= F.col("lo")) & (
+        F.col(value_col) < F.col("hi")
     )
     return (
-        keyed.join(F.broadcast(binned_bands), on=BIN_COL, how=how)
+        keyed.join(F.broadcast(binned_bands), on=BIN_COL, how="inner")
         .filter(residual)
         .drop(BIN_COL)
     )

@@ -27,19 +27,20 @@ from pyspark.sql import functions as F
 from pinterest_data_pipeline_spark.operators.chunking import ws_tokens
 
 
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
 def bm25_scores(
     docs: DataFrame,
     terms: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 score of every document against a fixed bag of query
     ``terms``: sum over matched terms of
-    ``idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`` with the
+    ``idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`` (k1 = 1.2,
+    b = 0.75) with the
     standard "+1" idf ``ln(1 + (N − df + 0.5)/(df + 0.5))`` (always
-    positive). Returns (id_col, n_matched, bm25_r6) for documents
+    positive). Returns (doc_id, n_matched, bm25_r6) for documents
     matching ≥ 1 term; the score rounds to 6dp once, after the
     sorted-order term fold.
 
@@ -52,10 +53,10 @@ def bm25_scores(
     pattern, constant cost); the per-doc fold runs over ≤ |terms| rows.
     No shuffle exceeds the matched-posting volume — the cost class of a
     posting-list traversal, not a corpus join."""
-    toks = ws_tokens(text_col)
+    toks = ws_tokens("text")
     term_arr = F.array(*[F.lit(t) for t in sorted(set(terms))])
     base = docs.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         F.filter(toks, lambda t: F.array_contains(term_arr, t)).alias("__hits"),
         F.size(toks).cast("bigint").alias("__dl"),
     )
@@ -86,13 +87,13 @@ def bm25_scores(
         .withColumn(
             "__score",
             F.col("__idf")
-            * (F.col("__tf") * F.lit(k1 + 1.0))
+            * (F.col("__tf") * F.lit(_BM25_K1 + 1.0))
             / (
                 F.col("__tf")
-                + F.lit(k1)
+                + F.lit(_BM25_K1)
                 * (
-                    F.lit(1.0 - b)
-                    + F.lit(b)
+                    F.lit(1.0 - _BM25_B)
+                    + F.lit(_BM25_B)
                     * F.col("__dl")
                     / (F.col("__tot_len") / F.col("__n_docs"))
                 )
@@ -116,7 +117,7 @@ def bm25_scores(
                 6,
             ).alias("bm25_r6"),
         )
-        .select(F.col("__id").alias(id_col), "n_matched", "bm25_r6")
+        .select(F.col("__id").alias("doc_id"), "n_matched", "bm25_r6")
     )
 
 
@@ -124,19 +125,18 @@ def reciprocal_rank_fusion(
     ranked: DataFrame,
     id_col: str,
     rank_orders: dict[str, Sequence[Column]],
-    k: int = 60,
     top_n: int | None = None,
 ) -> DataFrame:
     """Fuse multiple orderings of the same relation by reciprocal-rank:
     for each named ordering in ``rank_orders`` (name → window order
     spec, which MUST be a total order — append the id as tiebreak),
-    rank all rows, then score each row ``Σ 1/(k + rank_i)`` and order by
+    rank all rows, then score each row ``Σ 1/(60 + rank_i)`` and order by
     fused score DESC, id ASC. Returns (id_col, rank_<name>... , rrf_r6)
     — optionally cut to ``top_n`` via a TakeOrdered-style limit.
 
     RRF (Cormack et al., SIGIR'09) is scale-free: it never compares raw
     scores across rankings, so a lexical BM25, a quality margin and an
-    LM logprob fuse without calibration. Each 1/(k+rank) is one exact
+    LM logprob fuse without calibration. Each 1/(60+rank) is one exact
     division; the fixed left-to-right sum over the (constant, small)
     ranking set is order-deterministic.
 
@@ -153,7 +153,7 @@ def reciprocal_rank_fusion(
         rank_cols.append(col)
     score = None
     for col in rank_cols:
-        term = F.lit(1.0) / (F.lit(float(k)) + F.col(col))
+        term = F.lit(1.0) / (F.lit(60.0) + F.col(col))
         score = term if score is None else score + term
     out = out.withColumn("rrf_r6", F.round(score, 6)).select(
         id_col, *rank_cols, "rrf_r6"
@@ -168,12 +168,6 @@ def mmr_rerank(
     pool: DataFrame,
     sims: DataFrame,
     select_k: int = 4,
-    query_col: str = "query_id",
-    cand_col: str = "cand_id",
-    rel_col: str = "rel",
-    sim_a_col: str = "id_a",
-    sim_b_col: str = "id_b",
-    sim_col: str = "sim",
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein, SIGIR'98)
     greedy diversification of a bounded candidate pool, λ = 1/2:
@@ -182,7 +176,7 @@ def mmr_rerank(
 
     selecting ``select_k`` candidates per query, highest-mmr first
     (first pick has an empty selected set, so mmr = 0.5·rel). Returns
-    (query_col, step, cand_col, rel, mmr_r6), one row per pick, with
+    (query_id, step, cand_id, rel, mmr_r6), one row per pick, with
     ties broken by candidate id ascending so the greedy trajectory is
     deterministic and an unrolled SQL oracle replays it step for step.
 
@@ -211,54 +205,54 @@ def mmr_rerank(
     pool = pool.localCheckpoint(eager=False)
     sims = sims.localCheckpoint(eager=False)
     first = pool.withColumn(
-        "mmr_r6", F.round(half * F.col(rel_col), 6)
+        "mmr_r6", F.round(half * F.col("rel"), 6)
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("mmr_r6").desc(), F.col(cand_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("mmr_r6").desc(), F.col("cand_id").asc()
     )
     selected = (
         first.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
-            query_col,
+            "query_id",
             F.lit(1).cast("int").alias("step"),
-            cand_col,
-            rel_col,
+            "cand_id",
+            "rel",
             "mmr_r6",
         )
     )
     s = sims.select(
-        F.col(query_col).alias("__sq"),
-        F.col(sim_a_col).alias("__sa"),
-        F.col(sim_b_col).alias("__sb"),
-        F.col(sim_col).alias("__sv"),
+        F.col("query_id").alias("__sq"),
+        F.col("id_a").alias("__sa"),
+        F.col("id_b").alias("__sb"),
+        F.col("sim").alias("__sv"),
     )
     for step in range(2, select_k + 1):
         remaining = pool.join(
-            selected.select(query_col, cand_col),
-            [query_col, cand_col],
+            selected.select("query_id", "cand_id"),
+            ["query_id", "cand_id"],
             "left_anti",
         )
         scored = (
             remaining.join(
                 s,
-                (F.col(query_col) == F.col("__sq"))
-                & (F.col(cand_col) == F.col("__sa")),
+                (F.col("query_id") == F.col("__sq"))
+                & (F.col("cand_id") == F.col("__sa")),
             )
             .join(
                 selected.select(
-                    F.col(query_col).alias("__q2"),
-                    F.col(cand_col).alias("__sel"),
+                    F.col("query_id").alias("__q2"),
+                    F.col("cand_id").alias("__sel"),
                 ),
                 (F.col("__sq") == F.col("__q2"))
                 & (F.col("__sb") == F.col("__sel")),
             )
-            .groupBy(query_col, cand_col, rel_col)
+            .groupBy("query_id", "cand_id", "rel")
             .agg(F.max("__sv").alias("__maxsim"))
             .withColumn(
                 "mmr_r6",
                 F.round(
-                    half * F.col(rel_col) - half * F.col("__maxsim"), 6
+                    half * F.col("rel") - half * F.col("__maxsim"), 6
                 ),
             )
         )
@@ -266,10 +260,10 @@ def mmr_rerank(
             scored.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select(
-                query_col,
+                "query_id",
                 F.lit(step).cast("int").alias("step"),
-                cand_col,
-                rel_col,
+                "cand_id",
+                "rel",
                 "mmr_r6",
             )
         )
@@ -362,15 +356,17 @@ def ndcg_at_k(
     )
 
 
+_RBO_DEPTH = 10
+
+
 def rbo_at_k(
     a: DataFrame,
     b: DataFrame,
     id_col: str,
     rank_col: str = "rank",
-    k: int = 10,
     p: float = 0.9,
 ) -> DataFrame:
-    """Rank-biased overlap at depth ``k`` (Webber et al., TOIS 2010)
+    """Rank-biased overlap at depth k = 10 (Webber et al., TOIS 2010)
     between two top-``k`` rankings — the top-weighted agreement measure
     for comparing rankers (NDCG scores one ranker against labels; RBO
     scores two rankers against each other, no labels needed):
@@ -404,17 +400,17 @@ def rbo_at_k(
         )
         .cast("bigint")
         .alias(f"__o{d}")
-        for d in range(1, k + 1)
+        for d in range(1, _RBO_DEPTH + 1)
     ]
     row = j.agg(*aggs)
     rbo = None
-    for d in range(1, k + 1):
+    for d in range(1, _RBO_DEPTH + 1):
         term = F.lit((1.0 - p) * p ** (d - 1) / d) * F.col(f"__o{d}").cast(
             "double"
         )
         rbo = term if rbo is None else rbo + term
     return row.select(
-        F.col(f"__o{k}").alias(f"overlap_at_{k}"),
+        F.col(f"__o{_RBO_DEPTH}").alias(f"overlap_at_{_RBO_DEPTH}"),
         F.round(rbo, 6).alias("rbo_r6"),
     )
 
@@ -497,8 +493,6 @@ def average_precision_at_k(
 def dirichlet_lm_scores(
     docs: DataFrame,
     terms: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     mu: float = 2000.0,
 ) -> DataFrame:
     """Query-likelihood ranking with Dirichlet smoothing (Zhai &
@@ -525,7 +519,7 @@ def dirichlet_lm_scores(
     per-doc correction fold in SORTED TERM ORDER (the bm25 discipline)
     so the doubles are engine-identical; one final round(…, 6).
 
-    Returns (id_col, n_matched, qlm_r6) for documents matching ≥ 1
+    Returns (doc_id, n_matched, qlm_r6) for documents matching ≥ 1
     effective term.
 
     Scale: identical cost class to bm25_scores — two pruned corpus
@@ -533,10 +527,10 @@ def dirichlet_lm_scores(
     rows."""
     from pinterest_data_pipeline_spark.operators.chunking import ws_tokens
 
-    toks = ws_tokens(text_col)
+    toks = ws_tokens("text")
     term_arr = F.array(*[F.lit(t) for t in sorted(set(terms))])
     base = docs.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         F.filter(toks, lambda t: F.array_contains(term_arr, t)).alias(
             "__hits"
         ),
@@ -605,7 +599,7 @@ def dirichlet_lm_scores(
         )
         .crossJoin(F.broadcast(qstats))
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             "n_matched",
             F.round(
                 F.col("__a")

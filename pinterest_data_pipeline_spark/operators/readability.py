@@ -26,11 +26,7 @@ SYLLABLE_RE = "[aeiouy]+"
 SENTENCE_RE = "[.!?]+"
 
 
-def flesch_reading_ease(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def flesch_reading_ease(df: DataFrame) -> DataFrame:
     """Flesch reading ease per group, computed on the CONCATENATED
     group corpus (ratio of integer sums), one row per group:
 
@@ -47,14 +43,14 @@ def flesch_reading_ease(
 
     Scale: one scan, three regexp-count integers per document, one
     grouped sum with map-side combine; no second pass, no window."""
-    lower = F.lower(F.col(text_col))
+    lower = F.lower(F.col("text"))
     words = F.size(F.regexp_extract_all(lower, F.lit(WORD_RE), 0))
     syllables = F.size(F.regexp_extract_all(lower, F.lit(SYLLABLE_RE), 0))
     sentences = F.greatest(
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(SENTENCE_RE), 0)),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(SENTENCE_RE), 0)),
         F.lit(1),
     )
-    agg = df.groupBy(F.col(group_col).alias("grp")).agg(
+    agg = df.groupBy(F.col("lang").alias("grp")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(words).cast("bigint").alias("n_words"),
         F.sum(sentences).cast("bigint").alias("n_sentences"),
@@ -65,20 +61,16 @@ def flesch_reading_ease(
     y = F.col("n_syllables").cast("double")
     flesch = F.lit(206.835) - F.lit(1.015) * (w / s) - F.lit(84.6) * (y / w)
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_docs",
         "n_words",
         "n_sentences",
         "n_syllables",
         F.round(F.when(F.col("n_words") > 0, flesch), 6).alias("flesch_r6"),
-    ).orderBy(group_col)
+    ).orderBy("lang")
 
 
-def charset_profile(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def charset_profile(df: DataFrame) -> DataFrame:
     """Character-class composition per group: shares of ASCII letters,
     digits, whitespace, and everything else, from integer character
     counts over the concatenated group corpus. One row per group:
@@ -92,7 +84,7 @@ def charset_profile(
 
     Scale: one scan, three regexp-count integers + one length per
     document, one grouped sum with map-side combine."""
-    t = F.col(text_col)
+    t = F.col("text")
     letters = F.size(F.regexp_extract_all(t, F.lit("[A-Za-z]"), 0))
     digits = F.size(F.regexp_extract_all(t, F.lit("[0-9]"), 0))
     # explicit class, not \s: Java regex \s includes \x0B where RE2's
@@ -102,7 +94,7 @@ def charset_profile(
     spaces = F.size(
         F.regexp_extract_all(t, F.lit("[\\x20\\t\\n\\r\\f]"), 0)
     )
-    agg = df.groupBy(F.col(group_col).alias("grp")).agg(
+    agg = df.groupBy(F.col("lang").alias("grp")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.length(t)).cast("bigint").alias("n_chars"),
         F.sum(letters).cast("bigint").alias("__l"),
@@ -114,7 +106,7 @@ def charset_profile(
         F.when(F.col("n_chars") > 0, c.cast("double") / total), 6
     )
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_docs",
         "n_chars",
         share(F.col("__l")).alias("letter_share_r6"),
@@ -123,4 +115,4 @@ def charset_profile(
         share(F.col("n_chars") - F.col("__l") - F.col("__d") - F.col("__s")).alias(
             "other_share_r6"
         ),
-    ).orderBy(group_col)
+    ).orderBy("lang")

@@ -19,12 +19,7 @@ from pyspark.sql import functions as F
 _QS = [0.2, 0.4, 0.6, 0.8]
 
 
-def rfm_segments(
-    df: DataFrame,
-    subject_col: str = "user_id",
-    ts_col: str = "ts",
-    amount_col: str = "value",
-) -> DataFrame:
+def rfm_segments(df: DataFrame) -> DataFrame:
     """Quintile RFM scores per subject, reported as the segment
     histogram: one row per populated (r_score, f_score, m_score) cell
     with its subject count and total monetary cents, ordered by the
@@ -44,15 +39,15 @@ def rfm_segments(
     sketch gates bound the agreement), broadcast back as comparisons;
     the output is ≤125 rows."""
     log_end = df.agg(
-        F.date_trunc("day", F.max(ts_col)).alias("__end")
+        F.date_trunc("day", F.max("ts")).alias("__end")
     )
     per = (
-        df.groupBy(F.col(subject_col).alias("__s"))
+        df.groupBy(F.col("user_id").alias("__s"))
         .agg(
-            F.date_trunc("day", F.max(ts_col)).alias("__last"),
+            F.date_trunc("day", F.max("ts")).alias("__last"),
             F.count(F.lit(1)).cast("bigint").alias("__f"),
             F.coalesce(
-                F.sum(F.round(F.col(amount_col) * 100).cast("bigint")),
+                F.sum(F.round(F.col("value") * 100).cast("bigint")),
                 F.lit(0).cast("bigint"),
             ).alias("__m"),
         )

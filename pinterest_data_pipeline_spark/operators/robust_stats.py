@@ -263,10 +263,9 @@ def autocorr_daily(
 def gini_skew_profile(
     df: DataFrame,
     key_col: str,
-    top_n: int = 10,
 ) -> DataFrame:
     """One-row skew audit of a key column: Gini coefficient of the
-    per-key frequency distribution plus top-1 and top-``top_n`` mass
+    per-key frequency distribution plus top-1 and top-10 mass
     shares — the quantitative answer to "will this key hot-spot a
     shuffle?" (Gini → 1 and top-1 share ≫ 1/n_keys both say yes; the
     salting / AQE-skew-join mitigations in operators/dedup become
@@ -286,7 +285,7 @@ def gini_skew_profile(
 
     Scale: one corpus aggregate (groupBy key), one histogram aggregate
     over |keys| rows, a window over |distinct counts| rows, and a
-    TakeOrdered top-``top_n``. No global sort of the key relation."""
+    TakeOrdered top-10. No global sort of the key relation."""
     counts = (
         df.groupBy(F.col(key_col).alias("__k"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
@@ -316,7 +315,7 @@ def gini_skew_profile(
     )
     top = (
         counts.orderBy(F.col("__c").desc(), F.col("__k").asc())
-        .limit(top_n)
+        .limit(10)
         .agg(
             F.max("__c").cast("bigint").alias("__top1"),
             F.sum("__c").cast("bigint").alias("__topn"),
@@ -336,7 +335,7 @@ def gini_skew_profile(
             "top1_share_r6"
         ),
         F.round(F.col("__topn").cast("double") / total, 6).alias(
-            f"top{top_n}_share_r6"
+            "top10_share_r6"
         ),
     )
 

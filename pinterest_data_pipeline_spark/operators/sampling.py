@@ -65,16 +65,13 @@ def repeat_by_weight(
 def hash_split(
     df: DataFrame,
     id_col: str = "doc_id",
-    test_upper: str = "0d",
-    val_upper: str = "1a",
 ) -> DataFrame:
     """Deterministic train/val/test assignment by content hash.
 
     The first two hex chars of ``md5(id)`` are uniform over 256 buckets;
     string comparison against the (hex, zero-padded, lowercase) upper
-    bounds carves them into test [00, test_upper), val [test_upper,
-    val_upper), train [val_upper, ff]. Defaults give ~5.1% / ~5.1% /
-    ~89.8%. Adds a ``split`` column.
+    bounds carves them into test [00, 0d), val [0d, 1a), train
+    [1a, ff]: ~5.1% / ~5.1% / ~89.8%. Adds a ``split`` column.
 
     Why not ``rand(seed)``: RNG sampling is partition-order-dependent —
     a retry, a different file split, or a different engine reassigns
@@ -85,8 +82,8 @@ def hash_split(
     prefix = F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
     return df.withColumn(
         "split",
-        F.when(prefix < test_upper, F.lit("test"))
-        .when(prefix < val_upper, F.lit("val"))
+        F.when(prefix < "0d", F.lit("test"))
+        .when(prefix < "1a", F.lit("val"))
         .otherwise(F.lit("train")),
     )
 
@@ -182,13 +179,9 @@ def sqrt_temperature_shares(
 def token_budget_selection(
     df: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    margin_col: str = "margin",
-    tokens_col: str = "n_tokens",
-    broadcast_eligible: bool = True,
 ) -> DataFrame:
     """Budget-bounded corpus selection: keep the prefix of documents in
-    global (``margin_col`` DESC, ``id_col`` ASC) order whose running
+    global (``margin`` DESC, ``doc_id`` ASC) order whose running
     token total stays within ``budget`` — the "best data under a token
     budget" curation stage of an LLM pipeline. Returns the selected rows
     with their running total (``cum_tokens``).
@@ -205,23 +198,20 @@ def token_budget_selection(
     under a PARTITIONED window; (3) only buckets the budget reaches
     survive the join back (|selected margins| rows), and the exact
     per-row running sum is a window PARTITIONED BY margin.
-    ``broadcast_eligible`` picks that join's strategy: True (default)
-    broadcasts the eligible-margin relation — right whenever the budget
-    selects a driver-memory-sized set of distinct margins; False keeps
-    it a shuffle (margin-keyed hash) join for budgets that cover most
-    of a diverse corpus, where |eligible margins| can approach 1e8 and
-    a forced broadcast would exceed executor/driver limits. The
-    selected SET is identical either way (pinned by test).
+    That join broadcasts the eligible-margin relation, which holds
+    whenever the budget selects a driver-memory-sized set of distinct
+    margins (a budget covering most of a corpus with ~1e8 distinct
+    margins would exceed driver limits).
     Selection semantics are identical to the single-window formulation
     (the oracle uses that formulation as the cross-check). All
     arithmetic is integer, so engines agree bit-for-bit."""
-    per_margin = df.groupBy(margin_col).agg(
-        F.sum(F.col(tokens_col).cast("bigint")).alias("__bucket_tokens")
+    per_margin = df.groupBy("margin").agg(
+        F.sum(F.col("n_tokens").cast("bigint")).alias("__bucket_tokens")
     )
     # floor (not truncate) so negative margins bucket monotonically;
     # margins are < 2^53 so the double division is exact enough for a
     # 2^20-wide floor
-    coarse = F.floor(F.col(margin_col) / F.lit(float(1 << 20))).cast("long")
+    coarse = F.floor(F.col("margin") / F.lit(float(1 << 20))).cast("long")
     per_margin = per_margin.withColumn("__coarse", coarse)
     per_coarse = per_margin.groupBy("__coarse").agg(
         F.sum("__bucket_tokens").alias("__coarse_tokens")
@@ -236,7 +226,7 @@ def token_budget_selection(
             F.lit(0).cast("bigint"),
         ),
     ).select("__coarse", "__coarse_before")
-    wm = Window.partitionBy("__coarse").orderBy(F.col(margin_col).desc())
+    wm = Window.partitionBy("__coarse").orderBy(F.col("margin").desc())
     cum_before = (
         per_margin.join(F.broadcast(coarse_before), "__coarse")
         .withColumn(
@@ -255,19 +245,17 @@ def token_budget_selection(
     # filter); < would silently diverge from the single-window
     # formulation at exact-budget boundaries on 0-token documents
     eligible = cum_before.filter(F.col("__cum_before") <= F.lit(int(budget)))
-    wd = Window.partitionBy(margin_col).orderBy(F.col(id_col).asc())
-    eligible_rel = eligible.select(margin_col, "__cum_before")
-    if broadcast_eligible:
-        eligible_rel = F.broadcast(eligible_rel)
+    wd = Window.partitionBy("margin").orderBy(F.col("doc_id").asc())
+    eligible_rel = eligible.select("margin", "__cum_before")
     return (
-        df.join(eligible_rel, margin_col)
+        df.join(F.broadcast(eligible_rel), "margin")
         .withColumn(
             "cum_tokens",
             F.col("__cum_before")
-            + F.sum(F.col(tokens_col).cast("bigint")).over(wd),
+            + F.sum(F.col("n_tokens").cast("bigint")).over(wd),
         )
         .filter(F.col("cum_tokens") <= F.lit(int(budget)))
-        .select(id_col, margin_col, tokens_col, "cum_tokens")
+        .select("doc_id", "margin", "n_tokens", "cum_tokens")
     )
 
 
@@ -371,12 +359,7 @@ def epoch_capped_mixture(
     )
 
 
-def doremi_reweight(
-    item_loss: DataFrame,
-    domain_col: str = "domain",
-    loss_col: str = "loss",
-    eta: float = 1.0,
-) -> DataFrame:
+def doremi_reweight(item_loss: DataFrame) -> DataFrame:
     """One DoReMi-style exponentiated-gradient reweighting step
     (Xie et al. 2023, "DoReMi: Optimizing Data Mixtures Speeds Up
     Language Model Pretraining" — arXiv:2305.10429), offline form:
@@ -386,7 +369,8 @@ def doremi_reweight(
 
         w_d  ∝  share_d · exp(eta · max(0, avg_loss_d − avg_loss)),
 
-    normalized over domains, with ``share_d`` the item-count baseline.
+    normalized over domains, with ``share_d`` the item-count baseline
+    and step size eta = 1.
     DoReMi proper iterates this under Group DRO while training the
     proxy; one deterministic step over a fixed loss column is the
     batch-engine building block (the caller loops epochs if wanted).
@@ -399,13 +383,13 @@ def doremi_reweight(
     Scale: one partial-combinable aggregate over items; everything
     after runs on the |domains|-row relation (single-partition window
     over a bounded domain count)."""
-    per = item_loss.groupBy(domain_col).agg(
+    per = item_loss.groupBy("domain").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        F.round(F.avg(loss_col), 6).alias("avg_loss"),
+        F.round(F.avg("loss"), 6).alias("avg_loss"),
     )
     corpus = item_loss.agg(
         F.count(F.lit(1)).cast("double").alias("__total"),
-        F.round(F.avg(loss_col), 6).alias("__corpus_avg"),
+        F.round(F.avg("loss"), 6).alias("__corpus_avg"),
     )
     raw = (
         per.crossJoin(F.broadcast(corpus))
@@ -419,11 +403,11 @@ def doremi_reweight(
         .withColumn(
             "__raw",
             (F.col("n_items").cast("double") / F.col("__total"))
-            * F.exp(F.lit(float(eta)) * F.col("excess_loss")),
+            * F.exp(F.lit(1.0) * F.col("excess_loss")),
         )
     )
     return raw.select(
-        domain_col,
+        "domain",
         "n_items",
         "avg_loss",
         "excess_loss",

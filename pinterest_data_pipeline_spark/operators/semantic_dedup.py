@@ -143,7 +143,6 @@ def _cells_and_pairs(
             vec_col=vec_col,
             threshold=threshold,
             bands=6,
-            planes_per_band=8,
             partition_col="cluster",
         )
     else:
@@ -153,8 +152,6 @@ def _cells_and_pairs(
 
 def semantic_dedup_summary(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int | None = 16,
     threshold: float = 0.97,
     **kwargs,
@@ -164,30 +161,21 @@ def semantic_dedup_summary(
     across runs — pins determinism for the rows-only driver check).
     Extra kwargs (max_k, within_cell, …) pass through to
     :func:`semantic_dedup`."""
-    survivors = semantic_dedup(
-        df, id_col=id_col, vec_col=vec_col, k=k, threshold=threshold, **kwargs
-    )
+    survivors = semantic_dedup(df, k=k, threshold=threshold, **kwargs)
     total = df.count()
     return survivors.agg(
         F.lit(total).cast("bigint").alias("n_total"),
         (F.lit(total) - F.count("*")).cast("bigint").alias("n_removed"),
         F.count("*").cast("bigint").alias("n_survivors"),
-        F.sum(id_col).cast("bigint").alias("survivor_id_sum"),
+        F.sum("vec_id").cast("bigint").alias("survivor_id_sum"),
     )
 
 
 def semantic_dedup_gate(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int | None = None,
     threshold: float = 0.97,
-    iterations: int = 2,
-    target_cell_size: int = 600,
     max_k: int = 4096,
-    within_cell: str = "auto",
-    all_pairs_cell_cap: int = 1200,
-    n_blocks: int = 8,
 ) -> DataFrame:
     """Gate-style one-row readout of a semantic-dedup pass (the
     `ivf_kmeans_codebook_assign` / `hll_sketch_union_gate` discipline):
@@ -220,37 +208,37 @@ def semantic_dedup_gate(
     operators/dedup.py; measured 4x wall on the registered query)."""
     assigned, pairs, k_cells = _cells_and_pairs(
         df,
-        id_col=id_col,
-        vec_col=vec_col,
+        id_col="vec_id",
+        vec_col="embedding",
         k=k,
         threshold=threshold,
-        iterations=iterations,
-        target_cell_size=target_cell_size,
+        iterations=2,
+        target_cell_size=600,
         max_k=max_k,
-        within_cell=within_cell,
-        all_pairs_cell_cap=all_pairs_cell_cap,
-        n_blocks=n_blocks,
+        within_cell="auto",
+        all_pairs_cell_cap=1200,
+        n_blocks=8,
     )
     assigned = assigned.localCheckpoint(eager=False)
     pairs = pairs.localCheckpoint(eager=False)
-    removed = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = assigned.join(removed, on=id_col, how="left_anti")
+    removed = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    survivors = assigned.join(removed, on="vec_id", how="left_anti")
     zero = F.lit(0).cast("bigint")
     # totals ride on the checkpointed assignment (same rows as df) so
     # the gate adds no extra corpus scan
     totals = assigned.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_total"),
-        F.sum(id_col).cast("bigint").alias("id_sum_total"),
-        F.min(id_col).cast("bigint").alias("__min_id"),
+        F.sum("vec_id").cast("bigint").alias("id_sum_total"),
+        F.min("vec_id").cast("bigint").alias("__min_id"),
     )
     surv = survivors.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_s"),
-        F.coalesce(F.sum(id_col).cast("bigint"), zero).alias("__s_sum"),
+        F.coalesce(F.sum("vec_id").cast("bigint"), zero).alias("__s_sum"),
     )
     rem = removed.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_r"),
-        F.coalesce(F.sum(id_col).cast("bigint"), zero).alias("__r_sum"),
-        F.min(id_col).cast("bigint").alias("__min_removed"),
+        F.coalesce(F.sum("vec_id").cast("bigint"), zero).alias("__r_sum"),
+        F.min("vec_id").cast("bigint").alias("__min_removed"),
     )
     rng = assigned.agg(
         F.coalesce(

@@ -30,9 +30,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 def sessionize(
     events: DataFrame,
     gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
 ) -> DataFrame:
     """Events plus a per-user ``session_id`` (1-based, in time order).
 
@@ -42,9 +39,9 @@ def sessionize(
     windowing — an event with no timestamp has no place in a
     gap-based session, and Spark (NULLS FIRST) vs ANSI engines
     (commonly LAST) would otherwise splice it in engine-dependently."""
-    events = events.where(F.col(ts_col).isNotNull())
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    us = F.unix_micros(F.col(ts_col))
+    events = events.where(F.col("ts").isNotNull())
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
     gap_us = F.lit(int(gap_seconds) * 1_000_000)
     new_session = F.when(
         F.lag(us).over(w).isNull() | (us - F.lag(us).over(w) > gap_us),
@@ -58,32 +55,24 @@ def sessionize(
 def session_stats(
     events: DataFrame,
     gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
 ) -> DataFrame:
     """One row per session: (user, session_id, session_start,
     session_end, n_events, total_value). The value sum is rounded to
     6dp so cross-engine float-sum ordering noise sits below the
     comparison grain."""
-    s = sessionize(events, gap_seconds, user_col, ts_col, tiebreak_col)
-    return s.groupBy(user_col, "session_id").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+    s = sessionize(events, gap_seconds)
+    return s.groupBy("user_id", "session_id").agg(
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(value_col), 6).alias("total_value"),
+        F.round(F.sum("value"), 6).alias("total_value"),
     )
 
 
 DAY_US = 86_400 * 1_000_000
 
 
-def peak_concurrency_by_day(
-    intervals: DataFrame,
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-) -> DataFrame:
+def peak_concurrency_by_day(intervals: DataFrame) -> DataFrame:
     """Peak concurrent intervals per UTC day, by sweep line: the
     capacity-planning number ("how many sessions were open at once at
     the worst moment of each day") that no per-user aggregate can
@@ -112,8 +101,8 @@ def peak_concurrency_by_day(
     Scale: one explode bounded by interval spans, one shuffle on the
     DAY key; each partition sweeps only its own day's deltas — no
     global ordering anywhere."""
-    s_us = F.unix_micros(F.col(start_col))
-    e_us = F.unix_micros(F.col(end_col))
+    s_us = F.unix_micros(F.col("session_start"))
+    e_us = F.unix_micros(F.col("session_end"))
     days = F.sequence(
         (s_us / F.lit(DAY_US)).cast("long"),
         (e_us / F.lit(DAY_US)).cast("long"),

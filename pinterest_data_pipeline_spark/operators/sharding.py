@@ -29,20 +29,8 @@ relations, no global sort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _weight(key: Column, shard: Column) -> Column:
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", key.cast("string"), shard.cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 def _weights_expr(n_shards: int) -> str:

@@ -46,17 +46,15 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, digits: int = 6) -> Column:
-    """Cosine similarity rounded to ``digits`` (rounding makes downstream
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity rounded to 6 digits (rounding makes downstream
     rank comparisons stable across engines)."""
-    return F.round(dot(a, b) / (l2_norm(a) * l2_norm(b)), digits)
+    return F.round(dot(a, b) / (l2_norm(a) * l2_norm(b)), 6)
 
 
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine (self-matches excluded).
@@ -67,14 +65,14 @@ def cosine_topk(
     # is computed once instead of once per compared pair (1 fold per pair
     # at score time instead of 3).
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        l2_norm(F.col("embedding")).alias("q_norm"),
     )
     c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("c_norm"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -101,27 +99,24 @@ def cosine_topk(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    partition_col: str = "label",
     k: int = 10,
 ) -> DataFrame:
     """Approximate top-k: probe only the query's coarse partition.
 
-    The equi-join on ``partition_col`` replaces the cross join — at scale
+    The equi-join on ``label`` replaces the cross join — at scale
     this is a broadcast-hash join on the partition id, and each corpus row
     is compared against only the queries assigned to its partition."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(partition_col).alias("q_part"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("label").alias("q_part"),
+        l2_norm(F.col("embedding")).alias("q_norm"),
     )
     c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(partition_col).alias("c_part"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("c_part"),
+        l2_norm(F.col("embedding")).alias("c_norm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("c_part") == F.col("q_part"))
@@ -376,12 +371,14 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def hyperplane_band_keys(
-    vec_sql: str, dim: int, bands: int = 4, planes_per_band: int = 8, seed: int = 7
-) -> list[Column]:
+_PLANES_PER_BAND = 8
+_LSH_SEED = 7
+
+
+def hyperplane_band_keys(vec_sql: str, dim: int, bands: int = 4) -> list[Column]:
     """Random-hyperplane (SimHash-for-vectors) band keys: each band is an
-    integer whose bits are the signs of ``planes_per_band`` projections.
-    P[two vectors share a band] = (1 - θ/π)^planes_per_band per band —
+    integer whose bits are the signs of ``_PLANES_PER_BAND`` projections.
+    P[two vectors share a band] = (1 - θ/π)^_PLANES_PER_BAND per band —
     the standard cosine-LSH s-curve, banded like MinHash so recall
     concentrates on genuinely similar pairs.
 
@@ -390,13 +387,13 @@ def hyperplane_band_keys(
     ADVICE r12): each band key is
     ONE compact F.expr over a literal array of {bit, pv} plane structs
     (the clustering._affinity_structs_sql recipe) instead of
-    planes_per_band unrolled Column folds — the unrolled form's
+    _PLANES_PER_BAND unrolled Column folds — the unrolled form's
     whole-stage codegen dominated every banding query. The inner fold
     is zip_with(vec, plane)·left-to-right from 0.0 — exactly the order
     the `dot` helper evaluates, so projections (and therefore sign
     bits and band keys) are bit-identical; a NULL vector yields NULL
     projections and CASE's ELSE 0, matching when().otherwise(0)."""
-    planes = _hyperplanes(dim, bands * planes_per_band, seed)
+    planes = _hyperplanes(dim, bands * _PLANES_PER_BAND, _LSH_SEED)
     vec_sql = "`" + vec_sql.replace("`", "``") + "`"
     keys = []
     for b in range(bands):
@@ -405,10 +402,10 @@ def hyperplane_band_keys(
                 1 << i,
                 ", ".join(
                     f"CAST('{float(p)!r}' AS DOUBLE)"
-                    for p in planes[b * planes_per_band + i]
+                    for p in planes[b * _PLANES_PER_BAND + i]
                 ),
             )
-            for i in range(planes_per_band)
+            for i in range(_PLANES_PER_BAND)
         )
         keys.append(
             F.expr(
@@ -426,10 +423,7 @@ def embedding_banded(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     bands: int = 4,
-    planes_per_band: int = 8,
-    seed: int = 7,
     partition_col: str | None = None,
 ) -> DataFrame:
     """The persistable hyperplane band table behind
@@ -448,7 +442,7 @@ def embedding_banded(
         part.alias("__part"),
     ).repartition(F.col("__id"))  # materialize norms/keys input once,
     # computed post-fan_out so a single-row-group scan can't serialize it
-    keys = hyperplane_band_keys("__vec", dim, bands, planes_per_band, seed)
+    keys = hyperplane_band_keys("__vec", 64, bands)
     banded = base.select(
         "__id",
         "__vec",
@@ -474,11 +468,8 @@ def lsh_near_duplicates(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     threshold: float = 0.95,
     bands: int = 4,
-    planes_per_band: int = 8,
-    seed: int = 7,
     max_bucket_size: int | None = None,
     partition_col: str | None = None,
 ) -> DataFrame:
@@ -497,7 +488,7 @@ def lsh_near_duplicates(
     same-cell collisions ever become candidates — the within-cell
     search path ``semantic_dedup`` uses once cells outgrow all-pairs."""
     banded = embedding_banded(
-        df, id_col, vec_col, dim, bands, planes_per_band, seed, partition_col
+        df, id_col, vec_col, bands=bands, partition_col=partition_col
     )
     if max_bucket_size is not None:
         from pinterest_data_pipeline_spark.operators.dedup import cap_bucket_size
@@ -531,15 +522,7 @@ def lsh_near_duplicates(
 def incremental_embedding_candidates(
     increment: DataFrame,
     existing_banded: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     threshold: float = 0.95,
-    bands: int = 4,
-    planes_per_band: int = 8,
-    seed: int = 7,
-    max_bucket_size: int | None = None,
-    partition_col: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs for an increment against a stored corpus —
     the vector twin of :func:`dedup.incremental_minhash_candidates`:
@@ -552,28 +535,16 @@ def incremental_embedding_candidates(
     (id_a, id_b, score) with ≥1 new member, not just candidates.
     Uncapped, the union over ingests converges to the one-shot
     :func:`lsh_near_duplicates` pair set (pinned by
-    tests/test_dedup_similarity.py); the cap caveat is identical to the
-    MinHash twin — combined buckets are capped per ingest, so capped
-    incremental runs can only over-emit vs a capped one-shot.
+    tests/test_dedup_similarity.py).
 
-    ``partition_col`` MUST match how ``existing_banded`` was built: the
-    join is keyed on (__part, band, key), so an increment banded
-    without the state's partition column (or vice versa) would never
-    collide with state rows and silently emit no new-vs-corpus pairs —
-    pass the same value to both :func:`embedding_banded` calls."""
-    new_banded = embedding_banded(
-        increment, id_col, vec_col, dim, bands, planes_per_band, seed,
-        partition_col,
-    ).withColumn("__new", F.lit(True))
+    The increment is banded without a partition column, so
+    ``existing_banded`` must be too: the join is keyed on
+    (__part, band, key), and state banded with a partition column
+    would never collide with increment rows."""
+    new_banded = embedding_banded(increment).withColumn("__new", F.lit(True))
     all_banded = existing_banded.withColumn(
         "__new", F.lit(False)
     ).unionByName(new_banded)
-    if max_bucket_size is not None:
-        from pinterest_data_pipeline_spark.operators.dedup import cap_bucket_size
-
-        all_banded = cap_bucket_size(
-            all_banded, ["__part", "band", "key"], max_bucket_size
-        )
     left, right = all_banded.alias("l"), all_banded.alias("r")
     return (
         left.join(
@@ -629,8 +600,6 @@ def dequantize_int8(q: Column, scale: Column) -> Column:
 def multiprobe_corpus(
     corpus: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The IVF-assigned corpus side of :func:`ivf_topk_multiprobe`:
     (neighbor_id, c_vec, c_part, c_norm). Split out so a caller probing
@@ -643,11 +612,11 @@ def multiprobe_corpus(
         assign_to_codebook,
     )
 
-    return assign_to_codebook(fan_out(corpus), centroids, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+    return assign_to_codebook(fan_out(corpus), centroids).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
         F.col("cluster").alias("c_part"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
+        l2_norm(F.col("embedding")).alias("c_norm"),
     )
 
 
@@ -655,8 +624,6 @@ def ivf_topk_multiprobe(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
     corpus_assigned: DataFrame | None = None,
@@ -677,13 +644,13 @@ def ivf_topk_multiprobe(
     c = (
         corpus_assigned
         if corpus_assigned is not None
-        else multiprobe_corpus(corpus, centroids, id_col, vec_col)
+        else multiprobe_corpus(corpus, centroids)
     )
-    q = assign_probes(queries, centroids, vec_col, nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+    q = assign_probes(queries, centroids, nprobe=nprobe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("probe").alias("q_part"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
+        l2_norm(F.col("embedding")).alias("q_norm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("c_part") == F.col("q_part"))
@@ -710,9 +677,6 @@ def ivf_topk_multiprobe(
 def triplet_mining(
     corpus: DataFrame,
     anchors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Contrastive training triplets: for each anchor, its hardest
     POSITIVE (most-similar vector sharing the anchor's label) and its
@@ -747,20 +711,20 @@ def triplet_mining(
     from pyspark.sql.types import NumericType
 
     numeric_id = all(
-        isinstance(df.schema[id_col].dataType, NumericType)
+        isinstance(df.schema["vec_id"].dataType, NumericType)
         for df in (corpus, anchors)
     )
     a = anchors.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("anchor_label"),
-        F.col(vec_col).alias("a_vec"),
-        l2_norm(F.col(vec_col)).alias("a_norm"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("anchor_label"),
+        F.col("embedding").alias("a_vec"),
+        l2_norm(F.col("embedding")).alias("a_norm"),
     )
     c = fan_out(corpus).select(
-        F.col(id_col).alias("cand_id"),
-        F.col(label_col).alias("cand_label"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("cand_id"),
+        F.col("label").alias("cand_label"),
+        F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("c_norm"),
     )
     scored = (
         c.crossJoin(F.broadcast(a))
@@ -861,11 +825,7 @@ def triplet_mining(
     )
 
 
-def mutual_top1_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mutual_top1_pairs(df: DataFrame) -> DataFrame:
     """Mutual nearest-neighbor pairs — the SemDeDup-style confidence
     tier ABOVE one-directional similarity: a pair where EACH vector is
     the other's top-1 cosine neighbor. Reciprocity is the classic
@@ -886,10 +846,10 @@ def mutual_top1_pairs(
     module's IVF/LSH generators and feed the same argmax — reciprocity
     logic is unchanged."""
     a = df.select(
-        F.col(id_col).alias("__ida"), F.col(vec_col).alias("__va")
+        F.col("vec_id").alias("__ida"), F.col("embedding").alias("__va")
     )
     b = df.select(
-        F.col(id_col).alias("__idb"), F.col(vec_col).alias("__vb")
+        F.col("vec_id").alias("__idb"), F.col("embedding").alias("__vb")
     )
     scored = (
         a.join(b, F.col("__ida") != F.col("__idb"))

@@ -41,7 +41,6 @@ def count_min_build(
     item_col: str = "item",
     depth: int = 4,
     width: int = 256,
-    salt: str = "cms",
 ) -> DataFrame:
     """The sketch: (j, bucket, cnt) counters, one row per non-empty
     cell (absent cells are implicitly 0). Each input row increments
@@ -54,7 +53,7 @@ def count_min_build(
                 *[
                     F.struct(
                         F.lit(j).cast("int").alias("j"),
-                        _bucket(item, j, width, salt)
+                        _bucket(item, j, width, "cms")
                         .cast("bigint")
                         .alias("bucket"),
                     )
@@ -77,7 +76,6 @@ def count_min_estimate(
     item_col: str = "item",
     depth: int = 4,
     width: int = 256,
-    salt: str = "cms",
 ) -> DataFrame:
     """Point-frequency estimates for the probe items: est = min over
     the item's ``depth`` counters (missing cell ⇒ 0). Carries every
@@ -91,7 +89,7 @@ def count_min_estimate(
                 *[
                     F.struct(
                         F.lit(j).cast("int").alias("j"),
-                        _bucket(item, j, width, salt)
+                        _bucket(item, j, width, "cms")
                         .cast("bigint")
                         .alias("bucket"),
                     )
@@ -121,8 +119,6 @@ def kmv_distinct(
     df: DataFrame,
     item_col: str,
     k: int = 64,
-    salt: str = "kmv",
-    err_bound_ppm: int = 400_000,
 ) -> DataFrame:
     """K-minimum-values distinct-count sketch (Bar-Yossef et al. '02;
     the theta-sketch family's simplest member) built from first
@@ -137,8 +133,8 @@ def kmv_distinct(
     Output: ONE row — n_exact (true distinct, the gate's yardstick),
     n_kept (min(k, distinct hashes)), kth_hash, kmv_est_r6, err_ppm
     (|est − exact| as ppm of exact), within_bound (err_ppm <
-    ``err_bound_ppm``; k=64 has relative σ ≈ 1/√(k−2) ≈ 12.7%, so the
-    default bound is ≈ 3σ). When fewer than k distinct hashes exist
+    400000; k=64 has relative σ ≈ 1/√(k−2) ≈ 12.7%, so the bound is
+    ≈ 3σ). When fewer than k distinct hashes exist
     the sketch saw everything and the estimate IS the kept count.
 
     Scale: distinct (bounded by the value domain) → hash → ONE
@@ -151,7 +147,7 @@ def kmv_distinct(
         .distinct()
         .select(
             portable_hash32(
-                F.concat(F.lit(f"{salt}:"), F.col("__v").cast("string"))
+                F.concat(F.lit("kmv:"), F.col("__v").cast("string"))
             ).alias("__h")
         )
         .localCheckpoint(eager=False)
@@ -186,5 +182,5 @@ def kmv_distinct(
         .alias("err_ppm"),
     )
     return out.select(
-        "*", (F.col("err_ppm") < F.lit(err_bound_ppm)).alias("within_bound")
+        "*", (F.col("err_ppm") < F.lit(400_000)).alias("within_bound")
     )

@@ -38,43 +38,42 @@ def salted_count_sum(
     df: DataFrame,
     keys: Sequence[str],
     sum_col: str,
-    n_salts: int = 16,
-    count_alias: str = "n",
-    sum_alias: str = "total",
 ) -> DataFrame:
     """Skew-safe ``groupBy(keys).agg(count, sum)``.
 
     Phase 1 groups by (keys, salt) — the hot key's rows spread across
-    ``n_salts`` reducers; phase 2 re-aggregates the ≤ ``n_salts`` partials
+    16 reducers; phase 2 re-aggregates the ≤ 16 partials
     per key. The sum goes through DECIMAL so the two-phase result is
     bit-identical to the direct aggregation (and the oracle)."""
-    salted = df.withColumn("__salt", _content_salt(df, n_salts))
+    salted = df.withColumn("__salt", _content_salt(df, 16))
     partial = salted.groupBy(*keys, "__salt").agg(
         F.count("*").alias("__pn"),
         F.sum(F.col(sum_col).cast("decimal(18,2)")).alias("__psum"),
     )
     return partial.groupBy(*keys).agg(
-        F.sum("__pn").alias(count_alias),
-        F.sum("__psum").cast("double").alias(sum_alias),
+        F.sum("__pn").alias("n"),
+        F.sum("__psum").cast("double").alias("total"),
     )
+
+
+_JOIN_SALTS = 8
 
 
 def salted_broadcast_left_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Hot-key-safe join: replicate the SMALL side once per salt value and
     join on (key, salt). Useful when the big side's hot key would overflow
     a single task in a shuffle join and the small side is broadcastable
     anyway — the salt keeps per-task fan-out bounded even if the planner
     falls back to a shuffle join."""
-    salts = small.sparkSession.range(n_salts).select(
+    salts = small.sparkSession.range(_JOIN_SALTS).select(
         F.col("id").cast("long").alias("__salt")
     )
-    small_rep = small.crossJoin(salts)  # |small| × n_salts replicas
-    big_salted = big.withColumn("__salt", _content_salt(big, n_salts))
+    small_rep = small.crossJoin(salts)  # |small| × _JOIN_SALTS replicas
+    big_salted = big.withColumn("__salt", _content_salt(big, _JOIN_SALTS))
     joined = big_salted.join(
         F.broadcast(small_rep),
         [key, "__salt"],
@@ -88,8 +87,6 @@ def salted_top_k(
     keys: Sequence[str],
     order_by: Sequence[Column | str],
     k: int = 10,
-    n_salts: int = 16,
-    rank_alias: str = "rk",
 ) -> DataFrame:
     """Skew-safe per-key top-k.
 
@@ -100,14 +97,14 @@ def salted_top_k(
     corpus in one window task; partial aggregation rescues groupBy but
     nothing rescues a window). Top-k, however, is salvageable because it
     is DECOMPOSABLE: phase 1 ranks within (keys, salt) — the hot key's
-    rows spread over ``n_salts`` tasks, each keeping its local top-k —
-    and phase 2 re-ranks the ≤ n_salts·k survivors per key. Identical
+    rows spread over 16 tasks, each keeping its local top-k —
+    and phase 2 re-ranks the ≤ 16·k survivors per key. Identical
     output to the naive window for any deterministic (total) ordering.
 
     ``order_by`` must be a total order (break ties — e.g. ``[F.desc(
     "value"), F.asc("event_id")]``) or neither form is well-defined."""
     order_cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    salted = df.withColumn("__salt", _content_salt(df, n_salts))
+    salted = df.withColumn("__salt", _content_salt(df, 16))
     w1 = Window.partitionBy(*keys, "__salt").orderBy(*order_cols)
     survivors = (
         salted.withColumn("__r1", F.row_number().over(w1))
@@ -116,6 +113,6 @@ def salted_top_k(
     )
     w2 = Window.partitionBy(*keys).orderBy(*order_cols)
     return (
-        survivors.withColumn(rank_alias, F.row_number().over(w2))
-        .filter(F.col(rank_alias) <= k)
+        survivors.withColumn("rk", F.row_number().over(w2))
+        .filter(F.col("rk") <= k)
     )

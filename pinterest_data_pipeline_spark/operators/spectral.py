@@ -24,14 +24,17 @@ Magnitude guard: |x_i| ≤ X, dim d, n rows ⇒ |dot| ≤ d·X·1000 and
 |w_i| ≤ n·d·X²·1000. With X ≈ 4e3 (unit-ish float32 embeddings), d = 64
 and 1e9 rows, w tops out ≈ 1e21 > 2^63: at that scale quantize to
 hundredths or renormalize v to max-abs 100. The operator asserts
-nothing silently — callers pick the scale; the defaults hold to ~1e6
-rows × |x| ≤ 10⁴.
+nothing silently — the scale below holds to ~1e6 rows × |x| ≤ 10⁴.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_SCALE = 1000  # x_int = round(x · _SCALE)
+_V_NORM = 1000  # max-abs of the renormalized direction
+_DIM = 64
 
 
 def _quantized(df: DataFrame, vec_col: str, dim: int, scale: int):
@@ -55,13 +58,11 @@ def power_iteration_top_direction(
     vec_col: str = "embedding",
     dim: int = 64,
     iterations: int = 3,
-    scale: int = 1000,
-    v_norm: int = 1000,
     quantized: DataFrame | None = None,
 ) -> list[int]:
     """Run ``iterations`` integer power-iteration steps and return the
-    final direction as a list of ``dim`` ints with max-abs ``v_norm``.
-    v₀ = [v_norm] · dim (the all-ones direction — never orthogonal to
+    final direction as a list of ``dim`` ints with max-abs ``_V_NORM``.
+    v₀ = [_V_NORM] · dim (the all-ones direction — never orthogonal to
     the top component of real embedding clouds; a zero iteration
     returns it verbatim for callers pinning initialization).
 
@@ -80,11 +81,11 @@ def power_iteration_top_direction(
     q = (
         quantized
         if quantized is not None
-        else _quantized(fan_out(df), vec_col, dim, scale).localCheckpoint(
+        else _quantized(fan_out(df), vec_col, dim, _SCALE).localCheckpoint(
             eager=False
         )
     )
-    v = [int(v_norm)] * dim
+    v = [_V_NORM] * dim
     for _ in range(int(iterations)):
         w = _matvec(q, v, dim)
         m = max(abs(x) for x in w)
@@ -93,7 +94,7 @@ def power_iteration_top_direction(
         # truncating renormalization — exact, sign-symmetric, and
         # identical to the SQL form sign(w)*((abs(w)*norm) // m)
         v = [
-            (abs(x) * int(v_norm) // m) * (1 if x >= 0 else -1) for x in w
+            (abs(x) * _V_NORM // m) * (1 if x >= 0 else -1) for x in w
         ]
     return v
 
@@ -127,14 +128,7 @@ def _matvec(q: DataFrame, v: list[int], dim: int) -> list[int]:
     return w
 
 
-def top_direction_report(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    iterations: int = 3,
-    scale: int = 1000,
-    v_norm: int = 1000,
-) -> DataFrame:
+def top_direction_report(df: DataFrame) -> DataFrame:
     """The registered-query form: (dim, v_int) rows for the final
     direction plus each dimension's raw mat-vec magnitude from the LAST
     iteration re-applied to the final vector — so the output pins both
@@ -148,16 +142,14 @@ def top_direction_report(
     # same relation.
     from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
-    q = _quantized(fan_out(df), vec_col, dim, scale).localCheckpoint(
+    q = _quantized(fan_out(df), "embedding", _DIM, _SCALE).localCheckpoint(
         eager=False
     )
     # the loop now lives in ONE place (ADVICE r12): the report passes
     # its shared quantized relation in and replays no renormalization
-    v = power_iteration_top_direction(
-        df, vec_col, dim, iterations, scale, v_norm, quantized=q
-    )
-    w_next = _matvec(q, v, dim)
-    rows = [(i + 1, int(v[i]), int(w_next[i])) for i in range(dim)]
+    v = power_iteration_top_direction(df, quantized=q)
+    w_next = _matvec(q, v, _DIM)
+    rows = [(i + 1, int(v[i]), int(w_next[i])) for i in range(_DIM)]
     return spark.createDataFrame(
         rows, "dim int, v_int bigint, w_next bigint"
     ).orderBy("dim")

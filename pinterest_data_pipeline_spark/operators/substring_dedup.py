@@ -47,8 +47,6 @@ def _toks(text_col: str) -> F.Column:
 def lgram_starts(
     df: DataFrame,
     L: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, start, gh): every L-token shingle's 1-based start position
     and md5 hex of its space-joined content. Documents shorter than L
@@ -67,12 +65,12 @@ def lgram_starts(
     already pays — and buys back a tokens-fold of per-shingle CPU."""
     from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
-    toks = _toks(text_col)
+    toks = _toks("text")
     toked = (
         fan_out(df)
         .filter(F.size(toks) >= L)
-        .select(F.col(id_col), toks.alias("__t"))
-        .repartition(F.col(id_col))
+        .select(F.col("doc_id"), toks.alias("__t"))
+        .repartition(F.col("doc_id"))
     )
     shingles = F.transform(
         F.sequence(F.lit(1), F.size("__t") - F.lit(L - 1)),
@@ -81,8 +79,8 @@ def lgram_starts(
             F.md5(F.array_join(F.slice("__t", i, L), " ")).alias("gh"),
         ),
     )
-    return toked.select(F.col(id_col), F.explode(shingles).alias("__s")).select(
-        id_col, F.col("__s.start").alias("start"), F.col("__s.gh").alias("gh")
+    return toked.select(F.col("doc_id"), F.explode(shingles).alias("__s")).select(
+        "doc_id", F.col("__s.start").alias("start"), F.col("__s.gh").alias("gh")
     )
 
 
@@ -90,8 +88,6 @@ def duplicated_starts(
     df: DataFrame,
     L: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, start) shingle starts whose content occurs ≥ ``min_count``
     times corpus-wide (within- or cross-document).
@@ -103,14 +99,14 @@ def duplicated_starts(
     whereas the groupBy absorbs hot grams in partial aggregation and
     the join's probe side is AQE-skew-splittable (its build side holds
     ONE row per duplicated distinct gram)."""
-    grams = lgram_starts(df, L, id_col, text_col)
+    grams = lgram_starts(df, L)
     dup = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") >= min_count)
         .select("gh")
     )
-    return grams.join(dup, "gh").select(id_col, "start")
+    return grams.join(dup, "gh").select("doc_id", "start")
 
 
 def cross_group_duplicated_starts(
@@ -118,8 +114,6 @@ def cross_group_duplicated_starts(
     group_col: str,
     L: int = 8,
     min_groups: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, start) shingle starts whose content appears in at least
     ``min_groups`` DISTINCT groups (e.g. sources, or train/eval
@@ -130,8 +124,8 @@ def cross_group_duplicated_starts(
     Same skew discipline: distinct-group counting is a
     partial-aggregated two-level groupBy (gh × group first, then gh),
     and the join back is AQE-splittable."""
-    grams = lgram_starts(df, L, id_col, text_col).join(
-        df.select(id_col, group_col), id_col
+    grams = lgram_starts(df, L).join(
+        df.select("doc_id", group_col), "doc_id"
     )
     dup = (
         grams.select("gh", group_col)
@@ -141,7 +135,7 @@ def cross_group_duplicated_starts(
         .filter(F.col("__g") >= min_groups)
         .select("gh")
     )
-    return grams.join(dup, "gh").select(id_col, "start")
+    return grams.join(dup, "gh").select("doc_id", "start")
 
 
 def _merge_spans(flagged: DataFrame, L: int, id_col: str) -> DataFrame:
@@ -188,13 +182,11 @@ def duplicate_spans(
     df: DataFrame,
     L: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Maximal duplicated token spans per document (see
     :func:`_merge_spans` for the island semantics)."""
     return _merge_spans(
-        duplicated_starts(df, L, min_count, id_col, text_col), L, id_col
+        duplicated_starts(df, L, min_count), L, "doc_id"
     )
 
 
@@ -203,19 +195,15 @@ def cross_group_leakage_spans(
     group_col: str,
     L: int = 8,
     min_groups: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Maximal spans of content that crosses a group boundary
     (≥ ``min_groups`` distinct groups contain the shingle) — the
     span-grain leakage report: which exact passages of which
     documents leak across sources or train/eval splits."""
     return _merge_spans(
-        cross_group_duplicated_starts(
-            df, group_col, L, min_groups, id_col, text_col
-        ),
+        cross_group_duplicated_starts(df, group_col, L, min_groups),
         L,
-        id_col,
+        "doc_id",
     )
 
 
@@ -223,8 +211,6 @@ def cut_duplicate_spans(
     df: DataFrame,
     L: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Remove every duplicated span, keep the unique remainder:
     (id, n_tokens, n_kept, kept_text) for EVERY document (untouched
@@ -235,22 +221,22 @@ def cut_duplicate_spans(
     (duplicate-volume-sized) and joined back by id; the rebuild is an
     indexed filter + array_join expression, so the corpus scan never
     re-shuffles."""
-    flagged = duplicated_starts(df, L, min_count, id_col, text_col)
+    flagged = duplicated_starts(df, L, min_count)
     covered = (
         flagged.select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.sequence(F.col("start"), F.col("start") + F.lit(L - 1))
             ).alias("pos"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("pos").alias("__cov"))
     )
-    toks = _toks(text_col)
+    toks = _toks("text")
     return (
-        df.join(covered, id_col, "left")
+        df.join(covered, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.size(toks).cast("bigint").alias("n_tokens"),
             F.when(F.col("__cov").isNull(), toks)
             .otherwise(
@@ -262,7 +248,7 @@ def cut_duplicate_spans(
             .alias("__kept"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.size("__kept").cast("bigint").alias("n_kept"),
             F.array_join("__kept", " ").alias("kept_text"),

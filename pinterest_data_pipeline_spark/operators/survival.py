@@ -22,15 +22,13 @@ def kaplan_meier(
     df: DataFrame,
     subject_col: str = "user_id",
     ts_col: str = "ts",
-    censor_gap_days: int = 7,
-    max_day: int = 30,
 ) -> DataFrame:
     """Kaplan-Meier retention curve: per subject, lifetime = days from
     first to last event; subjects whose last event falls within
-    ``censor_gap_days`` of the log's end are CENSORED (they may still
+    7 days of the log's end are CENSORED (they may still
     be active — their lifetime is a lower bound, so they exit the risk
     set at that point without counting as churn). Returns one row per
-    observed churn day ≤ ``max_day``:
+    observed churn day ≤ 30:
 
         (day, n_risk, n_churn, n_censored, survival_r6)
 
@@ -55,7 +53,7 @@ def kaplan_meier(
         .alias("__life"),
         (
             F.datediff(F.col("__end"), F.col("__last"))
-            < F.lit(censor_gap_days)
+            < F.lit(7)
         ).alias("__censored"),
     )
     per_day = subjects.groupBy(F.col("__life").alias("day")).agg(
@@ -94,7 +92,7 @@ def kaplan_meier(
     )
     return curve.select(
         "day", "n_risk", "n_churn", "n_censored", "survival_r6"
-    ).filter(F.col("day") <= max_day).orderBy("day")
+    ).filter(F.col("day") <= 30).orderBy("day")
 
 
 def logrank_test(
@@ -102,8 +100,6 @@ def logrank_test(
     cohort_col: str,
     duration_col: str,
     event_col: str,
-    cohort_a: str = "a",
-    cohort_b: str = "b",
 ) -> DataFrame:
     """Log-rank test between two cohorts' time-to-event curves — the
     inference half the Kaplan-Meier family lacked: `kaplan_meier`
@@ -136,8 +132,8 @@ def logrank_test(
     relation — bounded by the duration grid, not subject count — and
     a single-row fold."""
     ev = F.col(event_col).cast("int")
-    is_a = F.col(cohort_col) == cohort_a
-    is_b = F.col(cohort_col) == cohort_b
+    is_a = F.col(cohort_col) == "a"
+    is_b = F.col(cohort_col) == "b"
     base = subjects.filter(
         (is_a | is_b)
         & F.col(duration_col).isNotNull()

@@ -79,9 +79,8 @@ def stopword_hits(text: Column | str, stopwords: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords if stopwords is not None else LANG_STOPWORDS["en"]
-    return stopword_hits(text, sw).cast("double") / F.greatest(
+def stopword_ratio(text: Column | str) -> Column:
+    return stopword_hits(text, LANG_STOPWORDS["en"]).cast("double") / F.greatest(
         token_count(text), F.lit(1)
     ).cast("double")
 
@@ -128,12 +127,6 @@ def normalize_text(text: Column | str) -> Column:
 def fingerprint_md5(text: Column | str) -> Column:
     """Content fingerprint: md5 of the normalized text (exact-dup key)."""
     return F.md5(normalize_text(text))
-
-
-def fingerprint_xxhash(text: Column | str) -> Column:
-    """64-bit xxhash fingerprint of normalized text (cheap partition/join
-    key for dedup at scale; not portable to the SQL oracle)."""
-    return F.xxhash64(normalize_text(text))
 
 
 # ---------------------------------------------------------------- PII
@@ -207,24 +200,18 @@ def dup_trigram_frac(text: Column | str) -> Column:
     )
 
 
-def linear_quality_margin(
-    text: Column | str,
-    w_stop: int = 3000,
-    w_punct: int = -2000,
-    w_digit: int = -2000,
-    w_token: int = -100,
-) -> Column:
+def linear_quality_margin(text: Column | str) -> Column:
     """Model-based quality gate: the integer margin of a linear
     classifier over exact count features —
 
-        margin = w_stop·stopword_hits + w_punct·punct_chars
-               + w_digit·digit_chars + w_token·n_tokens
+        margin = 3000·stopword_hits − 2000·punct_chars
+               − 2000·digit_chars − 100·n_tokens
 
     with ``margin >= 0`` meaning "keep". The shape is a trained linear
     quality filter (fastText-style: weighted counts vs a length
     regularizer); the weights here are fixed milli-units standing in for
     learned coefficients, so the operator is deterministic and
-    SQL-oracle-expressible. The ``w_token`` term is the per-token prior
+    SQL-oracle-expressible. The n_tokens term is the per-token prior
     that makes the gate density-based (stopword signal must outrun
     document length) WITHOUT any division — ratios would force
     double math or floor division, and Spark's ``div`` truncates toward
@@ -237,10 +224,10 @@ def linear_quality_margin(
     digits = F.regexp_count(c, F.lit(r"[0-9]")).cast("bigint")
     ntok = token_count(c).cast("bigint")
     return (
-        F.lit(w_stop) * stop
-        + F.lit(w_punct) * punct
-        + F.lit(w_digit) * digits
-        + F.lit(w_token) * ntok
+        F.lit(3000) * stop
+        + F.lit(-2000) * punct
+        + F.lit(-2000) * digits
+        + F.lit(-100) * ntok
     ).cast("bigint")
 
 
@@ -412,11 +399,13 @@ def good_turing_coverage(
     )
 
 
+_LADDER_PPM = (100_000, 250_000, 500_000, 1_000_000)
+
+
 def vocab_growth_ladder(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    ladder_ppm: tuple[int, ...] = (100_000, 250_000, 500_000, 1_000_000),
 ) -> DataFrame:
     """Heaps'-law vocabulary growth over an id-ordered prefix ladder —
     the "is the corpus still discovering words" reading beside
@@ -443,7 +432,7 @@ def vocab_growth_ladder(
     mx = df.agg(F.max(F.col(id_col)).cast("long").alias("__mx"))
     tagged = exploded.crossJoin(F.broadcast(mx))
     aggs = []
-    for i, ppm in enumerate(ladder_ppm, start=1):
+    for i, ppm in enumerate(_LADDER_PPM, start=1):
         cut = F.floor(F.col("__mx") * F.lit(ppm) / F.lit(1_000_000))
         hit = F.col("__id") <= cut
         aggs += [
@@ -458,7 +447,7 @@ def vocab_growth_ladder(
             .alias(f"vocab_{i}"),
         ]
     wide = tagged.agg(*aggs)
-    last, prev = len(ladder_ppm), len(ladder_ppm) - 1
+    last, prev = len(_LADDER_PPM), len(_LADDER_PPM) - 1
     v4, v3 = F.col(f"vocab_{last}"), F.col(f"vocab_{prev}")
     n4, n3 = F.col(f"n_tokens_{last}"), F.col(f"n_tokens_{prev}")
     beta = F.when(

@@ -29,22 +29,18 @@ from pyspark.sql import functions as F
 from pinterest_data_pipeline_spark.operators.chunking import ws_tokens
 
 
-def term_frequencies(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def term_frequencies(df: DataFrame) -> DataFrame:
     """Per-(document, term) whitespace-token counts — the shared input
     relation of both scorers. One explode + one hash aggregate; the
     explode streams, nothing per-doc is materialized."""
     toks = df.select(
-        F.col(id_col), F.explode(ws_tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(ws_tokens("text")).alias("term")
     )
-    return toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    return toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
 
 
 def tfidf_top_terms(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
     """Top-``k`` characteristic terms per document by TF-IDF
@@ -60,9 +56,9 @@ def tfidf_top_terms(
     (docs with ≥1 token ≡ distinct docs in tf). The per-doc top-k is a
     ``row_number`` filter Spark plans as WindowGroupLimit — partial
     top-k before the final sort."""
-    tf = term_frequencies(df, id_col, text_col)
+    tf = term_frequencies(df)
     n_docs = (
-        df.filter(F.size(ws_tokens(text_col)) > 0)
+        df.filter(F.size(ws_tokens("text")) > 0)
         .agg(F.count("*").alias("n_docs"))
     )
     scored = (
@@ -71,7 +67,7 @@ def tfidf_top_terms(
         )
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "tf",
             "df",
@@ -82,15 +78,13 @@ def tfidf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return scored.withColumn(
         "rk", F.row_number().over(w).cast("int")
     ).filter(F.col("rk") <= k)
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Mean per-token natural-log probability of each document under the
     corpus's own unigram model — the CCNet-style "LM quality" signal
     (there, a pretrained KenLM; here, self-trained on the corpus, which
@@ -106,10 +100,10 @@ def unigram_logprob(
     tf relation; the corpus token total is a broadcast shuffle-free
     scalar aggregate over the documents scan (Σ per-doc token counts ≡
     Σ model counts)."""
-    tf = term_frequencies(df, id_col, text_col)
+    tf = term_frequencies(df)
     total = (
         df.agg(
-            F.sum(F.size(ws_tokens(text_col)))
+            F.sum(F.size(ws_tokens("text")))
             .cast("double")
             .alias("total")
         )
@@ -119,7 +113,7 @@ def unigram_logprob(
             "cnt", F.sum("tf").over(Window.partitionBy("term"))
         )
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.round(
@@ -134,18 +128,16 @@ def unigram_logprob(
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
-) -> DataFrame:
+_BIGRAM_LAMBDA = 0.75
+
+
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Mean per-pair log probability of each document under a
     self-trained INTERPOLATED bigram LM —
 
         p(w2 | w1) = lam * c(w1,w2)/c1(w1) + (1-lam) * cnt(w2)/T
 
-    with ``c1(w1)`` the count of pairs starting with w1 and the
+    with lam = 0.75, ``c1(w1)`` the count of pairs starting with w1 and the
     unigram backoff keeping the probability nonzero for any in-corpus
     token. The order-sensitive step beyond :func:`unigram_logprob`:
     shuffled-word gibberish keeps its unigram score but collapses
@@ -163,10 +155,10 @@ def bigram_logprob(
     vocabulary-bounded aggregates with map-side partials; scoring
     joins shuffle on word keys — the same cost class as the TF-IDF
     pipeline above."""
-    toks = ws_tokens(text_col)
+    toks = ws_tokens("text")
     n1 = F.greatest(F.size(toks) - 1, F.lit(0))
     prs = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(toks, 1, n1),
@@ -174,7 +166,7 @@ def bigram_logprob(
                 lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
             )
         ).alias("__p"),
-    ).select(id_col, F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
+    ).select("doc_id", F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
     big = prs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c12")
     )
@@ -186,9 +178,9 @@ def bigram_logprob(
     )
     total = uni.agg(F.sum("cnt").cast("double").alias("__total"))
     p = (
-        F.lit(float(lam))
+        F.lit(_BIGRAM_LAMBDA)
         * (F.col("c12").cast("double") / F.col("c1").cast("double"))
-        + F.lit(1.0 - float(lam))
+        + F.lit(1.0 - _BIGRAM_LAMBDA)
         * (F.col("cnt").cast("double") / F.col("__total"))
     )
     return (
@@ -196,7 +188,7 @@ def bigram_logprob(
         .join(fst, "w1")
         .join(uni, F.col("w2") == F.col("w"))
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.round(F.avg(F.log(p)), 6).alias("avg_bigram_logprob"),
@@ -206,7 +198,6 @@ def bigram_logprob(
 
 def feature_hash_buckets(
     df: DataFrame,
-    text_col: str = "text",
     n_buckets: int = 256,
     top_k: int = 10,
 ) -> DataFrame:
@@ -231,7 +222,7 @@ def feature_hash_buckets(
     toks = df.select(
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0
+                F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
             )
         ).alias("__w")
     )

@@ -28,13 +28,13 @@ from pyspark.sql import functions as F
 BITS = 8  # per dimension; 2 dims -> 16-bit Morton keys
 
 
-def morton_key(d1: Column, d2: Column, bits: int = BITS) -> Column:
-    """Interleave the low ``bits`` of two quantized dimensions into one
+def morton_key(d1: Column, d2: Column) -> Column:
+    """Interleave the low ``BITS`` of two quantized dimensions into one
     Morton key: bit b of d1 lands at position 2b+1, bit b of d2 at 2b.
     Built from (d div 2^b) % 2 and multiplication — no engine bit
     operators, so a SQL oracle replays the identical integers."""
     terms = None
-    for b in range(bits):
+    for b in range(BITS):
         t1 = ((d1 / F.lit(2**b)).cast("bigint") % 2) * F.lit(
             2 ** (2 * b + 1)
         )
@@ -49,14 +49,11 @@ def zorder_pruning_report(
     id_col: str,
     col_a: str,
     col_b: str,
-    n_buckets: int = 64,
-    sel_num: int = 1,
-    sel_den: int = 4,
 ) -> DataFrame:
     """One row per layout strategy — ``insertion`` (order by id),
     ``sort_a`` (order by col_a), ``zorder`` (Morton of both) — scoring
-    the same 2-D range predicate (the central num/den fraction of each
-    dimension's quantized range, e.g. 1/4 = the middle quarter):
+    the same 2-D range predicate (the middle quarter of each
+    dimension's quantized range):
 
         (layout, n_buckets, buckets_read, rows_read, read_ppm)
 
@@ -72,9 +69,9 @@ def zorder_pruning_report(
     is one ntile window (at production scale the writer uses
     repartitionByRange on the same key — the ntile here makes the
     REPORT deterministic and engine-replayable); the boxes are one
-    grouped min/max per layout over n_buckets groups."""
-    lo = (256 * (sel_den - sel_num) // 2) // sel_den
-    hi = lo + 256 * sel_num // sel_den - 1
+    grouped min/max per layout over 64 groups."""
+    # the middle quarter of the 256-step quantized grid
+    lo, hi = 96, 159
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(col_a).cast("bigint").alias("__a"),
@@ -106,7 +103,7 @@ def zorder_pruning_report(
     out = None
     for name, order in layouts.items():
         bucketed = q.withColumn(
-            "__bucket", F.ntile(n_buckets).over(Window.orderBy(*order))
+            "__bucket", F.ntile(64).over(Window.orderBy(*order))
         )
         boxes = bucketed.groupBy("__bucket").agg(
             F.count(F.lit(1)).cast("bigint").alias("__rows"),

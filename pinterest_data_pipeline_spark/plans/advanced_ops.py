@@ -268,7 +268,7 @@ def salted_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.skew import salted_count_sum
 
     ev = load_table(spark, sf_dir, "events")
-    return salted_count_sum(ev, ["event_type"], "value", n_salts=16)
+    return salted_count_sum(ev, ["event_type"], "value")
 
 
 @register(

@@ -83,7 +83,7 @@ def decontaminate_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFram
 
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_contamination(
-        emb, F.col("vec_id") % 97 == 3, "vec_id", "embedding", threshold=0.3
+        emb, F.col("vec_id") % 97 == 3, threshold=0.3
     )
 
 

@@ -148,7 +148,7 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.rfm import rfm_segments
 
     events = load_table(spark, sf_dir, "events")
-    return rfm_segments(events, "user_id", "ts", "value")
+    return rfm_segments(events)
 
 
 @register(
@@ -205,7 +205,7 @@ def markov_path_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return markov_logloss(events, "user_id", "ts", "event_type", "event_id")
+    return markov_logloss(events)
 
 
 # ------------------------------------------------ retrieval infrastructure

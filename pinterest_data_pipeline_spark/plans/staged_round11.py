@@ -538,7 +538,7 @@ def peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     sess = session_stats(ev)
-    return peak_concurrency_by_day(sess, "session_start", "session_end")
+    return peak_concurrency_by_day(sess)
 
 
 _LAYOUT_HASH_SQL = (

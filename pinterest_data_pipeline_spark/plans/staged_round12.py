@@ -128,7 +128,7 @@ def poisson_bootstrap_ci_value(
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     return poisson_bootstrap_mean_ci(
-        ev, ["event_type"], "event_id", "cents", n_resamples=64
+        ev, ["event_type"], "event_id", "cents"
     )
 
 
@@ -508,7 +508,7 @@ def mutual_nn_pairs_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(1024)
     )
-    return mutual_top1_pairs(emb, "vec_id", "embedding")
+    return mutual_top1_pairs(emb)
 
 
 _CELLS_SQL = f"""
@@ -586,7 +586,7 @@ def embedding_cell_quality_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_cell_quality_db(emb, "vec_id", "embedding")
+    return lsh_cell_quality_db(emb)
 
 
 def _lpa_round_sql(prev: str, cur: str) -> str:

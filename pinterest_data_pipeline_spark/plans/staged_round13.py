@@ -654,7 +654,7 @@ def kmv_distinct_price_points(
     cents = ev.select(
         F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    return kmv_distinct(cents, "cents", k=64, salt="kmv")
+    return kmv_distinct(cents, "cents", k=64)
 
 
 # --------------------------------------------------- burstiness / Fano

@@ -436,9 +436,5 @@ def event_trigram_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     return top_path_trigrams(
         events,
-        subject_col="user_id",
-        ts_col="ts",
-        state_col="event_type",
-        tiebreak_col="event_id",
         top_k=20,
     )

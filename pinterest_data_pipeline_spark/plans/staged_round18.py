@@ -221,9 +221,9 @@ def conformal_coverage_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(round(c_acctbal * 100) AS BIGINT)").alias("cents"),
         )
     )
-    return conformal_coverage(
-        cust, "seg", "id", "cents", alpha_num=1, alpha_den=10
-    ).withColumnRenamed("seg", "c_mktsegment")
+    return conformal_coverage(cust, "seg", "id", "cents").withColumnRenamed(
+        "seg", "c_mktsegment"
+    )
 
 
 # --------------------------------------------------------- log-rank test

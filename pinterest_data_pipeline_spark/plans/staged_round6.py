@@ -1111,7 +1111,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.bpe import bpe_fertility
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_fertility(docs, k=_BPE_K, group_col="lang")
+    return bpe_fertility(docs, k=_BPE_K)
 
 
 # The cross-SOURCE leakage variant: a shingle flags only when it
@@ -1571,4 +1571,4 @@ def doremi_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("avg_logprob")).alias("loss"),
         )
     )
-    return doremi_reweight(item, eta=1.0)
+    return doremi_reweight(item)

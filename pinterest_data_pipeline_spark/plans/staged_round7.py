@@ -52,13 +52,13 @@ from pinterest_data_pipeline_spark.sources.parquet import load_table
 # Synthetic point coordinates for an id column, replayed verbatim by
 # the oracles: offset microdegrees from the portable md5-prefix hash
 # (operators/geo.synth_point — the pinterest_driver fixture discipline).
-def _pt_sql(idexpr: str, salt: str = "geo") -> tuple[str, str]:
+def _pt_sql(idexpr: str) -> tuple[str, str]:
     lat = (
-        f"CAST(concat('0x', substr(md5(concat('{salt}-lat:', "
+        f"CAST(concat('0x', substr(md5(concat('geo-lat:', "
         f"CAST({idexpr} AS VARCHAR))), 1, 8)) AS BIGINT) % 180000001"
     )
     lon = (
-        f"CAST(concat('0x', substr(md5(concat('{salt}-lon:', "
+        f"CAST(concat('0x', substr(md5(concat('geo-lon:', "
         f"CAST({idexpr} AS VARCHAR))), 1, 8)) AS BIGINT) % 360000001"
     )
     return lat, lon
@@ -351,7 +351,6 @@ def rrf_quality_length_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "margin": [F.col("margin").desc(), F.col("doc_id").asc()],
             "length": [F.col("n_tokens").desc(), F.col("doc_id").asc()],
         },
-        k=60,
         top_n=100,
     )
 
@@ -668,9 +667,7 @@ def embedding_top_direction_power(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return top_direction_report(
-        emb, "embedding", dim=64, iterations=3, scale=1000, v_norm=1000
-    )
+    return top_direction_report(emb)
 
 
 # ------------------------------------------------- retrieval training data
@@ -961,7 +958,7 @@ def annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         (margin >= 0).alias("label_a"),
         ((margin + noise) >= 0).alias("label_b"),
     )
-    return agreement_kappa(lab, "label_a", "label_b")
+    return agreement_kappa(lab)
 
 
 # ------------------------------------------- collaborative co-occurrence
@@ -1025,7 +1022,7 @@ def item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("props", "$.k").cast("bigint").alias("item_id"),
     ).filter(F.col("props").isNotNull() & F.col("item_id").isNotNull())
     return item_cooccurrence(
-        inter, "user_id", "item_id", max_items_per_user=64, min_pair_count=3
+        inter, max_items_per_user=64, min_pair_count=3
     )
 
 
@@ -1308,7 +1305,7 @@ def mann_whitney_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("arm", hash_assign_arm("user_id"))
     )
-    return mann_whitney_u(units, "arm", "value_int")
+    return mann_whitney_u(units)
 
 
 @register(

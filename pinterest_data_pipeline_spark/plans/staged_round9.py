@@ -398,7 +398,7 @@ def gini_user_activity_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return gini_skew_profile(events, "user_id", 10)
+    return gini_skew_profile(events, "user_id")
 
 
 # --------------------------------------------------- corpus linguistics
@@ -594,7 +594,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return kaplan_meier(events, "user_id", "ts", 7, 30)
+    return kaplan_meier(events, "user_id", "ts")
 
 
 # ------------------------------------------------------ rank agreement
@@ -675,4 +675,4 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return rbo_at_k(a, b, "doc_id", "rank", k=10, p=_RBO_P)
+    return rbo_at_k(a, b, "doc_id", "rank", p=_RBO_P)

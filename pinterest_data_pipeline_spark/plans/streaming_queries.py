@@ -59,7 +59,7 @@ def sliding_window_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows; oracle materializes both starts explicitly."""
     ev = load_table(spark, sf_dir, "events")
     return W.sliding_counts(
-        ev, "ts", ["event_type"], window="1 hour", slide="30 minutes"
+        ev, "ts", ["event_type"], slide="30 minutes"
     )
 
 
@@ -99,7 +99,7 @@ def session_window_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``>= 1800``, not ``>``: Spark's session end is EXCLUSIVE, so an event
     at exactly prev_ts + gap opens a new session."""
     ev = load_table(spark, sf_dir, "events")
-    return W.session_window_counts(ev, "ts", ["user_id"], gap="30 minutes")
+    return W.session_window_counts(ev, "ts", ["user_id"])
 
 
 @register(

@@ -221,7 +221,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     sh = dedup.fan_out(docs).select(
         F.col("doc_id").alias("__id"),
-        dedup.word_shingles("text", 3).alias("__sh"),
+        dedup.word_shingles("text").alias("__sh"),
     )
     a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -2166,7 +2166,7 @@ def minhash_estimate_accuracy_gate(spark: SparkSession, sf_dir: str) -> DataFram
     sig = dedup.fan_out(docs).select(
         F.col("doc_id").alias("__id"),
         dedup.minhash_signature("text").alias("__sig"),
-        dedup.word_shingles("text", 3).alias("__sh"),
+        dedup.word_shingles("text").alias("__sh"),
     ).repartition(F.col("__id"))
     a = sig.select(
         F.col("__id").alias("id_a"),

@@ -39,7 +39,6 @@ def clean_stream(
     landing_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    output_format: str = "parquet",
 ) -> StreamingQuery:
     """Start the clean-and-append stream for one topic.
 
@@ -51,7 +50,7 @@ def clean_stream(
     cleaned = transform(raw)
     return (
         cleaned.writeStream.outputMode("append")
-        .format(output_format)
+        .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .start()

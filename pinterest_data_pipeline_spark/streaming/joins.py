@@ -16,18 +16,16 @@ from pyspark.sql import functions as F
 def interval_join_clicks_to_views(
     clicks: DataFrame,
     views: DataFrame,
-    max_gap: str = "INTERVAL 30 MINUTES",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Attach each click to view events by the same user within
-    ``max_gap`` BEFORE the click (streaming attribution join).
+    30 minutes BEFORE the click (streaming attribution join).
 
     Both inputs must be streaming DataFrames with ``user_id``, ``ts``,
     ``event_id``, ``value`` columns. Inner join: clicks with no prior
     view in the window are dropped (use left-outer + watermark for the
     keep-unmatched variant)."""
     c = (
-        clicks.withWatermark("ts", watermark)
+        clicks.withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
@@ -35,7 +33,7 @@ def interval_join_clicks_to_views(
         )
     )
     v = (
-        views.withWatermark("ts", watermark)
+        views.withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user"),
@@ -47,7 +45,7 @@ def interval_join_clicks_to_views(
         v,
         F.expr(
             f"c_user = v_user AND view_ts <= click_ts "
-            f"AND view_ts >= click_ts - {max_gap}"
+            f"AND view_ts >= click_ts - INTERVAL 30 MINUTES"
         ),
         "inner",
     ).select("click_id", F.col("c_user").alias("user_id"), "click_ts", "view_id", "view_ts", "view_value")
@@ -56,8 +54,6 @@ def interval_join_clicks_to_views(
 def interval_left_join_clicks_to_views(
     clicks: DataFrame,
     views: DataFrame,
-    max_gap: str = "INTERVAL 30 MINUTES",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Left-outer variant of the attribution join: every click is
     emitted; clicks with no prior view carry NULL view columns.
@@ -68,12 +64,12 @@ def interval_left_join_clicks_to_views(
     results trail the watermark delay. Both side's watermarks are
     therefore mandatory here (the inner join tolerates their absence at
     the cost of unbounded state; the outer join would never emit)."""
-    c = clicks.withWatermark("ts", watermark).select(
+    c = clicks.withWatermark("ts", "1 hour").select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("click_ts"),
     )
-    v = views.withWatermark("ts", watermark).select(
+    v = views.withWatermark("ts", "1 hour").select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
         F.col("ts").alias("view_ts"),
@@ -83,7 +79,7 @@ def interval_left_join_clicks_to_views(
         v,
         F.expr(
             f"c_user = v_user AND view_ts <= click_ts "
-            f"AND view_ts >= click_ts - {max_gap}"
+            f"AND view_ts >= click_ts - INTERVAL 30 MINUTES"
         ),
         "left_outer",
     ).select(

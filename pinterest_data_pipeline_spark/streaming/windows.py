@@ -47,15 +47,11 @@ def sliding_counts(
     df: DataFrame,
     ts_col: str,
     keys: Sequence[str],
-    window: str = "1 hour",
     slide: str = "15 minutes",
-    watermark: str | None = None,
 ) -> DataFrame:
     """Sliding-window counts (each row lands in window/slide buckets)."""
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.window(ts_col, window, slide), *keys)
+        df.groupBy(F.window(ts_col, "1 hour", slide), *keys)
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -70,16 +66,12 @@ def session_window_counts(
     df: DataFrame,
     ts_col: str,
     keys: Sequence[str],
-    gap: str = "30 minutes",
-    watermark: str | None = None,
 ) -> DataFrame:
-    """Session windows: dynamic-length windows closed after ``gap`` of
+    """Session windows: dynamic-length windows closed after 30 minutes of
     inactivity per key — the streaming-native form of the batch
     sessionization in plans/relational_ops.py."""
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.session_window(ts_col, gap), *keys)
+        df.groupBy(F.session_window(ts_col, "30 minutes"), *keys)
         .agg(F.count("*").alias("n"))
         .select(
             F.col("session_window.start").alias("session_start"),

@@ -1,6 +1,7 @@
 """Fold a fresh bench run into the committed element-wise-MIN record
-(bench_last_sf<sf>.json): each query keeps the smaller of (record, run)
-so the record reflects the PLAN across host-speed variance. Usage:
+(bench_last_sf<sf>.json) with ``round_open.element_wise_min``: each
+query keeps the smaller of (record, run), and a query the run no longer
+has is dropped, so the record covers only registered queries. Usage:
 
     python scripts/fold_bench_min.py <fresh_run.json> [record.json]
 """
@@ -11,34 +12,24 @@ import json
 import os
 import sys
 
+from round_open import element_wise_min
+
 
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     fresh_path = sys.argv[1]
     fresh = json.load(open(fresh_path))
-    sf = fresh["sf"]
     record_path = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else os.path.join(repo, f"bench_last_sf{sf}.json")
+        else os.path.join(repo, f"bench_last_sf{fresh['sf']}.json")
     )
     record = json.load(open(record_path)) if os.path.exists(record_path) else fresh
-    merged = dict(record)
-    qs = dict(record.get("queries", {}))
-    n_improved = 0
-    for name, sec in fresh["queries"].items():
-        if name not in qs or sec < qs[name]:
-            qs[name] = sec
-            n_improved += 1
-    merged["queries"] = qs
-    merged["value"] = round(sum(qs.values()), 4)
-    merged["harness_wall_seconds"] = fresh.get(
-        "harness_wall_seconds", merged.get("harness_wall_seconds")
-    )
+    merged = element_wise_min(record, fresh)
     with open(record_path, "w") as fh:
         json.dump(merged, fh, indent=1, sort_keys=True)
     print(
-        f"folded {fresh_path} into {record_path}: {n_improved} mins fell, "
+        f"folded {fresh_path} into {record_path}: "
         f"total {record.get('value')} -> {merged['value']}"
     )
 

@@ -5,8 +5,13 @@ tails and from the full local record; pin both paths."""
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 
 from bench import load_prior_timings
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_recovers_from_truncated_driver_tail(tmp_path):
@@ -37,3 +42,24 @@ def test_local_record_overrides_older_rounds(tmp_path):
 
 def test_missing_files_are_fine(tmp_path):
     assert load_prior_timings(str(tmp_path), {"x"}, "nope.json") == {}
+
+
+def test_fold_keeps_per_query_min_of_registered_queries(tmp_path):
+    record = {"queries": {"alpha": 0.4, "beta": 2.0, "gone": 5.0}}
+    fresh = {"queries": {"alpha": 0.9, "beta": 1.5, "new": 0.3}, "sf": 0.1}
+    (tmp_path / "fresh.json").write_text(json.dumps(fresh))
+    (tmp_path / "record.json").write_text(json.dumps(record))
+    subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "scripts", "fold_bench_min.py"),
+            str(tmp_path / "fresh.json"),
+            str(tmp_path / "record.json"),
+        ],
+        check=True,
+        capture_output=True,
+    )
+    merged = json.loads((tmp_path / "record.json").read_text())
+    # "gone" was deregistered: it leaves the priors instead of lingering
+    assert merged["queries"] == {"alpha": 0.4, "beta": 1.5, "new": 0.3}
+    assert merged["value"] == round(sum(merged["queries"].values()), 4)

@@ -21,7 +21,6 @@ from pinterest_data_pipeline_spark.plans.staged_round14 import (
 from tests.oracle_utils import (
     run_both_sides,
     compare_frames,
-    duckdb_connection,
 )
 
 

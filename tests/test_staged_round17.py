@@ -25,7 +25,6 @@ from pinterest_data_pipeline_spark.plans.staged_round17 import (
 from tests.oracle_utils import (
     run_both_sides,
     compare_frames,
-    duckdb_connection,
 )
 
 
