@@ -20,10 +20,15 @@ Determinism discipline (vanilla LPA is notoriously run-dependent):
 A FIXED iteration count (not convergence detection) keeps the oracle
 an unrolled SQL replay — the pagerank/power-iteration precedent.
 
-Scale: per round, one (edge ⋈ label) shuffle on the destination key +
-one map-side-combinable argmax keyed by source; labels relation is
-|nodes| rows, localCheckpointed per round so round t+1's lineage does
-not replay rounds 1..t.
+Scale: one setup barrier — the edges plus one self-loop per node (the
+self-vote), repartitioned by destination and localCheckpointed — then
+per round one (edge ⋈ label) join on the destination key + one
+map-side-combinable argmax keyed by source. Round 1 needs no join
+(every initial label is the node id, so its votes are the edges
+themselves), and each later round reads the previous labels once, so
+the plan grows linearly in rounds with no per-round barrier: under AQE
+even a lazy barrier runs its upstream shuffle stages while the plan is
+built, one driver round each.
 """
 
 from __future__ import annotations
@@ -38,55 +43,76 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     ``edges`` holds DIRECTED rows (src, dst) with numeric node ids —
     pass both directions for an undirected graph. Initial label =
     node id; every round each node adopts the most frequent label among
-    its neighbors plus itself, smallest label on ties."""
+    its neighbors plus itself, smallest label on ties. A NULL id is one
+    node, as in SQL GROUP BY; an edge into NULL casts no vote."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    # Materialize the edge relation ONCE, partitioned by the propagation
-    # join key (the duplicate_clusters recipe, guide §2.4/§3.3): without
-    # the barrier the caller's upstream edge pipeline re-executes in
-    # every round's lineage plus twice in the node universe (measured:
-    # 5 executions of an |lineitem| aggregation per
-    # lpa_purchasing_communities run), and without the repartition every
-    # round's edges⋈labels join re-exchanges |E| rows by dst — the
-    # checkpointed relation keeps its physical partitioning, so one
-    # setup shuffle buys back one |E| exchange per round. Vote counts
-    # and the argmax are exact integer ops, so partitioning cannot move
-    # a bit.
-    edges = edges.repartition(F.col("dst")).localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iterations):
-        nbr = edges.join(
-            labels, edges["dst"] == labels["node"]
-        ).select(F.col("src").alias("node"), "label")
-        votes = (
-            nbr.unionAll(labels.select("node", "label"))
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("__c"))
+    # The self-vote is a self-loop edge per node, UNION ALL so an input
+    # self-loop still votes twice. Materialize the voting edges ONCE
+    # (the duplicate_clusters recipe, guide §2.4/§3.3): without the
+    # barrier the caller's upstream edge pipeline re-executes in every
+    # round's lineage (measured: 5 executions of an |lineitem|
+    # aggregation per lpa_purchasing_communities run). Under AQE the
+    # checkpointed relation does NOT keep the repartition's layout (its
+    # plan reports UnknownPartitioning), so each round's join exchanges
+    # the edges again — but the rounds' edge exchanges are identical, and
+    # the action runs that |E| shuffle once and reuses it in later rounds
+    # (pinned by test). Vote counts and the argmax are exact integer ops,
+    # so partitioning cannot move a bit.
+    #
+    # A NULL id is a node too (SQL GROUP BY semantics, as in the
+    # oracle), so the join is null-safe; that re-exchanges the |V|
+    # labels on the null-safe keys each round, which a plain join on a
+    # node-partitioned aggregate would not. An input edge INTO NULL
+    # never votes; the ``self`` flag tells it from NULL's self-loop after
+    # the barrier (filtering before it would split the upstream plan in
+    # two).
+    dst = F.col("dst")
+    voting = edges.select("src", "dst", F.lit(False).alias("self")).unionAll(
+        nodes.select(
+            F.col("node").alias("src"), F.col("node").alias("dst"), F.lit(True)
         )
-        labels = (
-            votes.groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("__c").alias("c"),
-                        (-F.col("label")).alias("neg_label"),
-                    )
-                ).alias("__best")
+    )
+    edges = (
+        voting.repartition(dst)
+        .localCheckpoint(eager=False)
+        .where(dst.isNotNull() | F.col("self"))
+    )
+    # round 1: every label is still the node id, so a vote is its edge
+    labels = _adopt_top_vote(
+        edges.select(F.col("src").alias("node"), dst.alias("label"))
+    )
+    for _ in range(iterations - 1):
+        labels = _adopt_top_vote(
+            edges.join(labels, edges["dst"].eqNullSafe(labels["node"])).select(
+                F.col("src").alias("node"), "label"
             )
-            .select("node", (-F.col("__best.neg_label")).alias("label"))
-            # eager=False: lineage still truncates per round (the plan
-            # would otherwise double per iteration — labels feeds both
-            # the neighbor join and the self-vote union) but the rounds'
-            # materialization fuses into the caller's single action
-            # instead of one driver-synchronized count job per round
-            .localCheckpoint(eager=False)
         )
     return labels
+
+
+def _adopt_top_vote(votes: DataFrame) -> DataFrame:
+    """(node, label) votes → each node's most frequent label, smallest
+    label on ties."""
+    return (
+        votes.groupBy("node", "label")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .groupBy("node")
+        .agg(
+            F.max(
+                F.struct(
+                    F.col("__c").alias("c"),
+                    (-F.col("label")).alias("neg_label"),
+                )
+            ).alias("__best")
+        )
+        .select("node", (-F.col("__best.neg_label")).alias("label"))
+    )
 
 
 def community_sizes(edges: DataFrame, iterations: int = 3) -> DataFrame:

@@ -98,6 +98,11 @@ USER_CLEAN = T.StructType(
 # --------------------------------------------------------------------------
 # Driver testdata tables (TESTDATA.md / FIXTURES.md §B)
 # --------------------------------------------------------------------------
+# sources.parquet.load_table reads every table but ``events`` with these
+# schemas, so they must equal what Spark infers from the fixture files
+# (tests/test_declared_schemas.py): the fixture writes naive timestamps,
+# hence TIMESTAMP_NTZ dates. EVENTS is the loader's output schema — its
+# ``ts`` is normalized to TIMESTAMP whatever the file's encoding.
 
 REGION = T.StructType(
     [
@@ -150,7 +155,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
@@ -167,7 +172,7 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]
 )
 

@@ -1,10 +1,14 @@
 """Parquet table loaders for the driver testdata layout.
 
 One parquet file per table under ``{sf_dir}/{name}.parquet`` (TESTDATA.md).
-Parquet gives vectorized scans, predicate pushdown, and column pruning for
-free — the filters/projections in the query layer reach the scan because we
-keep the plan declarative (verify with ``df.explain("formatted")``:
-``PushedFilters`` / ``ReadSchema``).
+Every table but ``events`` is read with its declared ``StructType``
+(``schemas.TESTDATA_SCHEMAS``), so a load runs no footer-inference job;
+``tests/test_declared_schemas.py`` pins the declared schemas to what Spark
+infers from the fixture files, so a fixture change fails there instead of
+reading NULLs. Parquet gives vectorized scans, predicate pushdown, and
+column pruning for free — the filters/projections in the query layer reach
+the scan because we keep the plan declarative (verify with
+``df.explain("formatted")``: ``PushedFilters`` / ``ReadSchema``).
 """
 
 from __future__ import annotations
@@ -13,17 +17,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pinterest_data_pipeline_spark.schemas import TESTDATA_TABLES
+from pinterest_data_pipeline_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table. Column pruning / filter pushdown is left to
-    Catalyst — callers express projections on the returned DataFrame."""
+    """Load one testdata table; all but ``events`` read with the declared
+    schema, so the load runs no Spark job. Column pruning / filter pushdown is left to Catalyst — callers express
+    projections on the returned DataFrame."""
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -260,6 +260,104 @@ def test_lpa_barbell_two_communities(spark):
         label_propagation(edges, iterations=0)
 
 
+def _reference_lpa(edges, iterations):
+    """Synchronous LPA in plain Python: each node's votes are its own
+    label plus one per (node, neighbour) edge row, ties to the smallest.
+    None is a node (SQL GROUP BY); an edge into None never joins, so it
+    casts no vote, and a None label loses every tie (NULLS LAST)."""
+    from collections import Counter
+
+    nodes = {v for e in edges for v in e}
+    labels = {v: v for v in nodes}
+    for _ in range(iterations):
+        votes = {v: Counter([labels[v]]) for v in nodes}
+        for src, dst in edges:
+            if dst is not None:
+                votes[src][labels[dst]] += 1
+        labels = {
+            v: min(c, key=lambda lab: (-c[lab], lab is None, lab or 0))
+            for v, c in votes.items()
+        }
+    return labels
+
+
+def _random_graphs(n_graphs=8):
+    """Seeded small directed graphs on disjoint id ranges (so one run
+    covers them all), each with an input self-loop, a duplicate edge and
+    a node that appears only as a destination; NULL ids at both ends."""
+    import random
+
+    edges = [(None, 4), (4, 2), (None, 3), (None, None), (2, None)]
+    for g in range(n_graphs):
+        rng = random.Random(g)
+        ids = [1000 * (g + 1) + i for i in rng.sample(range(100), rng.randint(3, 9))]
+        graph = [(rng.choice(ids), rng.choice(ids)) for _ in range(2 * len(ids))]
+        dst_only = 1000 * (g + 1) + 500
+        graph += [(ids[0], ids[0]), graph[0], (ids[1], dst_only)]
+        edges += graph
+    return edges
+
+
+@pytest.mark.parametrize("iterations", [1, 2, 3, 4])
+def test_lpa_matches_reference_with_one_barrier(spark, monkeypatch, iterations):
+    """Self-loops, duplicate edges, dst-only nodes, NULL ids and ties
+    give exactly the pure-Python synchronous LPA, and the whole run
+    takes one localCheckpoint (the edge barrier) whatever the round
+    count."""
+    from pinterest_data_pipeline_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    edges = _random_graphs()
+    df = spark.createDataFrame(edges, "src long, dst long")
+    cls = type(df)
+    checkpoints = []
+    original = cls.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        checkpoints.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    labels = label_propagation(df, iterations=iterations)
+    assert len(checkpoints) == 1
+    got = {r["node"]: r["label"] for r in labels.collect()}
+    assert got == _reference_lpa(edges, iterations)
+
+
+def test_lpa_shuffles_edges_once_per_action(spark):
+    """Under AQE the checkpointed edges lose their layout, so every
+    round's join exchanges them; those exchanges must be ONE shuffle the
+    action reuses, not an |E| shuffle per round. Broadcast joins are off
+    so the rounds plan as the shuffle joins they are at scale."""
+    import contextlib
+    import io
+
+    from pinterest_data_pipeline_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = spark.createDataFrame(_random_graphs(), "src long, dst long")
+        labels = label_propagation(df, iterations=4)
+        labels.collect()
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            labels.explain()
+    finally:
+        spark.conf.set(key, old)
+    final = buf.getvalue().split("== Initial Plan ==")[0]
+    edge_side = [
+        line for line in final.splitlines() if "hashpartitioning(coalesce(dst#" in line
+    ]
+    reused = [line for line in edge_side if "ReusedExchange" in line]
+    # rounds 2-4 join the edges: one exchange, reused by the other two
+    assert (len(edge_side), len(reused)) == (3, 2), final
+
+
 # --------------------------------------------------------- Fellegi-Sunter
 
 
