@@ -18,7 +18,6 @@ a complete committed version, never a half-merged one.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -28,9 +27,11 @@ from pinterest_data_pipeline_spark.operators.rollup_maintenance import (
     merge_rollups,
     rollup_state,
 )
-from pinterest_data_pipeline_spark.streaming.sinks import read_target
-
-_MANIFEST = "_MANIFEST.json"
+from pinterest_data_pipeline_spark.streaming.sinks import (
+    _already_committed,
+    commit_version,
+    read_target,
+)
 
 
 def materialized_rollup_stream(
@@ -60,10 +61,6 @@ def make_rollup_batch_fn(target_dir: str, keys: list[str], value_col: str):
     idempotence — the streaming runtime only replays on real crashes)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pinterest_data_pipeline_spark.streaming.sinks import (
-            _already_committed,
-        )
-
         # Replay guard — load-bearing here: merge_rollups is ADDITIVE,
         # so a batch replayed after the manifest commit (but before the
         # checkpoint recorded it) would merge its delta into a state
@@ -76,13 +73,6 @@ def make_rollup_batch_fn(target_dir: str, keys: list[str], value_col: str):
         delta = rollup_state(batch_df, keys, value_col)
         current = read_target(spark, target_dir)
         state = merge_rollups(current, delta) if current is not None else delta
-        version = f"v{batch_id:010d}"
-        state.write.mode("overwrite").parquet(
-            os.path.join(target_dir, version)
-        )
-        tmp = os.path.join(target_dir, f".{_MANIFEST}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"current": version, "batch_id": batch_id}, f)
-        os.replace(tmp, os.path.join(target_dir, _MANIFEST))
+        commit_version(target_dir, state, batch_id)
 
     return apply_batch

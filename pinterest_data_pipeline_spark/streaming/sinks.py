@@ -7,7 +7,8 @@ each micro-batch's merge RESULT to a batch-id-stamped directory and
 atomically advancing a manifest pointer — a replayed batch (after crash
 between write and commit) simply overwrites its own directory and
 re-points the manifest to the same place. Readers resolve the manifest
-first, so they never observe a half-written version.
+first, so they never observe a half-written version. The manifest also
+records the version's schema, so readers skip parquet footer inference.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from pinterest_data_pipeline_spark.operators.merge import merge_upsert
 
@@ -24,18 +26,14 @@ _MANIFEST = "_MANIFEST.json"
 
 
 def read_manifest(target_dir: str) -> dict | None:
-    """The committed manifest ({"current": version, "batch_id": n}), or
-    None before the first commit."""
+    """The committed manifest ({"current": version, "batch_id": n,
+    "schema": StructType JSON}), or None before the first commit.
+    Manifests written without "schema" are still valid."""
     manifest = os.path.join(target_dir, _MANIFEST)
     if not os.path.exists(manifest):
         return None
     with open(manifest) as f:
         return json.load(f)
-
-
-def _current_version_dir(target_dir: str) -> str | None:
-    m = read_manifest(target_dir)
-    return None if m is None else m["current"]
 
 
 def _already_committed(target_dir: str, batch_id: int) -> bool:
@@ -50,11 +48,47 @@ def _already_committed(target_dir: str, batch_id: int) -> bool:
 
 
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
-    """Resolve the manifest and read the current table version."""
-    version = _current_version_dir(target_dir)
-    if version is None:
+    """Resolve the manifest and read the current table version, with its
+    recorded schema when the manifest has one (no inference job)."""
+    m = read_manifest(target_dir)
+    if m is None:
         return None
-    return spark.read.parquet(os.path.join(target_dir, version))
+    reader = spark.read
+    if "schema" in m:
+        reader = reader.schema(StructType.fromJson(m["schema"]))
+    return reader.parquet(os.path.join(target_dir, m["current"]))
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable: the
+    schema Spark infers from parquet files it wrote from ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _as_nullable(dt.valueType), True)
+    return dt
+
+
+def commit_version(target_dir: str, df: DataFrame, batch_id: int) -> None:
+    """Write ``df`` to ``v<batch_id>`` and atomically repoint the manifest
+    at it, recording the written schema. A replayed batch overwrites its
+    own version directory."""
+    version = f"v{batch_id:010d}"
+    df.write.mode("overwrite").parquet(os.path.join(target_dir, version))
+    manifest = {
+        "current": version,
+        "batch_id": batch_id,
+        "schema": _as_nullable(df.schema).jsonValue(),
+    }
+    tmp = os.path.join(target_dir, f".{_MANIFEST}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(target_dir, _MANIFEST))  # atomic commit
 
 
 def upsert_stream_to_parquet(
@@ -80,12 +114,7 @@ def upsert_stream_to_parquet(
             if current is not None
             else batch_df
         )
-        version = f"v{batch_id:010d}"
-        merged.write.mode("overwrite").parquet(os.path.join(target_dir, version))
-        tmp = os.path.join(target_dir, f".{_MANIFEST}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"current": version, "batch_id": batch_id}, f)
-        os.replace(tmp, os.path.join(target_dir, _MANIFEST))  # atomic commit
+        commit_version(target_dir, merged, batch_id)
 
     return (
         updates.writeStream.outputMode("update")
@@ -104,18 +133,20 @@ def vacuum_versions(target_dir: str, keep: int = 2) -> list[str]:
     version, so without vacuuming the sink stores O(batches) copies.
     Keeping ≥2 versions preserves a rollback target and protects
     concurrent readers that resolved the previous manifest just before a
-    commit."""
+    commit. ``keep=0`` keeps only the current version."""
     import shutil
 
-    current = _current_version_dir(target_dir)
+    if keep < 0:
+        raise ValueError(f"keep must be >= 0, got {keep}")
+    m = read_manifest(target_dir)
     versions = sorted(
         d
         for d in os.listdir(target_dir)
         if d.startswith("v") and os.path.isdir(os.path.join(target_dir, d))
     )
-    survivors = set(versions[-keep:])
-    if current is not None:
-        survivors.add(current)
+    survivors = set(versions[-keep:]) if keep else set()
+    if m is not None:
+        survivors.add(m["current"])
     removed = []
     for v in versions:
         if v not in survivors:

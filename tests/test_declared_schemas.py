@@ -2,7 +2,8 @@
 instead of inferring each parquet footer, so the declarations must equal
 what Spark infers from the fixture files — types and nullability — or a
 fixture change would silently read NULLs. And loading a declared table
-must stay free of Spark jobs: no footer inference."""
+must stay free of Spark jobs: no footer inference. The same holds for the
+schema the manifest sink records with each committed version."""
 
 from __future__ import annotations
 
@@ -13,9 +14,18 @@ import time
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from pinterest_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
+from pinterest_data_pipeline_spark.operators import cleaning
+from pinterest_data_pipeline_spark.schemas import GEO_RAW, PIN_RAW, TESTDATA_SCHEMAS
+from pinterest_data_pipeline_spark.sources import json_landing
+from pinterest_data_pipeline_spark.sources.fixtures import generate_raw_rows
 from pinterest_data_pipeline_spark.sources.parquet import load_table
+from pinterest_data_pipeline_spark.streaming import sinks
+from pinterest_data_pipeline_spark.streaming.materialized_view import (
+    make_rollup_batch_fn,
+)
 from tests.conftest import SMOKE_SF
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -73,3 +83,60 @@ def _jobs_fired(spark, load) -> list[int]:
 def test_load_table_fires_no_jobs(spark, sf_dir):
     for name in DECLARED:
         assert _jobs_fired(spark, lambda: load_table(spark, sf_dir, name)) == [], name
+
+
+def _assert_manifest_schema_is_inferred(spark, target):
+    """The recorded schema equals what Spark infers from the committed
+    version's files, and ``read_target`` uses it: 0 jobs."""
+    m = sinks.read_manifest(target)
+    recorded = StructType.fromJson(m["schema"])
+    assert recorded == spark.read.parquet(os.path.join(target, m["current"])).schema
+    assert _jobs_fired(spark, lambda: sinks.read_target(spark, target)) == []
+    assert sinks.read_target(spark, target).schema == recorded
+
+
+def test_manifest_records_nested_schema(spark, tmp_path):
+    """Array, struct and map columns, including non-nullable fields,
+    elements and values, which the written files make nullable."""
+    geo_rows = generate_raw_rows(n=30, seed=7)[1]
+    df = (
+        cleaning.clean_geo(spark.createDataFrame(geo_rows, GEO_RAW))
+        .withColumn("loc", F.struct("country", F.lit(1).alias("one"), "coordinates"))
+        .withColumn("pairs", F.array(F.struct(F.lit(1).alias("a"))))
+        .withColumn("tags", F.create_map(F.lit("k"), F.array(F.lit(1.0))))
+    )
+    target = str(tmp_path / "geo")
+    os.makedirs(target)
+    sinks.commit_version(target, df, 0)
+    _assert_manifest_schema_is_inferred(spark, target)
+
+
+def test_pin_upsert_sink_records_inferred_schema(spark, tmp_path):
+    """Two micro-batches, so the second merges into the first's version."""
+    cols = [f.name for f in PIN_RAW.fields]
+    dicts = [dict(zip(cols, r)) for r in generate_raw_rows(n=60, seed=7)[0]]
+    land, target = str(tmp_path / "land"), str(tmp_path / "pin")
+    json_landing.write_landing_records(dicts[:30], land, 30)
+    updates = cleaning.clean_pin(json_landing.read_landing_stream(
+        spark, land, PIN_RAW, max_files_per_trigger=1
+    ))
+    q = sinks.upsert_stream_to_parquet(
+        updates, target, ["ind"], str(tmp_path / "ckpt")
+    )
+    try:
+        q.processAllAvailable()
+        json_landing.write_landing_records(dicts[30:], land, 30, prefix="b2")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sinks.read_manifest(target)["batch_id"] == 1
+    _assert_manifest_schema_is_inferred(spark, target)
+
+
+def test_rollup_view_records_inferred_schema(spark, tmp_path):
+    target = str(tmp_path / "mv")
+    os.makedirs(target)
+    fn = make_rollup_batch_fn(target, ["k"], "v")
+    fn(spark.createDataFrame([("a", 1.0), ("b", 5.0)], "k string, v double"), 0)
+    fn(spark.createDataFrame([("a", 10.0)], "k string, v double"), 1)
+    _assert_manifest_schema_is_inferred(spark, target)

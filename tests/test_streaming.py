@@ -698,6 +698,39 @@ def test_vacuum_keeps_current_and_recent_versions(spark, tmp_path):
     assert s.read_target(spark, target).count() == 3
 
 
+def _vacuum_target(spark, target, current):
+    import json as _json
+
+    for i in range(5):
+        spark.range(3).write.mode("overwrite").parquet(f"{target}/v{i:010d}")
+    with open(f"{target}/_MANIFEST.json", "w") as f:
+        _json.dump({"current": f"v{current:010d}", "batch_id": current}, f)
+
+
+def test_vacuum_keep_zero_keeps_only_current(spark, tmp_path):
+    """keep=0 removes every version but the manifest's current one, even
+    when current is not the newest directory."""
+    from pinterest_data_pipeline_spark.streaming import sinks as s
+
+    target = str(tmp_path / "vac0")
+    _vacuum_target(spark, target, current=3)
+    removed = s.vacuum_versions(target, keep=0)
+    assert removed == ["v0000000000", "v0000000001", "v0000000002", "v0000000004"]
+    left = sorted(x for x in os.listdir(target) if x.startswith("v"))
+    assert left == ["v0000000003"]
+    assert s.read_target(spark, target).count() == 3
+
+
+def test_vacuum_negative_keep_raises(spark, tmp_path):
+    from pinterest_data_pipeline_spark.streaming import sinks as s
+
+    target = str(tmp_path / "vacneg")
+    _vacuum_target(spark, target, current=4)
+    with pytest.raises(ValueError):
+        s.vacuum_versions(target, keep=-1)
+    assert len([x for x in os.listdir(target) if x.startswith("v")]) == 5
+
+
 def test_table_changes_classifies_insert_update_delete(spark, tmp_path):
     """CDF over the versioned sink: diffing two snapshot versions yields
     exactly the inserted/updated/deleted keys, unchanged rows dropped."""
