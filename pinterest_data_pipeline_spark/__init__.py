@@ -15,3 +15,16 @@ partial aggregation, AQE, and compacted outputs.
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+import sys as _sys
+
+# Spark sets SPARK_REUSE_WORKER in every reused Python worker (UDF and
+# data-source planner workers alike) and never in the driver. Planner
+# workers start from the stock pyspark.daemon and import this package when
+# they unpickle engine code, so this is where their per-call
+# importlib.invalidate_caches() stops re-reading pyspark.zip.
+if _sys.version_info < (3, 13) and "SPARK_REUSE_WORKER" in _os.environ:
+    from pinterest_data_pipeline_spark import pyworker_daemon
+
+    pyworker_daemon.backport_lazy_zip_invalidation()

@@ -13,6 +13,14 @@ directory is dropped, and the next lookup re-reads it once per archive.
 ``backport_lazy_zip_invalidation`` gives older Pythons that behaviour;
 forked workers inherit it from the daemon.
 
+The backport has a second caller: the package's ``__init__`` applies it
+in every reused Python worker (``SPARK_REUSE_WORKER`` set). That reaches
+the data-source planner workers, which Spark starts from the stock
+``pyspark.daemon``, from their second call on, and UDF workers of a
+session that does not set this daemon module. The daemon stays because
+it patches UDF workers before their first task, which need not import
+the package at all.
+
 Importing this module patches nothing.
 """
 

@@ -31,7 +31,9 @@ def get_spark(
       per-task ``importlib.invalidate_caches()`` lazy for zip archives on
       Python < 3.13: a one-task ``mapInArrow`` job fell from ~0.33 s to
       ~0.15 s on a 4-vCPU VM. Worker Pythons must be able to import this
-      package.
+      package. Data-source planner workers ignore the daemon setting;
+      the package's ``__init__`` applies the same backport in them (and
+      in any reused worker) when it is imported there.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (

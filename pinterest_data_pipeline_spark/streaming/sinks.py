@@ -7,8 +7,10 @@ each micro-batch's merge RESULT to a batch-id-stamped directory and
 atomically advancing a manifest pointer — a replayed batch (after crash
 between write and commit) simply overwrites its own directory and
 re-points the manifest to the same place. Readers resolve the manifest
-first, so they never observe a half-written version. The manifest also
-records the version's schema, so readers skip parquet footer inference.
+first, so they never observe a half-written version. Each version
+directory also holds its schema (``_SCHEMA.json``, skipped by Spark's
+reader like ``_SUCCESS``), and the manifest records the current one, so
+readers skip parquet footer inference, time-travel reads included.
 """
 
 from __future__ import annotations
@@ -23,17 +25,30 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 from pinterest_data_pipeline_spark.operators.merge import merge_upsert
 
 _MANIFEST = "_MANIFEST.json"
+_SCHEMA = "_SCHEMA.json"
+
+
+def _read_json(path: str) -> dict | None:
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write through a ``.``-prefixed temp file (skipped by Spark's reader)
+    and ``os.replace`` it into place, so readers never see half a file."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def read_manifest(target_dir: str) -> dict | None:
     """The committed manifest ({"current": version, "batch_id": n,
     "schema": StructType JSON}), or None before the first commit.
     Manifests written without "schema" are still valid."""
-    manifest = os.path.join(target_dir, _MANIFEST)
-    if not os.path.exists(manifest):
-        return None
-    with open(manifest) as f:
-        return json.load(f)
+    return _read_json(os.path.join(target_dir, _MANIFEST))
 
 
 def _already_committed(target_dir: str, batch_id: int) -> bool:
@@ -47,16 +62,27 @@ def _already_committed(target_dir: str, batch_id: int) -> bool:
     return m is not None and int(m.get("batch_id", -1)) >= batch_id
 
 
+def _read_version(
+    spark: SparkSession, target_dir: str, version: str, schema: dict | None
+) -> DataFrame:
+    """Read one version directory, with ``schema`` (StructType JSON) when
+    there is one, else the one committed inside the directory; a version
+    written without either is inferred."""
+    path = os.path.join(target_dir, version)
+    schema = schema or _read_json(os.path.join(path, _SCHEMA))
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
     """Resolve the manifest and read the current table version, with its
-    recorded schema when the manifest has one (no inference job)."""
+    recorded schema when there is one (no inference job)."""
     m = read_manifest(target_dir)
     if m is None:
         return None
-    reader = spark.read
-    if "schema" in m:
-        reader = reader.schema(StructType.fromJson(m["schema"]))
-    return reader.parquet(os.path.join(target_dir, m["current"]))
+    return _read_version(spark, target_dir, m["current"], m.get("schema"))
 
 
 def _as_nullable(dt: DataType) -> DataType:
@@ -75,20 +101,19 @@ def _as_nullable(dt: DataType) -> DataType:
 
 
 def commit_version(target_dir: str, df: DataFrame, batch_id: int) -> None:
-    """Write ``df`` to ``v<batch_id>`` and atomically repoint the manifest
-    at it, recording the written schema. A replayed batch overwrites its
-    own version directory."""
+    """Write ``df`` to ``v<batch_id>`` with its schema beside the files, and
+    atomically repoint the manifest at it, recording the schema there too.
+    A replayed batch overwrites its own version directory; a committed
+    directory is never written again, so its schema cannot go stale."""
     version = f"v{batch_id:010d}"
-    df.write.mode("overwrite").parquet(os.path.join(target_dir, version))
-    manifest = {
-        "current": version,
-        "batch_id": batch_id,
-        "schema": _as_nullable(df.schema).jsonValue(),
-    }
-    tmp = os.path.join(target_dir, f".{_MANIFEST}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(target_dir, _MANIFEST))  # atomic commit
+    path = os.path.join(target_dir, version)
+    df.write.mode("overwrite").parquet(path)
+    schema = _as_nullable(df.schema).jsonValue()
+    _write_json_atomic(os.path.join(path, _SCHEMA), schema)
+    _write_json_atomic(  # atomic commit
+        os.path.join(target_dir, _MANIFEST),
+        {"current": version, "batch_id": batch_id, "schema": schema},
+    )
 
 
 def upsert_stream_to_parquet(
@@ -126,8 +151,9 @@ def upsert_stream_to_parquet(
 
 def vacuum_versions(target_dir: str, keep: int = 2) -> list[str]:
     """Storage hygiene for the manifest-commit sink: delete version
-    directories older than the ``keep`` most recent, NEVER including the
-    manifest's current pointer. Returns the removed version names.
+    directories (files and recorded schema) older than the ``keep`` most
+    recent, NEVER including the manifest's current pointer. Returns the
+    removed version names.
 
     Retention discipline at scale: every micro-batch writes a full new
     version, so without vacuuming the sink stores O(batches) copies.
@@ -160,8 +186,9 @@ def read_target_version(
 ) -> DataFrame:
     """Time-travel read: load a specific retained version directory
     (``v<batchId>``) regardless of the manifest pointer — valid for any
-    version `vacuum_versions` has not removed."""
-    return spark.read.parquet(os.path.join(target_dir, version))
+    version `vacuum_versions` has not removed. Reads with the schema
+    committed in the directory (no inference job)."""
+    return _read_version(spark, target_dir, version, None)
 
 
 def table_changes(

@@ -10,6 +10,7 @@ from __future__ import annotations
 import glob
 import importlib.util
 import os
+import shutil
 import time
 import uuid
 
@@ -140,3 +141,29 @@ def test_rollup_view_records_inferred_schema(spark, tmp_path):
     fn(spark.createDataFrame([("a", 1.0), ("b", 5.0)], "k string, v double"), 0)
     fn(spark.createDataFrame([("a", 10.0)], "k string, v double"), 1)
     _assert_manifest_schema_is_inferred(spark, target)
+
+
+def test_table_changes_reads_committed_schemas(spark, tmp_path):
+    """Each committed version keeps its schema, so a time-travel diff of
+    two versions constructs with 0 jobs, and its output equals the diff
+    of the same files read by inference."""
+    target = str(tmp_path / "cdf")
+    os.makedirs(target)
+    cols = "k long, name string, v double"
+    sinks.commit_version(target, spark.createDataFrame(
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], cols), 0)
+    sinks.commit_version(target, spark.createDataFrame(
+        [(2, "b", 25.0), (3, "c", None), (4, "d", 40.0)], cols), 1)
+    inferred = str(tmp_path / "cdf_inferred")
+    shutil.copytree(target, inferred, ignore=shutil.ignore_patterns("_SCHEMA.json"))
+
+    def changes(d):
+        return sinks.table_changes(spark, d, "v0000000000", "v0000000001", ["k"])
+
+    assert _jobs_fired(spark, lambda: changes(target)) == []
+    got, want = changes(target), changes(inferred)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert {r.k: r._change_type for r in got.collect()} == {
+        1: "delete", 2: "update", 3: "update", 4: "insert",
+    }

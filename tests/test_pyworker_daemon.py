@@ -1,7 +1,9 @@
 """Python workers start from ``pyworker_daemon``: the per-task
 ``importlib.invalidate_caches()`` must not re-read zip directories (on
 Python < 3.13 that is 17 reads of pyspark.zip per task), and a zip that
-changes on disk must still import its new modules after invalidation."""
+changes on disk must still import its new modules after invalidation.
+Data-source planner workers start from the stock ``pyspark.daemon``;
+importing the package inside a reused worker patches them too."""
 
 from __future__ import annotations
 
@@ -67,3 +69,76 @@ def test_backport_still_sees_modules_added_to_a_zip(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "6"
+
+
+def test_reused_planner_worker_reads_no_zip_directory(spark):
+    """``partitions()`` runs in a reused ``plan_data_source_read`` worker.
+    It imports the package, as unpickling engine code does, and reports
+    the ``_read_directory`` calls made since its previous call in that
+    worker (-1 on the first). The source is defined here, so it pickles
+    by value and its worker never imports the package for it."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    class ZipReadProbeReader(DataSourceReader):
+        def partitions(self):
+            import zipimport
+
+            import pinterest_data_pipeline_spark  # noqa: F401
+
+            counter = getattr(zipimport, "_probe_reads", None)
+            if counter is None:
+                read = zipimport._read_directory
+                counter = zipimport._probe_reads = [0]
+
+                def counted(path):
+                    counter[0] += 1
+                    return read(path)
+
+                zipimport._read_directory = counted
+                reads = -1
+            else:
+                reads, counter[0] = counter[0], 0
+            return [InputPartition(reads)]
+
+        def read(self, partition):
+            yield (partition.value,)
+
+    class ZipReadProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "zip_read_probe"
+
+        def schema(self):
+            return "reads long"
+
+        def reader(self, schema):
+            return ZipReadProbeReader()
+
+    spark.dataSource.register(ZipReadProbe)
+    reads = [
+        spark.read.format("zip_read_probe").load().collect()[0].reads
+        for _ in range(4)
+    ]
+    assert reads[1:] == [0, 0, 0], reads
+
+
+def _invalidate_caches_module(env: dict) -> str:
+    out = subprocess.run(
+        [sys.executable, "-c", (
+            "import zipimport, pinterest_data_pipeline_spark; "
+            "print(zipimport.zipimporter.invalidate_caches.__module__)"
+        )],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip()
+
+
+def test_package_import_patches_only_reused_workers():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+    assert _invalidate_caches_module(env) == "zipimport"
+    patched = (
+        "pinterest_data_pipeline_spark.pyworker_daemon"
+        if sys.version_info < (3, 13) else "zipimport"
+    )
+    assert _invalidate_caches_module({**env, "SPARK_REUSE_WORKER": "1"}) == patched
