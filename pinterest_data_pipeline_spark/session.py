@@ -12,6 +12,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+# Spark 4.1 moved the class into ``checkpointing``; the pre-4.1 name
+# fails the query start with CANNOT_LOAD_CHECKPOINT_FILE_MANAGER.
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -34,6 +40,14 @@ def get_spark(
       package. Data-source planner workers ignore the daemon setting;
       the package's ``__init__`` applies the same backport in them (and
       in any reused worker) when it is imported there.
+    - Streaming checkpoints go through the FileSystem checkpoint manager.
+      The default FileContext manager renames each offset, commit and
+      state-store file with ``FileContext.rename``, which on the local
+      filesystem without native Hadoop forks ``readlink`` to resolve
+      links (``FileUtil.readLink``); the FileSystem manager keeps the same
+      temp-file + rename protocol and no-overwrite rule for the logs,
+      and renames with ``File.renameTo``. A 2-batch upsert stream forked
+      56 ``readlink`` and 40 ``chmod`` before, 40 ``chmod`` after.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -66,6 +80,7 @@ def get_spark(
         # plan shape; size thresholds gate it to genuinely large scans).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.python.daemon.module", "pinterest_data_pipeline_spark.pyworker_daemon")
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,6 +22,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pinterest_data_pipeline_spark.sources.sinks import record_schema
+
 
 def write_landing_records(
     rows: Iterable[dict], out_dir: str, records_per_file: int = 1,
@@ -78,12 +80,15 @@ def compact_to_parquet(
     """Compact a small-files landing load into large parquet files.
 
     ``maxRecordsPerFile`` bounds file size without forcing a single-task
-    ``coalesce(1)`` bottleneck; partition count stays parallel."""
+    ``coalesce(1)`` bottleneck; partition count stays parallel. The
+    written schema is recorded beside the files, so
+    ``sinks.read_partitioned`` reads them back without inference."""
     (
         df.write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
         .parquet(out_dir)
     )
+    record_schema(df, out_dir)
 
 
 def read_landing_json_quarantine(

@@ -15,40 +15,28 @@ readers skip parquet footer inference, time-travel reads included.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from pinterest_data_pipeline_spark.operators.merge import merge_upsert
+from pinterest_data_pipeline_spark.sources.sinks import (
+    read_json,
+    read_partitioned,
+    record_schema,
+    write_json_atomic,
+)
 
 _MANIFEST = "_MANIFEST.json"
-_SCHEMA = "_SCHEMA.json"
-
-
-def _read_json(path: str) -> dict | None:
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_json_atomic(path: str, obj: dict) -> None:
-    """Write through a ``.``-prefixed temp file (skipped by Spark's reader)
-    and ``os.replace`` it into place, so readers never see half a file."""
-    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def read_manifest(target_dir: str) -> dict | None:
     """The committed manifest ({"current": version, "batch_id": n,
     "schema": StructType JSON}), or None before the first commit.
     Manifests written without "schema" are still valid."""
-    return _read_json(os.path.join(target_dir, _MANIFEST))
+    return read_json(os.path.join(target_dir, _MANIFEST))
 
 
 def _already_committed(target_dir: str, batch_id: int) -> bool:
@@ -66,14 +54,12 @@ def _read_version(
     spark: SparkSession, target_dir: str, version: str, schema: dict | None
 ) -> DataFrame:
     """Read one version directory, with ``schema`` (StructType JSON) when
-    there is one, else the one committed inside the directory; a version
-    written without either is inferred."""
+    there is one, else with the record committed inside the directory; a
+    version written without either is inferred."""
     path = os.path.join(target_dir, version)
-    schema = schema or _read_json(os.path.join(path, _SCHEMA))
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(path)
+    if schema is None:
+        return read_partitioned(spark, path)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
 
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
@@ -85,21 +71,6 @@ def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
     return _read_version(spark, target_dir, m["current"], m.get("schema"))
 
 
-def _as_nullable(dt: DataType) -> DataType:
-    """``dt`` with every field, array element and map value nullable: the
-    schema Spark infers from parquet files it wrote from ``dt``."""
-    if isinstance(dt, StructType):
-        return StructType([
-            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in dt.fields
-        ])
-    if isinstance(dt, ArrayType):
-        return ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(dt.keyType, _as_nullable(dt.valueType), True)
-    return dt
-
-
 def commit_version(target_dir: str, df: DataFrame, batch_id: int) -> None:
     """Write ``df`` to ``v<batch_id>`` with its schema beside the files, and
     atomically repoint the manifest at it, recording the schema there too.
@@ -108,9 +79,8 @@ def commit_version(target_dir: str, df: DataFrame, batch_id: int) -> None:
     version = f"v{batch_id:010d}"
     path = os.path.join(target_dir, version)
     df.write.mode("overwrite").parquet(path)
-    schema = _as_nullable(df.schema).jsonValue()
-    _write_json_atomic(os.path.join(path, _SCHEMA), schema)
-    _write_json_atomic(  # atomic commit
+    schema = record_schema(df, path)
+    write_json_atomic(  # atomic commit
         os.path.join(target_dir, _MANIFEST),
         {"current": version, "batch_id": batch_id, "schema": schema},
     )

@@ -3,7 +3,8 @@ instead of inferring each parquet footer, so the declarations must equal
 what Spark infers from the fixture files — types and nullability — or a
 fixture change would silently read NULLs. And loading a declared table
 must stay free of Spark jobs: no footer inference. The same holds for the
-schema the manifest sink records with each committed version."""
+schema the manifest sink records with each committed version, and for the
+one compaction records beside its parquet files."""
 
 from __future__ import annotations
 
@@ -23,6 +24,13 @@ from pinterest_data_pipeline_spark.schemas import GEO_RAW, PIN_RAW, TESTDATA_SCH
 from pinterest_data_pipeline_spark.sources import json_landing
 from pinterest_data_pipeline_spark.sources.fixtures import generate_raw_rows
 from pinterest_data_pipeline_spark.sources.parquet import load_table
+from pinterest_data_pipeline_spark.sources.sinks import (
+    SCHEMA_RECORD,
+    read_partitioned,
+    record_schema,
+    write_json_atomic,
+    write_partitioned,
+)
 from pinterest_data_pipeline_spark.streaming import sinks
 from pinterest_data_pipeline_spark.streaming.materialized_view import (
     make_rollup_batch_fn,
@@ -167,3 +175,64 @@ def test_table_changes_reads_committed_schemas(spark, tmp_path):
     assert {r.k: r._change_type for r in got.collect()} == {
         1: "delete", 2: "update", 3: "update", 4: "insert",
     }
+
+
+def _cleaned_geo(spark):
+    """``clean_geo`` output: array and timestamp columns."""
+    geo_rows = generate_raw_rows(n=30, seed=7)[1]
+    return cleaning.clean_geo(spark.createDataFrame(geo_rows, GEO_RAW))
+
+
+def _compacted_geo(spark, out_dir):
+    """``_cleaned_geo`` compacted to ``out_dir``; returns the DataFrame."""
+    cleaned = _cleaned_geo(spark)
+    json_landing.compact_to_parquet(cleaned, out_dir)
+    return cleaned
+
+
+def _assert_reads_as_inferred(spark, path):
+    got, want = read_partitioned(spark, path), spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_compacted_parquet_reads_its_recorded_schema(spark, tmp_path):
+    """The record equals inference, types and nullability, so the read
+    skips the footer-inference job and returns the same rows."""
+    out = str(tmp_path / "geo")
+    _compacted_geo(spark, out)
+    assert _jobs_fired(spark, lambda: read_partitioned(spark, out)) == []
+    _assert_reads_as_inferred(spark, out)
+
+
+def test_spark_overwrite_drops_the_record(spark, tmp_path):
+    out = str(tmp_path / "geo")
+    cleaned = _compacted_geo(spark, out)
+    assert os.path.exists(os.path.join(out, SCHEMA_RECORD))
+    cleaned.select("ind", "country").write.mode("overwrite").parquet(out)
+    assert not os.path.exists(os.path.join(out, SCHEMA_RECORD))
+    _assert_reads_as_inferred(spark, out)
+
+
+def test_append_to_compacted_parquet_is_inferred(spark, tmp_path):
+    """A foreign append (here with an extra column) changes the listing,
+    so the record no longer applies."""
+    out = str(tmp_path / "geo")
+    cleaned = _compacted_geo(spark, out)
+    cleaned.withColumn("extra", F.lit(1)).write.mode("append").parquet(out)
+    assert _jobs_fired(spark, lambda: read_partitioned(spark, out)) != []
+    _assert_reads_as_inferred(spark, out)
+
+
+def test_partitioned_layout_is_inferred(spark, tmp_path):
+    """A partitioned layout has data subdirectories: ``record_schema``
+    writes no record there, and one put there by hand is never read."""
+    out = str(tmp_path / "geo_by_country")
+    cleaned = _cleaned_geo(spark)
+    write_partitioned(cleaned, out, ["country"])
+    schema = record_schema(cleaned.drop("country"), out)
+    assert not os.path.exists(os.path.join(out, SCHEMA_RECORD))
+    write_json_atomic(os.path.join(out, SCHEMA_RECORD), {"schema": schema, "files": {}})
+    assert _jobs_fired(spark, lambda: read_partitioned(spark, out)) != []
+    _assert_reads_as_inferred(spark, out)
+    assert "country" in read_partitioned(spark, out).columns
