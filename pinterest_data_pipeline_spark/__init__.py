@@ -23,8 +23,11 @@ import sys as _sys
 # data-source planner workers alike) and never in the driver. Planner
 # workers start from the stock pyspark.daemon and import this package when
 # they unpickle engine code, so this is where their per-call
-# importlib.invalidate_caches() stops re-reading pyspark.zip.
+# importlib.invalidate_caches() stops re-reading pyspark.zip. The
+# backport lives outside pyworker_daemon: the daemon Spark starts as
+# ``python -m ...pyworker_daemon`` imports this package first, and runpy
+# must not find that module already imported.
 if _sys.version_info < (3, 13) and "SPARK_REUSE_WORKER" in _os.environ:
-    from pinterest_data_pipeline_spark import pyworker_daemon
+    from pinterest_data_pipeline_spark import _lazy_zip
 
-    pyworker_daemon.backport_lazy_zip_invalidation()
+    _lazy_zip.backport_lazy_zip_invalidation()

@@ -643,10 +643,11 @@ def lpa_purchasing_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three rounds in SQL (the pagerank/power-iteration fixed-point
     precedent).
 
-    Scale: one edge barrier (edges + per-node self-loops, partitioned
-    by destination), then per round one (edge ⋈ label) shuffle + one
-    map-side argmax; round 1 votes straight from the edges, and the
-    plan grows linearly in rounds without per-round barriers."""
+    Scale: one edge barrier (edges + per-node self-loops), then per
+    round one (edge ⋈ label) shuffle + one map-side-combinable vote
+    aggregation (deterministic ``mode``); round 1 votes straight from
+    the edges, and the plan grows linearly in rounds without per-round
+    barriers."""
     from pinterest_data_pipeline_spark.operators.labelprop import (
         community_sizes,
     )

@@ -13,6 +13,11 @@ import sys
 import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: where ``zipimporter.invalidate_caches`` comes from once patched
+PATCHED = (
+    "pinterest_data_pipeline_spark._lazy_zip"
+    if sys.version_info < (3, 13) else "zipimport"
+)
 
 
 def test_worker_invalidate_caches_reads_no_zip_directory(spark):
@@ -137,8 +142,33 @@ def _invalidate_caches_module(env: dict) -> str:
 def test_package_import_patches_only_reused_workers():
     env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
     assert _invalidate_caches_module(env) == "zipimport"
-    patched = (
-        "pinterest_data_pipeline_spark.pyworker_daemon"
-        if sys.version_info < (3, 13) else "zipimport"
+    assert _invalidate_caches_module({**env, "SPARK_REUSE_WORKER": "1"}) == PATCHED
+
+
+def test_package_import_leaves_the_daemon_module_unimported():
+    """Spark runs the daemon as ``python -m ...pyworker_daemon``, which
+    imports the package first with ``SPARK_REUSE_WORKER`` set: had that
+    import loaded the daemon module, runpy would execute it a second
+    time and warn. Running the module the same way must print no
+    warning, and the package import alone must still patch."""
+    env = {**os.environ, "SPARK_REUSE_WORKER": "1"}
+    out = subprocess.run(
+        [sys.executable, "-c", (
+            "import sys, zipimport, pinterest_data_pipeline_spark; "
+            "print('pinterest_data_pipeline_spark.pyworker_daemon' in sys.modules, "
+            "zipimport.zipimporter.invalidate_caches.__module__)"
+        )],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=60,
     )
-    assert _invalidate_caches_module({**env, "SPARK_REUSE_WORKER": "1"}) == patched
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["False", PATCHED]
+
+    # pyspark.daemon's manager writes its port (4 bytes) to stdout, then
+    # exits as soon as it reads EOF on stdin
+    run = subprocess.run(
+        [sys.executable, "-m", "pinterest_data_pipeline_spark.pyworker_daemon"],
+        cwd=REPO, env=env, stdin=subprocess.DEVNULL, capture_output=True,
+        timeout=60,
+    )
+    assert len(run.stdout) == 4, run.stderr
+    assert b"RuntimeWarning" not in run.stderr, run.stderr

@@ -358,6 +358,72 @@ def test_lpa_shuffles_edges_once_per_action(spark):
     assert (len(edge_side), len(reused)) == (3, 2), final
 
 
+def test_lpa_handles_extreme_and_string_ids(spark):
+    """Ties break on the ids themselves, so the extreme longs and string
+    ids propagate like any other: on the 4-node graph (m,5),(5,6),(m,6),
+    (6,7) with m = -2**63 every node ends labeled m after 2 rounds, and
+    every run equals the pure-Python synchronous LPA."""
+    from pinterest_data_pipeline_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    def run(edges, ddl, iterations):
+        df = spark.createDataFrame(edges, ddl)
+        return {
+            r["node"]: r["label"]
+            for r in label_propagation(df, iterations=iterations).collect()
+        }
+
+    lo, hi = -(2**63), 2**63 - 1
+    quad = [(lo, 5), (5, 6), (lo, 6), (6, 7)]
+    assert run(quad + [(b, a) for a, b in quad], "src long, dst long", 2) == {
+        lo: lo, 5: lo, 6: lo, 7: lo
+    }
+    und = quad + [(hi, 8), (8, 9), (hi, 9), (9, None)]
+    longs = und + [(b, a) for a, b in und]
+    strs = [("b", "a"), ("a", "b"), ("b", "c"), ("c", "d"), ("d", "c"), (None, "a")]
+    for edges, ddl in ((longs, "src long, dst long"), (strs, "src string, dst string")):
+        for iterations in (1, 2, 3, 4):
+            assert run(edges, ddl, iterations) == _reference_lpa(edges, iterations), (
+                ddl, iterations,
+            )
+
+
+def test_lpa_votes_in_one_aggregation_per_round(spark, sf_dir):
+    """Each round plans ONE aggregation exchange keyed on the node (the
+    vote count and the smallest-label tie break in the same aggregate),
+    besides the round join's null-safe exchanges; and building
+    lpa_purchasing_communities fires at most 2 construction jobs (the
+    edge barrier's upstream shuffle stages: no repartition before it)."""
+    import contextlib
+    import io
+    import re
+
+    from pinterest_data_pipeline_spark.operators.labelprop import (
+        label_propagation,
+    )
+    from tests.test_declared_schemas import _jobs_fired
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = spark.createDataFrame(_random_graphs(), "src long, dst long")
+        for k in (1, 2, 4):
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                label_propagation(df, iterations=k).explain()
+            exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", buf.getvalue())
+            votes = [e for e in exchanges if not e.startswith("coalesce(")]
+            assert len(votes) == k, exchanges
+            assert all(re.fullmatch(r"node#\d+L?, \d+", e) for e in votes), votes
+    finally:
+        spark.conf.set(key, old)
+
+    lpa = QUERIES["lpa_purchasing_communities"]
+    assert len(_jobs_fired(spark, lambda: lpa(spark, sf_dir))) <= 2
+
+
 # --------------------------------------------------------- Fellegi-Sunter
 
 
