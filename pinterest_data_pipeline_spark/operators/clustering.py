@@ -8,10 +8,13 @@ each iteration is one shuffle — with deterministic initialization, so
 repeated runs produce identical results.
 
 Scale notes:
-- k-means: centroids live driver-side (k × dim doubles — tiny) and are
-  broadcast into the assignment expression each iteration; the corpus is
-  scanned once per iteration with a map-side partial aggregation for the
-  centroid update. No per-row Python.
+- k-means: `train_codebooks` is the one Lloyd trainer. It trains one
+  codebook per vector column in the same pass (IVF's coarse codebook is
+  one column, product quantization's subspaces are m), so the corpus is
+  scanned once per iteration whatever the column count. Centroids live
+  driver-side (k × dim doubles — tiny) and are inlined into the
+  assignment expression each iteration; the centroid update is one
+  map-side partial aggregation. No per-row Python.
 - duplicate clusters: min-label propagation over the pair graph. Each
   iteration is a join + groupBy-min on the edge list (|pairs|, not
   |corpus|). Near-dup graphs are overwhelmingly tiny cliques, so a few
@@ -22,22 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _neg_affinity(vec: Column, centroid: list[float]) -> Column:
-    """``‖c‖² − 2·v·c`` — equal to squared distance minus the per-row
-    constant ``‖v‖²``, so it has the same argmin. The dot product is one
-    ``zip_with``/``aggregate`` fold against a literal array (~70
-    expression nodes per centroid vs ~400 for the expanded
-    ``Σ(vᵢ−cᵢ)²`` form — planning time matters at k×dim scale)."""
-    c_arr = F.array(*[F.lit(float(x)) for x in centroid])
-    dot_vc = F.aggregate(
-        F.zip_with(vec, c_arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    c_norm2 = sum(float(x) * float(x) for x in centroid)
-    return F.lit(c_norm2) - F.lit(2.0) * dot_vc
 
 
 def _cents_sql(centroids: list[list[float]]) -> str:
@@ -58,11 +45,8 @@ def _cents_sql(centroids: list[list[float]]) -> str:
 def _affinity_structs_sql(vec_col: str, centroids: list[list[float]]) -> str:
     """SQL text of the per-centroid (affinity, cluster) struct array:
     ``transform`` over the literal codebook, affinity = c2 − 2·(fold of
-    centroid·component products, seeded at 0.0, left-to-right — the
-    exact order `_neg_affinity`'s Column fold evaluates, so both
-    construction paths produce bit-identical doubles; verified
-    identical trained centroids AND identical per-row (cluster, score)
-    at sf0.1). One string parsed by a single F.expr: the per-centroid
+    centroid·component products, seeded at 0.0, left-to-right). One
+    string parsed by a single F.expr: the per-centroid
     Column form built k zip_with folds whose unrolled whole-stage
     codegen dominated every assignment-bearing query (measured
     kmeans_codebook 4.6 s → 2.7 s at sf0.1, k=8 × dim=64; the same
@@ -91,6 +75,7 @@ def kmeans_codebook(
     Deterministic: initial centroids are the k lowest-``id_col`` vectors;
     iteration count is fixed. Returns the centroids (driver-side list) —
     the codebook is metadata, not data, so driver-side is the right home.
+    Raises ``ValueError`` on fewer than k rows (see `train_codebooks`).
     """
     from pinterest_data_pipeline_spark.operators.parallel import (
         _physical_plan,
@@ -112,36 +97,127 @@ def kmeans_codebook(
     work = fan_out(df).select(id_col, vec_col)
     if "ExistingRDD" not in _physical_plan(df):
         work = work.localCheckpoint(eager=False)
-    init = (
-        work.orderBy(id_col).limit(k).select(vec_col).collect()
-    )
-    centroids = [list(map(float, r[vec_col])) for r in init]
+    return train_codebooks(work, [vec_col], id_col, k, iterations)[1][0]
+
+
+def train_codebooks(
+    work: DataFrame,
+    vec_cols: list[str],
+    id_col: str,
+    k: int,
+    iterations: int,
+) -> tuple[list[list[list[float]]], list[list[list[float]]]]:
+    """Lloyd's algorithm on every column of ``vec_cols`` at once: one
+    k-centroid codebook per column, all columns of one dimension.
+    Returns ``(init, trained)``, each a list of codebooks in
+    ``vec_cols`` order.
+
+    Deterministic: the init codebooks are the k lowest-``id_col`` rows'
+    vectors, the iteration count is fixed, and an empty cluster keeps
+    its centroid. Fewer than k rows raises ``ValueError``.
+
+    Each iteration is ONE scan of ``work``: one select carrying every
+    column's `codebook_argmin` (chained per-column selects re-analyze
+    the growing plan each time — measured ~10 s of Spark-driver time
+    at eight columns), exploded to (column i, cluster c, vector v)
+    rows and reduced by one stacked ``groupBy(i, c)`` sum. Columns
+    never mix, so a column trained with others gets the codebook, bit
+    for bit, that it gets alone."""
+    first = work.orderBy(id_col).limit(k).select(*vec_cols).collect()
+    if len(first) < k:
+        raise ValueError(
+            f"codebook training needs at least k={k} vectors, got {len(first)}"
+        )
+    init = [[list(map(float, r[v])) for r in first] for v in vec_cols]
+    dim = len(init[0][0])
+    books = init
     for _ in range(iterations):
-        assign = assign_to_codebook(work, centroids, vec_col)
-        # centroid update: one partial-aggregated shuffle on cluster id
-        dim = len(centroids[0])
-        sums = assign.groupBy("cluster").agg(
-            F.count("*").alias("n"),
+        assigned = [
+            F.struct(
+                F.lit(i).alias("i"),
+                codebook_argmin(v, books[i]).getField("c").alias("c"),
+                F.col(v).alias("v"),
+            )
+            for i, v in enumerate(vec_cols)
+        ]
+        stacked = work.select(
+            F.explode(F.array(*assigned)).alias("s")
+        ).select("s.i", "s.c", "s.v")
+        sums = stacked.groupBy("i", "c").agg(
+            F.count(F.lit(1)).alias("n"),
             *[
-                F.sum(F.get(F.col(vec_col), i).cast("double")).alias(f"s{i}")
-                for i in range(dim)
+                F.sum(F.get(F.col("v"), j).cast("double")).alias(f"s{j}")
+                for j in range(dim)
             ],
         )
-        rows = {r["cluster"]: r for r in sums.collect()}
-        centroids = [
-            [rows[c][f"s{i}"] / rows[c]["n"] for i in range(dim)]
-            if c in rows
-            else centroids[c]  # empty cluster keeps its centroid
-            for c in range(k)
+        rows = {(r["i"], r["c"]): r for r in sums.collect()}
+        books = [
+            [
+                [rows[(i, c)][f"s{j}"] / rows[(i, c)]["n"] for j in range(dim)]
+                if (i, c) in rows
+                else book[c]  # empty cluster keeps its centroid
+                for c in range(k)
+            ]
+            for i, book in enumerate(books)
         ]
-    return centroids
+    return init, books
+
+
+def codebook_gate(
+    work: DataFrame,
+    vec_cols: list[str],
+    id_col: str,
+    k: int,
+    iterations: int,
+) -> DataFrame:
+    """Train once (`train_codebooks`) and emit the one-row gate
+    ``(n_vectors, objective_violations, range_violations)``.
+
+    ``objective_violations`` counts columns whose trained-codebook
+    assignment objective exceeds the init codebook's (Lloyd
+    monotonicity). The objective is the summed winning affinity
+    ``‖c‖² − 2v·c``: squared distance minus the codebook-independent
+    Σ‖v‖², so the comparison is offset-exact; a 1e-6 relative
+    tolerance absorbs shuffle-order float noise in the two sums (Lloyd
+    improvements are orders of magnitude larger when any occur).
+    ``range_violations`` counts assigned codes outside [0, k) over all
+    columns. The audit is ONE aggregate over ``work``."""
+    init, trained = train_codebooks(work, vec_cols, id_col, k, iterations)
+    audit = []
+    for i, v in enumerate(vec_cols):
+        best = codebook_argmin(v, trained[i])
+        code = best.getField("c")
+        audit += [
+            codebook_argmin(v, init[i]).getField("d").alias(f"__j0_{i}"),
+            best.getField("d").alias(f"__j_{i}"),
+            F.when(code.isNull() | (code < 0) | (code >= k), 1)
+            .otherwise(0)
+            .alias(f"__rv_{i}"),
+        ]
+    audited = work.select(*audit)
+    row = audited.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
+        *[F.sum(c).alias(c) for c in audited.columns],
+    )
+    j0 = [F.col(f"__j0_{i}") for i in range(len(vec_cols))]
+    j = [F.col(f"__j_{i}") for i in range(len(vec_cols))]
+    rv = [F.col(f"__rv_{i}") for i in range(len(vec_cols))]
+    return row.select(
+        "n_vectors",
+        sum(
+            F.when(b > a + F.lit(1e-6) * (F.abs(a) + 1), 1).otherwise(0)
+            for a, b in zip(j0, j)
+        )
+        .cast("bigint")
+        .alias("objective_violations"),
+        sum(rv).cast("bigint").alias("range_violations"),
+    )
 
 
 def assign_to_codebook(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    score_col: str | None = None,
 ) -> DataFrame:
     """Attach ``cluster`` = argmin distance to the codebook.
 
@@ -151,32 +227,18 @@ def assign_to_codebook(
     lowest-cluster-id tie-break, and the expression stays LINEAR in
     k×dim. (A chained ``when(d < best_d, ...)`` formulation embeds the
     running best twice per step — O(2^k) tree nodes; at k=8 that took
-    minutes of driver-side planning for 500 rows.)
-
-    ``score_col`` additionally attaches the winning affinity value
-    (``‖c‖² − 2v·c`` of the assigned centroid — squared distance minus
-    the per-row constant ``‖v‖²``). Summed over a fixed row set it
-    differs from the true k-means objective by a codebook-independent
-    constant, so objective COMPARISONS between codebooks are exact —
-    the basis of the Lloyd-monotonicity driver gate."""
-    best = codebook_argmin(vec_col, centroids)
-    out = df.withColumn("cluster", best.getField("c"))
-    if score_col is not None:
-        # the duplicated array_min is CSE'd by codegen, not recomputed
-        out = out.withColumn(score_col, best.getField("d"))
-    return out
+    minutes of driver-side planning for 500 rows.)"""
+    return df.withColumn(
+        "cluster", codebook_argmin(vec_col, centroids).getField("c")
+    )
 
 
 def codebook_argmin(vec_col: str, centroids: list[list[float]]) -> Column:
     """The bare argmin struct expression behind `assign_to_codebook`
-    (fields: d = winning affinity, c = winning cluster id) — for
-    callers that attach MANY assignments in one select (operators/pq:
-    eight chained assign_to_codebook calls re-analyze the growing plan
-    each time, measured ~10 s of driver time; one select with eight of
-    these expressions analyzes once). Built as one compact F.expr over
-    a literal codebook array — see `_affinity_structs_sql` for the
-    measured rationale and the bit-identity argument vs the
-    per-centroid Column-fold array it replaced."""
+    (fields: d = winning affinity, c = winning cluster id), for callers
+    that attach several assignments in one select (`train_codebooks`,
+    `codebook_gate`). Built as one compact F.expr over a literal
+    codebook array — see `_affinity_structs_sql`."""
     return F.expr(f"array_min({_affinity_structs_sql(vec_col, centroids)})")
 
 

@@ -56,9 +56,16 @@ CHECK_FIRST: list[str] = [
     # fixed 1024-id md5 panel in r12 after its x100 deep point read
     # 567 s — non-binding at test SFs, values unchanged, but changed
     # source takes a driver row) + the 28-query r6-evidence remainder
-    # + the first 6 of the r7-evidence set in registration order.
-    # 12 + 1 + 3 + 28 + 6 = 50 holds exactly.
+    # + the first 3 of the r7-evidence set in registration order; the
+    # 3 changed k-means queries of (0) lead.
+    # 3 + 12 + 1 + 3 + 28 + 3 = 50 holds exactly.
     #
+    # -- (0) changed since their last correctness rows (r11, r10, r11):
+    # k-means and product quantization train through one Lloyd trainer
+    # and one monotonicity gate (operators/clustering.train_codebooks).
+    "ivf_kmeans_codebook_assign",
+    "pq_codebook_train_gate",
+    "embedding_ivf_multiprobe_topk",
     # -- (1) the staged_round12 graph/linkage remainder (full oracles,
     # strict-mirror parity at sf0.001 + sf0.01, x30 stress rows; first
     # driver rows here):
@@ -124,10 +131,10 @@ CHECK_FIRST: list[str] = [
     "minhash_dedup_clusters",
     "semantic_dedup_survivors",
     "corpus_curation_full",
+    # ---- 50-row window boundary ----
     "embedding_quantize_error_bound",
     "udtf_split_sentences",
     "pii_redaction_counts",
-    # ---- 50-row window boundary ----
     #
     # ROUND-13 ROTATION NOTES (window arithmetic pre-planned):
     #   (a) 8 promotions: all of plans/staged_round14.py (SNM blocking

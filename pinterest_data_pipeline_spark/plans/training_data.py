@@ -807,51 +807,26 @@ def ivf_kmeans_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-k init) and assign every embedding to its coarse cell — the
     partition builder behind the IVF search path (embedding_ivf_topk
     uses the pre-existing label column; this builds such a partitioning
-    from scratch). Output is the driver gate row: vector coverage,
-    codebook size, Lloyd objective monotonicity (J_final ≤ J_init), and
-    cluster-id range — each either replayed exactly by DuckDB or pinned
-    to 0 violations. Per-cluster assignment behavior stays pinned by
-    tests/test_dedup_similarity.py.
+    from scratch). Output is `clustering.codebook_gate`'s row plus the
+    codebook size: vector coverage, Lloyd objective monotonicity
+    (J_final ≤ J_init) and cluster-id range — each either replayed
+    exactly by DuckDB or pinned to 0 violations. Per-cluster assignment
+    behavior stays pinned by tests/test_dedup_similarity.py.
 
-    Scale: each Lloyd iteration is one corpus scan with a map-side
-    partial centroid-sum shuffle; the codebook (k×dim doubles) lives
-    driver-side and broadcasts into the assignment expression."""
-    from pinterest_data_pipeline_spark.operators.clustering import (
-        assign_to_codebook,
-        kmeans_codebook,
-    )
+    Scale: training runs once (init and trained codebooks come from the
+    same pass); each Lloyd iteration is one scan of the checkpointed
+    (id, vector) columns with a map-side partial centroid-sum shuffle,
+    and the audit is one aggregate."""
+    from pinterest_data_pipeline_spark.operators.clustering import codebook_gate
+    from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
     emb = load_table(spark, sf_dir, "embeddings")
-    init = kmeans_codebook(emb, k=8, iterations=0)
-    trained = kmeans_codebook(emb, k=8, iterations=3)
-    j_init = (
-        assign_to_codebook(emb, init, score_col="__aff")
-        .agg(F.sum("__aff").alias("j_init"))
-    )
-    fin = assign_to_codebook(emb, trained, score_col="__aff")
-    fin_stats = fin.agg(
-        F.count("*").alias("n_vectors"),
-        F.sum("__aff").alias("j_final"),
-        F.sum(
-            F.when(
-                F.col("cluster").isNull()
-                | (F.col("cluster") < 0)
-                | (F.col("cluster") >= len(trained)),
-                1,
-            ).otherwise(0)
-        ).alias("range_violations"),
-    )
-    # tolerance absorbs shuffle-order float noise in the two sums; Lloyd
-    # improvements are orders of magnitude larger when any occur
-    tol = F.lit(1e-6) * (F.abs(F.col("j_init")) + 1)
-    return fin_stats.crossJoin(j_init).select(
-        F.col("n_vectors").cast("bigint").alias("n_vectors"),
-        F.lit(len(trained)).cast("bigint").alias("k_clusters"),
-        F.when(F.col("j_final") > F.col("j_init") + tol, 1)
-        .otherwise(0)
-        .cast("bigint")
-        .alias("objective_violations"),
-        F.col("range_violations").cast("bigint").alias("range_violations"),
+    work = fan_out(emb).select("vec_id", "embedding").localCheckpoint(eager=False)
+    return codebook_gate(work, ["embedding"], "vec_id", 8, 3).select(
+        "n_vectors",
+        F.lit(8).cast("bigint").alias("k_clusters"),
+        "objective_violations",
+        "range_violations",
     )
 
 

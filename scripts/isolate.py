@@ -1,5 +1,7 @@
 """Isolate and time individual registered queries with the noop sink
-(guide §1.4), several runs each, printing per-run seconds. Usage:
+(guide §1.4), several runs each, printing per-run seconds and Spark job
+counts (each run is its own job group, so construction-time jobs of the
+iterative operators count too). Usage:
 
     python scripts/isolate.py [-n RUNS] name [name ...]
 
@@ -38,18 +40,21 @@ def main() -> None:
     )
 
     ensure_embedding_band_state(spark, SF_DIR)
+    sc = spark.sparkContext
     for name in args:
         ts = []
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"{name} run {i}")
+            group = f"{name} run {i}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             QUERIES[name](spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
-            ts.append(time.perf_counter() - t0)
+            dt = time.perf_counter() - t0
+            ts.append((dt, len(sc.statusTracker().getJobIdsForGroup(group))))
         print(
-            f"{name}: min {min(ts):.3f}s  runs "
-            + " ".join(f"{t:.3f}" for t in ts),
+            f"{name}: min {min(t for t, _ in ts):.3f}s  runs "
+            + " ".join(f"{t:.3f}s/{n}jobs" for t, n in ts),
             flush=True,
         )
     spark.stop()

@@ -270,6 +270,21 @@ def test_int8_quantize_roundtrip_error(spark, emb):
     assert row["scale"] == 0.0 and row["q"] == [0, 0, 0, 0]
 
 
+@pytest.mark.parametrize("iterations", [0, 1])
+def test_kmeans_codebook_fewer_vectors_than_k_fails_loud(spark, iterations):
+    """n < k raises a clear ValueError before any Lloyd iteration: no
+    IndexError from the empty-cluster fallback, and no short codebook
+    returned silently when no iteration runs."""
+    from pinterest_data_pipeline_spark.operators.clustering import kmeans_codebook
+
+    tiny = spark.createDataFrame(
+        [(i, [float(i)] * 4) for i in range(3)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="at least k=8"):
+        kmeans_codebook(tiny, k=8, iterations=iterations)
+
+
 def test_ivf_multiprobe_recall_improves_and_converges(spark, emb):
     """Multiprobe recall vs brute force must be monotone in nprobe, and
     probing ALL codebook partitions must equal the exact top-k."""

@@ -202,6 +202,34 @@ def test_pq_gate_fewer_vectors_than_k_fails_loud(spark):
         pq_train_gate(tiny, dim=4, m=2, k=16, iterations=1)
 
 
+def test_stacked_codebooks_train_like_single_ones(spark, sf_dir):
+    """Training two vector columns in one stacked pass returns, bit for
+    bit, the codebooks each column trains alone: the stacked (column,
+    cluster) aggregate never mixes columns. PQ trains its subspaces
+    this way."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from pinterest_data_pipeline_spark.operators.clustering import (
+        train_codebooks,
+    )
+    from pinterest_data_pipeline_spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    work = emb.select(
+        "vec_id",
+        F.slice("embedding", 1, 8).alias("a"),
+        F.slice("embedding", 9, 8).alias("b"),
+    ).localCheckpoint()
+    init, trained = train_codebooks(work, ["a", "b"], "vec_id", 16, 2)
+    init_a, trained_a = train_codebooks(work, ["a"], "vec_id", 16, 2)
+    init_b, trained_b = train_codebooks(work, ["b"], "vec_id", 16, 2)
+    assert json.dumps(init) == json.dumps(init_a + init_b)
+    assert json.dumps(trained) == json.dumps(trained_a + trained_b)
+    assert trained != init  # the iterations moved the centroids
+
+
 # ------------------------------------------------------------ time series
 def test_dow_seasonality_flat_and_spiked(spark):
     from pinterest_data_pipeline_spark.operators.robust_stats import (
