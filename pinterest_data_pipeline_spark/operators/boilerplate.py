@@ -1,11 +1,11 @@
-"""Corpus-frequency boilerplate detection: find word n-grams that recur
+"""Corpus-frequency boilerplate detection: find word bigrams that recur
 across many documents (navigation chrome, license headers, template
 text) and score each document by how much of it is boilerplate — the
 cross-document complement of the within-document repetition signals in
 ``operators/text.py``.
 
 Scale design (100 TB corpus):
-- Per-document n-grams are built with pure expressions and deduplicated
+- Per-document bigrams are built with pure expressions and deduplicated
   executor-side (``array_distinct``) BEFORE the explode, so the
   document-frequency aggregation's shuffle carries each (doc, gram)
   once and map-side partial aggregation collapses repeats early.
@@ -29,19 +29,19 @@ from pyspark.sql import functions as F
 from pinterest_data_pipeline_spark.operators.decontam import word_ngrams
 
 
-def _doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def _doc_grams(df: DataFrame) -> DataFrame:
     return df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("ng"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(word_ngrams("text", 2))).alias("ng"),
     )
 
 
 def corpus_frequent_ngrams(
     df: DataFrame,
-    n: int = 2,
+    *,
     min_doc_frac: float = 0.08,
 ) -> DataFrame:
-    """Word ``n``-grams appearing in at least ``min_doc_frac`` of all
+    """Word bigrams appearing in at least ``min_doc_frac`` of all
     documents, with their document frequency: (ng, doc_freq).
 
     The corpus size enters as a broadcast one-row aggregate (a cross
@@ -49,7 +49,7 @@ def corpus_frequent_ngrams(
     row), keeping the whole computation one lazy plan."""
     n_docs = df.select(F.count("*").alias("__n_docs"))
     return (
-        _doc_grams(df, "doc_id", "text", n)
+        _doc_grams(df)
         .groupBy("ng")
         .agg(F.count("*").alias("doc_freq"))
         .crossJoin(F.broadcast(n_docs))
@@ -60,19 +60,19 @@ def corpus_frequent_ngrams(
 
 def boilerplate_fraction(
     df: DataFrame,
-    n: int = 2,
+    *,
     min_doc_frac: float = 0.08,
 ) -> DataFrame:
     """Per-document boilerplate share: the fraction of its distinct
-    ``n``-grams that are corpus-frequent (doc frequency at or above
+    word bigrams that are corpus-frequent (doc frequency at or above
     ``min_doc_frac`` of the corpus).
 
     Output: (doc_id, n_grams, n_frequent, boilerplate_frac) for every
     document with at least one gram. ``boilerplate_frac`` is an exact
     integer quotient rounded to 6dp, so the number is engine-portable.
     A curation funnel drops or truncates documents above a threshold."""
-    grams = _doc_grams(df, "doc_id", "text", n)
-    frequent = corpus_frequent_ngrams(df, n=n, min_doc_frac=min_doc_frac)
+    grams = _doc_grams(df)
+    frequent = corpus_frequent_ngrams(df, min_doc_frac=min_doc_frac)
     hits = (
         grams.join(F.broadcast(frequent.select("ng")), "ng")
         .groupBy("doc_id")

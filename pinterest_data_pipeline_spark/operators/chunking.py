@@ -64,42 +64,38 @@ def chunk_documents(
 
 def pack_sequences(
     df: DataFrame,
-    part_col: str = "lang",
-    order_col: str = "doc_id",
-    text_col: str = "text",
+    *,
     budget: int = 2048,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: assign each document to a
     fixed-token-budget training bin.
 
-    Documents are laid end-to-end in ``order_col`` order within each
-    ``part_col`` stream; a document's bin is the budget-window its first
+    Documents (``text``) are laid end-to-end in ``doc_id`` order within
+    each ``lang`` stream; a document's bin is the budget-window its first
     token falls in (``floor(prefix_tokens / budget)``). This is the
     standard streaming "concatenate then split every *budget* tokens"
     packing — deterministic, one pass, and exactly reproducible in ANSI
     SQL (unlike first-fit-decreasing, whose bin state is sequential).
 
-    Scale: one shuffle on ``part_col`` for the running-sum window. A
+    Scale: one shuffle on ``lang`` for the running-sum window. A
     skewed stream (one giant language) serializes its window into a
     single task; at 100 TB the fix is a composite stream key — e.g.
-    ``(lang, doc_id bucket)`` so each bucket packs independently —
-    which this function supports by passing a pre-built composite column
-    name as ``part_col``.
+    ``(lang, doc_id bucket)`` so each bucket packs independently.
 
-    Output: per (part_col, bin_id) — documents assigned and their token
+    Output: per (lang, bin_id) — documents assigned and their token
     total. ``total_tokens`` may overshoot ``budget`` by up to one
     document (the straddler keeps its starting bin)."""
-    n_tok = F.size(ws_tokens(text_col)).cast("long").alias("n_tok")
+    n_tok = F.size(ws_tokens("text")).cast("long").alias("n_tok")
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(order_col)
+        Window.partitionBy("lang")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prev = F.coalesce(F.sum("n_tok").over(w), F.lit(0).cast("long"))
     return (
-        df.select(part_col, order_col, n_tok)
+        df.select("lang", "doc_id", n_tok)
         .withColumn("bin_id", F.floor(prev / F.lit(budget)))
-        .groupBy(part_col, "bin_id")
+        .groupBy("lang", "bin_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tok").alias("total_tokens"),

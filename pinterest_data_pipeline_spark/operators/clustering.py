@@ -277,13 +277,6 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
             base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        # Checkpoint the edge list PARTITIONED BY the propagation join
-        # key: the checkpointed relation keeps its physical partitioning,
-        # so every round's edges⋈labels join reads it exchange-free —
-        # one |E| shuffle at setup buys back one |E| shuffle per round
-        # (measured: round time halved at sf0.1; ≥2 propagation rounds
-        # always run, so this is never a net loss).
-        .repartition(F.col("dst"))
         .localCheckpoint(eager=False)
     )
     # Round 1 is a pure aggregate, not a propagation join: starting from

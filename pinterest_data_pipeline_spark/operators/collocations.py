@@ -22,7 +22,7 @@ TOKEN_RE = "[a-z0-9]+"
 
 def pmi_bigrams(
     df: DataFrame,
-    min_count: int = 5,
+    *,
     top_k: int = 15,
 ) -> DataFrame:
     """Top-``top_k`` adjacent-pair collocations by pointwise mutual
@@ -33,8 +33,9 @@ def pmi_bigrams(
             = ln n_pair − ln N_pairs − ln n_w1 − ln n_w2 + 2·ln N_toks
 
     computed exactly in that five-term form (no big-integer products).
-    ``min_count`` suppresses the degenerate high-PMI tail (a pair seen
-    once between two hapaxes has maximal PMI and zero evidence).
+    A minimum pair count of 5 suppresses the degenerate high-PMI tail (a
+    pair seen once between two hapaxes has maximal PMI and zero
+    evidence).
     Ordering ties break on the ROUNDED pmi then words, so the top-k cut
     is identical across engines.
 
@@ -72,7 +73,7 @@ def pmi_bigrams(
     pair = (
         bigrams.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pair"))
-        .filter(F.col("n_pair") >= min_count)
+        .filter(F.col("n_pair") >= 5)
     )
     n_pairs = bigrams.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_pairs")
@@ -106,7 +107,7 @@ def pmi_bigrams(
 
 def llr_bigrams(
     df: DataFrame,
-    text_col: str = "text",
+    *,
     min_count: int = 5,
     top_k: int = 15,
 ) -> DataFrame:
@@ -132,7 +133,7 @@ def llr_bigrams(
     aggregate, two marginal joins, TakeOrdered cut."""
     toks = df.select(
         F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0
+            F.lower(F.col("text")), F.lit(TOKEN_RE), 0
         ).alias("__toks")
     ).filter(F.size("__toks") >= 2)
     bigrams = toks.select(

@@ -100,7 +100,7 @@ def association_rules(
     baskets: DataFrame,
     basket_col: str,
     item_col: str,
-    min_pair_support: int = 2,
+    *,
     top_k: int = 20,
 ) -> DataFrame:
     """Pairwise association rules (the Apriori support/confidence/lift
@@ -143,7 +143,7 @@ def association_rules(
             F.col("l.__i").alias("__a"), F.col("r.__i").alias("__c")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("pair_support"))
-        .filter(F.col("pair_support") >= min_pair_support)
+        .filter(F.col("pair_support") >= 2)
     )
     directed = pair_supp.select(
         F.col("__a").alias("antecedent"),

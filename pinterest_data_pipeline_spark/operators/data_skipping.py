@@ -121,16 +121,12 @@ def zorder_value(bucket_cols: list[Column], bits: int) -> Column:
     return z
 
 
-def zorder_layout(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    n_partitions: int = 16,
-) -> DataFrame:
-    """Cluster ``df`` on the Z-curve of ``cols`` (BIGINT-castable): one
-    stats scan collects per-column min/max (2*k scalars of driver-side
-    metadata, like the IVF codebook), then the z key is computed row-wise
-    and the frame is range-partitioned + sorted on it. Writing the result
+def zorder_layout(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Cluster ``df`` into 16 files on the Z-curve of ``cols``
+    (BIGINT-castable, 8 bits each): one stats scan collects per-column
+    min/max (2*k scalars of driver-side metadata, like the IVF
+    codebook), then the z key is computed row-wise and the frame is
+    range-partitioned + sorted on it. Writing the result
     yields files whose per-column [min, max] spans are hyper-rectangle
     sized, so ``build_manifest`` prunes on every indexed column.
 
@@ -138,11 +134,12 @@ def zorder_layout(
     with Morton BLOCK boundaries. Range-partitioning on raw z samples
     quantiles, so file boundaries land mid-block and every file straddles
     two hyper-rectangles (measured: a 5%-wide 1-D band kept 9/16 files).
-    Partitioning on the top ``log2(n_partitions)`` bits of z — the
+    Partitioning on the top log2(16) bits of z — the
     aligned block id — makes each file one rectangle (same band: ≤4/16
     files). Cost at scale is unchanged: the stats scan + one range
     shuffle, identical shape to the single-column sorted layout it
     replaces; only the sort KEY is smarter."""
+    bits, n_partitions = 8, 16
     aggs: list[Column] = []
     for c in cols:
         aggs += [

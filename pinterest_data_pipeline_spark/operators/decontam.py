@@ -53,12 +53,8 @@ def word_ngrams(text: Column | str, n: int) -> Column:
     return F.get(F.transform(F.array(ws_tokens(text)), _grams_of), 0)
 
 
-def ngram_contamination(
-    df: DataFrame,
-    eval_pred: Column,
-    n: int = 4,
-) -> DataFrame:
-    """Per-training-document count of distinct word ``n``-grams shared
+def ngram_contamination(df: DataFrame, eval_pred: Column) -> DataFrame:
+    """Per-training-document count of distinct word 4-grams shared
     with the evaluation slice (``eval_pred`` selects eval rows).
 
     Returns (doc_id, n_shared) for contaminated documents only — a
@@ -68,7 +64,7 @@ def ngram_contamination(
     grams = df.select(
         F.col("doc_id"),
         eval_pred.alias("is_eval"),
-        F.explode(F.array_distinct(word_ngrams("text", n))).alias("ng"),
+        F.explode(F.array_distinct(word_ngrams("text", 4))).alias("ng"),
     )
     eval_grams = (
         grams.filter(F.col("is_eval")).select("ng").distinct()
@@ -81,13 +77,9 @@ def ngram_contamination(
     )
 
 
-def jaccard_contamination(
-    df: DataFrame,
-    eval_pred: Column,
-    n: int = 3,
-) -> DataFrame:
-    """Fuzzy decontamination: per training document, the maximum n-gram
-    Jaccard similarity against ANY evaluation document (``eval_pred``
+def jaccard_contamination(df: DataFrame, eval_pred: Column) -> DataFrame:
+    """Fuzzy decontamination: per training document, the maximum word
+    3-gram Jaccard similarity against ANY evaluation document (``eval_pred``
     selects eval rows), plus how many eval documents it overlaps at all.
 
     Where :func:`ngram_contamination` flags exact shared grams, this
@@ -102,7 +94,7 @@ def jaccard_contamination(
     grams = df.select(
         F.col("doc_id"),
         eval_pred.alias("is_eval"),
-        F.explode(F.array_distinct(word_ngrams("text", n))).alias("ng"),
+        F.explode(F.array_distinct(word_ngrams("text", 3))).alias("ng"),
     )
     sizes = grams.groupBy("doc_id", "is_eval").agg(
         F.count("*").alias("n_grams")

@@ -487,10 +487,10 @@ def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
+    *,
     portable: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
+    """Near-dup pairs with SimHash Hamming distance ≤ 3.
 
     With 4 chunks, distance ≤ 3 implies ≥ 1 identical chunk, so candidates
     come from 4 chunk-equality joins (unioned), then exact Hamming via
@@ -567,7 +567,7 @@ def simhash_near_pairs(
             F.col("r.__id").alias("id_b"),
             hamming.cast("int").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )
 
@@ -659,24 +659,24 @@ def incremental_minhash_candidates(
 
 def winnowing_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    *,
     k: int = 5,
     window: int = 4,
     portable: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (the MOSS rolling-hash scheme,
-    Schleimer et al., SIGMOD'03): hash every word ``k``-gram, slide a
-    ``window`` over the hash sequence, keep each window's MINIMUM — the
-    selected set is guaranteed to contain at least one hash from every
-    run of ``window`` consecutive grams, so any shared substring of
-    ``k + window - 1`` tokens between two documents yields a shared
-    fingerprint, while storage shrinks to ~2/(window+1) of the gram
-    stream. This is the "document fingerprinting (rolling hash)" scheme
-    proper — exact dedup hashes whole docs, MinHash approximates global
+    Schleimer et al., SIGMOD'03): hash every word ``k``-gram of
+    ``text``, slide a ``window`` over the hash sequence, keep each
+    window's MINIMUM — the selected set is guaranteed to contain at
+    least one hash from every run of ``window`` consecutive grams, so
+    any shared substring of ``k + window - 1`` tokens between two
+    documents yields a shared fingerprint, while storage shrinks to
+    ~2/(window+1) of the gram stream. This is the "document
+    fingerprinting (rolling hash)" scheme proper — exact dedup hashes
+    whole docs, MinHash approximates global
     Jaccard; winnowing localizes: it finds documents sharing PASSAGES.
 
-    Returns distinct (id_col, fp) rows (set semantics: the selected
+    Returns distinct (doc_id, fp) rows (set semantics: the selected
     minima VALUES per document — positional tie-break variants select
     the same value set). Documents shorter than ``k`` tokens fingerprint
     their whole text; gram streams shorter than ``window`` keep their
@@ -693,7 +693,7 @@ def winnowing_fingerprints(
     plans/round5_promotions.py)."""
     if k < 1 or window < 1:
         raise ValueError(f"k and window must be >= 1 (got k={k}, window={window})")
-    toks = tokens(text_col)
+    toks = tokens("text")
     t = F.col("__t")
     n = F.size(t)
     gram = lambda i: F.concat_ws(" ", F.slice(t, i, k))  # noqa: E731
@@ -717,13 +717,13 @@ def winnowing_fingerprints(
 
     return (
         fan_out(df)
-        .select(F.col(id_col), toks.alias("__t"))
+        .select(F.col("doc_id"), toks.alias("__t"))
         .select(
-            id_col,
+            "doc_id",
             F.transform(grams, lambda g: hash_fn(g)).alias("__gh"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.explode(F.array_distinct(minima)).alias("fp"),
         )
         # exchange on fp: same pattern as minhash_banded — the pair
@@ -738,32 +738,30 @@ def winnowing_fingerprints(
 
 def winnowing_shared_passages(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
+    *,
     min_shared: int = 2,
     max_bucket_size: int | None = 64,
     portable: bool = False,
 ) -> DataFrame:
-    """Passage-overlap pairs via winnowing: documents sharing at least
-    ``min_shared`` winnowed fingerprints, with the shared count — the
-    plagiarism/near-copy detector over local passages (contrast:
-    MinHash pairs approximate WHOLE-document Jaccard).
+    """Passage-overlap pairs via winnowing: ``doc_id``s whose ``text``
+    shares at least ``min_shared`` winnowed fingerprints (5-grams,
+    window 4), with the shared count — the plagiarism/near-copy
+    detector over local passages (contrast: MinHash pairs approximate
+    WHOLE-document Jaccard).
 
     Scale: fingerprint-keyed self-join; hot fingerprints (boilerplate
     passages) are trimmed to their ``max_bucket_size`` min-id members by
     ``cap_bucket_size`` exactly like LSH band buckets, so pair output
     stays bucket-bounded while heavy duplication still pairs among the
     retained rows instead of silently vanishing."""
-    fps = winnowing_fingerprints(df, id_col, text_col, k, window, portable)
-    fps = fps.withColumnRenamed(id_col, "__id")
+    fps = winnowing_fingerprints(df, portable=portable)
+    fps = fps.withColumnRenamed("doc_id", "__id")
     if max_bucket_size is not None:
         fps = cap_bucket_size(fps, ["fp"], max_bucket_size)
     # materialize the fingerprint relation once: the self-join otherwise
     # re-executes the whole corpus scan + md5-per-gram pipeline for each
     # side (ReuseExchange cannot dedupe them when the planner broadcasts
-    # one side). The checkpointed relation is the winnowed ~2/(window+1)
+    # one side). The checkpointed relation is the winnowed ~2/5
     # fraction of the gram stream, small next to the text it came from.
     fps = fps.localCheckpoint(eager=False)
     left, right = fps.alias("l"), fps.alias("r")

@@ -26,17 +26,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def k_core_peel_profile(
-    edges: DataFrame, k: int, rounds: int = 3
-) -> DataFrame:
-    """(peel_round, n_nodes, n_edges) after 0..``rounds`` peels of
-    nodes with degree < ``k``.
+def k_core_peel_profile(edges: DataFrame, k: int) -> DataFrame:
+    """(peel_round, n_nodes, n_edges) after 0..3 peels of nodes with
+    degree < ``k``.
 
     ``edges`` holds DIRECTED rows (src, dst), both directions for an
     undirected graph — so a node's degree is its count as ``src`` and
     ``n_edges`` reports undirected pairs (directed rows ÷ 2)."""
-    if k < 1 or rounds < 0:
-        raise ValueError(f"need k >= 1 and rounds >= 0, got {k}, {rounds}")
+    if k < 1:
+        raise ValueError(f"peel rounds need k >= 1, got {k}")
+    rounds = 3
     profiles = []
     cur = edges.select("src", "dst")
     for r in range(rounds + 1):

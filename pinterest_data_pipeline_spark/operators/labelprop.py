@@ -111,11 +111,11 @@ def _adopt_top_vote(votes: DataFrame) -> DataFrame:
     return votes.groupBy("node").agg(F.mode("label", True).alias("label"))
 
 
-def community_sizes(edges: DataFrame, iterations: int = 3) -> DataFrame:
+def community_sizes(edges: DataFrame) -> DataFrame:
     """LPA community histogram: (community, n_nodes), community = the
-    propagated label."""
+    label after 3 rounds."""
     return (
-        label_propagation(edges, iterations)
+        label_propagation(edges)
         .groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_nodes"))
     )

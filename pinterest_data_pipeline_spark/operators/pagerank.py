@@ -42,8 +42,8 @@ def symmetric_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     return fwd.unionByName(rev)
 
 
-def pagerank_fixed_point(edges: DataFrame, iterations: int = 3) -> DataFrame:
-    """Run ``iterations`` of integer fixed-point PageRank (damping 0.85)
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
+    """Run 3 iterations of integer fixed-point PageRank (damping 0.85)
     over a directed edge DataFrame with columns (src, dst).
 
     Returns (node, rank_micro): rank in micro-units, starting mass
@@ -74,6 +74,7 @@ def pagerank_fixed_point(edges: DataFrame, iterations: int = 3) -> DataFrame:
     )
 
     ranks = nodes.withColumn("rank_micro", F.lit(MICRO).cast("bigint"))
+    iterations = 3
     for i in range(iterations):
         contrib = ew.join(
             ranks, ew["src"] == ranks["node"]

@@ -23,10 +23,11 @@ def pq_train_gate(
     df: DataFrame,
     dim: int = 64,
     m: int = 8,
-    k: int = 16,
+    *,
     iterations: int = 2,
 ) -> DataFrame:
-    """Train an m-subspace PQ codebook and emit the one-row gate:
+    """Train an m-subspace PQ codebook (k = 16 codes per subspace) and
+    emit the one-row gate:
 
         (n_vectors, m_subspaces, k_per_subspace, code_bytes,
          objective_violations, range_violations)
@@ -48,6 +49,7 @@ def pq_train_gate(
     )
     from pinterest_data_pipeline_spark.operators.parallel import fan_out
 
+    k = 16
     subdim = dim // m
     work = fan_out(
         df.select(

@@ -22,9 +22,8 @@ from pyspark.sql import functions as F
 def k_anonymity_audit(
     df: DataFrame,
     quasi_cols: list[Column | str],
-    k: int = 5,
 ) -> DataFrame:
-    """One-row k-anonymity audit over the given quasi-identifier
+    """One-row k-anonymity audit (k = 5) over the given quasi-identifier
     columns:
 
         (n_rows, n_groups, k_min, groups_below_k, rows_below_k,
@@ -40,6 +39,7 @@ def k_anonymity_audit(
     Scale: ONE grouped count over the quasi columns (map-side combine),
     then every statistic is an aggregate over the |classes| relation.
     No windows, no joins."""
+    k = 5
     groups = df.groupBy(*quasi_cols).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n")
     )
@@ -66,7 +66,6 @@ def l_diversity_audit(
     df: DataFrame,
     quasi_cols: list[Column | str],
     sensitive_col: str,
-    l_threshold: int = 2,
 ) -> DataFrame:
     """One-row ℓ-diversity audit (Machanavajjhala et al. 2007) — the
     release gate k-anonymity alone cannot provide: a k-anonymous class
@@ -78,8 +77,8 @@ def l_diversity_audit(
          diverse_share_r6)
 
     ``l_min`` is the dataset's actual ℓ level; ``diverse_share_r6`` the
-    fraction of rows in classes with ≥ ``l_threshold`` distinct
-    sensitive values. NULL sensitive values count as one value (they
+    fraction of rows in classes with ≥ 2 distinct sensitive values.
+    NULL sensitive values count as one value (they
     are a disclosure too — "field withheld" is information); NULL
     quasi-values group together (the k_anonymity_audit convention).
 
@@ -89,6 +88,7 @@ def l_diversity_audit(
     # count_distinct ignores NULLs in every engine; the sentinel
     # coalesce makes NULL a countable value per the docstring contract
     # (mirrored in oracles).
+    l_threshold = 2
     sens = F.coalesce(
         F.col(sensitive_col).cast("string"), F.lit("__NULL__")
     )

@@ -45,14 +45,15 @@ def range_join_bands(
     facts: DataFrame,
     value_col: str,
     bands: DataFrame,
-    bin_width: float = 1000.0,
 ) -> DataFrame:
     """Join each fact row to the band(s) whose ``[lo, hi)`` interval
-    contains ``value_col``, as a bin-keyed equi-join + residual filter.
+    contains ``value_col``, as a bin-keyed equi-join (bins 1000 wide) +
+    residual filter.
 
     ``bands`` is expected to be small (it is exploded ×overlap and
     broadcast); ``facts`` can be arbitrarily large. With non-overlapping
     bands each fact row matches at most one band."""
+    bin_width = 1000.0
     binned_bands = explode_bands_to_bins(bands, "lo", "hi", bin_width)
     keyed = facts.withColumn(BIN_COL, bin_value(F.col(value_col), bin_width))
     residual = (F.col(value_col) >= F.col("lo")) & (

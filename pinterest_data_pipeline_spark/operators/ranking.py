@@ -363,7 +363,7 @@ def rbo_at_k(
     a: DataFrame,
     b: DataFrame,
     id_col: str,
-    rank_col: str = "rank",
+    *,
     p: float = 0.9,
 ) -> DataFrame:
     """Rank-biased overlap at depth k = 10 (Webber et al., TOIS 2010)
@@ -373,7 +373,7 @@ def rbo_at_k(
 
         RBO@k = (1−p) · Σ_{d=1..k} p^(d−1) · |A_d ∩ B_d| / d
 
-    Inputs are two relations carrying (id, rank) with ranks 1..k
+    Inputs are two relations carrying (id, ``rank``) with ranks 1..k
     (ties already broken upstream — determinism is the caller's
     ordering contract). Returns ONE row: (overlap_at_k, rbo_r6).
     The depth weights (1−p)·p^(d−1)/d are Python-computed literals
@@ -386,9 +386,9 @@ def rbo_at_k(
     part, producing the top-k lists, is the caller's
     TakeOrderedAndProject)."""
     j = a.select(
-        F.col(id_col).alias("__id"), F.col(rank_col).alias("__ra")
+        F.col(id_col).alias("__id"), F.col("rank").alias("__ra")
     ).join(
-        b.select(F.col(id_col).alias("__id"), F.col(rank_col).alias("__rb")),
+        b.select(F.col(id_col).alias("__id"), F.col("rank").alias("__rb")),
         "__id",
     )
     aggs = [
@@ -420,9 +420,8 @@ def average_precision_at_k(
     group_col: str,
     rank_col: str,
     rel_col: str,
-    k: int = 10,
 ) -> DataFrame:
-    """Average precision at depth ``k`` per group — the binary-label
+    """Average precision at depth k = 10 per group — the binary-label
     companion to NDCG (graded) and RBO (label-free):
 
         AP@k = Σ_{i≤k, rel_i} P@i / min(R, k),   P@i = (#rel in top i)/i
@@ -442,6 +441,7 @@ def average_precision_at_k(
     Scale: one grouped aggregate for R, one ≤k-row fold per group; the
     rank window is the caller's (TakeOrdered for global rankers,
     per-group window otherwise)."""
+    k = 10
     g = F.col(group_col)
     rel = F.col(rel_col).cast("bigint")
     totals = graded.groupBy(g.alias("__g")).agg(
@@ -622,10 +622,8 @@ def err_at_k(
     group_col: str,
     rank_col: str,
     grade_col: str,
-    k: int = 10,
-    g_max: int = 9,
 ) -> DataFrame:
-    """Expected Reciprocal Rank at k (Chapelle et al. 2009) — the
+    """Expected Reciprocal Rank at k = 10 (Chapelle et al. 2009) — the
     CASCADE-model companion to ndcg_at_k: where NDCG assumes the user
     inspects every position with geometric patience, ERR models a user
     who STOPS at the first satisfying result,
@@ -638,7 +636,7 @@ def err_at_k(
     from "uniformly okay" rankings NDCG scores alike.
 
     ``graded`` carries one row per (group, item) with the ranker's
-    1-based ``rank_col`` and integer grades in [0, g_max], g_max ≤ 62
+    1-based ``rank_col`` and integer grades in [0, g_max], g_max = 9
     (2^g exact in the double). With g_max bounding the grades, R < 1
     always, so the survival product never hits an exact zero and its
     log-space form is well-defined.
@@ -655,8 +653,8 @@ def err_at_k(
     group."""
     r_prob = (
         F.pow(F.lit(2.0), F.col(grade_col).cast("double")) - F.lit(1.0)
-    ) / F.lit(float(2**g_max))
-    top = graded.filter(F.col(rank_col) <= k).select(
+    ) / F.lit(float(2**9))
+    top = graded.filter(F.col(rank_col) <= 10).select(
         F.col(group_col).alias("__g"),
         F.col(rank_col).alias("__pos"),
         r_prob.alias("__r"),

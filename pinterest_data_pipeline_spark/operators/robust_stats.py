@@ -181,12 +181,11 @@ def autocorr_daily(
     df: DataFrame,
     ts_col: str,
     amount_col: str,
-    lags: tuple[int, ...] = (1, 7),
 ) -> DataFrame:
     """Lag-k autocorrelation of the daily total of a money column —
     the seasonality probe (lag 7 ≫ lag 1 means a weekly cycle) run
     before fitting any forecast on a revenue series. Returns one row
-    per lag: (lag, n_days, n_pairs, autocorr_r6) with the standard
+    per lag k ∈ {1, 7}: (lag, n_days, n_pairs, autocorr_r6) with the standard
     estimator r_k = Σ(x_t−x̄)(x_{t+k}−x̄) / Σ(x_t−x̄)².
 
     The daily series is built as exact integer cents (one grouped sum),
@@ -224,7 +223,7 @@ def autocorr_daily(
         F.sum(F.col("__cents") * F.col("__cents")).alias("__scc"),
     )
     out = None
-    for k in lags:
+    for k in (1, 7):
         lagged = daily.select(
             F.date_add(F.col("__d").cast("date"), k)
             .cast("timestamp")

@@ -39,10 +39,10 @@ def stratified_sample_exact(
 
 
 def repeat_by_weight(
-    df: DataFrame, domain_col: str, weights: dict[str, int], default: int = 1
+    df: DataFrame, domain_col: str, weights: dict[str, int]
 ) -> DataFrame:
-    """Replicate each row ``weights[domain]`` times (``default`` for
-    unlisted domains; weight 0 drops the domain). Adds ``copy_id``
+    """Replicate each row ``weights[domain]`` times (once for unlisted
+    domains; weight 0 drops the domain). Adds ``copy_id``
     (1..weight). The weight table is driver-side metadata broadcast into
     the scan stage — row replication happens executor-side in the explode,
     never by unioning N scans."""
@@ -55,7 +55,7 @@ def repeat_by_weight(
     )
     return (
         df.join(wdf, domain_col, "left")
-        .withColumn("__weight", F.coalesce("__weight", F.lit(default)))
+        .withColumn("__weight", F.coalesce("__weight", F.lit(1)))
         .filter(F.col("__weight") > 0)
         .withColumn("copy_id", F.explode(F.sequence(F.lit(1), F.col("__weight"))))
         .drop("__weight")
@@ -90,11 +90,11 @@ def hash_split(
 
 def deterministic_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
+    *,
     n_shards: int = 16,
 ) -> DataFrame:
     """Content-addressed global shuffle: assign every row a shard and a
-    position inside it, both derived from ``md5(id)`` — the
+    position inside it, both derived from ``md5(doc_id)`` — the
     reproducible "shuffle the corpus before training" step.
 
     Like :func:`hash_split`, this deliberately avoids ``rand(seed)``
@@ -114,8 +114,8 @@ def deterministic_shuffle(
     same layout, no rank materialized; the rank here makes the order
     oracle-checkable."""
     hexpos = "instr('0123456789abcdef', substring(__h, {i}, 1)) - 1"
-    h = F.md5(F.col(id_col).cast("string"))
-    win = Window.partitionBy("shard").orderBy("__h", id_col)
+    h = F.md5(F.col("doc_id").cast("string"))
+    win = Window.partitionBy("shard").orderBy("__h", "doc_id")
     return (
         df.withColumn("__h", h)
         .withColumn(
@@ -264,13 +264,12 @@ def epoch_capped_mixture(
     source_col: str,
     tokens_col: str,
     budget: int,
-    max_epochs: int = 2,
 ) -> DataFrame:
     """Token-budget mixture planning with per-source epoch caps
     (water-filling): each source asks for a share of ``budget``
     proportional to ``sqrt(n_docs)`` (the T=2 low-resource boost of
     :func:`sqrt_temperature_shares`), but no source may be allocated
-    more than ``max_epochs`` passes over its own tokens; one fixed
+    more than two passes over its own tokens; one fixed
     redistribution round hands capped sources' surplus to the uncapped
     ones by the same rule. Returns per source: doc/token counts, the
     cap, the final allocation, and epochs (6dp).
@@ -289,7 +288,7 @@ def epoch_capped_mixture(
         F.sum(F.col(tokens_col).cast("bigint")).alias("n_tokens"),
     )
     w = F.sqrt(F.col("n_docs").cast("double"))
-    cap = (F.col("n_tokens") * F.lit(int(max_epochs))).cast("bigint")
+    cap = (F.col("n_tokens") * F.lit(2)).cast("bigint")
     norm1 = counts.agg(
         F.aggregate(
             F.sort_array(
@@ -522,10 +521,9 @@ def contrastive_negative_sample(
     df: DataFrame,
     id_col: str,
     group_col: str,
-    k: int = 3,
 ) -> DataFrame:
     """Deterministic k-negative sampling for contrastive training —
-    for every anchor row, draw ``k`` negatives from OTHER groups
+    for every anchor row, draw k = 3 negatives from OTHER groups
     (sources), the batch-construction step of every contrastive /
     triplet objective (SimCLR, CLIP, two-tower retrieval): the
     negative must be content-addressed (same pick on every run,
@@ -583,7 +581,7 @@ def contrastive_negative_sample(
             "__aid",
             "__agrp",
             "__ng",
-            F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__j"),
+            F.explode(F.sequence(F.lit(0), F.lit(2))).alias("__j"),
         )
         .withColumn(
             "__ballot",

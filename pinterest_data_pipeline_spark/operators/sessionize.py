@@ -2,7 +2,7 @@
 
 The classic batch sessionizer: within each user's timeline, a new
 session starts wherever the gap since the previous event exceeds
-``gap_seconds`` (default 30 minutes, the analytics convention).
+30 minutes (the analytics convention).
 The registered ``sessionize_events`` query reports per-USER session
 counts inline; this module factors the same gap logic into a reusable
 operator and adds the per-SESSION grain (start/end/count/value rows)
@@ -27,14 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Events plus a per-user ``session_id`` (1-based, in time order).
 
     A session starts at the user's first event and wherever
-    ``ts - previous ts > gap_seconds`` (strict; an event exactly at
+    ``ts - previous ts`` > 30 minutes (strict; an event exactly at
     the gap continues the session). NULL-ts events are dropped before
     windowing — an event with no timestamp has no place in a
     gap-based session, and Spark (NULLS FIRST) vs ANSI engines
@@ -42,7 +39,7 @@ def sessionize(
     events = events.where(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
-    gap_us = F.lit(int(gap_seconds) * 1_000_000)
+    gap_us = F.lit(1800 * 1_000_000)
     new_session = F.when(
         F.lag(us).over(w).isNull() | (us - F.lag(us).over(w) > gap_us),
         F.lit(1),
@@ -52,15 +49,12 @@ def sessionize(
     )
 
 
-def session_stats(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """One row per session: (user, session_id, session_start,
     session_end, n_events, total_value). The value sum is rounded to
     6dp so cross-engine float-sum ordering noise sits below the
     comparison grain."""
-    s = sessionize(events, gap_seconds)
+    s = sessionize(events)
     return s.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),

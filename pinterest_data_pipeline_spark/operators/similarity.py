@@ -886,14 +886,10 @@ def mutual_top1_pairs(df: DataFrame) -> DataFrame:
     return left.join(right, ["id_a", "id_b"], "left_semi")
 
 
-def intrinsic_dimension_twonn(
-    sample: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def intrinsic_dimension_twonn(sample: DataFrame) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) over a
-    deterministic sample — the embedding-geometry diagnostic the
-    family lacks: norms and top-direction power read SCALE and
+    deterministic sample of (``vec_id``, ``embedding``) rows — the
+    embedding-geometry diagnostic the family lacks: norms and top-direction power read SCALE and
     ANISOTROPY; TwoNN reads how many degrees of freedom the vectors
     actually use (an "768-dim" embedding with ID ≈ 12 wastes storage
     and distance resolution, and ID drift across corpus versions flags
@@ -917,7 +913,7 @@ def intrinsic_dimension_twonn(
     caller bounds it by construction); one window ranks neighbors,
     one fold produces the single output row."""
     pts = sample.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+        F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
     )
     l, r = pts.alias("l"), pts.alias("r")
     d2 = F.round(

@@ -55,13 +55,14 @@ def _quantized(df: DataFrame, vec_col: str, dim: int, scale: int):
 
 def power_iteration_top_direction(
     df: DataFrame,
-    vec_col: str = "embedding",
+    *,
     dim: int = 64,
     iterations: int = 3,
     quantized: DataFrame | None = None,
 ) -> list[int]:
-    """Run ``iterations`` integer power-iteration steps and return the
-    final direction as a list of ``dim`` ints with max-abs ``_V_NORM``.
+    """Run ``iterations`` integer power-iteration steps over the
+    ``embedding`` column and return the final direction as a list of
+    ``dim`` ints with max-abs ``_V_NORM``.
     v₀ = [_V_NORM] · dim (the all-ones direction — never orthogonal to
     the top component of real embedding clouds; a zero iteration
     returns it verbatim for callers pinning initialization).
@@ -81,7 +82,7 @@ def power_iteration_top_direction(
     q = (
         quantized
         if quantized is not None
-        else _quantized(fan_out(df), vec_col, dim, _SCALE).localCheckpoint(
+        else _quantized(fan_out(df), "embedding", dim, _SCALE).localCheckpoint(
             eager=False
         )
     )

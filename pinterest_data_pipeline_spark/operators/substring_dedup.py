@@ -13,7 +13,7 @@ M−L+1 consecutive L-gram starts that are each corpus-duplicated, so
    positions (1-based), hash each shingle (full md5 hex — 128-bit, so
    hash collisions cannot forge duplicates at corpus scale),
 2. one gram-hash count shuffle finds the duplicated shingles
-   (``min_count`` occurrences, within- or cross-document, matching the
+   (≥ 2 occurrences, within- or cross-document, matching the
    paper's self-repetition handling),
 3. flagged starts cover token interval [start, start+L−1]; a
    gaps-and-islands window per document merges overlapping/adjacent
@@ -84,13 +84,9 @@ def lgram_starts(
     )
 
 
-def duplicated_starts(
-    df: DataFrame,
-    L: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """(id, start) shingle starts whose content occurs ≥ ``min_count``
-    times corpus-wide (within- or cross-document).
+def duplicated_starts(df: DataFrame, L: int = 8) -> DataFrame:
+    """(id, start) shingle starts whose content occurs at least twice
+    corpus-wide (within- or cross-document).
 
     Deliberately a partial-aggregated groupBy + join rather than a
     ``count() OVER (PARTITION BY gh)`` window: a boilerplate shingle
@@ -103,7 +99,7 @@ def duplicated_starts(
     dup = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= min_count)
+        .filter(F.col("__n") >= 2)
         .select("gh")
     )
     return grams.join(dup, "gh").select("doc_id", "start")
@@ -113,10 +109,9 @@ def cross_group_duplicated_starts(
     df: DataFrame,
     group_col: str,
     L: int = 8,
-    min_groups: int = 2,
 ) -> DataFrame:
-    """(id, start) shingle starts whose content appears in at least
-    ``min_groups`` DISTINCT groups (e.g. sources, or train/eval
+    """(id, start) shingle starts whose content appears in at least two
+    DISTINCT groups (e.g. sources, or train/eval
     splits) — the leakage-oriented variant of
     :func:`duplicated_starts`: repetition WITHIN one group does not
     flag, content crossing a group boundary does.
@@ -132,7 +127,7 @@ def cross_group_duplicated_starts(
         .distinct()
         .groupBy("gh")
         .agg(F.count(F.lit(1)).alias("__g"))
-        .filter(F.col("__g") >= min_groups)
+        .filter(F.col("__g") >= 2)
         .select("gh")
     )
     return grams.join(dup, "gh").select("doc_id", "start")
@@ -178,40 +173,29 @@ def _merge_spans(flagged: DataFrame, L: int, id_col: str) -> DataFrame:
     )
 
 
-def duplicate_spans(
-    df: DataFrame,
-    L: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def duplicate_spans(df: DataFrame, L: int = 8) -> DataFrame:
     """Maximal duplicated token spans per document (see
     :func:`_merge_spans` for the island semantics)."""
-    return _merge_spans(
-        duplicated_starts(df, L, min_count), L, "doc_id"
-    )
+    return _merge_spans(duplicated_starts(df, L), L, "doc_id")
 
 
 def cross_group_leakage_spans(
     df: DataFrame,
     group_col: str,
     L: int = 8,
-    min_groups: int = 2,
 ) -> DataFrame:
     """Maximal spans of content that crosses a group boundary
-    (≥ ``min_groups`` distinct groups contain the shingle) — the
+    (≥ 2 distinct groups contain the shingle) — the
     span-grain leakage report: which exact passages of which
     documents leak across sources or train/eval splits."""
     return _merge_spans(
-        cross_group_duplicated_starts(df, group_col, L, min_groups),
+        cross_group_duplicated_starts(df, group_col, L),
         L,
         "doc_id",
     )
 
 
-def cut_duplicate_spans(
-    df: DataFrame,
-    L: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def cut_duplicate_spans(df: DataFrame, L: int = 8) -> DataFrame:
     """Remove every duplicated span, keep the unique remainder:
     (id, n_tokens, n_kept, kept_text) for EVERY document (untouched
     documents pass through with full text; fully-duplicated documents
@@ -221,7 +205,7 @@ def cut_duplicate_spans(
     (duplicate-volume-sized) and joined back by id; the rebuild is an
     indexed filter + array_join expression, so the corpus scan never
     re-shuffles."""
-    flagged = duplicated_starts(df, L, min_count)
+    flagged = duplicated_starts(df, L)
     covered = (
         flagged.select(
             "doc_id",

@@ -18,13 +18,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def kaplan_meier(
-    df: DataFrame,
-    subject_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Kaplan-Meier retention curve: per subject, lifetime = days from
-    first to last event; subjects whose last event falls within
+def kaplan_meier(df: DataFrame) -> DataFrame:
+    """Kaplan-Meier retention curve over an event log's ``user_id`` and
+    ``ts``: per subject, lifetime = days from first to last event;
+    subjects whose last event falls within
     7 days of the log's end are CENSORED (they may still
     be active — their lifetime is a lower bound, so they exit the risk
     set at that point without counting as churn). Returns one row per
@@ -40,12 +37,12 @@ def kaplan_meier(
     combine), then every relation is |distinct lifetimes| rows; the
     cumulative product is a window over that tiny ordered relation.
     The log-end timestamp is a 1-row broadcast, never a collect."""
-    per_subject = df.groupBy(F.col(subject_col).alias("__s")).agg(
-        F.date_trunc("day", F.min(ts_col)).alias("__first"),
-        F.date_trunc("day", F.max(ts_col)).alias("__last"),
+    per_subject = df.groupBy(F.col("user_id").alias("__s")).agg(
+        F.date_trunc("day", F.min("ts")).alias("__first"),
+        F.date_trunc("day", F.max("ts")).alias("__last"),
     )
     log_end = df.agg(
-        F.date_trunc("day", F.max(ts_col)).alias("__end")
+        F.date_trunc("day", F.max("ts")).alias("__end")
     )
     subjects = per_subject.crossJoin(F.broadcast(log_end)).select(
         F.datediff(F.col("__last"), F.col("__first"))

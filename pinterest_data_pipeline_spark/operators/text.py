@@ -233,12 +233,13 @@ def linear_quality_margin(text: Column | str) -> Column:
 
 def adjacent_pair_counts(
     df: DataFrame,
-    text_col: str = "text",
+    *,
     top_n: int = 50,
 ) -> DataFrame:
     """Corpus-wide adjacent-token-pair frequencies — the statistic the
     first BPE/WordPiece merge step ranks on (most frequent adjacent
-    pair wins the merge). Tokens are lowercased whitespace words;
+    pair wins the merge). Tokens are the lowercased whitespace words
+    of ``text``;
     returns the ``top_n`` pairs as (pair, n), ordered by
     (n DESC, pair ASC) for a deterministic cut.
 
@@ -247,7 +248,7 @@ def adjacent_pair_counts(
     vocabulary-sized partial aggregates, and the global cut is
     TakeOrdered (per-partition top-n, then a |partitions|×top_n merge
     on the driver — never a full sort)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -321,15 +322,11 @@ def mattr(
     return n_windows, score
 
 
-def good_turing_coverage(
-    df: DataFrame,
-    group_col: str,
-    text_col: str = "text",
-) -> DataFrame:
-    """Good-Turing frequency-of-frequencies per group over adjacent
-    bigrams — the coverage estimate the smoothing family lacks: the
-    unigram/bigram LMs answer "how probable is this text", TF-IDF and
-    PMI rank what was SEEN; Good-Turing asks "how much probability
+def good_turing_coverage(df: DataFrame, group_col: str) -> DataFrame:
+    """Good-Turing frequency-of-frequencies per group over the adjacent
+    bigrams of ``text`` — the coverage estimate the smoothing family
+    lacks: the unigram/bigram LMs answer "how probable is this text",
+    TF-IDF and PMI rank what was SEEN; Good-Turing asks "how much probability
     mass belongs to bigrams we have NOT seen yet" (P₀ = N₁/N, Turing's
     estimate) and how hard observed counts should be discounted
     (r* = (r+1)·N_{r+1}/N_r) — the statistic behind Katz backoff and
@@ -350,7 +347,7 @@ def good_turing_coverage(
     Scale: per-row pair explosion (zip with own tail, no join) → one
     vocabulary-sized (group, bigram) partial aggregate → one per-group
     aggregate. No sort, no window."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -402,15 +399,11 @@ def good_turing_coverage(
 _LADDER_PPM = (100_000, 250_000, 500_000, 1_000_000)
 
 
-def vocab_growth_ladder(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-) -> DataFrame:
-    """Heaps'-law vocabulary growth over an id-ordered prefix ladder —
-    the "is the corpus still discovering words" reading beside
-    Good-Turing's unseen-mass one: V(N) ≈ K·N^β, so the vocabulary at
-    the first 10% / 25% / 50% / 100% of the id space (an append-log's
+def vocab_growth_ladder(df: DataFrame, id_col: str) -> DataFrame:
+    """Heaps'-law vocabulary growth of ``text`` over an id-ordered
+    prefix ladder — the "is the corpus still discovering words" reading
+    beside Good-Turing's unseen-mass one: V(N) ≈ K·N^β, so the
+    vocabulary at the first 10% / 25% / 50% / 100% of the id space (an append-log's
     natural prefixes) plus the fitted β between the last two rungs
     says whether doubling the crawl still buys vocabulary (β near the
     text-corpus 0.5 band) or the domain is closed (β → 0, this
@@ -425,7 +418,7 @@ def vocab_growth_ladder(
     Scale: one token explosion scanned ONCE with conditional
     aggregates per rung (|ladder| distinct-counts — a fixed expand
     factor, the documented cost of the ladder), one broadcast max."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     exploded = df.select(
         F.col(id_col).alias("__id"), F.explode(toks).alias("__t")
     )

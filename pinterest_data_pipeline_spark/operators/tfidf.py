@@ -196,27 +196,23 @@ def bigram_logprob(df: DataFrame) -> DataFrame:
     )
 
 
-def feature_hash_buckets(
-    df: DataFrame,
-    n_buckets: int = 256,
-    top_k: int = 10,
-) -> DataFrame:
+def feature_hash_buckets(df: DataFrame) -> DataFrame:
     """The hashing trick's bucket histogram (Weinberger et al., ICML
-    2009): every token maps to ``hash(token) mod n_buckets``, the
+    2009): every token maps to ``hash(token) mod 256``, the
     fixed-width feature space a streaming/online model trains in
     without a vocabulary pass. This audit view reports, for the
-    ``top_k`` heaviest buckets, the token mass and the collision degree
+    10 heaviest buckets, the token mass and the collision degree
     (distinct tokens sharing the bucket) — the quantity that says
-    whether ``n_buckets`` is too small for the corpus.
+    whether 256 buckets are too few for the corpus.
 
     The hash is the repo's portable md5-prefix (operators/dedup), so a
     SQL oracle replays bucket ids bit-for-bit. Returns
     (bucket, n_tokens, n_distinct_tokens) ordered by
-    (n_tokens DESC, bucket ASC), cut to ``top_k``.
+    (n_tokens DESC, bucket ASC), cut to 10.
 
     Scale: explode → two-level aggregate (token first — map-side
     combine collapses repeats — then bucket), TakeOrderedAndProject
-    cut. The bucket relation is at most ``n_buckets`` rows."""
+    cut. The bucket relation is at most 256 rows."""
     from pinterest_data_pipeline_spark.operators.dedup import portable_hash32
 
     toks = df.select(
@@ -231,7 +227,7 @@ def feature_hash_buckets(
     )
     return (
         per_token.select(
-            (portable_hash32(F.col("__w")) % n_buckets).alias("bucket"),
+            (portable_hash32(F.col("__w")) % 256).alias("bucket"),
             F.col("__n"),
         )
         .groupBy("bucket")
@@ -240,5 +236,5 @@ def feature_hash_buckets(
             F.count(F.lit(1)).cast("bigint").alias("n_distinct_tokens"),
         )
         .orderBy(F.col("n_tokens").desc(), F.col("bucket").asc())
-        .limit(top_k)
+        .limit(10)
     )

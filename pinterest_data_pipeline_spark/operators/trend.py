@@ -170,8 +170,6 @@ def mase_backtest(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    season: int = 7,
-    test_len: int = 7,
 ) -> DataFrame:
     """Seasonal-naive forecast backtest scored by MASE (Hyndman &
     Koehler 2006) — the forecast-EVALUATION reading the trend family
@@ -181,10 +179,10 @@ def mase_backtest(
     does it beat the naive baseline" — the gate run before anyone
     ships a fancier model.
 
-    Protocol: the last ``test_len`` periods are the holdout; the
-    forecast for period t is y_{t−season} (seasonal naive); the scale
-    is the IN-SAMPLE seasonal-naive MAE over the training prefix
-    (the standard MASE denominator, same season). MASE < 1 means the
+    Protocol: the last 7 periods are the holdout; the forecast for
+    period t is y_{t−7} (seasonal naive, season 7); the scale is the
+    IN-SAMPLE seasonal-naive MAE over the training prefix (the standard
+    MASE denominator, same season). MASE < 1 means the
     forecaster beats its own in-sample baseline; ≥ 1 means the series
     defeated it.
 
@@ -210,7 +208,7 @@ def mase_backtest(
     lagged = pts.select(
         "__x",
         "__y",
-        F.lag("__y", season).over(w).alias("__yl"),
+        F.lag("__y", 7).over(w).alias("__yl"),
         F.max("__x").over(
             Window.rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
@@ -219,7 +217,7 @@ def mase_backtest(
     ).where(F.col("__yl").isNotNull())
     scored = lagged.select(
         F.abs(F.col("__y") - F.col("__yl")).alias("__ae"),
-        (F.col("__x") > F.col("__mx") - test_len).alias("__is_test"),
+        (F.col("__x") > F.col("__mx") - 7).alias("__is_test"),
     )
     agg = scored.agg(
         F.sum(F.when(F.col("__is_test"), F.col("__ae")).otherwise(0))

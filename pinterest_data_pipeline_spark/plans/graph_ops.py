@@ -91,7 +91,7 @@ def pagerank_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey").cast("long") * 2 + 1).alias("p"),
     ).distinct()
     edges = symmetric_edges(pairs, "s", "p")
-    ranks = pagerank_fixed_point(edges, iterations=3)
+    ranks = pagerank_fixed_point(edges)
     return ranks.select(
         F.when(
             F.col("node") % 2 == 0,

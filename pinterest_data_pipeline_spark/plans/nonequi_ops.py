@@ -52,7 +52,7 @@ def range_join_acctbal_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     bands = spark.createDataFrame(ACCTBAL_BANDS, "band string, lo double, hi double")
     return (
-        range_join_bands(cust, "c_acctbal", bands, bin_width=1000.0)
+        range_join_bands(cust, "c_acctbal", bands)
         .groupBy("band")
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),

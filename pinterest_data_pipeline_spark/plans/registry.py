@@ -55,17 +55,29 @@ CHECK_FIRST: list[str] = [
     # mutual_nn_pairs_sample, whose rate-based sample was capped to a
     # fixed 1024-id md5 panel in r12 after its x100 deep point read
     # 567 s — non-binding at test SFs, values unchanged, but changed
-    # source takes a driver row) + the 28-query r6-evidence remainder
-    # + the first 3 of the r7-evidence set in registration order; the
-    # 3 changed k-means queries of (0) lead.
-    # 3 + 12 + 1 + 3 + 28 + 3 = 50 holds exactly.
+    # source takes a driver row) + the first 25 of the 28-query
+    # r6-evidence remainder + the first 3 of the r7-evidence set in
+    # registration order, moved up as (6); the 6 changed queries of
+    # (0) lead.
+    # 6 + 3 + 12 + 1 + 3 + 25 = 50 holds exactly.
     #
-    # -- (0) changed since their last correctness rows (r11, r10, r11):
-    # k-means and product quantization train through one Lloyd trainer
-    # and one monotonicity gate (operators/clustering.train_codebooks).
+    # -- (0) changed since their last correctness rows (r07 for the
+    # first three, then r11, r10, r11): operators/clustering.
+    # duplicate_clusters dropped its pre-barrier repartition; k-means
+    # and product quantization train through one Lloyd trainer and one
+    # monotonicity gate (operators/clustering.train_codebooks).
+    "dedup_keep_best_quality",
+    "leakage_safe_split_assign",
+    "soft_dedup_weights",
     "ivf_kmeans_codebook_assign",
     "pq_codebook_train_gate",
     "embedding_ivf_multiprobe_topk",
+    # -- (6) oldest-evidence rotation: the first 3 of the r7-evidence
+    # set in registration order (the remaining 43 roll to rounds
+    # 13-14).
+    "minhash_dedup_clusters",
+    "semantic_dedup_survivors",
+    "corpus_curation_full",
     # -- (1) the staged_round12 graph/linkage remainder (full oracles,
     # strict-mirror parity at sf0.001 + sf0.01, x30 stress rows; first
     # driver rows here):
@@ -122,16 +134,10 @@ CHECK_FIRST: list[str] = [
     "mattr_lexical_diversity",
     "join_null_safe_agg",
     "bigram_logprob_quality",
+    # ---- 50-row window boundary ----
     "curation_v2_report",
     "sessionize_event_stats",
     "doremi_domain_reweight",
-    # -- (6) oldest-evidence rotation continued: the first 6 of the
-    # r7-evidence set in registration order (the remaining 43 roll to
-    # rounds 13-14).
-    "minhash_dedup_clusters",
-    "semantic_dedup_survivors",
-    "corpus_curation_full",
-    # ---- 50-row window boundary ----
     "embedding_quantize_error_bound",
     "udtf_split_sentences",
     "pii_redaction_counts",

@@ -228,8 +228,7 @@ def winnowing_passage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return winnowing_shared_passages(
-        docs, "doc_id", "text", k=5, window=4, min_shared=2,
-        max_bucket_size=64, portable=True,
+        docs, min_shared=2, max_bucket_size=64, portable=True
     ).select("id_a", "id_b", "n_shared")
 
 

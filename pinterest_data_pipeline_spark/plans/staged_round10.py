@@ -79,7 +79,7 @@ def k_anonymity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "lang", "source", F.expr("n_chars div 500").alias("len_bucket")
     )
-    return k_anonymity_audit(docs, ["lang", "source", "len_bucket"], k=5)
+    return k_anonymity_audit(docs, ["lang", "source", "len_bucket"])
 
 
 # ---------------------------------------------------- behavioral features
@@ -355,7 +355,7 @@ def average_precision_by_source(
             )
         ),
     )
-    return average_precision_at_k(graded, "source", "rank", "rel", k=10)
+    return average_precision_at_k(graded, "source", "rank", "rel")
 
 
 @register(
@@ -386,7 +386,7 @@ def pq_codebook_train_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.pq import pq_train_gate
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_train_gate(emb, dim=64, m=8, k=16, iterations=2)
+    return pq_train_gate(emb, dim=64, m=8, iterations=2)
 
 
 # -------------------------------------------------------- time-series audits

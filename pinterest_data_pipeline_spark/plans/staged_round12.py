@@ -665,7 +665,7 @@ def lpa_purchasing_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = ed.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(ed.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    return community_sizes(edges, iterations=3)
+    return community_sizes(edges)
 
 
 _FS_ORIG = """

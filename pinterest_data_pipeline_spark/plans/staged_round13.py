@@ -128,7 +128,7 @@ def k_core_purchasing_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = ed.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(ed.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    return k_core_peel_profile(edges, k=4, rounds=3)
+    return k_core_peel_profile(edges, k=4)
 
 
 @register(
@@ -168,7 +168,7 @@ def l_diversity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "lang", F.expr("n_chars div 500").alias("len_bucket"), "source"
     )
-    return l_diversity_audit(docs, ["lang", "len_bucket"], "source", 2)
+    return l_diversity_audit(docs, ["lang", "len_bucket"], "source")
 
 
 _QLM_TERMS = ["batch", "hash", "merge", "row", "table"]
@@ -328,7 +328,7 @@ def err_at_10_length_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("rnk"),
     )
-    return err_at_k(graded, "source", "rnk", "grade", k=10, g_max=9)
+    return err_at_k(graded, "source", "rnk", "grade")
 
 
 @register(
@@ -594,7 +594,7 @@ def good_turing_bigram_coverage(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return good_turing_coverage(docs, "lang", "text")
+    return good_turing_coverage(docs, "lang")
 
 
 # ---------------------------------------------------- KMV distinct sketch

@@ -342,7 +342,7 @@ def heaps_vocab_growth_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return vocab_growth_ladder(docs, "doc_id", "text")
+    return vocab_growth_ladder(docs, "doc_id")
 
 
 # ---------------------------------------------- idempotency conflict audit

@@ -133,9 +133,7 @@ def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    return association_rules(
-        li, "l_orderkey", "l_partkey", min_pair_support=2, top_k=20
-    )
+    return association_rules(li, "l_orderkey", "l_partkey", top_k=20)
 
 
 # ------------------------------------------------------ Theil-Sen slope
@@ -282,7 +280,7 @@ def llr_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return llr_bigrams(docs, "text", min_count=5, top_k=15)
+    return llr_bigrams(docs, min_count=5, top_k=15)
 
 
 # -------------------------------------------- coverage / diversity eval
@@ -447,7 +445,7 @@ def mase_seasonal_naive_backtest(
     ).agg(
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("y")
     )
-    return mase_backtest(daily, "x", "y", season=7, test_len=7)
+    return mase_backtest(daily, "x", "y")
 
 
 # ------------------------------------------------------ 2-D skyline
@@ -699,4 +697,4 @@ def intrinsic_dim_embeddings_twonn(
         F.concat(F.lit("twonn:"), F.col("vec_id").cast("string"))
     )
     sample = emb.orderBy(h.asc(), F.col("vec_id").asc()).limit(256)
-    return intrinsic_dimension_twonn(sample, "vec_id", "embedding")
+    return intrinsic_dimension_twonn(sample)

@@ -272,7 +272,7 @@ def contrastive_negative_sources(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return contrastive_negative_sample(docs, "doc_id", "source", k=3)
+    return contrastive_negative_sample(docs, "doc_id", "source")
 
 
 # ------------------------------------------------------ Burrows' Delta

@@ -400,9 +400,7 @@ def mixture_epoch_capped_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     feats = docs.select("source", token_count("text").alias("toks"))
-    return epoch_capped_mixture(
-        feats, "source", "toks", budget=30000, max_epochs=2
-    )
+    return epoch_capped_mixture(feats, "source", "toks", budget=30000)
 
 
 @register(
@@ -439,7 +437,7 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return adjacent_pair_counts(docs, "text", top_n=50)
+    return adjacent_pair_counts(docs, top_n=50)
 
 
 def _winnowing_cap_oracle() -> str:
@@ -485,9 +483,7 @@ def winnowing_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    fps = winnowing_fingerprints(
-        docs, "doc_id", "text", k=5, window=4, portable=True
-    )
+    fps = winnowing_fingerprints(docs, k=5, window=4, portable=True)
     return cap_drop_report(fps, ["fp"], max_bucket_size=64)
 
 
@@ -972,7 +968,7 @@ def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return duplicate_spans(docs, L=8, min_count=2)
+    return duplicate_spans(docs, L=8)
 
 
 @register(
@@ -1021,7 +1017,7 @@ def cut_duplicate_spans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return cut_duplicate_spans(docs, L=8, min_count=2)
+    return cut_duplicate_spans(docs, L=8)
 
 
 # SoftDeDup (Nan He et al. 2024, arXiv:2407.06654): instead of
@@ -1177,7 +1173,7 @@ def cross_source_span_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return cross_group_leakage_spans(docs, "source", L=8, min_groups=2)
+    return cross_group_leakage_spans(docs, "source", L=8)
 
 
 # ----------------------------------------------- lexical diversity
@@ -1421,9 +1417,9 @@ def curation_v2_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         linear_quality_margin("text").alias("margin"),
     )
     q = base.filter(F.col("margin") >= 0)
-    kept = cut_duplicate_spans(
-        q.select("doc_id", "text"), L=8, min_count=2
-    ).filter(F.col("n_kept") >= 1)
+    kept = cut_duplicate_spans(q.select("doc_id", "text"), L=8).filter(
+        F.col("n_kept") >= 1
+    )
     surv = kept.groupBy(F.md5("kept_text").alias("__fp")).agg(
         F.min("doc_id").alias("doc_id"),
         F.min("n_kept").alias("n_kept"),
@@ -1490,7 +1486,7 @@ def sessionize_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return session_stats(events, gap_seconds=1800)
+    return session_stats(events)
 
 
 # ---------------------------------------------------- DoReMi reweight

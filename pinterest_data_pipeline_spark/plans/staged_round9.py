@@ -342,7 +342,7 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    return autocorr_daily(li, "l_shipdate", "l_extendedprice", (1, 7))
+    return autocorr_daily(li, "l_shipdate", "l_extendedprice")
 
 
 @register(
@@ -448,7 +448,7 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return pmi_bigrams(docs, min_count=5, top_k=15)
+    return pmi_bigrams(docs, top_k=15)
 
 
 @register(
@@ -485,7 +485,7 @@ def feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return fhb(docs, n_buckets=256, top_k=10)
+    return fhb(docs)
 
 
 # --------------------------------------------------------- allocation
@@ -594,7 +594,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return kaplan_meier(events, "user_id", "ts")
+    return kaplan_meier(events)
 
 
 # ------------------------------------------------------ rank agreement
@@ -675,4 +675,4 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return rbo_at_k(a, b, "doc_id", "rank", p=_RBO_P)
+    return rbo_at_k(a, b, "doc_id", p=_RBO_P)

@@ -35,7 +35,7 @@ def tumbling_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST-extension: tumbling event-time window counts (the watermarked
     streaming form runs the same builder; SURVEY.md §2.9)."""
     ev = load_table(spark, sf_dir, "events")
-    return W.tumbling_counts(ev, "ts", ["event_type"], window="1 hour")
+    return W.tumbling_counts(ev, "ts", ["event_type"])
 
 
 @register(

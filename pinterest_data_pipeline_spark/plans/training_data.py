@@ -1230,7 +1230,7 @@ def mixture_upsample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.sampling import repeat_by_weight
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return repeat_by_weight(docs, "lang", {"zh": 3, "es": 2, "de": 0}, default=1)
+    return repeat_by_weight(docs, "lang", {"zh": 3, "es": 2, "de": 0})
 
 
 @register(
@@ -1624,7 +1624,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return ngram_contamination(docs, F.col("doc_id") % 20 == 0, n=4)
+    return ngram_contamination(docs, F.col("doc_id") % 20 == 0)
 
 
 @register(
@@ -1659,7 +1659,7 @@ def pack_sequences_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.chunking import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(docs, "lang", "doc_id", "text", budget=2048)
+    return pack_sequences(docs, budget=2048)
 
 
 @register(
@@ -1786,7 +1786,7 @@ def boilerplate_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return boilerplate_fraction(docs, n=2, min_doc_frac=0.08)
+    return boilerplate_fraction(docs, min_doc_frac=0.08)
 
 
 @register(
@@ -1837,7 +1837,7 @@ def decontaminate_jaccard_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jaccard_contamination(docs, F.col("doc_id") % 20 == 0, n=3)
+    return jaccard_contamination(docs, F.col("doc_id") % 20 == 0)
 
 
 @register(
@@ -1870,7 +1870,7 @@ def deterministic_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return deterministic_shuffle(docs, "doc_id", n_shards=16)
+    return deterministic_shuffle(docs, n_shards=16)
 
 
 # ------------------------------------------------- corpus statistics scoring
@@ -2448,7 +2448,7 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pinterest_data_pipeline_spark.operators.chunking import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
-    bins = pack_sequences(docs, "lang", "doc_id", "text", budget=2048)
+    bins = pack_sequences(docs, budget=2048)
     return bins.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_bins"),
         F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -134,10 +134,11 @@ def generate_raw_rows(
 
 
 def generate_raw_tables(
-    spark: SparkSession, n: int = 2000, seed: int = 100
+    spark: SparkSession,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Materialize the three raw fixture DataFrames with declared schemas."""
-    pin_rows, geo_rows, user_rows = generate_raw_rows(n, seed)
+    """Materialize the three raw fixture DataFrames (2000 rows each, seed
+    100) with declared schemas."""
+    pin_rows, geo_rows, user_rows = generate_raw_rows()
     return (
         spark.createDataFrame(pin_rows, PIN_RAW),
         spark.createDataFrame(geo_rows, GEO_RAW),
@@ -227,11 +228,9 @@ def hash_pin_rows(start: int, end: int) -> list[tuple]:
     return rows
 
 
-def write_fixture_parquet(
-    spark: SparkSession, out_dir: str, n: int = 2000, seed: int = 100
-) -> dict[str, str]:
+def write_fixture_parquet(spark: SparkSession, out_dir: str) -> dict[str, str]:
     """Write pin/geo/user raw fixtures as parquet; return name→path."""
-    pin, geo, user = generate_raw_tables(spark, n, seed)
+    pin, geo, user = generate_raw_tables(spark)
     paths = {}
     for name, df in [("pin", pin), ("geo", geo), ("user", user)]:
         path = f"{out_dir}/{name}.parquet"

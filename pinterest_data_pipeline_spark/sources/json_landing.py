@@ -74,18 +74,16 @@ def read_landing_stream(
     return reader.json(path)
 
 
-def compact_to_parquet(
-    df: DataFrame, out_dir: str, max_records_per_file: int = 1_000_000
-) -> None:
+def compact_to_parquet(df: DataFrame, out_dir: str) -> None:
     """Compact a small-files landing load into large parquet files.
 
-    ``maxRecordsPerFile`` bounds file size without forcing a single-task
-    ``coalesce(1)`` bottleneck; partition count stays parallel. The
-    written schema is recorded beside the files, so
+    ``maxRecordsPerFile`` (1M) bounds file size without forcing a
+    single-task ``coalesce(1)`` bottleneck; partition count stays
+    parallel. The written schema is recorded beside the files, so
     ``sinks.read_partitioned`` reads them back without inference."""
     (
         df.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         .parquet(out_dir)
     )
     record_schema(df, out_dir)

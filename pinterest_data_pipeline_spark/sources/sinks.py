@@ -93,25 +93,23 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str],
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Write partitioned parquet. Partition columns should be low-to-mid
-    cardinality (dates, categories) — one directory per value; high-
-    cardinality keys belong in bucketing, not partitioning."""
+    """Write partitioned parquet (overwrite, ≤ 1M records per file).
+    Partition columns should be low-to-mid cardinality (dates,
+    categories) — one directory per value; high-cardinality keys belong
+    in bucketing, not partitioning."""
     (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
+        df.write.mode("overwrite")
+        .option("maxRecordsPerFile", 1_000_000)
         .partitionBy(*partition_cols)
         .parquet(path)
     )
 
 
-def add_date_partition(
-    df: DataFrame, ts_col: str, out_col: str = "dt"
-) -> DataFrame:
-    """Derive the standard date partition column from an event timestamp."""
-    return df.withColumn(out_col, F.to_date(F.col(ts_col)))
+def add_date_partition(df: DataFrame, ts_col: str) -> DataFrame:
+    """Derive the standard ``dt`` date partition column from an event
+    timestamp."""
+    return df.withColumn("dt", F.to_date(F.col(ts_col)))
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -134,10 +132,9 @@ def write_curated(
     path: str,
     sort_cols: Sequence[str] = (),
     compression: str = "zstd",
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Archival/curated-corpus writer: zstd + in-partition clustering.
+    """Archival/curated-corpus writer: zstd + in-partition clustering
+    (overwrite, ≤ 1M records per file).
 
     Storage posture for the 100 TB corpus: zstd compresses text-heavy
     columns substantially tighter than the snappy default at similar scan
@@ -148,9 +145,9 @@ def write_curated(
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("compression", compression)
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         .parquet(path)
     )
 
@@ -158,13 +155,12 @@ def write_curated(
 def write_training_shards(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
+    *,
     n_shards: int = 16,
-    compression: str = "zstd",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize a training corpus as ``n_shards`` content-addressed
-    parquet shards in a deterministic global order — the write-side twin
+    zstd parquet shards (overwriting ``path``) in a deterministic global
+    ``doc_id`` order — the write-side twin
     of :func:`operators.sampling.deterministic_shuffle` (same md5 shard
     key and in-shard digest order, minus the oracle-checkable rank).
 
@@ -179,7 +175,7 @@ def write_training_shards(
         deterministic_shuffle,
     )
 
-    sharded = deterministic_shuffle(df, id_col, n_shards).drop("pos")
+    sharded = deterministic_shuffle(df, n_shards=n_shards).drop("pos")
     (
         sharded.repartition(n_shards, F.col("shard"))
         # "shard" leads the sort so the dynamic-partition writer's
@@ -187,10 +183,10 @@ def write_training_shards(
         # — otherwise FileFormatWriter inserts its own non-stable sort
         # on "shard" alone and destroys the digest order.
         .sortWithinPartitions(
-            "shard", F.md5(F.col(id_col).cast("string")), id_col
+            "shard", F.md5(F.col("doc_id").cast("string")), "doc_id"
         )
-        .write.mode(mode)
-        .option("compression", compression)
+        .write.mode("overwrite")
+        .option("compression", "zstd")
         .partitionBy("shard")
         .parquet(path)
     )

@@ -21,10 +21,10 @@ def tumbling_counts(
     df: DataFrame,
     ts_col: str,
     keys: Sequence[str],
-    window: str = "1 hour",
+    *,
     watermark: str | None = None,
 ) -> DataFrame:
-    """Tumbling-window counts keyed by ``keys``.
+    """Hourly tumbling-window counts keyed by ``keys``.
 
     With ``watermark`` set (streaming), state for windows older than the
     watermark is dropped and late rows beyond it are discarded — the
@@ -32,7 +32,7 @@ def tumbling_counts(
     if watermark is not None:
         df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.window(ts_col, window), *keys)
+        df.groupBy(F.window(ts_col, "1 hour"), *keys)
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),

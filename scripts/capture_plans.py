@@ -1,18 +1,27 @@
-"""Capture .explain("formatted") for a list of registered queries into
-plans/$SPARK_GRAFT_ROUND/<name>_<tag>.txt (default round: r13) — the
-optimization round's before/after plan evidence. Driver-side only (plan
-compilation; iterative builders may run their small driver collects).
+"""Capture the ``explain("formatted")`` plan of registered queries into
+<out_dir>/<name>.txt, so that a refactor can show it is plan-neutral.
+Driver-side only (plan compilation; iterative builders may run their
+small driver collects).
 
-Usage: python scripts/capture_plans.py <tag> [name ...]
-Names default to PLAN_TARGETS below.
+Usage: python scripts/capture_plans.py <out_dir> [name ...]
+Names default to every registered query.
+
+Expression ids (``#123``), ``plan_id=123``, RDD ids (``RDD[12]``) and
+lambda variable suffixes (``lambda x_4``) come from process-wide
+counters, so they differ between two runs of the same code; all four are
+normalized, and two captures of the same code then diff empty
+(``diff -r before after``). The checkout's own path (state tables under
+its ``spark-warehouse``) reads ``<repo>``, so two checkouts compare too.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: F401  (populates registry)
 from pinterest_data_pipeline_spark.plans.registry import QUERIES
@@ -20,49 +29,25 @@ from pinterest_data_pipeline_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-PLAN_TARGETS = [
-    "jaccard_exact_doc_pairs",
-    "pq_codebook_train_gate",
-    "containment_exact_doc_pairs",
-    "embedding_ivf_multiprobe_topk",
-    "duplicate_span_report",
-    "cut_duplicate_spans_stats",
-    "semantic_dedup_survivors",
-    "fastss_customer_name_pairs",
-    "corpus_curation_full",
-    "incremental_embedding_new_pairs",
-    "embedding_top_direction_power",
-    "near_dup_cluster_size_histogram",
-    "pagerank_supplier_part",
-    "poisson_bootstrap_ci_value",
-    "ivf_kmeans_codebook_assign",
-    "cross_source_span_leakage",
-    "curation_v2_report",
-    "hits_supplier_part_scores",
-    "lpa_purchasing_communities",
-    "dedup_keep_best_quality",
-    "embedding_lsh_near_duplicates",
-    "zorder_layout_pruning_report",
-    "soft_dedup_weights",
-    "incremental_embedding_persisted_pairs",
-    "minhash_dedup_clusters",
-    "leakage_safe_split_assign",
-    "simhash_near_pairs",
-    "near_dup_triangle_count",
-    "k_core_purchasing_profile",
-    "minhash_lsh_near_duplicates",
-    "jaccard_trim_report_capped",
-]
+
+_COUNTERS = (
+    (r"#\d+", "#N"),
+    (r"plan_id=\d+", "plan_id=N"),
+    (r"RDD\[\d+\]", "RDD[N]"),
+    (r"lambda (\w+?)_\d+", r"lambda \1_N"),
+)
+
+
+def normalize(plan: str) -> str:
+    plan = plan.replace(REPO, "<repo>")
+    for pattern, repl in _COUNTERS:
+        plan = re.sub(pattern, repl, plan)
+    return plan
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or PLAN_TARGETS
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_ROUND", "r13"),
-    )
+    out_dir = sys.argv[1]
+    names = sys.argv[2:] or sorted(QUERIES)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan-capture")
     from pinterest_data_pipeline_spark.plans.staged_round6 import (
@@ -78,9 +63,9 @@ def main() -> None:
             )
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR building plan: {type(exc).__name__}: {exc}"
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
-            fh.write(plan)
-        print(f"wrote {name}_{tag}.txt ({len(plan)} bytes)")
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(normalize(plan))
+        print(f"wrote {name}.txt ({len(plan)} bytes)")
     spark.stop()
 
 

@@ -72,7 +72,7 @@ def test_repeat_by_weight_counts(spark):
         [(1, "en"), (2, "zh"), (3, "de"), (4, "xx")],
         "doc_id long, lang string",
     )
-    out = repeat_by_weight(df, "lang", {"zh": 3, "de": 0}, default=1)
+    out = repeat_by_weight(df, "lang", {"zh": 3, "de": 0})
     got = sorted((r["doc_id"], r["copy_id"]) for r in out.collect())
     assert got == [(1, 1), (2, 1), (2, 2), (2, 3), (4, 1)]  # de dropped
 

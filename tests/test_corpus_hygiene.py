@@ -48,13 +48,13 @@ def test_boilerplate_planted_template(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     freq = {
         r["ng"]: r["doc_freq"]
-        for r in corpus_frequent_ngrams(df, n=2, min_doc_frac=0.5).collect()
+        for r in corpus_frequent_ngrams(df, min_doc_frac=0.5).collect()
     }
     assert freq.get("click here") == 40
     assert "entirely fresh" not in freq
     frac = {
         r["doc_id"]: r["boilerplate_frac"]
-        for r in boilerplate_fraction(df, n=2, min_doc_frac=0.5).collect()
+        for r in boilerplate_fraction(df, min_doc_frac=0.5).collect()
     }
     # 6 bigrams per templated doc, 3 in the shared template ('click
     # here', 'here to', 'to subscribe'); the rest touch uniqueN words.
@@ -75,9 +75,7 @@ def test_jaccard_contamination_scores_clone_near_one(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in jaccard_contamination(
-            df, F.col("doc_id") % 20 == 0, n=3
-        ).collect()
+        for r in jaccard_contamination(df, F.col("doc_id") % 20 == 0).collect()
     }
     assert got[1]["max_jaccard"] == 1.0
     assert 0.7 < got[2]["max_jaccard"] < 1.0
@@ -87,7 +85,7 @@ def test_jaccard_contamination_scores_clone_near_one(spark):
 
 def test_deterministic_shuffle_layout(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = deterministic_shuffle(docs.select("doc_id"), "doc_id", n_shards=16)
+    out = deterministic_shuffle(docs.select("doc_id"), n_shards=16)
     rows = out.collect()
     assert len(rows) == docs.count()
     by_shard: dict[int, list[int]] = {}

@@ -73,9 +73,9 @@ def test_zorder_layout_prunes_on_both_dimensions(spark, sf_dir, tmp_path):
         "price_cents", (F.col("o_totalprice") * 100).cast("bigint")
     )
     zpath = str(tmp_path / "orders_z")
-    zorder_layout(
-        orders, ["o_custkey", "price_cents"], bits=8, n_partitions=16
-    ).write.mode("overwrite").parquet(zpath)
+    zorder_layout(orders, ["o_custkey", "price_cents"]).write.mode(
+        "overwrite"
+    ).parquet(zpath)
 
     lpath = str(tmp_path / "orders_linear")
     (
@@ -129,9 +129,9 @@ def test_zorder_pruned_read_is_exact(spark, sf_dir, tmp_path):
         "price_cents", (F.col("o_totalprice") * 100).cast("bigint")
     )
     zpath = str(tmp_path / "orders_z2")
-    zorder_layout(
-        orders, ["o_custkey", "price_cents"], bits=8, n_partitions=16
-    ).write.mode("overwrite").parquet(zpath)
+    zorder_layout(orders, ["o_custkey", "price_cents"]).write.mode(
+        "overwrite"
+    ).parquet(zpath)
     man = build_manifest(spark, zpath, ["o_custkey", "price_cents"]).cache()
 
     lo, hi = 10_000_000, 20_000_000

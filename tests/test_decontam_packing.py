@@ -37,9 +37,7 @@ def test_contamination_flags_planted_leak(spark):
         ],
         "doc_id long, text string",
     )
-    flagged = ngram_contamination(
-        df, F.col("doc_id") == 0, n=4
-    ).collect()
+    flagged = ngram_contamination(df, F.col("doc_id") == 0).collect()
     by_id = {r["doc_id"]: r["n_shared"] for r in flagged}
     assert 1 in by_id and by_id[1] >= 5  # the 9-word leak shares many 4-grams
     assert 2 not in by_id
@@ -48,7 +46,7 @@ def test_contamination_flags_planted_leak(spark):
 def test_pack_sequences_bins_are_contiguous_and_conserve_tokens(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     budget = 2048
-    bins = pack_sequences(docs, "lang", "doc_id", "text", budget).collect()
+    bins = pack_sequences(docs, budget=budget).collect()
     total_packed = sum(r["total_tokens"] for r in bins)
     total_corpus = docs.select(
         F.sum(

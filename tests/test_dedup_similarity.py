@@ -4,6 +4,7 @@ exact oracle, planted-duplicate detection, brute-force-vs-numpy cosine."""
 from __future__ import annotations
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,7 +65,7 @@ def test_simhash_identical_doc_distance_zero(spark, docs):
     src = docs.limit(1).collect()[0]
     clone = [(999_999, src["text"], src["lang"], src["source"], src["n_chars"])]
     plus = docs.unionByName(spark.createDataFrame(clone, docs.schema))
-    pairs = dedup.simhash_near_pairs(plus, "doc_id", "text", max_hamming=3)
+    pairs = dedup.simhash_near_pairs(plus, "doc_id", "text")
     hit = pairs.filter(
         (F.col("id_a") == src["doc_id"]) & (F.col("id_b") == 999_999)
     ).collect()
@@ -232,8 +233,7 @@ def test_bucket_cap_recall_survives_heavy_duplication(spark):
     rows += [(300 + i, b) for i in range(100)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = dedup.winnowing_shared_passages(
-        df, "doc_id", "text", k=5, window=4, min_shared=2,
-        max_bucket_size=16,
+        df, min_shared=2, max_bucket_size=16
     )
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got, "cap saturation must degrade recall, not zero it"
@@ -283,6 +283,60 @@ def test_kmeans_codebook_fewer_vectors_than_k_fails_loud(spark, iterations):
     )
     with pytest.raises(ValueError, match="at least k=8"):
         kmeans_codebook(tiny, k=8, iterations=iterations)
+
+
+def _cc_graph(spark, seed):
+    """A diameter-40 chain over shuffled ids (path doubling needs several
+    rounds) plus 60 random pairs over 120 ids (many small components)."""
+    rng = random.Random(seed)
+    chain = rng.sample(range(1000, 2000), 41)
+    pairs = list(zip(chain, chain[1:]))
+    pairs += [tuple(rng.sample(range(120), 2)) for _ in range(60)]
+    return pairs, spark.createDataFrame(pairs, "id_a long, id_b long")
+
+
+def _union_find_min_labels(pairs):
+    """node -> smallest id of its component (union by smaller root)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("seed", [16, 17])
+def test_duplicate_clusters_match_union_find(spark, seed):
+    from pinterest_data_pipeline_spark.operators.clustering import (
+        duplicate_clusters,
+    )
+
+    pairs, df = _cc_graph(spark, seed)
+    got = {
+        r["doc_id"]: r["cluster_id"] for r in duplicate_clusters(df).collect()
+    }
+    assert got == _union_find_min_labels(pairs)
+
+
+def test_duplicate_clusters_construction_job_budget(spark):
+    """Building the clusters on this graph fires at most 98 jobs (the
+    eager rounds). No shuffle job runs before the edge barrier: under
+    AQE the barrier keeps no partitioning for the rounds to reuse."""
+    from pinterest_data_pipeline_spark.operators.clustering import (
+        duplicate_clusters,
+    )
+    from tests.test_declared_schemas import _jobs_fired
+
+    _, df = _cc_graph(spark, 16)
+    jobs = _jobs_fired(spark, lambda: duplicate_clusters(df))
+    assert len(jobs) <= 98, len(jobs)
 
 
 def test_ivf_multiprobe_recall_improves_and_converges(spark, emb):

@@ -28,9 +28,7 @@ def test_pagerank_star_graph_center_dominates(spark):
     )
     ranks = {
         r["node"]: r["rank_micro"]
-        for r in pagerank_fixed_point(
-            symmetric_edges(pairs, "u", "v"), iterations=3
-        ).collect()
+        for r in pagerank_fixed_point(symmetric_edges(pairs, "u", "v")).collect()
     }
     assert set(ranks) == {"a", "b", "c", "d"}
     # leaves are symmetric → identical ranks; the hub collects 3 full
@@ -45,7 +43,7 @@ def test_pagerank_mass_approximately_conserved(spark):
         "u string, v string",
     )
     edges = symmetric_edges(pairs, "u", "v")
-    ranks = pagerank_fixed_point(edges, iterations=3)
+    ranks = pagerank_fixed_point(edges)
     total = ranks.agg(F.sum("rank_micro")).collect()[0][0]
     n = 4
     # integer floor losses only shrink mass, bounded by |E| micro-units

@@ -5,9 +5,12 @@ in the body as a constant, not in the signature.
 
 Call sites are matched by function name (``f(...)`` and ``x.f(...)``);
 a parameter counts as passed by keyword, by position, or through a
-``*``/``**`` argument. Inside the package, an argument spelled exactly
-like the default sets nothing, so it does not count; tests and scripts
-count whatever they pass."""
+``*``/``**`` argument. An argument spelled exactly like the default sets
+nothing, wherever the call is, so it does not count.
+
+``sources/`` is audited too, except the connector modules: their
+defaults (driver class, fetch size, partition bounds, starting offsets)
+are deployment settings, kept configurable on purpose."""
 
 from __future__ import annotations
 
@@ -16,7 +19,12 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "pinterest_data_pipeline_spark"
-AUDITED = (f"{PACKAGE}/operators", f"{PACKAGE}/streaming")
+AUDITED = tuple(
+    f"{PACKAGE}/{d}" for d in ("operators", "streaming", "sources")
+)
+CONNECTORS = tuple(
+    f"{PACKAGE}/sources/{m}.py" for m in ("jdbc", "kafka", "producers")
+)
 SKIP_DIRS = {".git", "__pycache__", "spark-warehouse", ".perfbench_work"}
 
 
@@ -56,9 +64,9 @@ def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
     return out
 
 
-def _passes(call, in_package, name, index, default) -> bool:
+def _passes(call, name, index, default) -> bool:
     def sets(arg: ast.expr) -> bool:
-        return not in_package or ast.unparse(arg) != default
+        return ast.unparse(arg) != default
 
     for k in call.keywords:
         if k.arg is None or (k.arg == name and sets(k.value)):
@@ -74,16 +82,15 @@ def _passes(call, in_package, name, index, default) -> bool:
 
 
 def test_every_defaulted_parameter_is_passed_somewhere():
-    calls: dict[str, list[tuple[ast.Call, bool]]] = {}
+    calls: dict[str, list[ast.Call]] = {}
     defs = []
     for path in _py_files():
         tree = ast.parse(open(path).read(), path)
         rel = os.path.relpath(path, REPO)
-        audited = rel.startswith(AUDITED)
-        in_package = rel.startswith(PACKAGE + "/")
+        audited = rel.startswith(AUDITED) and not rel.startswith(CONNECTORS)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and _callee(node):
-                calls.setdefault(_callee(node), []).append((node, in_package))
+                calls.setdefault(_callee(node), []).append(node)
             elif audited and isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef)
             ):
@@ -93,8 +100,7 @@ def test_every_defaulted_parameter_is_passed_somewhere():
         for rel, fn in defs
         for name, index, default in _defaulted(fn)
         if not any(
-            _passes(c, in_package, name, index, default)
-            for c, in_package in calls.get(fn.name, [])
+            _passes(c, name, index, default) for c in calls.get(fn.name, [])
         )
     ]
     assert not unused, (

@@ -17,7 +17,7 @@ from tests.oracle_utils import compare_frames
 @pytest.fixture(scope="module")
 def fixture_paths(spark, tmp_path_factory):
     out = tmp_path_factory.mktemp("pinterest_fixtures")
-    return write_fixture_parquet(spark, str(out), n=2000, seed=100)
+    return write_fixture_parquet(spark, str(out))
 
 
 @pytest.fixture(scope="module")

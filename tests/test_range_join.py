@@ -38,7 +38,7 @@ def test_range_join_matches_naive_nonequi_join(spark):
     bands = spark.createDataFrame(BANDS, "band string, lo double, hi double")
     got = {
         (r["v"], r["band"])
-        for r in range_join_bands(facts, "v", bands, bin_width=1000.0).collect()
+        for r in range_join_bands(facts, "v", bands).collect()
     }
     assert got == _naive(spark)
 
@@ -48,7 +48,7 @@ def test_range_join_half_open_boundaries(spark):
     bands = spark.createDataFrame(BANDS, "band string, lo double, hi double")
     got = {
         (r["v"], r["band"])
-        for r in range_join_bands(facts, "v", bands, bin_width=1000.0).collect()
+        for r in range_join_bands(facts, "v", bands).collect()
     }
     assert (5000.0, "edge") in got       # lo inclusive
     assert (5000.0, "overlap") not in got  # hi exclusive

@@ -93,7 +93,7 @@ def test_training_shards_layout_and_determinism(spark, sf_dir, tmp_path):
     assert len(shard_dirs) == 8
 
     back = spark.read.parquet(out1)
-    expect = deterministic_shuffle(docs, "doc_id", n_shards=8)
+    expect = deterministic_shuffle(docs, n_shards=8)
     # membership parity per shard
     got = {(r["doc_id"], r["shard"]) for r in back.collect()}
     want = {(r["doc_id"], r["shard"]) for r in expect.collect()}

@@ -48,7 +48,7 @@ def test_k_anonymity_hand_example(spark):
 
     rows = [("a",)] * 6 + [("b",)] * 3 + [("c",)]
     df = spark.createDataFrame(rows, "q string")
-    r = k_anonymity_audit(df, ["q"], k=5).collect()[0]
+    r = k_anonymity_audit(df, ["q"]).collect()[0]
     assert (r["n_rows"], r["n_groups"], r["k_min"]) == (10, 3, 1)
     assert (r["groups_below_k"], r["rows_below_k"]) == (2, 4)
     assert r["anonymous_share_r6"] == 0.6
@@ -161,15 +161,15 @@ def test_average_precision_closed_forms(spark):
 
     perfect = [("g", i, 1 if i <= 3 else 0) for i in range(1, 11)]
     df = spark.createDataFrame(perfect, "g string, rank long, rel int")
-    r = average_precision_at_k(df, "g", "rank", "rel", k=10).collect()[0]
+    r = average_precision_at_k(df, "g", "rank", "rel").collect()[0]
     assert r["ap_r6"] == 1.0
     mixed = [("g", 1, 0), ("g", 2, 1), ("g", 3, 0), ("g", 4, 1)]
     df2 = spark.createDataFrame(mixed, "g string, rank long, rel int")
-    r2 = average_precision_at_k(df2, "g", "rank", "rel", k=10).collect()[0]
+    r2 = average_precision_at_k(df2, "g", "rank", "rel").collect()[0]
     assert r2["ap_r6"] == 0.5
     none = [("g", 1, 0), ("g", 2, 0)]
     df3 = spark.createDataFrame(none, "g string, rank long, rel int")
-    r3 = average_precision_at_k(df3, "g", "rank", "rel", k=10).collect()[0]
+    r3 = average_precision_at_k(df3, "g", "rank", "rel").collect()[0]
     assert r3["ap_r6"] is None
 
 
@@ -178,7 +178,7 @@ def test_pq_gate_zero_violations_and_codes_in_range(spark, sf_dir):
     from pinterest_data_pipeline_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    r = pq_train_gate(emb, dim=64, m=8, k=16, iterations=1).collect()[0]
+    r = pq_train_gate(emb, dim=64, m=8, iterations=1).collect()[0]
     assert r["objective_violations"] == 0
     assert r["range_violations"] == 0
     assert r["n_vectors"] == emb.count()
@@ -199,7 +199,7 @@ def test_pq_gate_fewer_vectors_than_k_fails_loud(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="at least k=16"):
-        pq_train_gate(tiny, dim=4, m=2, k=16, iterations=1)
+        pq_train_gate(tiny, dim=4, m=2, iterations=1)
 
 
 def test_stacked_codebooks_train_like_single_ones(spark, sf_dir):

@@ -252,7 +252,7 @@ def test_lpa_barbell_two_communities(spark):
     assert labels == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
     sizes = {
         r["community"]: r["n_nodes"]
-        for r in community_sizes(edges, iterations=3).collect()
+        for r in community_sizes(edges).collect()
     }
     assert sizes == {1: 3, 4: 3}
 

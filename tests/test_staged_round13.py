@@ -48,7 +48,7 @@ def test_kcore_clique_survives_tail_peels(spark):
     edges = spark.createDataFrame(clique + tail, "src long, dst long")
     prof = {
         r["peel_round"]: (r["n_nodes"], r["n_edges"])
-        for r in k_core_peel_profile(edges, k=4, rounds=3).collect()
+        for r in k_core_peel_profile(edges, k=4).collect()
     }
     assert prof[0] == (8, 13)  # 10 clique pairs + 3 tail edges
     # round 1 removes 6,7,8 (degrees 2,2,1): the clique alone remains
@@ -56,7 +56,7 @@ def test_kcore_clique_survives_tail_peels(spark):
     assert prof[2] == (5, 10) and prof[3] == (5, 10)  # stable 4-core
 
     with pytest.raises(ValueError, match="rounds"):
-        k_core_peel_profile(edges, k=0, rounds=3)
+        k_core_peel_profile(edges, k=0)
 
 
 def test_l_diversity_homogeneous_class_and_null_value(spark):
@@ -72,7 +72,7 @@ def test_l_diversity_homogeneous_class_and_null_value(spark):
         ("c", "s1"), ("c", None),                # NULL is a value: l = 2
     ]
     df = spark.createDataFrame(rows, "q string, s string")
-    out = l_diversity_audit(df, ["q"], "s", 2).collect()[0]
+    out = l_diversity_audit(df, ["q"], "s").collect()[0]
     assert out["n_rows"] == 7 and out["n_classes"] == 3
     assert out["l_min"] == 1
     assert out["classes_below_l"] == 1 and out["rows_below_l"] == 3
@@ -124,7 +124,7 @@ def test_err_closed_form_and_top_heaviness(spark):
     df = spark.createDataFrame(rows, "g string, rnk int, grade int")
     out = {
         r["g"]: r["err_r6"]
-        for r in err_at_k(df, "g", "rnk", "grade", k=10, g_max=9).collect()
+        for r in err_at_k(df, "g", "rnk", "grade").collect()
     }
     ra = 511 / 512
     expect_a = round(ra / 1, 6)  # grade-0 terms are exactly 0
@@ -240,7 +240,7 @@ def test_good_turing_counts_pin(spark):
         [("en", "a b a b"), ("en", "c d"), ("en", "x")],
         "lang string, text string",
     )
-    r = good_turing_coverage(docs, "lang", "text").collect()[0]
+    r = good_turing_coverage(docs, "lang").collect()[0]
     # 'a b a b' -> pairs: a b, b a, a b ; 'c d' -> c d ; 'x' -> none
     assert r["n_bigrams"] == 4 and r["vocab"] == 3
     assert r["n1"] == 2 and r["n2"] == 1 and r["n3"] == 0

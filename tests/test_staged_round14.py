@@ -106,7 +106,7 @@ def test_vocab_growth_ladder_pin(spark):
         [(i, f"w{i} common") for i in range(10)],
         "doc_id long, text string",
     )
-    r = vocab_growth_ladder(docs, "doc_id", "text").collect()[0]
+    r = vocab_growth_ladder(docs, "doc_id").collect()[0]
     # cuts: floor(9*.1)=0, floor(9*.25)=2, floor(9*.5)=4, 9
     assert r["n_docs_1"] == 1 and r["vocab_1"] == 2  # w0 + common
     assert r["n_docs_2"] == 3 and r["vocab_2"] == 4

@@ -65,7 +65,7 @@ def test_association_rules_hand_counts(spark):
     df = spark.createDataFrame(rows, "b long, i string")
     out = {
         (r["antecedent"], r["consequent"]): r
-        for r in association_rules(df, "b", "i", 2, 10).collect()
+        for r in association_rules(df, "b", "i", top_k=10).collect()
     }
     ab, ba = out[("a", "b")], out[("b", "a")]
     assert ab["pair_support"] == 3
@@ -88,7 +88,7 @@ def test_association_rules_direction_matters(spark):
     df = spark.createDataFrame(rows, "b long, i string")
     out = {
         (r["antecedent"], r["consequent"]): r
-        for r in association_rules(df, "b", "i", 2, 10).collect()
+        for r in association_rules(df, "b", "i", top_k=10).collect()
     }
     assert out[("b", "a")]["confidence_r6"] == 1.0
     assert out[("a", "b")]["confidence_r6"] == pytest.approx(2 / 6, abs=1e-6)
@@ -140,7 +140,7 @@ def test_llr_weighs_evidence_over_rarity(spark):
         "filler words here " * 20
     ]
     df = spark.createDataFrame([(t,) for t in docs], "text string")
-    out = llr_bigrams(df, "text", min_count=2, top_k=5).collect()
+    out = llr_bigrams(df, min_count=2, top_k=5).collect()
     pairs = [(r["w1"], r["w2"]) for r in out]
     assert pairs[0] == ("of", "the")
     top = out[0]
@@ -160,7 +160,7 @@ def test_llr_closed_form_pin(spark):
     )
     out = {
         (r["w1"], r["w2"]): r
-        for r in llr_bigrams(df, "text", min_count=2, top_k=5).collect()
+        for r in llr_bigrams(df, min_count=2, top_k=5).collect()
     }
     r = out[("a", "b")]
     n, nf, ns, k11 = 4, 3, 3, 2
@@ -216,7 +216,7 @@ def test_mase_closed_form_pin(spark):
             y = 250
         rows.append((d, y))
     df = spark.createDataFrame(rows, "x long, y long")
-    r = mase_backtest(df, "x", "y", season=7, test_len=7).collect()[0]
+    r = mase_backtest(df, "x", "y").collect()[0]
     # lagged rows: days 7..13. test = x > 13-7=6 -> ALL 7 lagged rows
     # are test; train_scored = 0 -> guarded MASE = 0.0
     assert r["n_test"] == 7 and r["n_train_scored"] == 0
@@ -229,7 +229,7 @@ def test_mase_closed_form_pin(spark):
             y = 250
         rows.append((d, y))
     df = spark.createDataFrame(rows, "x long, y long")
-    r = mase_backtest(df, "x", "y", season=7, test_len=7).collect()[0]
+    r = mase_backtest(df, "x", "y").collect()[0]
     # lagged rows 7..20 (14); test = days 14..20 (7); train 7..13 (7)
     # in-sample errors all 0? day 13 vs 6: both 200 -> 0 ... all 0 ->
     # degenerate denominator -> guarded 0.0 with sum_test = 50
@@ -247,7 +247,7 @@ def test_mase_closed_form_pin(spark):
             y = 250
         rows.append((d, y))
     df = spark.createDataFrame(rows, "x long, y long")
-    r = mase_backtest(df, "x", "y", season=7, test_len=7).collect()[0]
+    r = mase_backtest(df, "x", "y").collect()[0]
     assert r["sum_abs_err_train_cents"] == 10  # day 10 vs day 3
     assert r["sum_abs_err_test_cents"] == 60  # day 17 (10) + day 20 (50)
     assert r["mase_r6"] == pytest.approx(
@@ -272,7 +272,7 @@ def test_mase_null_period_index_is_dropped(spark):
         rows.append((d, y))
     rows.append((None, 999))
     df = spark.createDataFrame(rows, "x long, y long")
-    r = mase_backtest(df, "x", "y", season=7, test_len=7).collect()[0]
+    r = mase_backtest(df, "x", "y").collect()[0]
     # identical to the clean 21-day pin: the NULL-x point is invisible
     assert r["sum_abs_err_train_cents"] == 10
     assert r["sum_abs_err_test_cents"] == 60
@@ -349,7 +349,7 @@ def test_twonn_line_manifold_and_degenerates(spark):
     pos = [float(2**i) for i in range(1, 9)]  # 2..256
     rows = [(i, [p] + [0.0] * 63) for i, p in enumerate(pos)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    r = intrinsic_dimension_twonn(df, "vec_id", "embedding").collect()[0]
+    r = intrinsic_dimension_twonn(df).collect()[0]
     # python replica
     lnsum = 0.0
     for i, p in enumerate(pos):
@@ -364,6 +364,6 @@ def test_twonn_line_manifold_and_degenerates(spark):
     df = spark.createDataFrame(
         rows_dup, "vec_id long, embedding array<float>"
     )
-    r = intrinsic_dimension_twonn(df, "vec_id", "embedding").collect()[0]
+    r = intrinsic_dimension_twonn(df).collect()[0]
     assert r["n_degenerate"] == 2  # both copies have a zero d1
     assert r["n_used"] == 7

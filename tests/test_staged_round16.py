@@ -131,7 +131,7 @@ def test_contrastive_negatives_never_in_group_and_exactly_k(spark):
     df = spark.createDataFrame(
         [(i, f"g{i % 4}") for i in range(40)], "id long, grp string"
     )
-    out = contrastive_negative_sample(df, "id", "grp", k=3).collect()
+    out = contrastive_negative_sample(df, "id", "grp").collect()
     assert all(r["anchor_group"] != r["negative_group"] for r in out)
     assert sum(r["n_pairs"] for r in out) == 40 * 3
 
@@ -144,8 +144,8 @@ def test_contrastive_negatives_deterministic(spark):
     df = spark.createDataFrame(
         [(i, f"g{i % 3}") for i in range(30)], "id long, grp string"
     )
-    a = contrastive_negative_sample(df, "id", "grp", k=3).collect()
-    b = contrastive_negative_sample(df, "id", "grp", k=3).collect()
+    a = contrastive_negative_sample(df, "id", "grp").collect()
+    b = contrastive_negative_sample(df, "id", "grp").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

@@ -114,7 +114,6 @@ def test_epoch_capped_mixture_invariants(spark, doc_feats):
         "source",
         "toks",
         budget=budget,
-        max_epochs=2,
     ).collect()
     assert rows
     assert all(r["alloc_tokens"] <= r["cap_tokens"] for r in rows)
@@ -134,7 +133,6 @@ def test_epoch_capped_mixture_invariants(spark, doc_feats):
         "source",
         "toks",
         budget=big,
-        max_epochs=2,
     ).collect()
     assert any(r["alloc_tokens"] == r["cap_tokens"] for r in rows2)
     assert all(r["alloc_tokens"] <= r["cap_tokens"] for r in rows2)
@@ -199,7 +197,7 @@ def test_adjacent_pair_counts_tiny_fixture(spark):
     )
     got = {
         (r["pair"], r["n"])
-        for r in adjacent_pair_counts(df, "text", top_n=10).collect()
+        for r in adjacent_pair_counts(df, top_n=10).collect()
     }
     assert got == {
         ("the cat", 3),  # lowercased: 'THE cat' merges in
@@ -261,7 +259,7 @@ def test_epoch_capped_mixture_matches_pure_python(spark):
         got = {
             r["source"]: r["alloc_tokens"]
             for r in epoch_capped_mixture(
-                df, "source", "toks", budget=budget, max_epochs=2
+                df, "source", "toks", budget=budget
             ).collect()
         }
         assert got == pure(budget), (budget, got, pure(budget))
@@ -291,7 +289,7 @@ def test_adjacent_pair_counts_matches_python_counter(spark, sf_dir):
     want = sorted(counter.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
     got = [
         (r["pair"], r["n"])
-        for r in adjacent_pair_counts(docs, "text", top_n=50).collect()
+        for r in adjacent_pair_counts(docs, top_n=50).collect()
     ]
     assert got == want
 
@@ -660,7 +658,7 @@ def test_substring_dedup_matches_pure_python_reference(spark):
     df = spark.createDataFrame(corpus, "doc_id bigint, text string")
     want_spans, want_cut = _py_spans_and_cut(corpus, L=3, min_count=2)
     got_spans = {}
-    for r in duplicate_spans(df, L=3, min_count=2).collect():
+    for r in duplicate_spans(df, L=3).collect():
         got_spans.setdefault(r["doc_id"], []).append(
             (r["span_start"], r["span_end"], r["span_tokens"])
         )
@@ -669,7 +667,7 @@ def test_substring_dedup_matches_pure_python_reference(spark):
     } == {d: v for d, v in want_spans.items() if v}
     got_cut = {
         r["doc_id"]: (r["n_tokens"], r["n_kept"], r["kept_text"])
-        for r in cut_duplicate_spans(df, L=3, min_count=2).collect()
+        for r in cut_duplicate_spans(df, L=3).collect()
     }
     assert got_cut == want_cut
 
@@ -685,7 +683,7 @@ def test_substring_dedup_within_doc_repetition_counts(spark):
         [(0, "a0 p q r a1 a2 p q r a3"), (1, "b0 b1 b2 b3 b4 b5")],
         "doc_id bigint, text string",
     )
-    spans = duplicate_spans(df, L=3, min_count=2).collect()
+    spans = duplicate_spans(df, L=3).collect()
     assert {(r["doc_id"], r["span_start"], r["span_end"]) for r in spans} == {
         (0, 2, 4),
         (0, 7, 9),
@@ -737,7 +735,7 @@ def test_sessionize_gap_boundary_is_strict(spark):
     )
     got = {
         r["event_id"]: (r["user_id"], r["session_id"])
-        for r in sessionize(df, gap_seconds=1800).collect()
+        for r in sessionize(df).collect()
     }
     assert got == {1: (7, 1), 2: (7, 1), 3: (7, 2), 4: (9, 1)}
 
@@ -756,7 +754,7 @@ def test_sessionize_tiebreaks_on_event_id(spark):
     )
     got = {
         r["event_id"]: r["session_id"]
-        for r in sessionize(df, gap_seconds=1800).collect()
+        for r in sessionize(df).collect()
     }
     assert got == {10: 1, 20: 1, 30: 2}
 
@@ -894,7 +892,7 @@ def test_sessionize_random_timelines_match_pure_python(spark, deltas):
     )
     got = {
         r["event_id"]: (r["user_id"], r["session_id"])
-        for r in sessionize(df, gap_seconds=1800).collect()
+        for r in sessionize(df).collect()
     }
     assert got == _py_sessionize(rows, 1800)
 
@@ -913,14 +911,14 @@ def test_cross_group_leakage_ignores_within_group_repetition(spark):
         (2, "s2", "m n a b c d e f o p q2 r2"),  # crosses boundary
     ]
     df = spark.createDataFrame(corpus, "doc_id bigint, source string, text string")
-    cross = cross_group_leakage_spans(df, "source", L=6, min_groups=2)
+    cross = cross_group_leakage_spans(df, "source", L=6)
     got = {(r["doc_id"], r["span_start"], r["span_end"]) for r in cross.collect()}
     # 'a b c d e f' sits at positions 4-9 in docs 0/1 and 3-8 in doc 2;
     # docs 0 and 1 share source s1, so only the doc0/doc2 and doc1/doc2
     # boundary-crossing content flags — in all three docs, because the
     # shingle itself exists in two sources.
     assert got == {(0, 4, 9), (1, 4, 9), (2, 3, 8)}
-    plain = duplicate_spans(df, L=6, min_count=2)
+    plain = duplicate_spans(df, L=6)
     assert plain.count() == 3  # occurrence-based form flags the same three
 
 
@@ -1003,7 +1001,7 @@ def test_sessionize_agrees_with_sparks_session_window(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     mine = {
         (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in session_stats(events, gap_seconds=1800).collect()
+        for r in session_stats(events).collect()
     }
     builtin = {
         (r["user_id"], r["session_start"], r["n_events"], r["total_value"])

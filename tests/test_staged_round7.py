@@ -292,7 +292,7 @@ def test_power_iteration_recovers_planted_direction(spark):
         v[2 + i % 6] = 0.05 * ((i % 3) - 1)
         rows.append((i, v))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vec = power_iteration_top_direction(df, "embedding", dim=8, iterations=4)
+    vec = power_iteration_top_direction(df, dim=8, iterations=4)
     assert abs(vec[0]) == 1000  # dominant axis at full normalization
     assert abs(vec[1]) > 800
     assert vec[0] * vec[1] > 0  # same sign as the planted diagonal
@@ -309,7 +309,7 @@ def test_power_iteration_matches_python_replay(spark, sf_dir):
     from pinterest_data_pipeline_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    got = power_iteration_top_direction(emb, "embedding", dim=64, iterations=3)
+    got = power_iteration_top_direction(emb, dim=64, iterations=3)
 
     def round_half_away(t: float) -> int:
         # Spark's round() is HALF_UP (away from zero), Python's round()

@@ -155,7 +155,7 @@ def test_autocorr_monotone_series_positive(spark):
         for i in range(30)
     ]
     df = spark.createDataFrame(rows, "ts timestamp, amt double")
-    out = {r["lag"]: r for r in autocorr_daily(df, "ts", "amt", (1, 7)).collect()}
+    out = {r["lag"]: r for r in autocorr_daily(df, "ts", "amt").collect()}
     assert out[1]["n_days"] == 30
     assert out[1]["n_pairs"] == 29
     assert out[7]["n_pairs"] == 23
@@ -194,7 +194,7 @@ def test_pmi_surfaces_planted_collocation(spark):
     filler = " ".join(f"word{i}" for i in range(40))
     docs = [(i, f"{filler} zyx qwv {filler}") for i in range(6)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    top = pmi_bigrams(df, min_count=5, top_k=5).collect()
+    top = pmi_bigrams(df, top_k=5).collect()
     pairs = [(r["w1"], r["w2"]) for r in top]
     assert ("zyx", "qwv") in pairs
     planted = next(r for r in top if (r["w1"], r["w2"]) == ("zyx", "qwv"))
@@ -241,7 +241,7 @@ def test_feature_hash_replays_python_md5(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta alpha Gamma beta alpha")], "doc_id long, text string"
     )
-    rows = feature_hash_buckets(df, n_buckets=256, top_k=10).collect()
+    rows = feature_hash_buckets(df).collect()
 
     def bucket(w):
         return int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 256
@@ -276,7 +276,7 @@ def test_kaplan_meier_hand_curve(spark):
         ("z", d(100)),
     ]
     df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    out = {r["day"]: r for r in kaplan_meier(df, "user_id", "ts").collect()}
+    out = {r["day"]: r for r in kaplan_meier(df).collect()}
     assert out[0]["n_risk"] == 4
     assert (out[0]["n_churn"], out[0]["n_censored"]) == (1, 1)
     assert out[0]["survival_r6"] == 0.75
@@ -291,12 +291,12 @@ def test_rbo_identical_and_disjoint(spark):
         [(i, i) for i in range(1, 11)], "id long, rank long"
     )
     b_same = a
-    r = rbo_at_k(a, b_same, "id", "rank").collect()[0]
+    r = rbo_at_k(a, b_same, "id").collect()[0]
     assert r["overlap_at_10"] == 10
     assert r["rbo_r6"] == round(1.0 - 0.9**10, 6)
     b_disj = spark.createDataFrame(
         [(i + 100, i) for i in range(1, 11)], "id long, rank long"
     )
-    r2 = rbo_at_k(a, b_disj, "id", "rank").collect()[0]
+    r2 = rbo_at_k(a, b_disj, "id").collect()[0]
     assert r2["overlap_at_10"] == 0
     assert r2["rbo_r6"] == 0.0

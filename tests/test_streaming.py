@@ -115,7 +115,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         spark, os.path.join(land, "*"), schema, max_files_per_trigger=1
     )
     agg = windows.tumbling_counts(
-        stream, "ts", ["event_type"], window="1 hour", watermark="10 minutes"
+        stream, "ts", ["event_type"], watermark="10 minutes"
     )
     q = (
         agg.writeStream.outputMode("append")
