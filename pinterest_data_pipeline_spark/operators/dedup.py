@@ -342,11 +342,11 @@ def near_duplicates_minhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.7,
+    *,
     max_bucket_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
-    """LSH candidates verified with exact shingle Jaccard ≥ threshold.
+    """LSH candidates verified with exact shingle Jaccard ≥ 0.5.
 
     Returns (id_a, id_b, jaccard_sim). Verification joins the (small)
     candidate set back to per-document shingle sets — the expensive exact
@@ -377,7 +377,7 @@ def near_duplicates_minhash(
         cands.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("jaccard_sim", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= 0.5)
         .select("id_a", "id_b", "jaccard_sim")
     )
 

@@ -13,6 +13,9 @@ even when values match.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,247 +25,112 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# The external driver verifies a fixed-size PREFIX of ``queries()``:
-# CORRECTNESS_r01.json contains exactly the first 50 entries in insertion
-# order (cumulative sweep time at the cut was ~32 s of a 66 s total, so the
-# cut is a count cap, not a time budget). With more than 50 registered
-# queries the prefix must therefore be CHOSEN, not incidental:
+# The external driver checks only the first 50 entries of ``queries()``
+# each round; ``ordered_queries`` puts first what most needs a row.
 #
-# - ``CHECK_FIRST`` leads the ordering — queries with no driver row yet,
-#   queries whose implementation changed since their last green row, and
-#   new queries. Within it, oracle-backed (strong-signal) entries come
-#   before rows-only ones.
-# - Everything else follows in registration order (flagship q* queries and
-#   the core relational surface first), keeping its prior-round green rows
-#   as standing evidence.
-# - ``CHECK_LAST`` holds heavy pair-generating queries that are already
-#   green, so they never crowd out an unverified query.
-#
-# Rotating this list per round gives every registered query a driver
-# correctness row across rounds even though each single round checks at
-# most 50.
-CHECK_FIRST: list[str] = [
-    # ---- ROUND 12 WINDOW: exactly 50 entries.
-    # Arithmetic (pre-planned in round 11's ROTATION NOTES, adjusted
-    # to land the two outstanding pair-join re-certifications and the
-    # new trim-report registration the r11 verdict asked for):
-    # 12 promotions (the 2-query staged_round12 remainder + all 10 of
-    # staged_round13) + 1 new registration (jaccard_trim_report_capped,
-    # r11 verdict item 5) + 3 changed re-certifications
-    # (jaccard/containment exact pair joins: the _shingle_sets refactor
-    # + opt-in max_posting_size caps touched their source in r11 with
-    # local-mirror-only evidence — r11 verdict item 2; plus
-    # mutual_nn_pairs_sample, whose rate-based sample was capped to a
-    # fixed 1024-id md5 panel in r12 after its x100 deep point read
-    # 567 s — non-binding at test SFs, values unchanged, but changed
-    # source takes a driver row) + the first 25 of the 28-query
-    # r6-evidence remainder + the first 3 of the r7-evidence set in
-    # registration order, moved up as (6); the 6 changed queries of
-    # (0) lead.
-    # 6 + 3 + 12 + 1 + 3 + 25 = 50 holds exactly.
-    #
-    # -- (0) changed since their last correctness rows (r07 for the
-    # first three, then r11, r10, r11): operators/clustering.
-    # duplicate_clusters dropped its pre-barrier repartition; k-means
-    # and product quantization train through one Lloyd trainer and one
-    # monotonicity gate (operators/clustering.train_codebooks).
-    "dedup_keep_best_quality",
-    "leakage_safe_split_assign",
-    "soft_dedup_weights",
-    "ivf_kmeans_codebook_assign",
-    "pq_codebook_train_gate",
-    "embedding_ivf_multiprobe_topk",
-    # -- (6) oldest-evidence rotation: the first 3 of the r7-evidence
-    # set in registration order (the remaining 43 roll to rounds
-    # 13-14).
-    "minhash_dedup_clusters",
-    "semantic_dedup_survivors",
-    "corpus_curation_full",
-    # -- (1) the staged_round12 graph/linkage remainder (full oracles,
-    # strict-mirror parity at sf0.001 + sf0.01, x30 stress rows; first
-    # driver rows here):
-    "lpa_purchasing_communities",
-    "fellegi_sunter_link_weights",
-    # -- (2) all 10 of the round-9-staged round-13 batch
-    # (plans/staged_round13.py):
-    "k_core_purchasing_profile",
-    "l_diversity_docs",
-    "dirichlet_lm_doc_scores",
-    "err_at_10_length_ranker",
-    "poststratified_lift_user_spend",
-    "survivorship_golden_record",
-    "good_turing_bigram_coverage",
-    "kmv_distinct_price_points",
-    "event_burstiness_by_type",
-    "srm_assignment_audit",
-    # -- (3) NEW registration: the capped trim-report driver row that
-    # makes the "no silent caps" contract hash-verifiable (cap=2
-    # demonstration configuration; production 64 never trims at test
-    # SFs).
-    "jaccard_trim_report_capped",
-    # -- (4) changed in round 11 (shared _shingle_sets front half +
-    # opt-in max_posting_size caps, registered defaults plan-identical
-    # but the changed-query re-certification policy wants a DRIVER row,
-    # not just the local mirror): the two prefix-filter pair joins.
-    "jaccard_exact_doc_pairs",
-    "containment_exact_doc_pairs",
-    "mutual_nn_pairs_sample",
-    # -- (5) oldest-evidence rotation: the 28-query r6-evidence
-    # remainder in registration order (completes the r6 set's refresh).
-    "embedding_near_dup_pairs",
-    "multimodal_binary_meta",
-    "corpus_curation_basic",
-    "text_top_pieces",
-    "chunk_documents_tokens",
-    "stratified_sample_per_lang",
-    "mixture_upsample_by_lang",
-    "near_dup_cluster_size_histogram",
-    "winnowing_passage_pairs",
-    "token_budget_selection",
-    "mixture_epoch_capped_plan",
-    "bpe_pair_stats",
-    "winnowing_cap_report",
-    "incremental_embedding_new_pairs",
-    "dsir_importance_weights",
-    "dsir_gumbel_topk",
-    "bpe_learn_merges",
-    "bpe_encode_compression",
-    "duplicate_span_report",
-    "cut_duplicate_spans_stats",
-    "bpe_fertility_by_lang",
-    "cross_source_span_leakage",
-    "mattr_lexical_diversity",
-    "join_null_safe_agg",
-    "bigram_logprob_quality",
-    # ---- 50-row window boundary ----
-    "curation_v2_report",
-    "sessionize_event_stats",
-    "doremi_domain_reweight",
-    "embedding_quantize_error_bound",
-    "udtf_split_sentences",
-    "pii_redaction_counts",
-    #
-    # ROUND-13 ROTATION NOTES (window arithmetic pre-planned):
-    #   (a) 8 promotions: all of plans/staged_round14.py (SNM blocking
-    #       recall, degree assortativity, Heaps vocab growth,
-    #       idempotency conflict audit, revenue proration, quantile
-    #       normalization, TWAP, compaction planning). Note
-    #       twap_user_value was ea26d3d-touched — its promotion row
-    #       doubles as that re-certification.
-    #   (b) 38 changed-in-r12 re-certifications: the FULL-REGISTRY
-    #       fuzz sweeps (round 12 extended the harness past the window
-    #       to all 288 registered queries, in NULL, NaN and
-    #       empty-string modes) retired 32 more latent splits; the
-    #       fixes touching queries whose r12 window slots were NOT
-    #       live take r13 slots here (every fix is
-    #       clean-data-identical — re-verified at sf0.01 with the
-    #       driver comparator when it landed — and parity-pinned by
-    #       tests/test_nullfuzz_parity.py). First the 35 from the NULL
-    #       sweep:
-    #       bloom_semi_join_prune, dedup_keep_best_quality,
-    #       leakage_safe_split_assign, soft_dedup_weights,
-    #       ngram_jaccard_pairs, ngram_containment_pairs,
-    #       minhash_lsh_near_duplicates, minhash_estimate_accuracy_gate,
-    #       incremental_minhash_new_pairs, from_csv_embedded_records,
-    #       hof_map_ops, grouped_map_top2_per_nation, ab_purchase_ztest,
-    #       cuped_event_experiment, mann_whitney_event_value,
-    #       chisq_event_type_by_arm, mde_power_purchase,
-    #       quantile_lift_user_spend, winsorized_mean_lift_user_spend,
-    #       fk_integrity_audit, approx_percentiles_sketch,
-    #       argmax_literal_max_first, asof_join_latest_view,
-    #       mann_kendall_daily_trend, multimodal_raw_decode_features,
-    #       obrien_fleming_interim_looks, parse_url_features,
-    #       per_source_lang_mix, quality_linear_gate,
-    #       regex_function_matrix, stream_running_totals_batch,
-    #       text_lang_id, to_json_envelope, try_arithmetic_funcs,
-    #       zorder_layout_pruning_report.
-    #       Plus 3 from the `--mode empty` sweep (same policy):
-    #       json_extract_events, variant_extract_events,
-    #       item_cooccurrence_similarity. (parse_url_features' empty
-    #       fix shares its slot already queued above.) That makes (b)
-    #       38 re-certs total.
-    #       (Window-slot-live r12 changes — the nine window splits plus
-    #       the _TRIGRAMS-shared oracles of minhash_dedup_clusters,
-    #       near_dup_cluster_size_histogram, curation_v2_report,
-    #       corpus_curation_full — re-certify in THIS round's sweep and
-    #       need no r13 slot. multimodal_decode_features is terminally
-    #       rows-only, CHECK_LAST-pinned.)
-    #   (c) 4 of the 14 `--mode nullts` re-certifications (the
-    #       NULL-timestamp sweep, run later in r12, retired 16 splits
-    #       — PERF.md "NULL-timestamp fuzz"; sessionize_event_stats
-    #       was r12-window-live and two are staged-only, so 14
-    #       registered queries need slots; all are
-    #       clean-data-identical and parity-pinned by
-    #       test_retired_ts_split_stays_parity). Alphabetically first:
-    #       asof_join_latest_view, cusum_changepoint_revenue,
-    #       event_transition_matrix, hll_sketch_union_gate.
-    #   8 + 38 + 4 = 50 holds exactly. The 10 remaining nullts
-    #   re-certs (incremental_rollup_events, markov_path_logloss,
-    #   session_window_user_counts, sessionize_events,
-    #   sliding_window_event_counts, tumbling_hourly_event_counts,
-    #   varint_layout_size_report, watermark_lateness_audit,
-    #   window_running_and_lag, window_value_functions) take r14 slots
-    #   ahead of the oldest-evidence fill, pushing the r7-evidence
-    #   remainder one round further out.
-    #
-    # FURTHER STAGED INVENTORY (keeping every window promotion-only):
-    #   round 14: plans/staged_round15.py, 8 queries (association
-    #     rules, Theil-Sen slope, LLR collocations, coverage/diversity
-    #     eval, MASE backtest, 2-D skyline, trending rank shift, TwoNN
-    #     intrinsic dimension);
-    #   round 15: plans/staged_round16.py (Spearman, Kruskal-Wallis,
-    #     EB shrinkage, contrastive negatives, Burrows' Delta) +
-    #     plans/staged_round17.py (JSD source drift, MI/NMI leakage,
-    #     t-closeness, caliper matching + SMD, event trigram paths);
-    #   round 16: plans/staged_round18.py seed (authored in round 12).
-    #   All oracled + strict-mirror parity-tested at two SFs.
-    #
-    # STANDING ROTATION RULE (policy since round 5; held r4->r11):
-    # each round's window must fit new + changed + reds; cap net-new
-    # registrations so that holds (new + changed + oldest-stale <= 50),
-    # and fill every remaining slot with green rows
-    # oldest-evidence-first. Never let a query sit never-checked across
-    # a round boundary. (Superseded windows live in git history; the
-    # r11 window is this file at commit 4c03395.)
-]
+# RECHECK: a query whose code changed since its last green driver row ->
+# the newest CORRECTNESS round committed before the change. An entry is
+# active while that round is >= the round of the query's last green row,
+# so it expires once the driver commits a newer green row.
+RECHECK: dict[str, int] = {
+    "corpus_curation_full": 13,
+    "dedup_keep_best_quality": 13,
+    "embedding_ivf_multiprobe_topk": 13,
+    "ivf_kmeans_codebook_assign": 13,
+    "leakage_safe_split_assign": 13,
+    "lpa_purchasing_communities": 13,
+    "minhash_dedup_clusters": 13,
+    "near_dup_cluster_size_histogram": 13,
+    "pq_codebook_train_gate": 13,
+    "semantic_dedup_survivors": 13,
+    "soft_dedup_weights": 13,
+    "embedding_top_direction_power": 12,
+    "hits_supplier_part_scores": 12,
+    "incremental_minhash_new_pairs": 12,
+    "minhash_estimate_accuracy_gate": 12,
+    "minhash_lsh_near_duplicates": 12,
+    "near_dup_triangle_count": 12,
+    "pagerank_supplier_part": 12,
+    "pinterest_q1_top_category_per_country": 12,
+    "pinterest_q2_top_category_per_year": 12,
+    "pinterest_q3_top_user_per_country": 12,
+    "pinterest_q4_top_category_per_age_group": 12,
+    "pinterest_q5_users_joined_per_year": 12,
+    "poisson_bootstrap_ci_value": 12,
+    "repetition_signals": 12,
+    "simhash_near_pairs": 12,
+}
 
-CHECK_LAST: list[str] = [
-    # PERMANENT PIN (r9 verdict "What's wrong #2"): terminally
-    # rows-only — binary image payloads are invisible to DuckDB, so
-    # its driver row can never upgrade past spark_rows; its
-    # oracle-backed twin multimodal_raw_decode_features carries the
-    # hash-verified evidence. Pinning it here frees a window slot for
-    # an unverified query every round.
-    "multimodal_decode_features",
-    # HEAVY-PAIR SCHEDULING RULE (r10 verdict item 6): the exact-pair
-    # joins (jaccard_exact_doc_pairs, containment_exact_doc_pairs) and
-    # pq_codebook_train_gate are the registry's heaviest compute. When
-    # their green rows age to the oldest-evidence tier, rotate them
-    # through slots HERE (CHECK_LAST), never through a CHECK_FIRST
-    # slot an unverified promotion could use. Their standing evidence
-    # stays strong regardless: the dtype-strict local mirror re-checks
-    # every registered query at sf0.001 on each pytest run, and a
-    # CHECK_FIRST refresh slot is warranted only in a window with
-    # spare capacity (a light round with few promotions).
-    # fastss_customer_name_pairs took a CHECK_FIRST slot in round 11
-    # only because its implementation changed (skew cap) — a change
-    # re-cert outranks this rule.
-]
+_EVIDENCE_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def ordered_queries() -> dict[str, QueryFn]:
-    """All registered queries, in driver-check priority order (see above)."""
-    ordered: dict[str, QueryFn] = {}
-    for name in CHECK_FIRST:
-        if name in QUERIES:
-            ordered[name] = QUERIES[name]
-    for name in QUERIES:
-        if name not in ordered and name not in CHECK_LAST:
-            ordered[name] = QUERIES[name]
-    for name in CHECK_LAST:
-        if name in QUERIES:
-            ordered[name] = QUERIES[name]
-    return ordered
+def is_green(name: str, row: dict) -> bool:
+    """Whether a driver CORRECTNESS row certifies ``name``. A rows-only
+    query is green once it ran (the driver marks its row
+    err='no_oracle' with spark_rows set): its strongest evidence."""
+    if name not in ORACLE:
+        return row.get("err") in (None, "no_oracle") and (
+            row.get("spark_rows") is not None
+        )
+    return bool(
+        row.get("rows_match")
+        and row.get("schema_match")
+        and row.get("hash_match", True)
+        and not row.get("err")
+    )
+
+
+def read_evidence(evidence_dir: str) -> tuple[dict[str, dict], dict[str, int]]:
+    """The latest driver row of each query in the CORRECTNESS_r<N>.json
+    files of ``evidence_dir``, and the round of its latest green row."""
+    rounds = sorted(
+        (int(m.group(1)), m.group(0))
+        for m in map(_EVIDENCE_FILE.fullmatch, os.listdir(evidence_dir))
+        if m
+    )
+    latest: dict[str, dict] = {}
+    last_green: dict[str, int] = {}
+    for round_, file in rounds:
+        with open(os.path.join(evidence_dir, file)) as fh:
+            for name, row in json.load(fh).items():
+                latest[name] = row
+                if is_green(name, row):
+                    last_green[name] = round_
+    return latest, last_green
+
+
+def ordered_queries(evidence_dir: str) -> dict[str, QueryFn]:
+    """All registered queries in driver-check order, from the driver's
+    CORRECTNESS_r<N>.json files in ``evidence_dir``. Tiers, in order:
+
+    1. no row, or a red latest row;
+    2. changed since the last green row (an active RECHECK entry);
+    3. every other oracle-backed query;
+    4. rows-only queries with a green row: no later row can make their
+       evidence stronger.
+
+    Within a tier the oldest last green row leads, then registration
+    order, so a round's green rows move behind the rest and the window
+    rotates through the registry. With no evidence files, RECHECK
+    entries lead, then registration order."""
+    latest, last_green = read_evidence(evidence_dir)
+    if not latest:
+        return {n: QUERIES[n] for n in sorted(QUERIES, key=lambda n: n not in RECHECK)}
+
+    def key(item: tuple[int, str]) -> tuple[int, int, int]:
+        index, name = item
+        green_round = last_green.get(name, 0)
+        if name not in latest or not is_green(name, latest[name]):
+            tier = 1
+        elif RECHECK.get(name, 0) >= green_round:
+            tier = 2
+        elif name in ORACLE:
+            tier = 3
+        else:
+            tier = 4
+        return tier, green_round, index
+
+    return {name: QUERIES[name] for _, name in sorted(enumerate(QUERIES), key=key)}
 
 
 def has_sql_line_comment(sql: str) -> bool:
@@ -270,8 +138,6 @@ def has_sql_line_comment(sql: str) -> bool:
     literals. A `--` inside a quoted literal (LIKE '%--%', a regex
     class with a literal double dash) is legitimate SQL; only a bare
     `--` would be swallowed by the whitespace collapse in register()."""
-    import re
-
     # '' inside a literal is SQL's escaped quote; consume it within the
     # literal so "it''s--x" doesn't end the literal early.
     stripped = re.sub(r"'(?:[^']|'')*'", "''", sql)

@@ -6,8 +6,9 @@ pure-Python winnowing reference, planted-clone, margin-ordering and
 sqrt-boost pins, now in tests/test_round5_operators.py) but held out of
 the registry so
 round 4's 50-row driver window could close the never-checked backlog.
-Round 5 registers them; they lead CHECK_FIRST so each earns its first
-driver correctness row. The registry-wide strict mirror
+Round 5 registers them; having no driver row, they lead the
+driver-check order (``registry.ordered_queries``) until each earns its
+first driver correctness row. The registry-wide strict mirror
 (tests/test_oracle_parity.py) re-verifies them every pytest run like
 any other registered query.
 """

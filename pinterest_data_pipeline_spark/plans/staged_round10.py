@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
+from pinterest_data_pipeline_spark.plans.training_data import _QUALITY_MARGIN
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 
 
@@ -252,18 +253,10 @@ def phrase_query_table_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "average_precision_by_source",
-    oracle=r"""
+    oracle=rf"""
     WITH feats AS (
         SELECT doc_id, source, n_chars,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin
+               {_QUALITY_MARGIN} AS margin
         FROM documents
     ),
     g AS (

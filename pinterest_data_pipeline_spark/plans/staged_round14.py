@@ -1,13 +1,11 @@
 """ROUND-14 STAGING AREA — implemented, tested, NOT driver-registered.
 
-Windows through round 13 are fully pre-planned (registry ROTATION
-NOTES; plans/staged_round{9..13}.py), so this batch stages five
-windows out, per the standing promotion-only rule. Same contract as
-every staging round: each query has a full DuckDB oracle replayed
-value-for-value (strict-mirror parity at sf0.001 + sf0.01 in
-tests/test_staged_round14.py) and behavior-pinning unit tests;
-round 14 registers them by pointing ``_stage`` at
-``registry.register`` and queueing the names in CHECK_FIRST.
+Same contract as every staging round: each query has a full DuckDB
+oracle replayed value-for-value (strict-mirror parity at sf0.001 +
+sf0.01 in tests/test_staged_round14.py) and behavior-pinning unit
+tests. Registering them means pointing ``_stage`` at
+``registry.register``; a query with no driver row then leads the
+computed driver-check order (``registry.ordered_queries``) by itself.
 
 The batch is the PIPELINE-TRUST + LAYOUT-PLANNING layer — blocking
 quality, graph mixing, corpus growth, delivery hygiene, revenue

@@ -79,8 +79,9 @@ from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
 from pinterest_data_pipeline_spark.plans.training_data import (
-    _MH_PARAMS_SQL,
+    _MINHASH_BANDS,
     _PLANES_SQL,
+    _QUALITY_MARGIN,
     _TRIGRAMS,
     _cos_sql,
 )
@@ -97,26 +98,7 @@ _OWNER_CTES = f"""
     sh AS (
         SELECT doc_id, {_TRIGRAMS} AS g FROM documents
     ),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(g,
-                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform({_MH_PARAMS_SQL},
-                   p -> list_min(list_transform(hs,
-                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, bb.band AS band,
-               md5(concat_ws(',', bb.band,
-                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
-                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
-        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
-    ),
+    {_MINHASH_BANDS},
     cand AS (
         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
         FROM banded l JOIN banded r
@@ -149,18 +131,10 @@ _OWNER_CTES = f"""
 
 # The integer quality margin, exactly as the oracle-green
 # `quality_linear_gate` registration computes it.
-_MARGIN_CTE = r"""
+_MARGIN_CTE = rf"""
     margins AS (
         SELECT doc_id,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin,
+               {_QUALITY_MARGIN} AS margin,
                CAST(len(regexp_split_to_array(trim(text), '\s+'))
                     AS BIGINT) AS n_tokens
         FROM documents
@@ -177,7 +151,7 @@ def _cluster_owners(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_duplicates_minhash(
-        docs, "doc_id", "text", threshold=0.5, portable=True
+        docs, "doc_id", "text", portable=True
     )
     clusters = duplicate_clusters(pairs)
     return (

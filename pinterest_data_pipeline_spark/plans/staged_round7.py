@@ -46,6 +46,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.plans.registry import register
+from pinterest_data_pipeline_spark.plans.training_data import (
+    _QUALITY_MARGIN,
+    _cos_sql,
+)
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 
 
@@ -290,18 +294,10 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rrf_quality_length_fusion",
-    oracle=r"""
+    oracle=rf"""
     WITH feats AS (
         SELECT doc_id,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin,
+               {_QUALITY_MARGIN} AS margin,
                CAST(len(list_filter(string_split_regex(text, '\s+'),
                     x -> x <> '')) AS BIGINT) AS n_tokens
         FROM documents
@@ -450,18 +446,10 @@ def cuped_event_experiment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_decile_calibration",
-    oracle=r"""
+    oracle=rf"""
     WITH feats AS (
         SELECT doc_id, source,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin
+               {_QUALITY_MARGIN} AS margin
         FROM documents
     ),
     tiled AS (
@@ -511,18 +499,10 @@ def quality_decile_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curriculum_interleave_shards",
-    oracle=r"""
+    oracle=rf"""
     WITH feats AS (
         SELECT doc_id, source,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin
+               {_QUALITY_MARGIN} AS margin
         FROM documents
     ),
     ranked AS (
@@ -676,11 +656,6 @@ def embedding_top_direction_power(spark: SparkSession, sf_dir: str) -> DataFrame
 # triplet oracles already replay (same fold order, double math, round
 # 6) — imported rather than re-derived so the two surfaces cannot
 # drift apart.
-from pinterest_data_pipeline_spark.plans.training_data import (  # noqa: E402
-    _cos_sql,
-)
-
-
 @register(
     "triplet_mining_anchors",
     oracle=f"""
@@ -1108,18 +1083,10 @@ def ab_purchase_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ndcg_length_ranker_by_source",
-    oracle=r"""
+    oracle=rf"""
     WITH feats AS (
         SELECT doc_id, source, n_chars,
-               CAST(3000 * len(list_filter(
-                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                        t -> list_contains(
-                            ['and','is','of','that','the','to'], t)))
-                    - 2000 * length(regexp_replace(
-                        text, '[a-zA-Z0-9_\s]', '', 'g'))
-                    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
-                    - 100 * len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS margin
+               {_QUALITY_MARGIN} AS margin
         FROM documents
     ),
     g AS (

@@ -58,9 +58,7 @@ def sliding_window_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h window / 30m slide): every event lands in two
     windows; oracle materializes both starts explicitly."""
     ev = load_table(spark, sf_dir, "events")
-    return W.sliding_counts(
-        ev, "ts", ["event_type"], slide="30 minutes"
-    )
+    return W.sliding_counts(ev, "ts", ["event_type"])
 
 
 @register(

@@ -60,6 +60,56 @@ def _hits(code: str) -> str:
     return f"len(list_filter({_TOKS_LOWER}, t -> list_contains({_sw_list(code)}, t)))"
 
 
+# The DuckDB mirrors of formulas several oracles share, each written once.
+# text.linear_quality_margin, as a BIGINT (the expression of
+# `quality_linear_gate`, folded):
+_QUALITY_MARGIN = r"""CAST(3000 * len(list_filter(
+        regexp_split_to_array(lower(trim(text)), '\s+'),
+        t -> list_contains(
+            ['and','is','of','that','the','to'], t)))
+    - 2000 * length(regexp_replace(
+        text, '[a-zA-Z0-9_\s]', '', 'g'))
+    - 2000 * length(regexp_replace(text, '[^0-9]', '', 'g'))
+    - 100 * len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)"""
+
+# text.quality_score, rounded to 6 places, as the column `quality`:
+_QUALITY_SCORE = f"""round(0.4 * least((CAST({_hits("en")} AS DOUBLE)
+            / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)) * 4.0, 1.0)
+          + 0.3 * (CASE WHEN CAST(length(text) AS DOUBLE)
+                             / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)
+                             BETWEEN 3.0 AND 12.0
+                   THEN 1.0 ELSE 0.0 END)
+          + 0.2 * (1.0 - least((CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE)
+                                / greatest(length(text), 1)) * 5.0, 1.0))
+          + 0.1 * (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
+                                / greatest(length(text), 1)) * 5.0, 1.0)), 6)
+        AS quality"""
+
+# The portable MinHash LSH front half over a CTE `sh(doc_id, g)` of
+# trigram sets: md5-prefix shingle hashes, the baked permutations, and
+# md5 keys of 8 bands of 4 rows, as the CTEs hashed, sig and banded.
+_MINHASH_BANDS = f"""hashed AS (
+        SELECT doc_id,
+               list_transform(g,
+                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
+        FROM sh
+    ),
+    sig AS (
+        SELECT doc_id,
+               list_transform({_MH_PARAMS_SQL},
+                   p -> list_min(list_transform(hs,
+                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
+        FROM hashed
+    ),
+    banded AS (
+        SELECT doc_id, bb.band AS band,
+               md5(concat_ws(',', bb.band,
+                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
+                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
+        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
+    )"""
+
+
 # ---------------------------------------------------------------- text
 
 
@@ -249,26 +299,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS (
         SELECT doc_id, {_TRIGRAMS} AS g FROM documents
     ),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(g,
-                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform({_MH_PARAMS_SQL},
-                   p -> list_min(list_transform(hs,
-                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, bb.band AS band,
-               md5(concat_ws(',', bb.band,
-                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
-                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
-        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
-    ),
+    {_MINHASH_BANDS},
     cand AS (
         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
         FROM banded l JOIN banded r
@@ -311,11 +342,11 @@ def minhash_lsh_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar cross-join, no re-use of the twin relation — so no
     checkpoint needed)."""
     docs = load_table(spark, sf_dir, "documents")
-    xx_pairs = dedup.near_duplicates_minhash(
-        docs, "doc_id", "text", threshold=0.5
-    ).select("id_a", "id_b")
+    xx_pairs = dedup.near_duplicates_minhash(docs, "doc_id", "text").select(
+        "id_a", "id_b"
+    )
     twin = dedup.near_duplicates_minhash(
-        docs, "doc_id", "text", threshold=0.5, portable=True
+        docs, "doc_id", "text", portable=True
     ).select("id_a", "id_b")
     # ONE aggregate over a hit-flagged left join — not two scalar
     # aggregates cross-joined: this query's plan pin asserts zero
@@ -668,17 +699,7 @@ def multimodal_frame_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
         SELECT doc_id,
-               round(0.4 * least((CAST({_hits("en")} AS DOUBLE)
-                       / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)) * 4.0, 1.0)
-                     + 0.3 * (CASE WHEN CAST(length(text) AS DOUBLE)
-                                        / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)
-                                        BETWEEN 3.0 AND 12.0
-                              THEN 1.0 ELSE 0.0 END)
-                     + 0.2 * (1.0 - least((CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0))
-                     + 0.1 * (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0)), 6)
-                   AS quality,
+               {_QUALITY_SCORE},
                md5({_NORM_TEXT}) AS fingerprint
         FROM documents
     ),
@@ -717,26 +738,7 @@ def corpus_curation_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE sh AS (
         SELECT doc_id, {_TRIGRAMS} AS g FROM documents
     ),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(g,
-                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform({_MH_PARAMS_SQL},
-                   p -> list_min(list_transform(hs,
-                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, bb.band AS band,
-               md5(concat_ws(',', bb.band,
-                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
-                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
-        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
-    ),
+    {_MINHASH_BANDS},
     cand AS (
         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
         FROM banded l JOIN banded r
@@ -777,7 +779,7 @@ def minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_duplicates_minhash(
-        docs, "doc_id", "text", threshold=0.5, portable=True
+        docs, "doc_id", "text", portable=True
     )
     # iterations bounds hop count; min-label propagation early-stops at
     # the fixpoint, so a generous bound costs nothing once converged
@@ -973,17 +975,7 @@ def text_top_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE scored AS (
         SELECT doc_id, text,
-               round(0.4 * least((CAST({_hits("en")} AS DOUBLE)
-                       / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)) * 4.0, 1.0)
-                     + 0.3 * (CASE WHEN CAST(length(text) AS DOUBLE)
-                                        / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)
-                                        BETWEEN 3.0 AND 12.0
-                              THEN 1.0 ELSE 0.0 END)
-                     + 0.2 * (1.0 - least((CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0))
-                     + 0.1 * (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0)), 6)
-                   AS quality,
+               {_QUALITY_SCORE},
                md5({_NORM_TEXT}) AS fingerprint
         FROM documents
     ),
@@ -995,26 +987,7 @@ def text_top_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT sc.doc_id, sc.text FROM surv s JOIN scored sc USING (doc_id)
     ),
     sh AS (SELECT doc_id, {_TRIGRAMS} AS g FROM sdocs),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(g,
-                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform({_MH_PARAMS_SQL},
-                   p -> list_min(list_transform(hs,
-                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, bb.band AS band,
-               md5(concat_ws(',', bb.band,
-                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
-                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
-        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
-    ),
+    {_MINHASH_BANDS},
     cand AS (
         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
         FROM banded l JOIN banded r
@@ -1122,7 +1095,7 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verified end-to-end. Production callers keep the operator default
     # (xxhash64); the delta is the cost of a cross-engine gate (PERF.md).
     pairs = dedup.near_duplicates_minhash(
-        surviving_docs, "doc_id", "text", threshold=0.5, portable=True
+        surviving_docs, "doc_id", "text", portable=True
     )
     clusters = duplicate_clusters(pairs)
     # drop non-canonical cluster members (cluster_id == canonical doc_id)
@@ -2061,26 +2034,7 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS (
         SELECT doc_id, {_TRIGRAMS} AS g FROM documents
     ),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(g,
-                   s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hs
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform({_MH_PARAMS_SQL},
-                   p -> list_min(list_transform(hs,
-                            h -> (p[1] * h + p[2]) % 4294967311))) AS sig
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, bb.band AS band,
-               md5(concat_ws(',', bb.band,
-                   sig[bb.band * 4 + 1], sig[bb.band * 4 + 2],
-                   sig[bb.band * 4 + 3], sig[bb.band * 4 + 4])) AS key
-        FROM sig, (SELECT unnest(range(0, 8)) AS band) bb
-    )
+    {_MINHASH_BANDS}
     SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
     FROM banded l JOIN banded r
       ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
@@ -2248,17 +2202,7 @@ def reservoir_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
         SELECT lang,
-               round(0.4 * least((CAST({_hits("en")} AS DOUBLE)
-                       / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)) * 4.0, 1.0)
-                     + 0.3 * (CASE WHEN CAST(length(text) AS DOUBLE)
-                                        / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)
-                                        BETWEEN 3.0 AND 12.0
-                              THEN 1.0 ELSE 0.0 END)
-                     + 0.2 * (1.0 - least((CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0))
-                     + 0.1 * (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0)), 6)
-                   AS quality
+               {_QUALITY_SCORE}
         FROM documents
     )
     SELECT lang,
@@ -2351,17 +2295,7 @@ def _drift_cdf_sql(split: str, t: float) -> str:
                     WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'
                         THEN 'val'
                     ELSE 'train' END AS split,
-               round(0.4 * least((CAST({_hits("en")} AS DOUBLE)
-                       / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)) * 4.0, 1.0)
-                     + 0.3 * (CASE WHEN CAST(length(text) AS DOUBLE)
-                                        / greatest(CAST(len({_TOKS}) AS DOUBLE), 1.0)
-                                        BETWEEN 3.0 AND 12.0
-                              THEN 1.0 ELSE 0.0 END)
-                     + 0.2 * (1.0 - least((CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0))
-                     + 0.1 * (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                                           / greatest(length(text), 1)) * 5.0, 1.0)), 6)
-                   AS quality
+               {_QUALITY_SCORE}
         FROM documents
     )
     SELECT CAST(COUNT(*) FILTER (WHERE split = 'train') AS BIGINT) AS n_train,

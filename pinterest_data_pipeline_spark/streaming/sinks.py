@@ -9,8 +9,8 @@ between write and commit) simply overwrites its own directory and
 re-points the manifest to the same place. Readers resolve the manifest
 first, so they never observe a half-written version. Each version
 directory also holds its schema (``_SCHEMA.json``, skipped by Spark's
-reader like ``_SUCCESS``), and the manifest records the current one, so
-readers skip parquet footer inference, time-travel reads included.
+reader like ``_SUCCESS``), so readers skip parquet footer inference,
+time-travel reads included.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from pinterest_data_pipeline_spark.operators.merge import merge_upsert
 from pinterest_data_pipeline_spark.sources.sinks import (
@@ -33,9 +32,8 @@ _MANIFEST = "_MANIFEST.json"
 
 
 def read_manifest(target_dir: str) -> dict | None:
-    """The committed manifest ({"current": version, "batch_id": n,
-    "schema": StructType JSON}), or None before the first commit.
-    Manifests written without "schema" are still valid."""
+    """The committed manifest ({"current": version, "batch_id": n}), or
+    None before the first commit."""
     return read_json(os.path.join(target_dir, _MANIFEST))
 
 
@@ -50,39 +48,27 @@ def _already_committed(target_dir: str, batch_id: int) -> bool:
     return m is not None and int(m.get("batch_id", -1)) >= batch_id
 
 
-def _read_version(
-    spark: SparkSession, target_dir: str, version: str, schema: dict | None
-) -> DataFrame:
-    """Read one version directory, with ``schema`` (StructType JSON) when
-    there is one, else with the record committed inside the directory; a
-    version written without either is inferred."""
-    path = os.path.join(target_dir, version)
-    if schema is None:
-        return read_partitioned(spark, path)
-    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
-
-
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
-    """Resolve the manifest and read the current table version, with its
-    recorded schema when there is one (no inference job)."""
+    """Resolve the manifest and read the current table version, with the
+    schema recorded in its directory (no inference job)."""
     m = read_manifest(target_dir)
     if m is None:
         return None
-    return _read_version(spark, target_dir, m["current"], m.get("schema"))
+    return read_partitioned(spark, os.path.join(target_dir, m["current"]))
 
 
 def commit_version(target_dir: str, df: DataFrame, batch_id: int) -> None:
     """Write ``df`` to ``v<batch_id>`` with its schema beside the files, and
-    atomically repoint the manifest at it, recording the schema there too.
-    A replayed batch overwrites its own version directory; a committed
-    directory is never written again, so its schema cannot go stale."""
+    atomically repoint the manifest at it. A replayed batch overwrites its
+    own version directory; a committed directory is never written again,
+    so its schema cannot go stale."""
     version = f"v{batch_id:010d}"
     path = os.path.join(target_dir, version)
     df.write.mode("overwrite").parquet(path)
-    schema = record_schema(df, path)
+    record_schema(df, path)
     write_json_atomic(  # atomic commit
         os.path.join(target_dir, _MANIFEST),
-        {"current": version, "batch_id": batch_id, "schema": schema},
+        {"current": version, "batch_id": batch_id},
     )
 
 
@@ -158,7 +144,7 @@ def read_target_version(
     (``v<batchId>``) regardless of the manifest pointer — valid for any
     version `vacuum_versions` has not removed. Reads with the schema
     committed in the directory (no inference job)."""
-    return _read_version(spark, target_dir, version, None)
+    return read_partitioned(spark, os.path.join(target_dir, version))
 
 
 def table_changes(

@@ -47,11 +47,11 @@ def sliding_counts(
     df: DataFrame,
     ts_col: str,
     keys: Sequence[str],
-    slide: str = "15 minutes",
 ) -> DataFrame:
-    """Sliding-window counts (each row lands in window/slide buckets)."""
+    """Sliding-window counts: 1-hour windows every 30 minutes, so each row
+    lands in two windows."""
     return (
-        df.groupBy(F.window(ts_col, "1 hour", slide), *keys)
+        df.groupBy(F.window(ts_col, "1 hour", "30 minutes"), *keys)
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),

@@ -3,15 +3,22 @@
 Driver-side only (plan compilation; iterative builders may run their
 small driver collects).
 
+A query whose construction runs barriers (a checkpoint or a driver
+action, e.g. each round of an iterative operator) reads their results as
+scanned RDDs, so its own plan hides the code that fed them. The plan of
+each barrier's input follows the query's plan, in the order they ran.
+
 Usage: python scripts/capture_plans.py <out_dir> [name ...]
 Names default to every registered query.
 
 Expression ids (``#123``), ``plan_id=123``, RDD ids (``RDD[12]``) and
 lambda variable suffixes (``lambda x_4``) come from process-wide
-counters, so they differ between two runs of the same code; all four are
-normalized, and two captures of the same code then diff empty
-(``diff -r before after``). The checkout's own path (state tables under
-its ``spark-warehouse``) reads ``<repo>``, so two checkouts compare too.
+counters, and an observed metric's name is a random UUID, so they differ
+between two runs of the same code; all five are normalized, and two
+captures of the same code then diff empty (``diff -r before after``),
+but for a few plans whose Expand/Aggregate column order varies from run
+to run. The checkout's own path (state tables under its
+``spark-warehouse``) reads ``<repo>``, so two checkouts compare too.
 """
 
 from __future__ import annotations
@@ -35,7 +42,41 @@ _COUNTERS = (
     (r"plan_id=\d+", "plan_id=N"),
     (r"RDD\[\d+\]", "RDD[N]"),
     (r"lambda (\w+?)_\d+", r"lambda \1_N"),
+    (r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>"),
 )
+
+
+_BARRIERS = (
+    "localCheckpoint", "checkpoint", "collect", "toPandas", "count",
+    "first", "head", "take",
+)
+
+
+def explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def record_barrier_inputs(frame_class: type, log: list[str]) -> None:
+    """Make every barrier method of ``frame_class`` append its input plan
+    to ``log`` first; a barrier called inside another is not recorded."""
+    depth = [0]
+
+    def wrap(original):
+        def barrier(self, *args, **kwargs):
+            if not depth[0]:
+                log.append(explain(self))
+            depth[0] += 1
+            try:
+                return original(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return barrier
+
+    for name in _BARRIERS:
+        setattr(frame_class, name, wrap(getattr(frame_class, name)))
 
 
 def normalize(plan: str) -> str:
@@ -55,14 +96,17 @@ def main() -> None:
     )
 
     ensure_embedding_band_state(spark, SF_DIR)
+    barrier_inputs: list[str] = []
+    # the session's DataFrame class, which overrides pyspark.sql.DataFrame
+    record_barrier_inputs(type(spark.range(0)), barrier_inputs)
     for name in names:
+        barrier_inputs.clear()
         try:
-            df = QUERIES[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = explain(QUERIES[name](spark, SF_DIR))
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR building plan: {type(exc).__name__}: {exc}"
+        for i, barrier_plan in enumerate(barrier_inputs, 1):
+            plan += f"\n== barrier input {i} ==\n{barrier_plan}"
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(normalize(plan))
         print(f"wrote {name}.txt ({len(plan)} bytes)")

@@ -26,6 +26,7 @@ from pinterest_data_pipeline_spark.sources.fixtures import generate_raw_rows
 from pinterest_data_pipeline_spark.sources.parquet import load_table
 from pinterest_data_pipeline_spark.sources.sinks import (
     SCHEMA_RECORD,
+    read_json,
     read_partitioned,
     record_schema,
     write_json_atomic,
@@ -95,11 +96,13 @@ def test_load_table_fires_no_jobs(spark, sf_dir):
 
 
 def _assert_manifest_schema_is_inferred(spark, target):
-    """The recorded schema equals what Spark infers from the committed
-    version's files, and ``read_target`` uses it: 0 jobs."""
-    m = sinks.read_manifest(target)
-    recorded = StructType.fromJson(m["schema"])
-    assert recorded == spark.read.parquet(os.path.join(target, m["current"])).schema
+    """The schema recorded in the current version's directory equals what
+    Spark infers from its files, and ``read_target`` uses it: 0 jobs."""
+    version = os.path.join(target, sinks.read_manifest(target)["current"])
+    recorded = StructType.fromJson(
+        read_json(os.path.join(version, SCHEMA_RECORD))["schema"]
+    )
+    assert recorded == spark.read.parquet(version).schema
     assert _jobs_fired(spark, lambda: sinks.read_target(spark, target)) == []
     assert sinks.read_target(spark, target).schema == recorded
 

@@ -31,10 +31,8 @@ def test_minhash_lsh_recall_vs_exact(docs):
     """Every exact-Jaccard≥0.5 pair must be found by the LSH path (32
     hashes / 8 bands ⇒ ~99.9% per-pair probability at s=0.5; the planted
     duplicates sit well above threshold so recall must be total here)."""
-    exact = _pairs(dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5))
-    lsh = _pairs(
-        dedup.near_duplicates_minhash(docs, "doc_id", "text", threshold=0.5)
-    )
+    exact = _pairs(dedup.ngram_jaccard_pairs(docs, "doc_id", "text"))
+    lsh = _pairs(dedup.near_duplicates_minhash(docs, "doc_id", "text"))
     assert exact, "fixture should contain planted near-duplicates"
     missed = exact - lsh
     assert not missed, f"LSH missed {len(missed)} of {len(exact)} pairs: {sorted(missed)[:5]}"
@@ -43,9 +41,7 @@ def test_minhash_lsh_recall_vs_exact(docs):
 
 def test_minhash_candidates_superset_of_verified(docs):
     cands = _pairs(dedup.minhash_lsh_candidates(docs, "doc_id", "text"))
-    verified = _pairs(
-        dedup.near_duplicates_minhash(docs, "doc_id", "text", threshold=0.5)
-    )
+    verified = _pairs(dedup.near_duplicates_minhash(docs, "doc_id", "text"))
     assert verified <= cands
 
 
@@ -156,9 +152,9 @@ def test_bucket_cap_trims_degenerate_bucket_keeps_small_ones(spark):
     ]
     df = spark.createDataFrame(pile + near, "doc_id long, text string")
 
-    uncapped = dedup.near_duplicates_minhash(df, "doc_id", "text", threshold=0.5)
+    uncapped = dedup.near_duplicates_minhash(df, "doc_id", "text")
     capped = dedup.near_duplicates_minhash(
-        df, "doc_id", "text", threshold=0.5, max_bucket_size=50
+        df, "doc_id", "text", max_bucket_size=50
     )
     uncapped_pairs, capped_pairs = _pairs(uncapped), _pairs(capped)
     assert (1000, 1001) in uncapped_pairs

@@ -38,21 +38,12 @@ def test_rows_only_queries_have_rationale():
 
 
 def test_check_order_lists_are_valid():
-    """CHECK_FIRST/CHECK_LAST must name only registered queries (a typo
-    would silently demote a query out of the driver-checked prefix), and
-    ordering must be a permutation of the registry — nothing dropped."""
+    """The driver-check order is a permutation of the registry: nothing
+    dropped, nothing twice."""
     from pinterest_data_pipeline_spark.plans import registry
 
-    unknown = [
-        n
-        for n in registry.CHECK_FIRST + registry.CHECK_LAST
-        if n not in registry.QUERIES
-    ]
-    assert not unknown, f"CHECK lists name unregistered queries: {unknown}"
-    assert len(set(registry.CHECK_FIRST)) == len(registry.CHECK_FIRST)
     ordered = list(entry_mod.queries())
     assert sorted(ordered) == sorted(registry.QUERIES)
-    assert ordered[: len(registry.CHECK_FIRST)] == registry.CHECK_FIRST
 
 
 def test_oracle_sql_mentions_only_known_tables():

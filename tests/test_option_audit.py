@@ -8,6 +8,11 @@ a parameter counts as passed by keyword, by position, or through a
 ``*``/``**`` argument. An argument spelled exactly like the default sets
 nothing, wherever the call is, so it does not count.
 
+A parameter of a function the package calls also has one value in use
+when every call in the repo passes it one and the same literal other
+than its default: that literal belongs in the body. A name (a forwarded
+argument, or a module constant) is not a literal.
+
 ``sources/`` is audited too, except the connector modules: their
 defaults (driver class, fetch size, partition bounds, starting offsets)
 are deployment settings, kept configurable on purpose."""
@@ -64,25 +69,40 @@ def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
     return out
 
 
-def _passes(call, name, index, default) -> bool:
-    def sets(arg: ast.expr) -> bool:
-        return ast.unparse(arg) != default
+_SPLAT = object()
 
+
+def _argument(call, name, index):
+    """What ``call`` passes for a parameter: the argument, ``_SPLAT`` when
+    a ``*``/``**`` argument may cover it, or None."""
     for k in call.keywords:
-        if k.arg is None or (k.arg == name and sets(k.value)):
-            return True
+        if k.arg is None:
+            return _SPLAT
+        if k.arg == name:
+            return k.value
     if index is None:
-        return False
+        return None
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
-            return True  # a *args splat may cover every later position
+            return _SPLAT  # a *args splat may cover every later position
         if i == index:
-            return sets(arg)
-    return False
+            return arg
+    return None
+
+
+def _literal(arg) -> str | None:
+    """The source of a literal argument, else None."""
+    if arg is None or arg is _SPLAT:
+        return None
+    try:
+        ast.literal_eval(arg)
+    except (ValueError, TypeError):
+        return None
+    return ast.unparse(arg)
 
 
 def test_every_defaulted_parameter_is_passed_somewhere():
-    calls: dict[str, list[ast.Call]] = {}
+    calls: dict[str, list[tuple[str, ast.Call]]] = {}
     defs = []
     for path in _py_files():
         tree = ast.parse(open(path).read(), path)
@@ -90,20 +110,28 @@ def test_every_defaulted_parameter_is_passed_somewhere():
         audited = rel.startswith(AUDITED) and not rel.startswith(CONNECTORS)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and _callee(node):
-                calls.setdefault(_callee(node), []).append(node)
+                calls.setdefault(_callee(node), []).append((rel, node))
             elif audited and isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef)
             ):
                 defs.append((rel, node))
-    unused = [
-        f"{rel}:{fn.lineno} {fn.name}({name})"
-        for rel, fn in defs
-        for name, index, default in _defaulted(fn)
-        if not any(
-            _passes(c, name, index, default) for c in calls.get(fn.name, [])
-        )
-    ]
+    unused = []
+    for rel, fn in defs:
+        fn_calls = calls.get(fn.name, [])
+        in_package = any(r.startswith(PACKAGE) for r, _ in fn_calls)
+        for name, index, default in _defaulted(fn):
+            args = [_argument(c, name, index) for _, c in fn_calls]
+            literals = {_literal(a) for a in args}
+            if not any(
+                a is _SPLAT or (a is not None and ast.unparse(a) != default)
+                for a in args
+            ):
+                unused.append(f"{rel}:{fn.lineno} {fn.name}({name})")
+            elif in_package and len(literals) == 1 and None not in literals:
+                unused.append(
+                    f"{rel}:{fn.lineno} {fn.name}({name}), always {literals.pop()}"
+                )
     assert not unused, (
-        f"{len(unused)} defaulted parameters no caller passes "
+        f"{len(unused)} defaulted parameters with one value in use "
         "(make each a constant in the body):\n" + "\n".join(unused)
     )

@@ -105,51 +105,75 @@ def test_no_exotic_types_in_any_oracle(sf_dir):
 
 
 def test_unverified_queries_sit_inside_the_driver_window():
-    """The external driver checks only the FIRST 50 of queries(); the
-    rotation lists must therefore place every query that still needs a
-    row — never checked in any CORRECTNESS_r*.json, or red in its most
-    recent row — inside that window. Self-maintaining: as rounds close
-    the backlog this asserts progressively less, and a round that adds
-    queries without queueing them (or forgets a red row) fails here
-    before the driver ever runs."""
-    import glob
-    import json
+    """The external driver checks only the FIRST 50 of queries(); every
+    query that still needs a row — never checked in any
+    CORRECTNESS_r*.json, or red in its most recent row — and every
+    query changed since its last green row (an active RECHECK entry)
+    must sit inside that window."""
     import os
 
+    from pinterest_data_pipeline_spark.plans import registry
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, dict] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        for name, row in json.load(open(path)).items():
-            latest[name] = row
-
-    oracles = entry_mod.oracle_sql()
-
-    def green(name: str, row: dict) -> bool:
-        if name not in oracles:
-            # rows-only query: a recorded run (the driver marks it
-            # err='no_oracle' with spark_rows set) is its maximal
-            # achievable evidence
-            return row.get("err") in (None, "no_oracle") and (
-                row.get("spark_rows") is not None
-            )
-        return bool(
-            row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match", True)
-            and not row.get("err")
-        )
-
+    latest, last_green = registry.read_evidence(repo)
     window = list(entry_mod.queries())[:50]
     needs_row = [
         name
         for name in entry_mod.queries()
-        if name not in latest or not green(name, latest[name])
+        if name not in latest or not registry.is_green(name, latest[name])
     ]
-    missing = [n for n in needs_row if n not in window]
+    changed = [
+        name
+        for name, round_ in registry.RECHECK.items()
+        if round_ >= last_green.get(name, 0)
+    ]
+    missing = [n for n in needs_row + changed if n not in window]
     assert not missing, (
         f"{len(missing)} queries need a driver row but sit outside the "
         f"50-entry window: {missing}"
     )
+
+
+def test_check_order_follows_the_evidence_tiers(tmp_path, monkeypatch):
+    """ordered_queries over a synthetic registry and evidence directory:
+    with no files, RECHECK entries then registration order; then no row
+    or a red row first, an active RECHECK entry next, then green rows
+    oldest first, green rows-only queries last; a round that marks the
+    first 50 green moves them behind the rest."""
+    import json
+
+    from pinterest_data_pipeline_spark.plans import registry
+
+    names = [f"q{i:02d}" for i in range(60)]
+    monkeypatch.setattr(registry, "QUERIES", dict.fromkeys(names + ["img"]))
+    monkeypatch.setattr(registry, "ORACLE", dict.fromkeys(names, "SELECT 1"))
+    # q10 changed after its r2 row; q11's change predates its r2 row
+    monkeypatch.setattr(registry, "RECHECK", {"q10": 2, "q11": 1})
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 1, "oracle_rows": 1, "err": None}
+    red = dict(green, hash_match=False)
+
+    def write(round_, rows):
+        (tmp_path / f"CORRECTNESS_r{round_:02d}.json").write_text(json.dumps(rows))
+
+    assert list(registry.ordered_queries(str(tmp_path))) == (
+        ["q10", "q11"] + names[:10] + names[12:] + ["img"]
+    )
+    r1 = {n: green for n in names if n != "q07"}
+    r1["img"] = {"err": "no_oracle", "spark_rows": 5}
+    write(1, r1)
+    r2 = {n: green for n in ["q10", "q11"] + names[20:]}
+    r2["q03"] = red
+    write(2, r2)
+    order = list(registry.ordered_queries(str(tmp_path)))
+    old = [n for n in names[:20] if n not in ("q03", "q07", "q10", "q11")]
+    assert order == (
+        ["q07", "q03", "q10"] + old + ["q11"] + names[20:] + ["img"]
+    )
+
+    write(3, dict.fromkeys(order[:50], green))
+    rotated = list(registry.ordered_queries(str(tmp_path)))
+    assert rotated == order[50:60] + sorted(order[:50]) + ["img"]
 
 
 def test_register_rejects_sql_line_comments():
@@ -188,14 +212,19 @@ def test_every_query_has_callable_and_most_have_oracles():
 
 
 def test_rotation_lists_only_name_registered_queries():
-    """A typo'd name in CHECK_FIRST/CHECK_LAST silently drops out of
-    ordered_queries() — so pin that every rotation entry resolves, has
-    no duplicates, and the ordering covers the full registry."""
+    """A RECHECK entry names a registered query (a typo would silently
+    never lead the window), and its round is no newer than the newest
+    CORRECTNESS file (a later round has no row yet to compare with)."""
+    import os
+
     from pinterest_data_pipeline_spark.plans import registry
 
-    qs = set(entry_mod.queries())
-    for name in registry.CHECK_FIRST + registry.CHECK_LAST:
-        assert name in qs, f"rotation entry not registered: {name}"
-    assert len(set(registry.CHECK_FIRST)) == len(registry.CHECK_FIRST)
-    assert len(set(registry.CHECK_LAST)) == len(registry.CHECK_LAST)
-    assert set(registry.ordered_queries()) == qs
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    newest = max(
+        int(m.group(1))
+        for m in map(registry._EVIDENCE_FILE.fullmatch, os.listdir(repo))
+        if m
+    )
+    for name, round_ in registry.RECHECK.items():
+        assert name in registry.QUERIES, f"RECHECK entry not registered: {name}"
+        assert round_ <= newest, f"RECHECK {name}: r{round_} > r{newest}"
